@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
@@ -182,11 +183,6 @@ def _modal_string(v: pd.Series, w: pd.Series) -> str:
     return best_v
 
 
-_CENTS_PRICE = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
-_CENTS_TOTAL = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-_CENTS_VALUE = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
 # ------------------------------------------- weighted median by brand
 
 
@@ -194,7 +190,7 @@ _CENTS_VALUE = "CAST(ROUND(value * 100) AS BIGINT)"
     "udaf_weighted_median_brand",
     oracle=f"""
         WITH li AS (
-          SELECT p_brand, {_CENTS_PRICE} AS cents,
+          SELECT p_brand, {sql_cents("l_extendedprice")} AS cents,
                  CAST(l_quantity AS BIGINT) AS qty
           FROM lineitem JOIN part ON l_partkey = p_partkey
         ),
@@ -223,7 +219,7 @@ _CENTS_VALUE = "CAST(ROUND(value * 100) AS BIGINT)"
 )
 def udaf_weighted_median_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", F.expr(_CENTS_PRICE).alias("cents"),
+        "l_partkey", cents("l_extendedprice").alias("cents"),
         F.col("l_quantity").cast("long").alias("qty"))
     part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     pre = (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -241,7 +237,7 @@ def udaf_weighted_median_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "udaf_trimmed_mean_segment",
     oracle=f"""
         WITH o AS (
-          SELECT c_mktsegment, {_CENTS_TOTAL} AS cents
+          SELECT c_mktsegment, {sql_cents("o_totalprice")} AS cents
           FROM orders JOIN customer ON o_custkey = c_custkey
         ),
         r AS (
@@ -275,7 +271,7 @@ def udaf_weighted_median_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udaf_trimmed_mean_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
-        "o_custkey", F.expr(_CENTS_TOTAL).alias("cents"))
+        "o_custkey", cents("o_totalprice").alias("cents"))
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     pre = (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy("c_mktsegment", "cents")
@@ -301,7 +297,7 @@ def udaf_trimmed_mean_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "udaf_iqr_outlier_events",
     oracle=f"""
         WITH e AS (
-          SELECT event_type, {_CENTS_VALUE} AS cents FROM events
+          SELECT event_type, {sql_cents("value")} AS cents FROM events
         ),
         r AS (
           SELECT event_type, cents,
@@ -344,7 +340,7 @@ def udaf_trimmed_mean_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udaf_iqr_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
-        "event_type", F.expr(_CENTS_VALUE).alias("cents"))
+        "event_type", cents("value").alias("cents"))
     pre = (e.groupBy("event_type", "cents")
              .agg(F.count(F.lit(1)).alias("w")))
     return (pre.groupBy("event_type")
@@ -415,8 +411,8 @@ ROLL_USER_MOD = 7  # deterministic user sample: user_id % 7 == 0
     "udaf_rolling_median_window",
     oracle=f"""
         SELECT user_id, event_id,
-               {_CENTS_VALUE} AS cents,
-               quantile_disc({_CENTS_VALUE}, 0.5) OVER (
+               {sql_cents("value")} AS cents,
+               quantile_disc({sql_cents("value")}, 0.5) OVER (
                  PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN {ROLL_FRAME} PRECEDING AND CURRENT ROW)
                  AS rolling_med_cents
@@ -438,7 +434,7 @@ def udaf_rolling_median_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (load(spark, sf_dir, "events")
          .where(F.col("user_id") % ROLL_USER_MOD == 0)
          .select("user_id", "event_id", "ts",
-                 F.expr(_CENTS_VALUE).alias("cents")))
+                 cents("value").alias("cents")))
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
                .rowsBetween(-ROLL_FRAME, 0))
     return (e.withColumn("rolling_med_cents",

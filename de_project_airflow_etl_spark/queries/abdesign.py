@@ -15,30 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import (
+    cents, fold_sorted_spark, fold_sorted_sql, sql_cents, wide,
+)
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 # the md5-nibble 50/50 arm the SRM/log-rank bank uses
 _ARM_SPARK = ("CASE WHEN substring(md5(CAST(user_id AS STRING)), 1, 1)"
               " < '8' THEN 1 ELSE 0 END")
 _ARM_SQL = ("CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 1, 1)"
             " < '8' THEN 1 ELSE 0 END")
 DID_CUTOFF = "2024-01-16"  # mid-corpus: both periods populated
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
 
 
 # ---------------- difference-in-differences on the hash arms
@@ -52,8 +40,8 @@ _CELL_VARN = ("(({q} - {s} * {s} / {n}) / ({n} - 1)) / {n}")
 
 
 def _did_cells(which: str) -> dict[str, str]:
-    return {"n": f"n_{which}", "s": f"{_wide(f's_{which}')}",
-            "q": f"{_wide(f'q_{which}')}"}
+    return {"n": f"n_{which}", "s": f"{wide(f's_{which}')}",
+            "q": f"{wide(f'q_{which}')}"}
 
 
 def _did_final() -> str:
@@ -73,7 +61,7 @@ def _did_final() -> str:
           SELECT {_ARM_SQL} AS arm,
                  CASE WHEN ts < TIMESTAMP '{DID_CUTOFF}'
                       THEN 0 ELSE 1 END AS post,
-                 {_CENTS} AS c
+                 {sql_cents("value")} AS c
           FROM events
         ),
         m AS (
@@ -131,7 +119,7 @@ def difference_in_differences_arms(spark: SparkSession,
         f"{_ARM_SPARK} AS arm",
         f"CASE WHEN ts < TIMESTAMP '{DID_CUTOFF}' THEN 0 ELSE 1 END"
         " AS post",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     aggs = []
     for w, arm, post in (("a1", 1, 1), ("a0", 1, 0),
                          ("b1", 0, 1), ("b0", 0, 0)):
@@ -170,13 +158,13 @@ MDE_Z_BETA = "0.841621"
     oracle=f"""
         WITH m AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 SUM(CAST({_CENTS} AS DECIMAL(38,0))) AS s,
-                 SUM(CAST({_CENTS} AS DECIMAL(38,0)) * {_CENTS}) AS q
+                 SUM(CAST({sql_cents("value")} AS DECIMAL(38,0))) AS s,
+                 SUM(CAST({sql_cents("value")} AS DECIMAL(38,0)) * {sql_cents("value")}) AS q
           FROM events
         ),
         v AS (
-          SELECT n, {_wide('s')} / n AS mean_c,
-                 ({_wide('q')} - {_wide('s')} * {_wide('s')} / n)
+          SELECT n, {wide('s')} / n AS mean_c,
+                 ({wide('q')} - {wide('s')} * {wide('s')} / n)
                    / (n - 1) AS var_c
           FROM m
         )
@@ -203,12 +191,12 @@ MDE_Z_BETA = "0.841621"
 def power_mde_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = load(spark, sf_dir, "events").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.expr(f"SUM(CAST({_CENTS} AS DECIMAL(38,0)))").alias("s"),
-        F.expr(f"SUM(CAST({_CENTS} AS DECIMAL(38,0)) * {_CENTS})")
+        F.expr(f"SUM(CAST({sql_cents('value')} AS DECIMAL(38,0)))").alias("s"),
+        F.expr(f"SUM(CAST({sql_cents('value')} AS DECIMAL(38,0)) * {sql_cents('value')})")
          .alias("q"))
     v = m.selectExpr(
-        "n", f"{_wide('s')} / n AS mean_c",
-        f"({_wide('q')} - {_wide('s')} * {_wide('s')} / n) / (n - 1)"
+        "n", f"{wide('s')} / n AS mean_c",
+        f"({wide('q')} - {wide('s')} * {wide('s')} / n) / (n - 1)"
         " AS var_c")
     return v.selectExpr(
         "n AS n_events", "mean_c / 100 AS mean_value",
@@ -300,7 +288,7 @@ _JK_DEV_SQL = ("(CAST(t.s - d.cents AS DOUBLE) / (t.m - d.n_ev)"
     oracle=f"""
         WITH daily AS (
           SELECT CAST(ts AS DATE) AS d,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents,
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents,
                  CAST(COUNT(*) AS BIGINT) AS n_ev
           FROM events GROUP BY 1
         ),
@@ -311,9 +299,9 @@ _JK_DEV_SQL = ("(CAST(t.s - d.cents AS DOUBLE) / (t.m - d.n_ev)"
           FROM daily
         ),
         loo AS (
-          SELECT t.g, {_wide('t.s')} / t.m AS full_ratio,
-                 {_fold_sql("list(" + _JK_DEV_SQL
-                            + " * " + _JK_DEV_SQL + ")")} AS ssq
+          SELECT t.g, {wide('t.s')} / t.m AS full_ratio,
+                 {fold_sorted_sql("list(" + _JK_DEV_SQL
+                                  + " * " + _JK_DEV_SQL + ")")} AS ssq
           FROM daily d CROSS JOIN tot t
           GROUP BY t.g, t.s, t.m
         )
@@ -342,7 +330,7 @@ def jackknife_ratio_variance_daily(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").alias("d"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"),
+             .agg(F.sum(cents("value")).cast("long").alias("cents"),
                   F.count(F.lit(1)).cast("long").alias("n_ev"))
              .localCheckpoint())  # feeds totals AND the LOO pass
     tot = daily.agg(F.count(F.lit(1)).cast("long").alias("g"),
@@ -352,7 +340,7 @@ def jackknife_ratio_variance_daily(spark: SparkSession,
            " - CAST(s AS DOUBLE) / m)")
     loo = (daily.crossJoin(F.broadcast(tot))
                 .groupBy("g", "s", "m")
-                .agg(F.expr(_fold_spark(
+                .agg(F.expr(fold_sorted_spark(
                     f"collect_list({dev} * {dev})")).alias("ssq"))
                 .selectExpr("g", "CAST(s AS DOUBLE) / m AS full_ratio",
                             "ssq"))

@@ -19,18 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import wide
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-
-def _wide(col: str) -> str:
-    """Wide-int -> double through a decimal string (correctly rounded
-    on both engines even past 2^53)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _sql_wide(col: str) -> str:
-    return f"CAST(CAST({col} AS VARCHAR) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -81,8 +72,8 @@ def _sql_wide(col: str) -> str:
           FROM src, pc, nn
         )
         SELECT src.source, src.n_s AS n_docs,
-               {_sql_wide("src.raw_sum")} / src.n_s AS raw_mean_chars,
-               {_sql_wide("SUM(takes.vsum)")} / src.n_s
+               {wide("src.raw_sum")} / src.n_s AS raw_mean_chars,
+               {wide("SUM(takes.vsum)")} / src.n_s
                  AS qnorm_mean_chars
         FROM takes JOIN src ON takes.source = src.source
         GROUP BY src.source, src.n_s, src.raw_sum
@@ -138,8 +129,8 @@ def quantile_normalize_source_chars(spark: SparkSession,
     return (takes.groupBy("source", "n_s", "raw_sum")
             .agg(F.expr("SUM(vsum)").alias("qsum"))
             .selectExpr("source", "n_s AS n_docs",
-                        f"{_wide('raw_sum')} / n_s AS raw_mean_chars",
-                        f"{_wide('qsum')} / n_s AS qnorm_mean_chars"))
+                        f"{wide('raw_sum')} / n_s AS raw_mean_chars",
+                        f"{wide('qsum')} / n_s AS qnorm_mean_chars"))
 
 
 # ---------------------------------------------------------------------

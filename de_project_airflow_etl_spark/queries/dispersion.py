@@ -16,14 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents, wide
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # --------------------- Gini mean difference of event values
@@ -32,7 +27,7 @@ def _wide(col: str) -> str:
     "gini_mean_difference_value",
     oracle=f"""
         WITH cells AS (
-          SELECT {_CENTS} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
+          SELECT {sql_cents("value")} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1
         ),
         cum AS (
@@ -55,11 +50,11 @@ def _wide(col: str) -> str:
                  MAX(t.n) AS n, MAX(t.s) AS s
           FROM cum CROSS JOIN tot t
         )
-        SELECT n, {_wide('s')} / n / 100 AS mean_value,
-               2 * {_wide('wsum')} / (CAST(n AS DOUBLE) * (n - 1)) / 100
+        SELECT n, {wide('s')} / n / 100 AS mean_value,
+               2 * {wide('wsum')} / (CAST(n AS DOUBLE) * (n - 1)) / 100
                  AS gmd,
-               {_wide('wsum')} / ((CAST(n AS DOUBLE) * (n - 1) / 2)
-                 * ({_wide('s')} / n)) / 2 AS gini
+               {wide('wsum')} / ((CAST(n AS DOUBLE) * (n - 1) / 2)
+                 * ({wide('s')} / n)) / 2 AS gini
         FROM g
     """,
     doc="Gini mean difference (the expected |Xi - Xj| of two random "
@@ -79,7 +74,7 @@ def _wide(col: str) -> str:
 def gini_mean_difference_value(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     cells = (load(spark, sf_dir, "events")
-             .selectExpr(f"{_CENTS} AS c")
+             .selectExpr(f"{sql_cents('value')} AS c")
              .groupBy("c")
              .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     wb = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
@@ -96,11 +91,11 @@ def gini_mean_difference_value(spark: SparkSession,
                   .alias("wsum"),
                  F.max("n").alias("n"), F.max("s").alias("s")))
     return g.selectExpr(
-        "n", f"{_wide('s')} / n / 100 AS mean_value",
-        f"2 * {_wide('wsum')} / (CAST(n AS DOUBLE) * (n - 1)) / 100"
+        "n", f"{wide('s')} / n / 100 AS mean_value",
+        f"2 * {wide('wsum')} / (CAST(n AS DOUBLE) * (n - 1)) / 100"
         " AS gmd",
-        f"{_wide('wsum')} / ((CAST(n AS DOUBLE) * (n - 1) / 2)"
-        f" * ({_wide('s')} / n)) / 2 AS gini")
+        f"{wide('wsum')} / ((CAST(n AS DOUBLE) * (n - 1) / 2)"
+        f" * ({wide('s')} / n)) / 2 AS gini")
 
 
 # ----------------------- Hoover (Robin Hood) index of daily revenue
@@ -141,7 +136,7 @@ def hoover_index_daily_revenue(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").alias("d"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(cents("value")).cast("long").alias("cents"))
              .localCheckpoint())  # feeds totals AND the deviation pass
     tot = daily.agg(F.count(F.lit(1)).cast("long").alias("n"),
                     F.sum("cents").cast("long").alias("s"))
@@ -160,7 +155,7 @@ def hoover_index_daily_revenue(spark: SparkSession,
     "mode_value_by_type",
     oracle=f"""
         WITH cells AS (
-          SELECT event_type, {_CENTS} AS c,
+          SELECT event_type, {sql_cents("value")} AS c,
                  CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1, 2
         )
@@ -189,7 +184,7 @@ def hoover_index_daily_revenue(spark: SparkSession,
 )
 def mode_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (load(spark, sf_dir, "events")
-             .selectExpr("event_type", f"{_CENTS} AS c")
+             .selectExpr("event_type", f"{sql_cents('value')} AS c")
              .groupBy("event_type", "c")
              .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     m = cells.withColumn(
@@ -208,7 +203,7 @@ def mode_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "trimean_midhinge_by_type",
     oracle=f"""
         WITH e AS (
-          SELECT event_type, {_CENTS} AS cv FROM events
+          SELECT event_type, {sql_cents("value")} AS cv FROM events
         ),
         q AS (
           SELECT event_type,
@@ -237,7 +232,7 @@ def mode_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def trimean_midhinge_by_type(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr("event_type",
-                                                 f"{_CENTS} AS cv")
+                                                 f"{sql_cents('value')} AS cv")
     cells = (e.groupBy("event_type", "cv")
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     wt = Window.partitionBy("event_type")

@@ -16,10 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.queries.diagnostics import (
-    _CENTS, _fold_spark, _fold_sql, _wide,
+from de_project_airflow_etl_spark.queries.util import (
+    fold_sorted_spark, fold_sorted_sql, sql_cents, wide,
 )
+from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
 # arm: first md5 hex nibble of the user id — '0'..'7' = A, '8'..'f' = B
@@ -96,7 +96,7 @@ CUPED_SPLIT_DAY = 15  # pre-period: first 15 days of the corpus window
                  date_diff('day',
                    (SELECT MIN(CAST(ts AS DATE)) FROM events),
                    CAST(ts AS DATE)) AS d,
-                 {_CENTS} AS c
+                 {sql_cents("value")} AS c
           FROM events
         ),
         xy AS (
@@ -116,11 +116,11 @@ CUPED_SPLIT_DAY = 15  # pre-period: first 15 days of the corpus window
           FROM xy
         ),
         theta AS (
-          SELECT n, {_wide('sx')} AS sx_d,
-                 (CAST(n AS DOUBLE) * {_wide('sxy')}
-                  - {_wide('sx')} * {_wide('sy')})
-                 / (CAST(n AS DOUBLE) * {_wide('sxx')}
-                    - {_wide('sx')} * {_wide('sx')}) AS th
+          SELECT n, {wide('sx')} AS sx_d,
+                 (CAST(n AS DOUBLE) * {wide('sxy')}
+                  - {wide('sx')} * {wide('sy')})
+                 / (CAST(n AS DOUBLE) * {wide('sxx')}
+                    - {wide('sx')} * {wide('sx')}) AS th
           FROM mom
         ),
         arms AS (
@@ -130,11 +130,11 @@ CUPED_SPLIT_DAY = 15  # pre-period: first 15 days of the corpus window
           FROM xy GROUP BY arm
         )
         SELECT a.arm, a.n_users,
-               {_wide('a.asy')} / a.n_users / 100 AS mean_y,
-               {_wide('a.asx')} / a.n_users / 100 AS mean_x,
+               {wide('a.asy')} / a.n_users / 100 AS mean_y,
+               {wide('a.asx')} / a.n_users / 100 AS mean_x,
                t.th AS theta,
-               ({_wide('a.asy')} / a.n_users
-                - t.th * ({_wide('a.asx')} / a.n_users
+               ({wide('a.asy')} / a.n_users
+                - t.th * ({wide('a.asx')} / a.n_users
                           - t.sx_d / t.n)) / 100 AS adj_mean_y
         FROM arms a, theta t
     """,
@@ -159,7 +159,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (e.crossJoin(F.broadcast(d0))
           .selectExpr("user_id",
                       "datediff(CAST(ts AS DATE), d0) AS d",
-                      f"{_CENTS} AS c"))
+                      f"{sql_cents('value')} AS c"))
     xy = (b.groupBy("user_id")
            .agg(F.expr(f"CAST(COALESCE(SUM(CASE WHEN d <"
                        f" {CUPED_SPLIT_DAY} THEN c END), 0) AS BIGINT)")
@@ -178,11 +178,11 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("SUM(CAST(x AS DECIMAL(38,0)) * x)").alias("sxx"),
         F.expr("SUM(CAST(x AS DECIMAL(38,0)) * y)").alias("sxy"))
     theta = mom.selectExpr(
-        "n", f"{_wide('sx')} AS sx_d",
-        f"(CAST(n AS DOUBLE) * {_wide('sxy')}"
-        f" - {_wide('sx')} * {_wide('sy')})"
-        f" / (CAST(n AS DOUBLE) * {_wide('sxx')}"
-        f" - {_wide('sx')} * {_wide('sx')}) AS th")
+        "n", f"{wide('sx')} AS sx_d",
+        f"(CAST(n AS DOUBLE) * {wide('sxy')}"
+        f" - {wide('sx')} * {wide('sy')})"
+        f" / (CAST(n AS DOUBLE) * {wide('sxx')}"
+        f" - {wide('sx')} * {wide('sx')}) AS th")
     arms = xy.groupBy("arm").agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.expr("SUM(CAST(x AS DECIMAL(38,0)))").alias("asx"),
@@ -190,11 +190,11 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (arms.crossJoin(F.broadcast(theta))
                 .selectExpr(
                     "arm", "n_users",
-                    f"{_wide('asy')} / n_users / 100 AS mean_y",
-                    f"{_wide('asx')} / n_users / 100 AS mean_x",
+                    f"{wide('asy')} / n_users / 100 AS mean_y",
+                    f"{wide('asx')} / n_users / 100 AS mean_x",
                     "th AS theta",
-                    f"({_wide('asy')} / n_users"
-                    f" - th * ({_wide('asx')} / n_users"
+                    f"({wide('asy')} / n_users"
+                    f" - th * ({wide('asx')} / n_users"
                     " - sx_d / n)) / 100 AS adj_mean_y"))
 
 
@@ -440,8 +440,8 @@ BD_TOPK = 20
         mu AS (
           SELECT term,
                  CAST(COUNT(*) AS BIGINT) AS ns,
-                 {_fold_sql("rf")} AS sf,
-                 {_fold_sql("rf * rf")} AS sff
+                 {fold_sorted_sql("list(rf)")} AS sf,
+                 {fold_sorted_sql("list(rf * rf)")} AS sff
           FROM grid GROUP BY term
         ),
         z AS (
@@ -507,8 +507,8 @@ def burrows_delta_sources(spark: SparkSession,
                             " AS rf"))
     mu = grid.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("ns"),
-        F.expr(_fold_spark("collect_list(rf)")).alias("sf"),
-        F.expr(_fold_spark("collect_list(rf * rf)")).alias("sff"))
+        F.expr(fold_sorted_spark("collect_list(rf)")).alias("sf"),
+        F.expr(fold_sorted_spark("collect_list(rf * rf)")).alias("sff"))
     z = (grid.join(mu, "term")
              .selectExpr(
                  "source", "term",

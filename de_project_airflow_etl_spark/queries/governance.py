@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.queries.diagnostics import _CENTS, _wide
 from de_project_airflow_etl_spark.tables import load
 
 @query(
@@ -26,7 +26,7 @@ from de_project_airflow_etl_spark.tables import load
         WITH per_user AS (
           SELECT user_id,
                  CAST(COUNT(*) AS BIGINT) AS n_rows,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents,
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents,
                  CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT)
                    AS n_days
           FROM events GROUP BY user_id
@@ -35,10 +35,10 @@ from de_project_airflow_etl_spark.tables import load
                CAST(MAX(n_rows) AS BIGINT) AS linf_count_sensitivity,
                CAST(MAX(cents) AS BIGINT) AS linf_sum_sensitivity_c,
                CAST(MAX(n_days) AS BIGINT) AS linf_day_sensitivity,
-               {_wide('SUM(CAST(cents AS DECIMAL(38,0)))')}
+               {wide('SUM(CAST(cents AS DECIMAL(38,0)))')}
                  / COUNT(*) / 100 AS mean_user_total,
                CAST(MAX(cents) AS DOUBLE)
-                 / {_wide('SUM(CAST(cents AS DECIMAL(38,0)))')}
+                 / {wide('SUM(CAST(cents AS DECIMAL(38,0)))')}
                  AS max_user_share
         FROM per_user
     """,
@@ -56,7 +56,7 @@ from de_project_airflow_etl_spark.tables import load
 )
 def dp_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (load(spark, sf_dir, "events")
-                .selectExpr("user_id", "ts", f"{_CENTS} AS c")
+                .selectExpr("user_id", "ts", f"{sql_cents('value')} AS c")
                 .groupBy("user_id")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
                      F.sum("c").cast("long").alias("cents"),
@@ -67,10 +67,10 @@ def dp_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_rows").cast("long").alias("linf_count_sensitivity"),
         F.max("cents").cast("long").alias("linf_sum_sensitivity_c"),
         F.max("n_days").cast("long").alias("linf_day_sensitivity"),
-        F.expr(f"{_wide('SUM(CAST(cents AS DECIMAL(38,0)))')}"
+        F.expr(f"{wide('SUM(CAST(cents AS DECIMAL(38,0)))')}"
                " / COUNT(*) / 100").alias("mean_user_total"),
         F.expr(f"CAST(MAX(cents) AS DOUBLE)"
-               f" / {_wide('SUM(CAST(cents AS DECIMAL(38,0)))')}"
+               f" / {wide('SUM(CAST(cents AS DECIMAL(38,0)))')}"
                " AS max_user_share").alias("max_user_share"))
 
 
@@ -87,8 +87,8 @@ def dp_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         e AS (
           SELECT LEAST(CAST(9 AS BIGINT),
-                       {_CENTS} // 5000) AS band,
-                 {_CENTS} AS c
+                       {sql_cents("value")} // 5000) AS band,
+                 {sql_cents("value")} AS c
           FROM events
         ),
         g AS (
@@ -130,10 +130,10 @@ def sql_udf_band_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         " FROM range(10)")
     return spark.sql(f"""
         WITH g AS (
-          SELECT sqludf_band({_CENTS}) AS band,
+          SELECT sqludf_band({sql_cents("value")}) AS band,
                  CAST(COUNT(*) AS BIGINT) AS n_events,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
-          FROM sqludf_ev GROUP BY sqludf_band({_CENTS})
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
+          FROM sqludf_ev GROUP BY sqludf_band({sql_cents("value")})
         )
         SELECT s.band, s.band_label, g.n_events,
                sqludf_dollars(g.cents) AS revenue

@@ -20,24 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
 
 
 # ---------------------------------------------------------------------
@@ -48,7 +33,7 @@ def _fold_sql(terms_col: str) -> str:
     "youden_j_optimal_threshold",
     oracle=f"""
         WITH cell AS (
-          SELECT {_CENTS} AS c,
+          SELECT {sql_cents("value")} AS c,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                           THEN 1 ELSE 0 END) AS BIGINT) AS pos_c,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -100,7 +85,7 @@ def _fold_sql(terms_col: str) -> str:
 def youden_j_optimal_threshold(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
-            .selectExpr(f"{_CENTS} AS c",
+            .selectExpr(f"{sql_cents('value')} AS c",
                         "CASE WHEN event_type = 'purchase' THEN 1"
                         " ELSE 0 END AS p")
             .groupBy("c")
@@ -149,7 +134,7 @@ _R_D = "(CAST({d} AS BIGINT) * n + 9) / 10"
     "decile_lift_table",
     oracle=f"""
         WITH cell AS (
-          SELECT {_CENTS} AS c,
+          SELECT {sql_cents("value")} AS c,
                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                    AS p,
                  CAST(COUNT(*) AS BIGINT) AS cnt
@@ -209,7 +194,7 @@ _R_D = "(CAST({d} AS BIGINT) * n + 9) / 10"
 )
 def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
-            .selectExpr(f"{_CENTS} AS c",
+            .selectExpr(f"{sql_cents('value')} AS c",
                         "CASE WHEN event_type = 'purchase' THEN 1"
                         " ELSE 0 END AS p")
             .groupBy("c", "p")
@@ -468,16 +453,16 @@ _RATERS_SQL = (
           FROM r
         )
         SELECT n AS n_docs,
-               ({_wide("CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1")}
-                + {_wide("CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2")}
-                + {_wide("CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3")})
-                 / {_wide("CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st")}
+               ({wide("CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1")}
+                + {wide("CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2")}
+                + {wide("CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3")})
+                 / {wide("CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st")}
                  AS item_to_total_var_ratio,
                (CAST(3.0 AS DOUBLE) / 2) * (1 -
-                 ({_wide("CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1")}
-                  + {_wide("CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2")}
-                  + {_wide("CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3")})
-                 / {_wide("CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st")})
+                 ({wide("CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1")}
+                  + {wide("CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2")}
+                  + {wide("CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3")})
+                 / {wide("CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st")})
                  AS cronbach_alpha
         FROM m
     """,
@@ -510,11 +495,11 @@ def cronbachs_alpha_quality_rules(spark: SparkSession,
               F.expr("SUM(CAST(x1 + x2 + x3 AS DECIMAL(38,0))"
                      " * (x1 + x2 + x3))").alias("qt")))
     item_vars = " + ".join(
-        _wide(f"CAST(n AS DECIMAL(38,0)) * s{i}"
-              f" - CAST(s{i} AS DECIMAL(38,0)) * s{i}")
+        wide(f"CAST(n AS DECIMAL(38,0)) * s{i}"
+             f" - CAST(s{i} AS DECIMAL(38,0)) * s{i}")
         for i in (1, 2, 3))
-    tot_var = _wide("CAST(n AS DECIMAL(38,0)) * qt"
-                    " - CAST(st AS DECIMAL(38,0)) * st")
+    tot_var = wide("CAST(n AS DECIMAL(38,0)) * qt"
+                   " - CAST(st AS DECIMAL(38,0)) * st")
     return m.selectExpr(
         "n AS n_docs",
         f"({item_vars}) / {tot_var} AS item_to_total_var_ratio",
@@ -732,10 +717,10 @@ _Q_SCALE = 1_000_000
                  (SELECT CAST(COUNT(*) AS BIGINT) FROM nv) AS n
         )
         SELECT n AS n_vectors,
-               ({_wide("ss")} - {_wide("qq")})
-                 / ({_wide("CAST(n AS HUGEINT) * (n - 1)")}
+               ({wide("ss")} - {wide("qq")})
+                 / ({wide("CAST(n AS HUGEINT) * (n - 1)")}
                     * {_Q_SCALE}.0 * {_Q_SCALE}) AS mean_pairwise_cosine,
-               {_wide("qq")} / (CAST(n AS DOUBLE)
+               {wide("qq")} / (CAST(n AS DOUBLE)
                     * {_Q_SCALE}.0 * {_Q_SCALE}) AS mean_sq_norm_q
         FROM parts
     """,
@@ -790,8 +775,8 @@ def embedding_isotropy_panel(spark: SparkSession,
     return (ss.crossJoin(F.broadcast(n))
             .selectExpr(
                 "n AS n_vectors",
-                f"({_wide('ss')} - {_wide('qq')})"
-                f" / ({_wide('CAST(n AS DECIMAL(38,0)) * (n - 1)')}"
+                f"({wide('ss')} - {wide('qq')})"
+                f" / ({wide('CAST(n AS DECIMAL(38,0)) * (n - 1)')}"
                 f" * {_Q_SCALE}.0 * {_Q_SCALE}) AS mean_pairwise_cosine",
-                f"{_wide('qq')} / (CAST(n AS DOUBLE)"
+                f"{wide('qq')} / (CAST(n AS DOUBLE)"
                 f" * {_Q_SCALE}.0 * {_Q_SCALE}) AS mean_sq_norm_q"))

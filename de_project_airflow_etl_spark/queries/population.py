@@ -17,18 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import sql_cents
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _sql_wide(col: str) -> str:
-    return f"CAST(CAST({col} AS VARCHAR) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -113,10 +104,10 @@ def good_turing_chao1_by_source(spark: SparkSession,
 
 _IPF_ITERS = 6
 _IPF_S = 10**6
-_BAND = (f"CASE WHEN {_CENTS} < 5000 THEN 'b0' "
-         f"WHEN {_CENTS} < 10000 THEN 'b1' "
-         f"WHEN {_CENTS} < 20000 THEN 'b2' "
-         f"WHEN {_CENTS} < 35000 THEN 'b3' ELSE 'b4' END")
+_BAND = (f"CASE WHEN {sql_cents('value')} < 5000 THEN 'b0' "
+         f"WHEN {sql_cents('value')} < 10000 THEN 'b1' "
+         f"WHEN {sql_cents('value')} < 20000 THEN 'b2' "
+         f"WHEN {sql_cents('value')} < 35000 THEN 'b3' ELSE 'b4' END")
 _DOW_SPARK = "dayofweek(ts) - 1"   # 0=Sunday..6 on both engines
 _DOW_SQL = "dayofweek(ts)"
 

@@ -18,22 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import (
+    dlit, fold_sorted_spark, fold_sorted_sql,
+)
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-
-def _dlit(x: float) -> str:
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
 
 
 MMR_K_CAND = 12   # candidate pool per anchor
@@ -58,8 +47,8 @@ _SEL_SPARK = f"""
           'bs',
           CASE WHEN array_contains(acc.sel, i)
                THEN CAST('-1e18' AS DOUBLE)
-               ELSE {_dlit(MMR_LAMBDA)} * element_at(cands, i).cosv
-                    - {_dlit(1 - MMR_LAMBDA)} * COALESCE(array_max(
+               ELSE {dlit(MMR_LAMBDA)} * element_at(cands, i).cosv
+                    - {dlit(1 - MMR_LAMBDA)} * COALESCE(array_max(
                       transform(acc.sel, j ->
                         aggregate(transform(
                             sequence(1, size(element_at(cands, i).embn)),
@@ -86,8 +75,8 @@ _SEL_SQL = f"""
             i -> struct_pack(bi := i, bs :=
             CASE WHEN list_contains(acc.sel, i)
                  THEN CAST('-1e18' AS DOUBLE)
-                 ELSE {_dlit(MMR_LAMBDA)} * cands[i].cosv
-                      - {_dlit(1 - MMR_LAMBDA)} * COALESCE(list_max(
+                 ELSE {dlit(MMR_LAMBDA)} * cands[i].cosv
+                      - {dlit(1 - MMR_LAMBDA)} * COALESCE(list_max(
                         list_transform(acc.sel, j ->
                           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                             list_transform(
@@ -127,7 +116,7 @@ def _ild(engine: str, idx_list: str) -> str:
         pairs = (f"flatten(transform(sequence(1, size(ix) - 1),"
                  f" a -> transform(sequence(a + 1, size(ix)),"
                  f" b -> CAST(1.0 AS DOUBLE) - {dot})))")
-        fold = _fold_spark(pairs)
+        fold = fold_sorted_spark(pairs)
         n_pairs = "(size(ix) * (size(ix) - 1) / 2)"
     else:
         dot = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
@@ -139,7 +128,7 @@ def _ild(engine: str, idx_list: str) -> str:
                  f" len(ix) - 1),"
                  f" a -> list_transform(generate_series(a + 1, len(ix)),"
                  f" b -> CAST(1.0 AS DOUBLE) - {dot})))")
-        fold = _fold_sql(pairs)
+        fold = fold_sorted_sql(pairs)
         n_pairs = "(len(ix) * (len(ix) - 1) / 2)"
     return f"{fold} / {n_pairs}".replace("ix", idx_list)
 
@@ -210,13 +199,13 @@ _SQL_DOT = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
           FROM sel
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-               {_fold_sql("list(CAST(rel_plain AS DOUBLE))")} / COUNT(*)
+               {fold_sorted_sql("list(CAST(rel_plain AS DOUBLE))")} / COUNT(*)
                  AS mean_rel_plain,
-               {_fold_sql("list(CAST(rel_mmr AS DOUBLE))")} / COUNT(*)
+               {fold_sorted_sql("list(CAST(rel_mmr AS DOUBLE))")} / COUNT(*)
                  AS mean_rel_mmr,
-               {_fold_sql("list(ild_plain)")} / COUNT(*)
+               {fold_sorted_sql("list(ild_plain)")} / COUNT(*)
                  AS mean_ild_plain,
-               {_fold_sql("list(ild_mmr)")} / COUNT(*) AS mean_ild_mmr
+               {fold_sorted_sql("list(ild_mmr)")} / COUNT(*) AS mean_ild_mmr
         FROM per
     """,
     doc="Maximal-marginal-relevance re-ranking (Carbonell-Goldstein) "
@@ -301,11 +290,11 @@ def mmr_rerank_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_ild('spark', 'plain')} AS ild_plain")
     return per.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.expr(_fold_spark("collect_list(CAST(rel_plain AS DOUBLE))")
+        F.expr(fold_sorted_spark("collect_list(CAST(rel_plain AS DOUBLE))")
                + " / COUNT(*)").alias("mean_rel_plain"),
-        F.expr(_fold_spark("collect_list(CAST(rel_mmr AS DOUBLE))")
+        F.expr(fold_sorted_spark("collect_list(CAST(rel_mmr AS DOUBLE))")
                + " / COUNT(*)").alias("mean_rel_mmr"),
-        F.expr(_fold_spark("collect_list(ild_plain)") + " / COUNT(*)")
+        F.expr(fold_sorted_spark("collect_list(ild_plain)") + " / COUNT(*)")
          .alias("mean_ild_plain"),
-        F.expr(_fold_spark("collect_list(ild_mmr)") + " / COUNT(*)")
+        F.expr(fold_sorted_spark("collect_list(ild_mmr)") + " / COUNT(*)")
          .alias("mean_ild_mmr"))

@@ -11,7 +11,7 @@ accumulated, a 100 TB plan story per docstring, no ``rand()``, no
 Shared determinism idioms (established in earlier banks, reused here):
 
 * exact integer cents / DECIMAL(38,0) moments, the decimal-string ->
-  double route for wide values (``_wide``);
+  double route for wide values (``util.wide``);
 * lower-median selection by ``row_number`` over bounded relations
   (theil_sen precedent — pair sets here are calendar-bounded, never
   data-sized);
@@ -29,17 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents, wide
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
-
-def _wide(col: str) -> str:
-    """DECIMAL/BIGINT -> DOUBLE via the correctly-rounded string route
-    (DuckDB's direct decimal->double cast is not correctly rounded)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 # weekend flag with identical semantics on both engines: Spark
 # dayofweek is 1=Sunday..7=Saturday, DuckDB's is 0=Sunday..6=Saturday
@@ -77,8 +70,8 @@ _MCC_DEN2 = ("CAST(tp + fp AS DECIMAL(38,0)) * (tp + fn)"
           FROM r
         )
         SELECT n_docs, tp, fp, fn, tn,
-               {_wide(_MCC_NUM)} / SQRT({_wide(_MCC_DEN2)}) AS mcc,
-               {_wide('tp')} / (tp + fn) + {_wide('tn')} / (tn + fp)
+               {wide(_MCC_NUM)} / SQRT({wide(_MCC_DEN2)}) AS mcc,
+               {wide('tp')} / (tp + fn) + {wide('tn')} / (tn + fp)
                  - 1 AS youden_j
         FROM c
     """,
@@ -110,8 +103,8 @@ def matthews_corr_quality_rules(spark: SparkSession,
         F.sum(F.expr("(1 - a) * (1 - b)")).cast("long").alias("tn"))
     return c.selectExpr(
         "n_docs", "tp", "fp", "fn", "tn",
-        f"{_wide(_MCC_NUM)} / SQRT({_wide(_MCC_DEN2)}) AS mcc",
-        f"{_wide('tp')} / (tp + fn) + {_wide('tn')} / (tn + fp)"
+        f"{wide(_MCC_NUM)} / SQRT({wide(_MCC_DEN2)}) AS mcc",
+        f"{wide('tp')} / (tp + fn) + {wide('tn')} / (tn + fp)"
         " - 1 AS youden_j")
 
 
@@ -119,10 +112,10 @@ def matthews_corr_quality_rules(spark: SparkSession,
 
 # Pooled-variance effect size from the same exact one-pass moments the
 # Welch t-test uses; reported in cents (scale cancels in d).
-_POOLED_VAR = (f"(({_wide('q_w')} - {_wide('s_w')} * {_wide('s_w')} / n_w)"
-               f" + ({_wide('q_d')} - {_wide('s_d')} * {_wide('s_d')}"
+_POOLED_VAR = (f"(({wide('q_w')} - {wide('s_w')} * {wide('s_w')} / n_w)"
+               f" + ({wide('q_d')} - {wide('s_d')} * {wide('s_d')}"
                f" / n_d)) / (n_w + n_d - 2)")
-_COHENS_D = (f"({_wide('s_w')} / n_w - {_wide('s_d')} / n_d)"
+_COHENS_D = (f"({wide('s_w')} / n_w - {wide('s_d')} / n_d)"
              f" / SQRT({_POOLED_VAR})")
 # small-sample bias correction J = 1 - 3/(4*df - 1), df = n_w + n_d - 2
 _HEDGES_J = ("(CAST(1 AS DOUBLE) - CAST(3 AS DOUBLE)"
@@ -133,7 +126,7 @@ _HEDGES_J = ("(CAST(1 AS DOUBLE) - CAST(3 AS DOUBLE)"
     "cohens_d_weekend_value",
     oracle=f"""
         WITH b AS (
-          SELECT {_WKND_SQL} AS wknd, {_CENTS} AS c FROM events
+          SELECT {_WKND_SQL} AS wknd, {sql_cents("value")} AS c FROM events
         ),
         a AS (
           SELECT CAST(SUM(wknd) AS BIGINT) AS n_w,
@@ -170,7 +163,7 @@ _HEDGES_J = ("(CAST(1 AS DOUBLE) - CAST(3 AS DOUBLE)"
 )
 def cohens_d_weekend_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = load(spark, sf_dir, "events").selectExpr(
-        f"{_WKND_SPARK} AS wknd", f"{_CENTS} AS c")
+        f"{_WKND_SPARK} AS wknd", f"{sql_cents('value')} AS c")
     a = b.agg(
         F.expr("CAST(SUM(wknd) AS BIGINT)").alias("n_w"),
         F.expr("SUM(CASE WHEN wknd = 1 THEN CAST(c AS DECIMAL(38,0))"
@@ -208,7 +201,7 @@ _AP_SCALE = 1_000_000
     "pr_auc_purchase_value",
     oracle=f"""
         WITH g AS (
-          SELECT {_CENTS} AS v,
+          SELECT {sql_cents("value")} AS v,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                           THEN 1 ELSE 0 END) AS BIGINT) AS pos_v,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -237,10 +230,10 @@ _AP_SCALE = 1_000_000
           SELECT CAST(COUNT(*) AS BIGINT) AS n_events FROM events
         )
         SELECT t.n_pos, n.n_events - t.n_pos AS n_neg,
-               {_wide('t.ap_num')}
-                 / ({_wide(f'CAST({_AP_SCALE} AS BIGINT)')} * t.n_pos)
+               {wide('t.ap_num')}
+                 / ({wide(f'CAST({_AP_SCALE} AS BIGINT)')} * t.n_pos)
                  AS average_precision,
-               {_wide('t.n_pos')} / n.n_events AS prevalence
+               {wide('t.n_pos')} / n.n_events AS prevalence
         FROM t, n
     """,
     doc="Area under the precision-recall curve (average precision, "
@@ -260,7 +253,7 @@ _AP_SCALE = 1_000_000
 )
 def pr_auc_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_CENTS} AS v",
+        f"{sql_cents('value')} AS v",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_pos")
     g = (e.groupBy("v")
           .agg(F.sum("is_pos").cast("long").alias("pos_v"),
@@ -282,10 +275,10 @@ def pr_auc_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"))
     return t.crossJoin(F.broadcast(n)).selectExpr(
         "n_pos", "n_events - n_pos AS n_neg",
-        f"{_wide('ap_num')}"
-        f" / ({_wide(f'CAST({_AP_SCALE} AS BIGINT)')} * n_pos)"
+        f"{wide('ap_num')}"
+        f" / ({wide(f'CAST({_AP_SCALE} AS BIGINT)')} * n_pos)"
         " AS average_precision",
-        f"{_wide('n_pos')} / n_events AS prevalence")
+        f"{wide('n_pos')} / n_events AS prevalence")
 
 
 # ------------------------- Hodges-Lehmann weekend-vs-weekday shift
@@ -296,7 +289,7 @@ def pr_auc_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH daily AS (
           SELECT CAST(ts AS DATE) AS d,
                  MAX({_WKND_SQL}) AS wknd,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         p AS (
@@ -339,7 +332,7 @@ def hodges_lehmann_weekend_shift(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").alias("d"))
              .agg(F.max(F.expr(_WKND_SPARK)).alias("wknd"),
-                  F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+                  F.sum(cents("value")).cast("long").alias("cents"))
              .localCheckpoint())  # feeds 4 consumers, calendar-bounded
     wk = daily.filter("wknd = 1").select(F.col("cents").alias("wc"))
     wd = daily.filter("wknd = 0").select(F.col("cents").alias("dc"))
@@ -452,7 +445,7 @@ def siegel_repeated_medians_trend(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(cents("value")).cast("long").alias("cents"))
              .localCheckpoint())  # feeds pair join twice + intercept
     a = daily.select(F.col("x").alias("xi"), F.col("cents").alias("ca"))
     b = daily.select(F.col("x").alias("xb"), F.col("cents").alias("cb"))
@@ -533,7 +526,7 @@ def _ewma_oracle() -> str:
     return f"""
         WITH RECURSIVE daily AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         seq AS (
@@ -592,7 +585,7 @@ def ewma_control_chart_daily(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").cast("string").alias("day"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(cents("value")).cast("long").alias("cents"))
              .localCheckpoint())  # feeds the fold AND the moments
     one = daily.agg(F.sort_array(
         F.collect_list(F.struct("day", "cents"))).alias("arr"))

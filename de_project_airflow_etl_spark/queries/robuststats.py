@@ -20,39 +20,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import (
+    fold_sorted_spark, fold_sorted_sql, sql_cents, wide,
+)
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
 
 
 def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (load(spark, sf_dir, "events")
             .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{_CENTS} AS c")
+                        f"{sql_cents('value')} AS c")
             .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
 
 
 _SQL_DAILY = f"""
         d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         )"""
 
@@ -75,7 +63,7 @@ _SQL_DAILY = f"""
     "edf_two_sample_panel_weekend",
     oracle=f"""
         WITH v AS (
-          SELECT {_CENTS} AS c, {_WKND_SQL} AS w
+          SELECT {sql_cents("value")} AS c, {_WKND_SQL} AS w
           FROM events
         ),
         cell AS (
@@ -104,7 +92,7 @@ _SQL_DAILY = f"""
                           - CAST(s.n - s.n1 AS HUGEINT) * m_j)
                       AS DOUBLE)
                    / (CAST(s.n1 AS DOUBLE) * (s.n - s.n1)) AS d_minus,
-                 {_fold_sql(
+                 {fold_sorted_sql(
                      "list(CASE WHEN b_j < s.n THEN "
                      "CAST(l_j AS DOUBLE) / s.n "
                      "* CAST(CAST(CAST(s.n AS HUGEINT) * m_j "
@@ -145,7 +133,7 @@ _SQL_DAILY = f"""
 def edf_two_sample_panel_weekend(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
-            .selectExpr(f"{_CENTS} AS c", f"{_WKND_SPARK} AS w")
+            .selectExpr(f"{sql_cents('value')} AS c", f"{_WKND_SPARK} AS w")
             .groupBy("c")
             .agg(F.count(F.lit(1)).cast("long").alias("l_j"),
                  F.sum("w").cast("long").alias("w_j"))
@@ -182,7 +170,7 @@ def edf_two_sample_panel_weekend(spark: SparkSession,
                      " AS DOUBLE)"
                      " / (CAST(n1 AS DOUBLE) * (n - n1))")
                    .alias("d_minus"),
-                  F.expr(_fold_spark(f"collect_list({ad_term})")
+                  F.expr(fold_sorted_spark(f"collect_list({ad_term})")
                          + " * (CAST(1.0 AS DOUBLE) / n1"
                          " + CAST(1.0 AS DOUBLE) / (n - n1))")
                    .alias("ad_stat")))
@@ -223,21 +211,21 @@ def edf_two_sample_panel_weekend(spark: SparkSession,
         season AS (
           SELECT n, dt,
                  list_transform(generate_series(0, 6), g ->
-                   {_fold_sql("list_transform(list_filter(dt,"
-                              " x -> x.dow = g), x -> x.v)")}
+                   {fold_sorted_sql("list_transform(list_filter(dt,"
+                                    " x -> x.dow = g), x -> x.v)")}
                    / len(list_filter(dt, x -> x.dow = g))) AS s_idx
           FROM det
         ),
         moments AS (
           SELECT CAST(len(dt) AS BIGINT) AS n_mid,
-                 {_fold_sql("list_transform(dt, x -> x.v)")} AS sd1,
-                 {_fold_sql("list_transform(dt, x -> x.v * x.v)")}
+                 {fold_sorted_sql("list_transform(dt, x -> x.v)")} AS sd1,
+                 {fold_sorted_sql("list_transform(dt, x -> x.v * x.v)")}
                    AS sq1,
-                 {_fold_sql("list_transform(dt,"
-                            " x -> x.v - s_idx[x.dow + 1])")} AS sr1,
-                 {_fold_sql("list_transform(dt,"
-                            " x -> (x.v - s_idx[x.dow + 1])"
-                            " * (x.v - s_idx[x.dow + 1]))")} AS rq1
+                 {fold_sorted_sql("list_transform(dt,"
+                                  " x -> x.v - s_idx[x.dow + 1])")} AS sr1,
+                 {fold_sorted_sql("list_transform(dt,"
+                                  " x -> (x.v - s_idx[x.dow + 1])"
+                                  " * (x.v - s_idx[x.dow + 1]))")} AS rq1
           FROM season
         )
         SELECT n_mid,
@@ -282,19 +270,19 @@ def seasonal_strength_weekly(spark: SparkSession,
     season = det.selectExpr(
         "n", "dt",
         "transform(sequence(0, 6), g -> "
-        + _fold_spark("transform(filter(dt, x -> x.dow = g),"
-                      " x -> x.v)")
+        + fold_sorted_spark("transform(filter(dt, x -> x.dow = g),"
+                            " x -> x.v)")
         + " / size(filter(dt, x -> x.dow = g))) AS s_idx")
     moments = season.selectExpr(
         "CAST(size(dt) AS BIGINT) AS n_mid",
-        _fold_spark("transform(dt, x -> x.v)") + " AS sd1",
-        _fold_spark("transform(dt, x -> x.v * x.v)") + " AS sq1",
-        _fold_spark("transform(dt,"
-                    " x -> x.v - element_at(s_idx, x.dow + 1))")
+        fold_sorted_spark("transform(dt, x -> x.v)") + " AS sd1",
+        fold_sorted_spark("transform(dt, x -> x.v * x.v)") + " AS sq1",
+        fold_sorted_spark("transform(dt,"
+                          " x -> x.v - element_at(s_idx, x.dow + 1))")
         + " AS sr1",
-        _fold_spark("transform(dt,"
-                    " x -> (x.v - element_at(s_idx, x.dow + 1))"
-                    " * (x.v - element_at(s_idx, x.dow + 1)))")
+        fold_sorted_spark("transform(dt,"
+                          " x -> (x.v - element_at(s_idx, x.dow + 1))"
+                          " * (x.v - element_at(s_idx, x.dow + 1)))")
         + " AS rq1")
     return moments.selectExpr(
         "n_mid",
@@ -329,9 +317,9 @@ def seasonal_strength_weekly(spark: SparkSession,
           FROM dev ORDER BY num DESC, day LIMIT 1
         )
         SELECT day AS peak_day, n AS n_days,
-               {_wide("num")} / n
-                 / SQRT(({_wide("CAST(n AS HUGEINT) * q"
-                                " - CAST(s AS HUGEINT) * s")})
+               {wide("num")} / n
+                 / SQRT(({wide("CAST(n AS HUGEINT) * q"
+                               " - CAST(s AS HUGEINT) * s")})
                         / (CAST(n AS DOUBLE) * (n - 1))) AS g_stat
         FROM top
     """,
@@ -361,11 +349,11 @@ def grubbs_max_deviation_daily(spark: SparkSession,
                         "abs(CAST(n AS DECIMAL(38,0)) * cents - s)"
                         " AS num"))
     top = dev.orderBy(F.desc("num"), "day").limit(1)
-    ssq = _wide("CAST(n AS DECIMAL(38,0)) * q"
-                " - CAST(s AS DECIMAL(38,0)) * s")
+    ssq = wide("CAST(n AS DECIMAL(38,0)) * q"
+               " - CAST(s AS DECIMAL(38,0)) * s")
     return top.selectExpr(
         "day AS peak_day", "n AS n_days",
-        f"{_wide('num')} / n"
+        f"{wide('num')} / n"
         f" / SQRT(({ssq}) / (CAST(n AS DOUBLE) * (n - 1))) AS g_stat")
 
 
@@ -377,7 +365,7 @@ def grubbs_max_deviation_daily(spark: SparkSession,
     "winsorized_mean_value",
     oracle=f"""
         WITH cell AS (
-          SELECT {_CENTS} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
+          SELECT {sql_cents("value")} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1
         ),
         cum AS (
@@ -405,8 +393,8 @@ def grubbs_max_deviation_daily(spark: SparkSession,
           GROUP BY sz.n, b.p05, b.p95
         )
         SELECT n AS n_events, p05 AS p05_cents, p95 AS p95_cents,
-               {_wide("wsum")} / n / 100 AS winsorized_mean,
-               {_wide("rsum")} / n / 100 AS raw_mean
+               {wide("wsum")} / n / 100 AS winsorized_mean,
+               {wide("rsum")} / n / 100 AS raw_mean
         FROM w
     """,
     doc="5%-winsorized mean of event values: clamp (don't drop) the "
@@ -426,7 +414,7 @@ def grubbs_max_deviation_daily(spark: SparkSession,
 )
 def winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
-            .selectExpr(f"{_CENTS} AS c")
+            .selectExpr(f"{sql_cents('value')} AS c")
             .groupBy("c")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
             # bounds + winsorized sum both consume the cells; pin the
@@ -454,8 +442,8 @@ def winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("rsum")))
     return w.selectExpr(
         "n AS n_events", "p05 AS p05_cents", "p95 AS p95_cents",
-        f"{_wide('wsum')} / n / 100 AS winsorized_mean",
-        f"{_wide('rsum')} / n / 100 AS raw_mean")
+        f"{wide('wsum')} / n / 100 AS winsorized_mean",
+        f"{wide('rsum')} / n / 100 AS raw_mean")
 
 
 # ---------------------------------------------------------------------
@@ -468,7 +456,7 @@ def winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH day_t AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
                  dayofweek(MIN(ts)) AS dow,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS x,
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS x,
                  CAST(COUNT(*) AS BIGINT) AS y
           FROM events GROUP BY 1
         ),
@@ -482,15 +470,15 @@ def winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM day_t GROUP BY dow
         ),
         folds AS (
-          SELECT {_fold_sql(
+          SELECT {fold_sorted_sql(
                      "list(CAST(CAST(CAST(m AS HUGEINT) * qx"
                      " - CAST(sx AS HUGEINT) * sx AS VARCHAR)"
                      " AS DOUBLE) / m)")} AS sxx_w,
-                 {_fold_sql(
+                 {fold_sorted_sql(
                      "list(CAST(CAST(CAST(m AS HUGEINT) * qy"
                      " - CAST(sy AS HUGEINT) * sy AS VARCHAR)"
                      " AS DOUBLE) / m)")} AS syy_w,
-                 {_fold_sql(
+                 {fold_sorted_sql(
                      "list(CAST(CAST(CAST(m AS HUGEINT) * qxy"
                      " - CAST(sx AS HUGEINT) * sy AS VARCHAR)"
                      " AS DOUBLE) / m)")} AS sxy_w
@@ -517,7 +505,7 @@ def partial_corr_revenue_count_dow(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     day_t = (load(spark, sf_dir, "events")
              .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                         "ts", f"{_CENTS} AS c")
+                         "ts", f"{sql_cents('value')} AS c")
              .groupBy("day")
              .agg(F.expr("dayofweek(MIN(ts)) - 1").alias("dow"),
                   F.sum("c").cast("long").alias("x"),
@@ -530,15 +518,15 @@ def partial_corr_revenue_count_dow(spark: SparkSession,
         F.expr("SUM(CAST(y AS DECIMAL(38,0)) * y)").alias("qy"),
         F.expr("SUM(CAST(x AS DECIMAL(38,0)) * y)").alias("qxy"))
     folds = g.filter("m > 1").agg(
-        F.expr(_fold_spark(
+        F.expr(fold_sorted_spark(
             "collect_list(CAST(CAST(CAST(m AS DECIMAL(38,0)) * qx"
             " - CAST(sx AS DECIMAL(38,0)) * sx AS STRING)"
             " AS DOUBLE) / m)")).alias("sxx_w"),
-        F.expr(_fold_spark(
+        F.expr(fold_sorted_spark(
             "collect_list(CAST(CAST(CAST(m AS DECIMAL(38,0)) * qy"
             " - CAST(sy AS DECIMAL(38,0)) * sy AS STRING)"
             " AS DOUBLE) / m)")).alias("syy_w"),
-        F.expr(_fold_spark(
+        F.expr(fold_sorted_spark(
             "collect_list(CAST(CAST(CAST(m AS DECIMAL(38,0)) * qxy"
             " - CAST(sx AS DECIMAL(38,0)) * sy AS STRING)"
             " AS DOUBLE) / m)")).alias("sxy_w"))

@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import sql_cents
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 
 @query(
@@ -29,7 +28,7 @@ _CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
           FROM events WHERE event_type = 'click' GROUP BY 1
         ),
         purchases AS (
-          SELECT CAST(SUM({_CENTS}) AS BIGINT) AS purchase_cents,
+          SELECT CAST(SUM({sql_cents("value")}) AS BIGINT) AS purchase_cents,
                  CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
                  CAST(COUNT(*) AS BIGINT) AS n_purchase
           FROM events WHERE event_type = 'purchase' GROUP BY day
@@ -69,7 +68,7 @@ def union_by_name_daily_mix(spark: SparkSession,
                 .agg(F.count(F.lit(1)).cast("long").alias("n_click")))
     purchases = (ev.filter("event_type = 'purchase'")
                    .selectExpr(
-                       f"{_CENTS} AS c",
+                       f"{sql_cents('value')} AS c",
                        "CAST(CAST(ts AS DATE) AS STRING) AS day")
                    .groupBy("day")
                    .agg(F.sum("c").cast("long").alias("purchase_cents"),
@@ -106,7 +105,7 @@ def union_by_name_daily_mix(spark: SparkSession,
         daily AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
-                          THEN {_CENTS} ELSE 0 END) AS BIGINT)
+                          THEN {sql_cents("value")} ELSE 0 END) AS BIGINT)
                    AS purchase_cents,
                  CAST(COUNT(*) AS BIGINT) AS n_events
           FROM events GROUP BY 1
@@ -139,7 +138,7 @@ def calendar_spine_gap_fill(spark: SparkSession,
     ev = load(spark, sf_dir, "events")
     daily = (ev.selectExpr(
                 "CAST(CAST(ts AS DATE) AS STRING) AS day",
-                f"CASE WHEN event_type = 'purchase' THEN {_CENTS}"
+                f"CASE WHEN event_type = 'purchase' THEN {sql_cents('value')}"
                 " ELSE CAST(0 AS BIGINT) END AS pc")
                .groupBy("day")
                .agg(F.sum("pc").cast("long").alias("purchase_cents"),

@@ -16,14 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 def _tdiv_spark(num: str, den: str) -> str:
@@ -85,7 +80,7 @@ def weekly_users_bitmap_rollup(spark: SparkSession,
     "percentile_disc_bands_by_type",
     oracle=f"""
         WITH e AS (
-          SELECT event_type, {_CENTS} AS cv FROM events
+          SELECT event_type, {sql_cents("value")} AS cv FROM events
         )
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -110,7 +105,7 @@ def weekly_users_bitmap_rollup(spark: SparkSession,
 def percentile_disc_bands_by_type(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr("event_type",
-                                                 f"{_CENTS} AS cv")
+                                                 f"{sql_cents('value')} AS cv")
     cells = (e.groupBy("event_type", "cv")
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     wt = Window.partitionBy("event_type")
@@ -171,7 +166,7 @@ def _ph_oracle() -> str:
     return f"""
         WITH RECURSIVE daily AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         seq AS (
@@ -226,7 +221,7 @@ def page_hinkley_drift_daily(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").cast("string").alias("day"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(cents("value")).cast("long").alias("cents"))
              .localCheckpoint())  # feeds the fold AND lambda
     one = daily.agg(F.sort_array(
         F.collect_list(F.struct("day", "cents"))).alias("arr"))
@@ -324,7 +319,7 @@ def _hw_oracle() -> str:
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
                  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                    % 7 AS dow,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
           FROM events GROUP BY 1, 2
         ),
         seq AS (
@@ -427,7 +422,7 @@ def holt_winters_additive_weekly(spark: SparkSession,
              .groupBy(F.to_date("ts").cast("string").alias("day"),
                       (F.datediff(F.to_date("ts"),
                                   F.lit("1970-01-01")) % 7).alias("dow"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents")))
+             .agg(F.sum(cents("value")).cast("long").alias("cents")))
     one = daily.agg(F.sort_array(
         F.collect_list(F.struct("day", "dow", "cents"))).alias("arr"))
     return one.select(F.expr(_hw_spark_expr()))

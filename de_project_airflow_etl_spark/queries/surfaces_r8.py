@@ -22,14 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # ------------------------------------ Zipf rank-frequency constancy
@@ -103,7 +98,7 @@ def zipf_rank_frequency_table(spark: SparkSession,
     "bowley_skewness_by_type",
     oracle=f"""
         WITH e AS (
-          SELECT event_type, {_CENTS} AS cv FROM events
+          SELECT event_type, {sql_cents("value")} AS cv FROM events
         ),
         q AS (
           SELECT event_type,
@@ -138,7 +133,7 @@ def zipf_rank_frequency_table(spark: SparkSession,
 def bowley_skewness_by_type(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr("event_type",
-                                                 f"{_CENTS} AS cv")
+                                                 f"{sql_cents('value')} AS cv")
     cells = (e.groupBy("event_type", "cv")
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     wt = Window.partitionBy("event_type")
@@ -252,7 +247,7 @@ def offset_window_90m_revenue(spark: SparkSession,
                  .alias("bin_start"),
                 "event_type")
              .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                  F.sum(F.expr(_CENTS)).cast("long").alias("revenue_c")))
+                  F.sum(cents("value")).cast("long").alias("revenue_c")))
 
 
 # --------------------- deterministic hash-bootstrap mean CI (B = 32)
@@ -283,7 +278,7 @@ _BOOT_W = ("CASE WHEN u < {t0} THEN 0 WHEN u < {t1} THEN 1"
     "hash_bootstrap_mean_ci",
     oracle=f"""
         WITH f AS (
-          SELECT event_id, {_CENTS} AS c,
+          SELECT event_id, {sql_cents("value")} AS c,
                  unnest(range(0, {BOOT_B})) AS b
           FROM events
         ),
@@ -304,7 +299,7 @@ _BOOT_W = ("CASE WHEN u < {t0} THEN 0 WHEN u < {t1} THEN 1"
         ),
         base AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n_events,
-                 CAST(SUM({_CENTS}) AS DOUBLE) / COUNT(*) / 100
+                 CAST(SUM({sql_cents("value")}) AS DOUBLE) / COUNT(*) / 100
                    AS mean_value
           FROM events
         )
@@ -334,7 +329,7 @@ _BOOT_W = ("CASE WHEN u < {t0} THEN 0 WHEN u < {t1} THEN 1"
 )
 def hash_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr("event_id",
-                                                 f"{_CENTS} AS c")
+                                                 f"{sql_cents('value')} AS c")
     f = e.select("c", "event_id",
                  F.explode(F.expr(f"sequence(0, {BOOT_B} - 1)"))
                   .alias("b"))

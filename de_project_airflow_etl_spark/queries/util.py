@@ -54,6 +54,45 @@ def sql_cents(expr: str) -> str:
     return f"CAST(ROUND({expr} * 100) AS BIGINT)"
 
 
+# Exact integers that can pass 2^53 (DECIMAL(38,0) sums of products,
+# DuckDB HUGEINT) reach DOUBLE through their decimal string: the digits
+# are identical on both engines and the string -> double parse is
+# correctly rounded everywhere, while a direct numeric cast is not.
+# DuckDB reads STRING as an alias of VARCHAR, so one spelling serves
+# the Spark text and the oracle.
+
+def wide(expr: str) -> str:
+    """Exact wide integer -> nearest double via its decimal string."""
+    return f"CAST(CAST({expr} AS STRING) AS DOUBLE)"
+
+
+def dlit(x: float) -> str:
+    """A double literal rendered identically in both engines: repr()
+    round-trips exactly and the string cast is correctly rounded (a bare
+    decimal literal parses as DECIMAL in Spark)."""
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+# Deterministic double reduction: a bounded sum of per-group DOUBLE
+# terms is bit-identical on both engines when each folds the SORTED
+# terms left to right from a 0.0 seed. DuckDB's list_reduce takes no
+# seed, so prepending 0.0 reproduces Spark's association exactly.
+# Running-sum windows are not a substitute: DuckDB may combine window
+# aggregates through a segment tree rather than left to right.
+
+def fold_sorted_spark(arr: str) -> str:
+    """Spark SQL: sorted 0.0-seeded sum of a DOUBLE array column."""
+    return (f"aggregate(array_sort({arr}), CAST(0.0 AS DOUBLE), "
+            f"(acc, v) -> acc + v)")
+
+
+def fold_sorted_sql(list_expr: str) -> str:
+    """DuckDB twin of ``fold_sorted_spark``; pass a list column, or
+    ``f"list({term})"`` to fold a per-row term of the group."""
+    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+            f"list_sort({list_expr})), (acc, v) -> acc + v)")
+
+
 # ---------------------------------------------------- distributed rank
 
 RANK_BUCKETS = 32        # value-range buckets per refinement level

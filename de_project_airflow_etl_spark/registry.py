@@ -10,9 +10,13 @@ exactly):
 
 * Alias every computed column identically in the Spark plan and the
   oracle SQL.
-* Monetary/double aggregations go through DECIMAL so partial-aggregation
-  order cannot perturb the result; final values are cast back to DOUBLE
-  (exact decimal -> nearest double is deterministic on both engines).
+* Monetary sums accumulate exact int64 cents (``util.cents`` /
+  ``sql_cents``), so partial-aggregation order cannot perturb them;
+  sums of integer products go through DECIMAL(38,0), wide integers
+  reach DOUBLE through their decimal string (``util.wide``), and
+  bounded sums of double terms fold sorted from a 0.0 seed
+  (``util.fold_sorted_spark`` / ``fold_sorted_sql``). The rationale
+  lives in ``queries/util.py``.
 * Timestamps are cast to DATE explicitly on both sides when grouping by
   day (testdata ships timestamps, FIXTURES.md §3).
 """

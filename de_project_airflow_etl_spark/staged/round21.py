@@ -27,10 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, sql_cents, wide
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
 
@@ -54,12 +54,8 @@ def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (load(spark, sf_dir, "events")
             .groupBy(F.datediff(F.to_date("ts"),
                                 F.lit("1970-01-01")).alias("x"))
-            .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+            .agg(F.sum(cents("value")).cast("long").alias("cents"))
             .localCheckpoint())
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -174,7 +170,7 @@ _MOOD_T4 = ("SUM(CAST(n_we_c AS {w}) * (m2 - n - 1) * (m2 - n - 1))")
     "mood_scale_test_weekend",
     oracle=f"""
         WITH e AS (
-          SELECT {_WKND_SQL} AS wknd, {_CENTS} AS c FROM events
+          SELECT {_WKND_SQL} AS wknd, {sql_cents("value")} AS c FROM events
         ),
         cells AS (
           SELECT c, CAST(SUM(wknd) AS BIGINT) AS n_we_c,
@@ -200,8 +196,8 @@ _MOOD_T4 = ("SUM(CAST(n_we_c AS {w}) * (m2 - n - 1) * (m2 - n - 1))")
           FROM cum CROSS JOIN tot tt
         )
         SELECT n_we AS n_weekend, n - n_we AS n_weekday,
-               {_wide('t4')} / 4 AS mood_t,
-               ({_wide('t4')} / 4
+               {wide('t4')} / 4 AS mood_t,
+               ({wide('t4')} / 4
                 - CAST(n_we AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1)
                   / 12)
                / SQRT(CAST(n_we AS DOUBLE) * (n - n_we) * (n + 1)
@@ -230,7 +226,7 @@ _MOOD_T4 = ("SUM(CAST(n_we_c AS {w}) * (m2 - n - 1) * (m2 - n - 1))")
 def mood_scale_test_weekend(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_WKND_SPARK} AS wknd", f"{_CENTS} AS c")
+        f"{_WKND_SPARK} AS wknd", f"{sql_cents('value')} AS c")
     cells = e.groupBy("c").agg(
         F.sum("wknd").cast("long").alias("n_we_c"),
         F.count(F.lit(1)).cast("long").alias("t"))
@@ -251,8 +247,8 @@ def mood_scale_test_weekend(spark: SparkSession,
                  F.max("n_we").alias("n_we"), F.max("n").alias("n")))
     return s.selectExpr(
         "n_we AS n_weekend", "n - n_we AS n_weekday",
-        f"{_wide('t4')} / 4 AS mood_t",
-        f"({_wide('t4')} / 4"
+        f"{wide('t4')} / 4 AS mood_t",
+        f"({wide('t4')} / 4"
         " - CAST(n_we AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1) / 12)"
         " / SQRT(CAST(n_we AS DOUBLE) * (n - n_we) * (n + 1)"
         " * (CAST(n AS DOUBLE) * n - 4) / 180) AS z_mood")
@@ -285,7 +281,7 @@ _ENERGY_CUM = """
     "energy_distance_weekend",
     oracle=f"""
         WITH e AS (
-          SELECT {_WKND_SQL} AS wknd, {_CENTS} AS c FROM events
+          SELECT {_WKND_SQL} AS wknd, {sql_cents("value")} AS c FROM events
         ),
         cells AS (
           SELECT c, CAST(SUM(wknd) AS BIGINT) AS n_we_c,
@@ -306,11 +302,11 @@ _ENERGY_CUM = """
           FROM cum
         )
         SELECT n1 AS n_weekend, n2 AS n_weekday,
-               {_wide('s12')} / (CAST(n1 AS DOUBLE) * n2) / 100
+               {wide('s12')} / (CAST(n1 AS DOUBLE) * n2) / 100
                  AS mean_cross_absdiff,
-               (2 * {_wide('s12')} / (CAST(n1 AS DOUBLE) * n2)
-                - 2 * {_wide('s11')} / (CAST(n1 AS DOUBLE) * n1)
-                - 2 * {_wide('s22')} / (CAST(n2 AS DOUBLE) * n2)) / 100
+               (2 * {wide('s12')} / (CAST(n1 AS DOUBLE) * n2)
+                - 2 * {wide('s11')} / (CAST(n1 AS DOUBLE) * n1)
+                - 2 * {wide('s22')} / (CAST(n2 AS DOUBLE) * n2)) / 100
                  AS energy_dist_dollars
         FROM s
     """,
@@ -339,7 +335,7 @@ _ENERGY_CUM = """
 def energy_distance_weekend(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_WKND_SPARK} AS wknd", f"{_CENTS} AS c")
+        f"{_WKND_SPARK} AS wknd", f"{sql_cents('value')} AS c")
     cells = e.groupBy("c").agg(
         F.sum("wknd").cast("long").alias("n_we_c"),
         F.sum(1 - F.col("wknd")).cast("long").alias("n_wd_c"))
@@ -364,11 +360,11 @@ def energy_distance_weekend(spark: SparkSession,
         F.sum("n_wd_c").cast("long").alias("n2"))
     return s.selectExpr(
         "n1 AS n_weekend", "n2 AS n_weekday",
-        f"{_wide('s12')} / (CAST(n1 AS DOUBLE) * n2) / 100"
+        f"{wide('s12')} / (CAST(n1 AS DOUBLE) * n2) / 100"
         " AS mean_cross_absdiff",
-        f"(2 * {_wide('s12')} / (CAST(n1 AS DOUBLE) * n2)"
-        f" - 2 * {_wide('s11')} / (CAST(n1 AS DOUBLE) * n1)"
-        f" - 2 * {_wide('s22')} / (CAST(n2 AS DOUBLE) * n2)) / 100"
+        f"(2 * {wide('s12')} / (CAST(n1 AS DOUBLE) * n2)"
+        f" - 2 * {wide('s11')} / (CAST(n1 AS DOUBLE) * n1)"
+        f" - 2 * {wide('s22')} / (CAST(n2 AS DOUBLE) * n2)) / 100"
         " AS energy_dist_dollars")
 
 
@@ -398,7 +394,7 @@ _HOEFF_NUM16 = ("CAST(4 * (n_days - 2) * (n_days - 3) AS {dec})"
 def _hoeff_select(dec: str) -> str:
     num16 = _HOEFF_NUM16.format(dec=dec)
     return f"""
-        SELECT n_days, d1_4, {_wide('d2_16')} AS d2_16_wide, d3_8,
+        SELECT n_days, d1_4, {wide('d2_16')} AS d2_16_wide, d3_8,
                CAST(CAST({num16} AS STRING) AS DOUBLE) * 30
                / (CAST(16 AS DOUBLE) * n_days * (n_days - 1)
                   * (n_days - 2) * (n_days - 3) * (n_days - 4))
@@ -485,7 +481,7 @@ def hoeffding_d_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("d3_8"))
     num16 = _HOEFF_NUM16.format(dec="DECIMAL(38,0)")
     return agg.selectExpr(
-        "n_days", "d1_4", f"{_wide('d2_16')} AS d2_16_wide", "d3_8",
+        "n_days", "d1_4", f"{wide('d2_16')} AS d2_16_wide", "d3_8",
         f"CAST(CAST({num16} AS STRING) AS DOUBLE) * 30"
         " / (CAST(16 AS DOUBLE) * n_days * (n_days - 1)"
         " * (n_days - 2) * (n_days - 3) * (n_days - 4))"

@@ -24,10 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import cents, wide
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 _SQL_DAILY = """
         daily AS (
@@ -43,12 +43,8 @@ def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (load(spark, sf_dir, "events")
             .groupBy(F.datediff(F.to_date("ts"),
                                 F.lit("1970-01-01")).alias("x"))
-            .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+            .agg(F.sum(cents("value")).cast("long").alias("cents"))
             .localCheckpoint())
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -218,15 +214,15 @@ def sample_entropy_matches_daily(spark: SparkSession,
           CROSS JOIN g
         )
         SELECT n AS n_days,
-               {_wide('sab')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
+               {wide('sab')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
                  AS dcov2,
-               {_wide('saa')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
+               {wide('saa')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
                  AS dvarx2,
-               {_wide('sbb')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
+               {wide('sbb')} / (CAST(n AS DOUBLE) * n * n * n * n * n)
                  AS dvary2,
                CASE WHEN saa > 0 AND sbb > 0 THEN
-                 SQRT({_wide('sab')}
-                      / SQRT({_wide('saa')} * {_wide('sbb')}))
+                 SQRT({wide('sab')}
+                      / SQRT({wide('saa')} * {wide('sbb')}))
                ELSE CAST(0.0 AS DOUBLE) END AS dcor
         FROM c
     """,
@@ -286,14 +282,14 @@ def distance_correlation_daily(spark: SparkSession,
                F.max("n").alias("n")))
     return c.selectExpr(
         "n AS n_days",
-        f"{_wide('sab')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
+        f"{wide('sab')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
         " AS dcov2",
-        f"{_wide('saa')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
+        f"{wide('saa')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
         " AS dvarx2",
-        f"{_wide('sbb')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
+        f"{wide('sbb')} / (CAST(n AS DOUBLE) * n * n * n * n * n)"
         " AS dvary2",
         f"CASE WHEN saa > 0 AND sbb > 0 THEN"
-        f" SQRT({_wide('sab')} / SQRT({_wide('saa')} * {_wide('sbb')}))"
+        f" SQRT({wide('sab')} / SQRT({wide('saa')} * {wide('sbb')}))"
         " ELSE CAST(0.0 AS DOUBLE) END AS dcor")
 
 

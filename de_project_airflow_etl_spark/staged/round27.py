@@ -30,27 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _wide(col: str) -> str:
-    """Correctly-rounded wide-int -> double (the recorded route)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
 
 
 # ---------------------------------------------------------------------
@@ -72,7 +57,7 @@ def _fold_sql(term_expr: str) -> str:
     "fligner_policello_weekend",
     oracle=f"""
         WITH v AS (
-          SELECT {_CENTS} AS c, {_WKND_SQL} AS w FROM events
+          SELECT {sql_cents("value")} AS c, {_WKND_SQL} AS w FROM events
         ),
         cell AS (
           SELECT c,
@@ -104,14 +89,14 @@ def _fold_sql(term_expr: str) -> str:
         fin AS (
           SELECT m, n,
                  CASE WHEN m = 0 THEN NULL
-                      ELSE {_wide('sx')} / (2.0 * m) END AS mpx,
+                      ELSE {wide('sx')} / (2.0 * m) END AS mpx,
                  CASE WHEN n = 0 THEN NULL
-                      ELSE {_wide('sy')} / (2.0 * n) END AS mpy,
-                 {_wide('sx - sy')} AS num,
+                      ELSE {wide('sy')} / (2.0 * n) END AS mpy,
+                 {wide('sx - sy')} AS num,
                  CASE WHEN m = 0 OR n = 0 THEN NULL
-                      ELSE {_wide('m * sxx2 - sx * sx')} / m
-                           + {_wide('n * syy2 - sy * sy')} / n
-                           + {_wide('sx')} * {_wide('sy')}
+                      ELSE {wide('m * sxx2 - sx * sx')} / m
+                           + {wide('n * syy2 - sy * sy')} / n
+                           + {wide('sx')} * {wide('sy')}
                              / (CAST(m AS DOUBLE) * n) END AS vterm
           FROM s
         )
@@ -142,7 +127,7 @@ def _fold_sql(term_expr: str) -> str:
 def fligner_policello_weekend(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
-            .selectExpr(f"{_CENTS} AS c", f"{_WKND_SPARK} AS w")
+            .selectExpr(f"{sql_cents('value')} AS c", f"{_WKND_SPARK} AS w")
             .groupBy("c")
             .agg(F.sum("w").cast("long").alias("cx"),
                  F.expr("CAST(SUM(1 - w) AS BIGINT)").alias("cy")))
@@ -166,15 +151,15 @@ def fligner_policello_weekend(spark: SparkSession,
                " * (2 * bx + cx))").alias("syy2"))
     v = s.selectExpr(
         "m", "n",
-        f"CASE WHEN m = 0 THEN NULL ELSE {_wide('sx')}"
+        f"CASE WHEN m = 0 THEN NULL ELSE {wide('sx')}"
         " / (CAST(2 AS DOUBLE) * m) END AS mpx",
-        f"CASE WHEN n = 0 THEN NULL ELSE {_wide('sy')}"
+        f"CASE WHEN n = 0 THEN NULL ELSE {wide('sy')}"
         " / (CAST(2 AS DOUBLE) * n) END AS mpy",
-        f"{_wide('sx - sy')} AS num",
+        f"{wide('sx - sy')} AS num",
         "CASE WHEN m = 0 OR n = 0 THEN NULL ELSE"
-        f" {_wide('m * sxx2 - sx * sx')} / m"
-        f" + {_wide('n * syy2 - sy * sy')} / n"
-        f" + {_wide('sx')} * {_wide('sy')}"
+        f" {wide('m * sxx2 - sx * sx')} / m"
+        f" + {wide('n * syy2 - sy * sy')} / n"
+        f" + {wide('sx')} * {wide('sy')}"
         " / (CAST(m AS DOUBLE) * n) END AS vterm")
     return v.selectExpr(
         "m AS n_weekend", "n AS n_weekday",
@@ -199,7 +184,7 @@ def fligner_policello_weekend(spark: SparkSession,
     "dunn_posthoc_value_by_type",
     oracle=f"""
         WITH gv AS (
-          SELECT event_type AS g, {_CENTS} AS v,
+          SELECT event_type AS g, {sql_cents("value")} AS v,
                  CAST(COUNT(*) AS BIGINT) AS cnt_gv
           FROM events GROUP BY 1, 2
         ),
@@ -230,10 +215,10 @@ def fligner_policello_weekend(spark: SparkSession,
                b.n_g AS n_b,
                CASE WHEN t.n < 2 OR CAST(t.n AS HUGEINT) * (t.n + 1)
                          * (t.n - 1) - t.tie_num = 0 THEN NULL
-                 ELSE {_wide('a.r2 * b.n_g - b.r2 * a.n_g')}
+                 ELSE {wide('a.r2 * b.n_g - b.r2 * a.n_g')}
                    / (2.0 * a.n_g * b.n_g)
-                   / SQRT({_wide("CAST(t.n AS HUGEINT) * (t.n + 1)"
-                                 " * (t.n - 1) - t.tie_num")}
+                   / SQRT({wide("CAST(t.n AS HUGEINT) * (t.n + 1)"
+                                " * (t.n - 1) - t.tie_num")}
                           / (12.0 * (t.n - 1))
                           * (a.n_g + b.n_g)
                           / (CAST(a.n_g AS DOUBLE) * b.n_g))
@@ -261,7 +246,7 @@ def fligner_policello_weekend(spark: SparkSession,
 def dunn_posthoc_value_by_type(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     gv = (load(spark, sf_dir, "events")
-          .selectExpr("event_type AS g", f"{_CENTS} AS v")
+          .selectExpr("event_type AS g", f"{sql_cents('value')} AS v")
           .groupBy("g", "v")
           .agg(F.count(F.lit(1)).cast("long").alias("cnt_gv"))
           # feeds vv AND rg (multi-consumer rule; bounded cells)
@@ -291,14 +276,14 @@ def dunn_posthoc_value_by_type(spark: SparkSession,
     b = rg.select(F.col("g").alias("type_b"), F.col("r2").alias("r2_b"),
                   F.col("n_g").alias("n_b"))
     pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
-    var_num = _wide("CAST(n AS DECIMAL(38,0)) * (n + 1) * (n - 1)"
-                    " - tie_num")
+    var_num = wide("CAST(n AS DECIMAL(38,0)) * (n + 1) * (n - 1)"
+                   " - tie_num")
     return (pairs.crossJoin(F.broadcast(tot))
             .selectExpr(
                 "type_a", "type_b", "n_a", "n_b",
                 "CASE WHEN n < 2 OR CAST(n AS DECIMAL(38,0)) * (n + 1)"
                 " * (n - 1) - tie_num = 0 THEN NULL ELSE "
-                f"{_wide('r2_a * n_b - r2_b * n_a')}"
+                f"{wide('r2_a * n_b - r2_b * n_a')}"
                 " / (CAST(2 AS DOUBLE) * n_a * n_b)"
                 f" / SQRT({var_num}"
                 " / (CAST(12 AS DOUBLE) * (n - 1))"
@@ -369,7 +354,7 @@ _BAND_SQL = ("CASE WHEN event_type IN ('purchase', 'signup')"
                CASE WHEN (n12 + n21) * (n13 + n31)
                          + (n12 + n21) * (n23 + n32)
                          + (n13 + n31) * (n23 + n32) = 0 THEN NULL
-                 ELSE {_wide(
+                 ELSE {wide(
                      "CAST(n23 + n32 AS HUGEINT)"
                      " * ((n12 + n13) - (n21 + n31))"
                      " * ((n12 + n13) - (n21 + n31))"
@@ -379,11 +364,11 @@ _BAND_SQL = ("CASE WHEN event_type IN ('purchase', 'signup')"
                      " + CAST(n12 + n21 AS HUGEINT)"
                      " * ((n31 + n32) - (n13 + n23))"
                      " * ((n31 + n32) - (n13 + n23))")}
-                   / {_wide("CAST(n12 + n21 AS HUGEINT) * (n13 + n31)"
-                            " + CAST(n12 + n21 AS HUGEINT)"
-                            " * (n23 + n32)"
-                            " + CAST(n13 + n31 AS HUGEINT)"
-                            " * (n23 + n32)")}
+                   / {wide("CAST(n12 + n21 AS HUGEINT) * (n13 + n31)"
+                           " + CAST(n12 + n21 AS HUGEINT)"
+                           " * (n23 + n32)"
+                           " + CAST(n13 + n31 AS HUGEINT)"
+                           " * (n23 + n32)")}
                END AS sm_stat
         FROM m
     """,
@@ -447,7 +432,7 @@ def stuart_maxwell_event_transitions(spark: SparkSession,
         "(n31 + n32) - (n13 + n23) AS d_error",
         "CAST(2 AS BIGINT) AS df",
         f"CASE WHEN {den} = 0 THEN NULL"
-        f" ELSE {_wide(num)} / {_wide(den)} END AS sm_stat")
+        f" ELSE {wide(num)} / {wide(den)} END AS sm_stat")
 
 
 # ---------------------------------------------------------------------
@@ -502,10 +487,10 @@ _BAND_B = ("CASE WHEN length(text) - length(replace(text, ' ', ''))"
           FROM ra CROSS JOIN cb
         )
         SELECT n.n_docs,
-               1 - {_wide('CAST(n.n_docs AS HUGEINT) * n.wo_lin')}
-                 / {_wide('d.we_lin')} AS kappa_linear,
-               1 - {_wide('CAST(n.n_docs AS HUGEINT) * n.wo_quad')}
-                 / {_wide('d.we_quad')} AS kappa_quadratic
+               1 - {wide('CAST(n.n_docs AS HUGEINT) * n.wo_lin')}
+                 / {wide('d.we_lin')} AS kappa_linear,
+               1 - {wide('CAST(n.n_docs AS HUGEINT) * n.wo_quad')}
+                 / {wide('d.we_quad')} AS kappa_quadratic
         FROM num n CROSS JOIN den d
     """,
     doc="Cohen's WEIGHTED kappa between two ordinal 4-band document "
@@ -545,11 +530,11 @@ def weighted_kappa_ordinal_bands(spark: SparkSession,
                 F.expr("SUM((a - b) * (a - b)"
                        " * CAST(r_a AS DECIMAL(38,0)) * c_b)")
                  .alias("we_quad")))
-    n_wo_quad = _wide("CAST(n_docs AS DECIMAL(38,0)) * wo_quad")
+    n_wo_quad = wide("CAST(n_docs AS DECIMAL(38,0)) * wo_quad")
     return (num.crossJoin(F.broadcast(den))
             .selectExpr(
                 "n_docs",
-                f"1 - {_wide('CAST(n_docs AS DECIMAL(38,0)) * wo_lin')}"
-                f" / {_wide('we_lin')} AS kappa_linear",
+                f"1 - {wide('CAST(n_docs AS DECIMAL(38,0)) * wo_lin')}"
+                f" / {wide('we_lin')} AS kappa_linear",
                 f"1 - {n_wo_quad}"
-                f" / {_wide('we_quad')} AS kappa_quadratic"))
+                f" / {wide('we_quad')} AS kappa_quadratic"))

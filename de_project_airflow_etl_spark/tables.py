@@ -51,8 +51,8 @@ def _normalize_event_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
     assumes a plain TIMESTAMP whose instant equals the file's naive
     value read as UTC, which is also exactly how the DuckDB oracle
     treats it (naive timestamp, ``epoch()`` == UTC). Normalizing here,
-    in the one loader every query goes through, keeps the 148 query
-    implementations encoding-agnostic.
+    in the one loader every query goes through, keeps every query
+    implementation encoding-agnostic.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

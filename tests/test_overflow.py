@@ -73,3 +73,75 @@ def test_regression_moments_survive_past_int64(spark, tmp_path):
     rows = regression_aggregates(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     assert rows[0]["slope"] == pytest.approx(2.0)  # y grows 2x per x
+
+
+# ------------------------------------------- shared exact-double helpers
+
+# DECIMAL(38,0) magnitudes past 2^53 where the nearest double is a
+# rounding decision: 2^53 + 1 (a tie, rounds to even), 2^60 + 3, and
+# two 37-/38-digit values that DuckDB's direct DECIMAL -> DOUBLE cast
+# misrounds by one ulp (the reason the string route exists).
+WIDE_DIGITS = ("9007199254740993", "1152921504606846979",
+               "7325501306473332540141824227166885268",
+               "-68960332154114916793764502436821137399")
+
+
+def test_wide_gives_identical_double_on_both_engines(spark):
+    import duckdb
+
+    from de_project_airflow_etl_spark.queries.util import wide
+    cols = ", ".join(
+        f"{wide(f'CAST({d} AS DECIMAL(38,0))')} AS w{i}"
+        for i, d in enumerate(WIDE_DIGITS))
+    got_spark = list(spark.sql(f"SELECT {cols}").first())
+    got_duck = list(duckdb.connect().execute(f"SELECT {cols}").fetchone())
+    want = [float(int(d)) for d in WIDE_DIGITS]  # correctly rounded
+    assert [repr(v) for v in got_spark] == [repr(v) for v in want]
+    assert [repr(v) for v in got_duck] == [repr(v) for v in want]
+
+
+def test_sorted_fold_is_bit_identical_on_both_engines(spark):
+    import random
+
+    import duckdb
+
+    from de_project_airflow_etl_spark.queries.util import (
+        dlit, fold_sorted_spark, fold_sorted_sql,
+    )
+    rng = random.Random(26)
+    terms = [rng.choice((-1, 1)) * rng.random() * 10.0 ** rng.randint(-3, 16)
+             for _ in range(64)]
+    rng.shuffle(terms)
+
+    def left_fold(ts):
+        acc = 0.0
+        for t in ts:
+            acc += t
+        return acc
+
+    want = left_fold(sorted(terms))
+    # the sum must depend on order, or the test proves nothing
+    assert left_fold(terms) != want != left_fold(reversed(terms))
+
+    spark_arr = "array(" + ", ".join(dlit(t) for t in terms) + ")"
+    duck_list = "[" + ", ".join(dlit(t) for t in terms) + "]"
+    con = duckdb.connect()
+    got = {
+        "spark_array": spark.sql(
+            f"SELECT {fold_sorted_spark(spark_arr)} AS s").first()["s"],
+        "duck_list": con.execute(
+            f"SELECT {fold_sorted_sql(duck_list)}").fetchone()[0],
+    }
+    # the per-group shape: terms arrive in partition order on Spark and
+    # in scan order on DuckDB; the sort makes the order irrelevant
+    rows = spark.createDataFrame([(t,) for t in terms], "t double")
+    got["spark_group"] = (rows.repartition(4)
+                          .agg(F.expr(fold_sorted_spark("collect_list(t)"))
+                               .alias("s"))
+                          .first()["s"])
+    con.execute("CREATE TABLE terms AS SELECT * FROM (VALUES "
+                + ", ".join(f"({dlit(t)})" for t in terms) + ") v(t)")
+    got["duck_group"] = con.execute(
+        f"SELECT {fold_sorted_sql('list(t)')} FROM terms").fetchone()[0]
+    assert {k: repr(v) for k, v in got.items()} == {
+        k: repr(want) for k in got}
