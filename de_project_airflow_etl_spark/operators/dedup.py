@@ -581,6 +581,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return moved.union(selfed).distinct()
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the canonical ``(u, v)``, ``u > v`` edges form a star
+    forest: no node is both a child ``u`` and a parent ``v``, and no
+    child has two parents. One grouped aggregate over each node's
+    roles, read with ``isEmpty()`` — a single driver action."""
+    roles = edges.select(F.col("u").alias("n"), F.col("v").alias("parent"),
+                         F.lit(0).alias("is_parent")).union(
+            edges.select(F.col("v").alias("n"), F.lit(None).alias("parent"),
+                         F.lit(1).alias("is_parent")))
+    bad = (roles.groupBy("n")
+                .agg(F.min("parent").alias("lo"), F.max("parent").alias("hi"),
+                     F.max("is_parent").alias("is_parent"))
+                .filter((F.col("lo") != F.col("hi"))          # two parents
+                        | (F.col("hi").isNotNull()            # child AND parent
+                           & (F.col("is_parent") == 1))))
+    return bad.isEmpty()
+
+
 def _connected_components(pairs: DataFrame,
                           max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Alternating large-star/small-star contraction -> (doc_id,
@@ -592,59 +610,44 @@ def _connected_components(pairs: DataFrame,
     round is two shuffle aggregates + two shuffle joins on node id;
     localCheckpoint truncates lineage so plans stay flat. Raises
     RuntimeError instead of silently returning partial labels if the
-    fixpoint is not reached within CC_MAX_ITERS (ADVICE r1)."""
-    spark = pairs.sparkSession
-    # EAGER initial checkpoints, deliberately: the r11 lazy variant
-    # (eager=False, materialize under the first probe) measured a
-    # consistent ~0.8s LOSS at sf0.1 in interleaved warm A/B (old
-    # 3.02-3.97s vs lazy 3.71-4.82s best-of-N across two sessions),
-    # with or without probe batching — the eager materialization of
-    # the distinct-ed node/edge sets before the loop is cheaper than
-    # folding it into the first round's multi-consumer job.
-    nodes = (pairs.select(F.col("doc_a").alias("doc_id"))
-                  .union(pairs.select("doc_b"))
-                  .distinct()
-                  .localCheckpoint())
+    fixpoint is not reached within ``max_iters`` rounds (ADVICE r1).
+
+    Fixpoint test: before each round, ``_is_star_forest`` asks whether
+    the canonical edges are a star forest. The answer is exact, not a
+    witness: in a star forest both star rounds are identities (every
+    child's closed neighbourhood minimum is its one parent, every
+    parent's is itself), so no round is run only to confirm that
+    nothing changed; and the fixpoint of the alternating rounds is a
+    star forest (Kiveris et al., SOCC'14), so the loop stops exactly
+    there. Input that is already a star forest — every disjoint-pairs
+    graph — exits after zero rounds. Each probe is the round's one
+    driver action and also materializes its lazy checkpoint. The star
+    rounds preserve connectivity and keep ``u > v``, so each star's
+    root is its component minimum: the labels are the edges
+    themselves, ``(u, v)`` for children and ``(v, v)`` for roots.
+    The r11 variants of the earlier witness-sum probe (probe batching,
+    lazy initial checkpoints) and their measured losses:
+    OPTIMIZATION_r11.md §5."""
     edges = (pairs.select(F.col("doc_b").alias("u"),
                           F.col("doc_a").alias("v"))
                   .distinct()
-                  .localCheckpoint())  # doc_a < doc_b -> canonical u > v
-    converged = False
-    prev_stats = edges.agg(F.count(F.lit(1)), F.sum("u"),
-                           F.sum("v")).collect()[0]
-    # ONE ls+ss contraction pair per convergence probe. Probe BATCHING
-    # (two pairs per probe, VERDICT r10 item 4) was implemented and
-    # MEASURED A LOSS — interleaved warm A/B at sf0.1, 5 rounds:
-    # batched 3.71-4.25s vs per-round 3.02-3.87s, slower EVERY round —
-    # because the loop converges in few pairs and batching runs up to
-    # one full extra contraction pair past the fixpoint; the star
-    # rounds dominate, the probe actions do not (r11, rejected like
-    # the containment in-array variant).
-    for _ in range(max_iters):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        # One action per round: (count, sum u, sum v) — it also
-        # materializes the lazy checkpoint. Differing stats prove
-        # non-convergence without an equality join; equal stats gate
-        # the EXACT set-equality check (counts equal + one-way
-        # exceptAll empty <=> multisets equal), because witness sums
-        # alone could false-converge.
-        stats = new_edges.agg(F.count(F.lit(1)), F.sum("u"),
-                              F.sum("v")).collect()[0]
-        if stats == prev_stats and new_edges.exceptAll(edges).isEmpty():
-            edges = new_edges
-            converged = True
-            break
-        edges, prev_stats = new_edges, stats
-    if not converged:
-        raise RuntimeError(
-            f"connected components did not converge in {max_iters} "
-            "alternating star rounds — graph far larger than 2^25 nodes "
-            "or a bug; refusing to return partial labels")
-    # At the fixpoint every non-minimum node has exactly one edge to its
-    # component minimum; minima label themselves.
-    return (nodes.join(edges, nodes.doc_id == edges.u, "left")
-                 .select("doc_id",
-                         F.coalesce("v", "doc_id").alias("component_id")))
+                  .localCheckpoint(eager=False))  # doc_a < doc_b -> canonical u > v
+    rounds = 0
+    while not _is_star_forest(edges):
+        if rounds == max_iters:
+            raise RuntimeError(
+                f"connected components did not converge in {max_iters} "
+                "alternating star rounds — graph far larger than 2^25 "
+                "nodes or a bug; refusing to return partial labels")
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        rounds += 1
+    # a star forest gives each child exactly one (u, v) row; distinct
+    # only collapses the roots' repeated (v, v) rows
+    return (edges.select(F.col("u").alias("doc_id"),
+                         F.col("v").alias("component_id"))
+                 .union(edges.select(F.col("v").alias("doc_id"),
+                                     F.col("v").alias("component_id")))
+                 .distinct())
 
 
 @query(
@@ -669,7 +672,11 @@ def _connected_components(pairs: DataFrame,
         "LSH-verified near-dup pairs via alternating large-star/"
         "small-star contraction — O(log n) rounds independent of graph "
         "diameter, each round two shuffle joins + two shuffle "
-        "aggregates on node id. The oracle is DuckDB's recursive CTE "
+        "aggregates on node id. Before each round one grouped "
+        "aggregate tests whether the edges already form a star forest "
+        "(the exact fixpoint), so a graph of disjoint pairs runs zero "
+        "rounds; the labels are read off the star edges with a union "
+        "+ distinct, no join. The oracle is DuckDB's recursive CTE "
         "transitive closure — an engine-independent spec of the same "
         "clustering. component_id = min doc_id of the cluster, i.e. "
         "the canonical document a dedup pass keeps. Input pairs come "

@@ -883,7 +883,7 @@ def _kcore_oracle() -> str:
         "joins on node ids, localCheckpointed to truncate lineage — "
         "O(rounds) shuffles of id-sized rows, never text, same scale "
         "shape as dedup_clusters' alternating-star loop "
-        "(dedup.py:600).",
+        "(dedup.py::_connected_components).",
     tags=("graph"),
 )
 def kcore_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

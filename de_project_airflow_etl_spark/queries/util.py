@@ -123,7 +123,7 @@ def global_row_number(df, value_col: str, tiebreak: str, out: str,
        interior to a continuous neighborhood can survive all levels
        (document/extend RANK_LEVELS if such data exists). Each
        level's per-bucket stats feed a 1-scalar balance probe on the
-       driver (the dedup_clusters convergence-probe pattern), so
+       driver (one action decides whether to stop or refine), so
        well-spread data exits after a single check.
     3. Composite keys (parent * 3K + sub) keep lexicographic order;
        per-key counts prefix-sum into broadcast offsets (the only
@@ -166,7 +166,7 @@ def global_row_number(df, value_col: str, tiebreak: str, out: str,
                                   descending, _keep_key)
 
     # adaptive: the refinement decision (stop or re-split) is made on
-    # the driver per level — the convergence-probe pattern — so the
+    # the driver per level, one scalar probe per decision, so the
     # global stats are one eager 3-scalar probe.
     mn, mx, n = df.agg(F.min(v), F.max(v), F.count(F.lit(1))).first()
     if not n:

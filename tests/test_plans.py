@@ -118,6 +118,19 @@ def test_lsh_query_leaves_no_cached_relations(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_dedup_clusters_labels_without_a_join(spark, sf_dir):
+    """At the star-forest fixpoint the labels are the edges themselves
+    (union + distinct): the final executed plan joins nothing."""
+    from de_project_airflow_etl_spark.operators import dedup
+    df = dedup.dedup_clusters(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+                 "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert join not in plan, plan
+
+
 def test_join_strategy_hints_are_honored(spark, sf_dir):
     """Explicit strategy hints override the cost-based choice — the
     manual control knob when statistics mislead the planner at scale."""
