@@ -1,9 +1,24 @@
 """Plan assertions used by tests (and by humans via .explain).
 
-These read the formatted physical plan string — the same text
+The string checks read the formatted physical plan — the same text
 ``df.explain("formatted")`` prints — and check the scale-critical
 properties: filters reached the parquet scan, projections pruned the
 read schema, small sides broadcast, no cartesian products sneak in.
+
+The structural checks walk the physical plan tree. They implement the
+rule vocabulary of the ``PLAN_RULES`` table in
+``tests/test_plan_rules.py``, which declares per query name:
+
+* ``scans``: at most N parquet scans in the final plan
+  (``scan_count``);
+* ``windows="aggregate"``: every ``WindowExec`` input subtree contains
+  an Aggregate (``unbounded_windows``);
+* ``windows="aggregate_or_no_scan"``: every ``WindowExec`` input
+  subtree contains an Aggregate or reads no file, i.e. consumes a
+  checkpoint (``unbounded_windows(..., scanless_ok=True)``);
+* ``max_windows``: at most N ``WindowExec`` nodes, 0 meaning none
+  (``window_nodes``);
+* ``has_window``: at least one ``WindowExec`` (``window_nodes``).
 """
 
 from __future__ import annotations
@@ -30,8 +45,8 @@ def scan_read_schema(df: DataFrame) -> list[str]:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or \
-           "BroadcastNestedLoopJoin" in formatted_plan(df)
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def has_partition_filter(df: DataFrame, fragment: str) -> bool:
@@ -45,6 +60,49 @@ def _walk_jplan(jnode):
     children = jnode.children()
     for i in range(children.size()):
         yield from _walk_jplan(children.apply(i))
+
+
+def scan_count(df: DataFrame) -> int:
+    """Parquet scans in the final plan: ``Scan parquet`` occurrences in
+    the executed plan's tree string (one per file scan node, counting
+    the lineage printed under a cached InMemoryRelation). A
+    checkpointed subtree runs before the final plan and shows as an
+    RDD scan, so it does not count."""
+    return (df._jdf.queryExecution().executedPlan().toString()
+            .count("Scan parquet"))
+
+
+def node_names(df: DataFrame) -> list[str]:
+    """Class names of every node in the physical plan."""
+    return [n.getClass().getSimpleName()
+            for n in _walk_jplan(df._jdf.queryExecution().sparkPlan())]
+
+
+def window_nodes(df: DataFrame) -> list:
+    """Every ``WindowExec`` node of the physical plan (py4j handles).
+    ``WindowGroupLimitExec``, the rank-limit pushdown, is not one."""
+    return [n for n in _walk_jplan(df._jdf.queryExecution().sparkPlan())
+            if n.getClass().getSimpleName().startswith("WindowExec")]
+
+
+def unbounded_windows(df: DataFrame, scanless_ok: bool = False) -> list[str]:
+    """Windows whose input is not shown to be bounded. A window passes
+    when its input subtree contains an Aggregate (it ranks a rollup,
+    not raw rows). With ``scanless_ok`` it also passes when that
+    subtree reads no file: its rows come from a checkpoint, which hides
+    the aggregate that built them.
+
+    Returns the offending window descriptions (empty == pass)."""
+    offenders = []
+    for wnode in window_nodes(df):
+        names = [n.getClass().getSimpleName()
+                 for n in _walk_jplan(wnode.children().apply(0))]
+        if any("Aggregate" in n for n in names):
+            continue
+        if scanless_ok and not any("FileSourceScan" in n for n in names):
+            continue
+        offenders.append(wnode.simpleString(25))
+    return offenders
 
 
 def bnlj_builds_are_scalar(df: DataFrame) -> list[str]:

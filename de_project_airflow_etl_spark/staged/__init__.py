@@ -123,7 +123,7 @@ registered ANOVA's exact sufficient statistics).
 Pen sweeps this round: 45/45 green at sf0.01 (104.1 s) AND sf0.1
 (144.0 s) on 2026-08-17 — the recorded promotion precondition for
 the round-11 window. Final-plan parquet-scan budgets for all eight
-new banks are pinned in tests/test_staged_r33.py.
+new banks are rows of PLAN_RULES in tests/test_plan_rules.py.
 
 The round labels are the DEFAULT schedule, not a constraint: the
 window takes ~50 rows, so a promoting session folds banks together

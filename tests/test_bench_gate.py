@@ -169,7 +169,8 @@ def test_small_headline_queries_have_plan_gates():
     import glob
     tests_dir = os.path.dirname(os.path.abspath(__file__))
     gate_sources = ""
-    for pattern in ("test_plans*.py", "test_*scale*.py", "test_layout.py",
+    for pattern in ("test_plans*.py", "test_plan_rules.py",
+                    "test_*scale*.py", "test_layout.py",
                     "test_bucketing.py", "test_skew.py", "test_graph.py",
                     "test_sketches.py", "test_streaming_*.py",
                     "test_substr_and_mix.py", "test_wau_scale.py"):

@@ -1,10 +1,14 @@
-"""The exact-arithmetic SQL idioms live in one module.
+"""Shared idioms live in one module each.
 
 ``queries/util.py`` owns the wide-int -> double string route, the
 sorted 0.0-seed fold, the round-trip double literal and the ``value``
 cents expression. A module-level function or constant anywhere else in
 the package whose text IS one of those idioms is a re-grown private
 copy: import the helper from ``queries.util`` instead.
+
+``plans/inspect.py`` owns the plan checks (scan count, window and node
+walks) and ``tests/conftest.py`` the cache-release fixture; per-query
+plan rules are rows of ``PLAN_RULES`` in ``tests/test_plan_rules.py``.
 """
 
 from __future__ import annotations
@@ -14,7 +18,9 @@ import pathlib
 import re
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "de_project_airflow_etl_spark"
+TESTS = pathlib.Path(__file__).resolve().parent
 HOME = PKG / "queries" / "util.py"
+PLAN_HOME = PKG / "plans" / "inspect.py"
 
 _IDIOMS = {
     "wide": r"CAST\(CAST\(\{\} AS (STRING|VARCHAR)\) AS DOUBLE\)",
@@ -84,3 +90,30 @@ def test_util_defines_every_idiom():
              if text is not None and any(
                  re.fullmatch(p, text.strip()) for p in _IDIOMS.values())}
     assert found == {"wide", "fold_sorted_spark", "fold_sorted_sql", "dlit"}
+
+
+_PLAN_HELPERS = {"_window_nodes", "_node_names",
+                 "_windows_sit_above_aggregates", "_release_caches"}
+_SCAN_COUNT = re.compile(r'count\("Scan parquet"\)')
+
+
+def test_plan_checks_are_defined_only_in_inspect():
+    """A hand-counted scan budget or a private copy of a plan walk (or
+    of the cache-release fixture) outside ``plans/inspect.py`` is a
+    re-grown copy: use ``inspect.scan_count`` / ``window_nodes`` /
+    ``node_names``, a ``PLAN_RULES`` row, or the ``release_caches``
+    fixture instead."""
+    copies = []
+    for path in sorted([*PKG.rglob("*.py"), *TESTS.rglob("*.py")]):
+        if path == PLAN_HOME:
+            continue
+        text = path.read_text()
+        where = path.relative_to(PKG.parent)
+        for lineno, line in enumerate(text.splitlines(), 1):
+            if _SCAN_COUNT.search(line):
+                copies.append(f"{where}:{lineno} counts parquet scans")
+        for node in ast.walk(ast.parse(text, filename=str(path))):
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name in _PLAN_HELPERS):
+                copies.append(f"{where}:{node.lineno} defines {node.name}")
+    assert not copies, "\n".join(copies)

@@ -13,12 +13,6 @@ import pytest
 from de_project_airflow_etl_spark.staged import STAGED
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
 def test_staged_pen_names_do_not_collide_with_registry():
     from de_project_airflow_etl_spark.registry import all_queries
     clash = set(STAGED) & set(all_queries())
@@ -132,4 +126,5 @@ def test_kmv_estimate_is_close_at_small_cardinality(spark, sf_dir):
 # r11 test tiering: multi-minute sweep/scale/property module —
 # excluded from the default (driver-budget) run; run with
 # -m "slow or not slow" for the full signal (see pytest.ini).
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow,
+              pytest.mark.usefixtures("release_caches")]

@@ -540,13 +540,12 @@ def test_semdedup_pairs_equi_join_never_cartesian(spark, sf_dir):
 def test_key_skew_profile_single_agg_plus_broadcast_totals(spark, sf_dir):
     """The skew profiler pays ONE fact exchange (the per-key partial
     aggregate); the totals side is a one-row broadcast, never a second
-    pass over events."""
+    pass over events (the scan budget lives in tests/test_plan_rules.py)."""
     from de_project_airflow_etl_spark.operators.skew import (
         key_skew_profile,
     )
     df = key_skew_profile(spark, sf_dir)
     plan = formatted_plan(df)
-    assert plan.count("Scan parquet") <= 2, plan  # events read <= twice
     assert has_broadcast_join(df), plan
     assert "CartesianProduct" not in plan, plan
 
@@ -667,16 +666,13 @@ def test_temperature_mix_bounds_rank_and_broadcasts_targets(spark,
 
 def test_substring_spans_is_inverted_index_shaped(spark, sf_dir):
     """The span-dedup join-back must be an equi-join on the window
-    hash (no cartesian), reading documents at most twice (index side
-    + probe side, the recompute-over-materialize choice)."""
+    hash (no cartesian); its two-scan budget lives in
+    tests/test_plan_rules.py."""
     from de_project_airflow_etl_spark.operators.dedup import (
         exact_substring_dup_spans,
     )
     plan = formatted_plan(exact_substring_dup_spans(spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
-    # formatted plans list each scan twice (tree line + detail block):
-    # <= 4 occurrences == at most 2 physical scans of documents
-    assert plan.count("Scan parquet") <= 4, plan
 
 
 def test_pq_adc_search_has_zero_corpus_shuffle(spark, sf_dir):

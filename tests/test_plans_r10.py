@@ -1,6 +1,7 @@
 """Targeted gates for the round-10 staged bank (cluster-validity
-indices, Cliff's delta, Quade test, SMOG/Fog, MATTR) — scan budgets,
-window shape evidence, and range invariants.
+indices, Cliff's delta, Quade test, SMOG/Fog, MATTR) — range
+invariants. Scan budgets and window rules live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -8,76 +9,9 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-SCAN_BUDGETS_R10 = {
-    # corpus pass + the panel's scalar-aggregate build (the panel is
-    # deliberately NOT checkpointed so the BNLJ gate can see its
-    # scalar root)
-    "simplified_silhouette_labels": 2,
-    # scatter table ckpt'd; the final pair math rebuilds the panel
-    "davies_bouldin_labels": 1,
-    "cliffs_delta_weekend": 0,           # distinct-cents table ckpt'd
-    "quade_test_dow": 0,                 # (week, dow) table ckpt'd
-    "smog_fog_readability_by_source": 1,
-    "mattr_lexical_diversity_by_source": 1,
-    "ansari_bradley_weekend_value": 0,   # distinct-cents table ckpt'd
-}
-# jsonl_stream_sink_roundtrip deliberately has NO scan budget: its
-# plan is a read-back of the files the streaming sink just committed.
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R10))
-def test_r10_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R10[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R10[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", ["cliffs_delta_weekend",
-                                  "quade_test_dow",
-                                  "ansari_bradley_weekend_value"])
-def test_r10_windows_consume_aggregated_rows_only(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
-    assert windows, f"{name}: expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), (
-            f"{name}: window consumes un-aggregated file rows")
-
-
-@pytest.mark.parametrize("name", ["simplified_silhouette_labels",
-                                  "davies_bouldin_labels",
-                                  "smog_fog_readability_by_source",
-                                  "mattr_lexical_diversity_by_source"])
-def test_r10_panel_queries_use_no_data_windows(spark, sf_dir, name):
-    """The panel/aggregate queries reduce via array lambdas and plain
-    aggregates — any WindowExec present must sit above an Aggregate
-    (the centroid rebuild), never over raw file rows."""
-    df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), name
 
 
 # ------------------------------------------------ range invariants

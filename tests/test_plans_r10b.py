@@ -1,9 +1,10 @@
 """Targeted gates for the round-10b staged bank (blanket oracle/BNLJ
-gates ride tests/test_staged_pen.py)."""
+gates ride tests/test_staged_pen.py; window rules ride
+tests/test_plan_rules.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import scan_count
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -15,7 +16,7 @@ def test_bitmap_rollup_merges_partials_not_raw_rows(spark, sf_dir):
     bitmap_construct_agg (never a second COUNT DISTINCT pass)."""
     df = REG["weekly_users_bitmap_rollup"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1, plan[:1500]
+    assert scan_count(df) == 1, plan[:1500]
     assert "bitmap_or_agg" in plan and "bitmap_construct_agg" in plan
 
 
@@ -47,18 +48,6 @@ def test_disc_bands_are_members_and_ordered(spark, sf_dir):
     assert rows
     for r in rows:
         assert r["p25_c"] <= r["p50_c"] <= r["p75_c"]
-
-
-def test_disc_bands_windows_sit_above_cell_aggregate(spark, sf_dir):
-    df = REG["percentile_disc_bands_by_type"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
-    assert windows
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in c.getClass().getSimpleName()
-                   for c in sub)
 
 
 def test_page_hinkley_gap_is_nonnegative_and_anchored(spark, sf_dir):

@@ -1,6 +1,7 @@
 """Targeted gates for the round-10c staged bank (pooled-EDF panel,
 decomposition strength, Grubbs, winsorized mean, partial correlation)
-— plan-shape evidence plus range invariants.
+— range invariants. Scan budgets and window counts live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -10,61 +11,11 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R10C = {
-    "edf_two_sample_panel_weekend": 0,  # cents cells checkpointed
-    "seasonal_strength_weekly": 1,
-    "grubbs_max_deviation_daily": 0,   # daily table checkpointed
-    "winsorized_mean_value": 0,        # cents cells checkpointed
-    "partial_corr_revenue_count_dow": 1,
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R10C))
-def test_r10c_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R10C[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R10C[name]})")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-# The in-array queries must plan with zero window nodes; the two
-# cell-cumulation queries window only over post-aggregate cell tables
-# (covered by the registry-wide audit once promoted; here we pin the
-# window COUNT so a refactor can't sneak a raw-row window in).
-@pytest.mark.parametrize("name", [
-    "seasonal_strength_weekly", "grubbs_max_deviation_daily",
-    "partial_corr_revenue_count_dow",
-])
-def test_r10c_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
-
-
-@pytest.mark.parametrize("name, max_wins", [
-    ("edf_two_sample_panel_weekend", 1),
-    ("winsorized_mean_value", 2),
-])
-def test_r10c_cell_windows_bounded(spark, sf_dir, name, max_wins):
-    wins = _window_nodes(REG[name].fn(spark, sf_dir))
-    assert len(wins) <= max_wins, name
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------ range invariants

@@ -4,7 +4,7 @@ the shapes the optimization claims so they cannot silently regress:
 * recursive_dup_reachability is a single aggregate (no recursion
   machinery, no window, no join, one exchange);
 * markov's 12 iterations live in ONE fold (final plan scan-free is
-  already gated in test_plans_robust.py; here: no per-iteration join
+  already gated in test_plan_rules.py; here: no per-iteration join
   chain — the bounded fold appears exactly once);
 * dbscan's components run as the bounded in-row fold (no join rounds
   after the dense-cell build beyond the label join-back);
@@ -39,13 +39,12 @@ def test_markov_single_fold(spark, sf_dir):
     # The per-scenario fold is materialized behind the result
     # checkpoint (the final plan shows only the fin/eff/te joins —
     # the round-6-late gate-visibility rule), so assert two things:
-    # the FINAL plan carries no 12-iteration join chain and no scans,
-    # and the PRE-checkpoint shape (rebuilt from the module pieces the
-    # way the query builds it) contains exactly ONE sequence(1, 12)
-    # runtime fold.
+    # the FINAL plan carries no 12-iteration join chain (its zero-scan
+    # budget lives in tests/test_plan_rules.py), and the PRE-checkpoint
+    # shape (rebuilt from the module pieces the way the query builds
+    # it) contains exactly ONE sequence(1, 12) runtime fold.
     df = REG["markov_removal_effect_attribution"].fn(spark, sf_dir)
     plan = _final_plan(df)
-    assert plan.count("Scan parquet") == 0
     # the duplicated fin/eff branches plan a handful of bounded joins;
     # a regression back to per-iteration joins would add 12+ more
     assert plan.count("Join") <= 8, plan[:2000]

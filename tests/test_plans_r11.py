@@ -1,6 +1,7 @@
 """Targeted gates for the round-11 staged bank (changepoint and
-randomness diagnostics, token-frequency Gini, Nelson-Aalen) — scan
-budgets, window shape evidence, and range/consistency invariants.
+randomness diagnostics, token-frequency Gini, Nelson-Aalen) —
+range/consistency invariants. Scan budgets and window rules live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -8,49 +9,9 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-SCAN_BUDGETS_R11 = {
-    "pettitt_changepoint_daily": 1,
-    "cox_stuart_trend_daily": 1,
-    "dixon_q_daily_extremes": 1,
-    "turning_points_daily": 1,
-    "token_gini_by_source": 0,           # frequency spectrum ckpt'd
-    "nelson_aalen_user_lifetimes": 0,    # risk table ckpt'd
-}
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R11))
-def test_r11_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R11[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R11[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R11))
-def test_r11_windows_consume_aggregated_rows_only(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), (
-            f"{name}: window consumes un-aggregated file rows")
 
 
 # ------------------------------------------------ range invariants

@@ -1,6 +1,7 @@
 """Targeted gates for the round-12 staged bank (experimentation /
-operations analytics) — scan budgets, window shape evidence, and
-consistency invariants including the Little's-law identity.
+operations analytics) — window partition evidence and consistency
+invariants including the Little's-law identity. Scan budgets and the
+window-input rule live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -8,37 +9,10 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-SCAN_BUDGETS_R12 = {
-    "sample_ratio_mismatch_check": 1,
-    "cuped_adjusted_lift": 1,            # per-user table ckpt'd; d0 scan
-    "littles_law_sessions": 1,           # session table ckpt'd; horizon
-    "crostons_intermittent_demand": 2,   # lineitem + broadcast part dim
-    "burrows_delta_sources": 0,          # (source, term) counts ckpt'd
-}
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R12))
-def test_r12_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R12[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R12[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
 
 
 def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
@@ -53,19 +27,9 @@ def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     m = e.select("user_id", F.expr(
         "CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t)"
         " IS NULL THEN 1 ELSE 0 END").alias("x"))
-    for wnode in _window_nodes(m):
+    for wnode in window_nodes(m):
         spec = wnode.toString()
         assert "user_id" in spec.split("windowspecdefinition")[-1][:80]
-
-
-@pytest.mark.parametrize("name", ["crostons_intermittent_demand"])
-def test_r12_fold_windows_consume_aggregates(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), name
 
 
 # ------------------------------------------------ invariants

@@ -1,5 +1,6 @@
 """Targeted gates for the round-12c staged bank (MMR re-ranking):
-plan shape plus the construction-guaranteed diversity invariant.
+plan shape plus the construction-guaranteed diversity invariant (the
+scan budget rides tests/test_plan_rules.py).
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -14,10 +15,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 REG = all_queries()
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_mmr_plan_shape(spark, sf_dir):
@@ -28,9 +26,6 @@ def test_mmr_plan_shape(spark, sf_dir):
     # the 20-anchor panel broadcasts; the corpus never shuffles raw
     assert "Broadcast" in plan
     assert "CartesianProduct" not in plan
-    n_scans = (df._jdf.queryExecution().executedPlan().toString()
-               .count("Scan parquet"))
-    assert n_scans <= 2  # corpus + anchor slice
 
 
 def test_mmr_improves_diversity_never_relevance(spark, sf_dir):

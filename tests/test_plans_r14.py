@@ -1,7 +1,7 @@
 """Targeted gates for the round-14 staged bank (operating-point /
 lift evaluation, actuarial survival, contingency residuals,
-reliability, corpus/embedding panels) — plan shapes plus range
-invariants.
+reliability, corpus/embedding panels) — range invariants. Scan
+budgets and the no-window rule live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -11,57 +11,11 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R14 = {
-    "youden_j_optimal_threshold": 0,    # cents cells checkpointed
-    "decile_lift_table": 0,             # (cents, p) cells checkpointed
-    "actuarial_life_table": 0,          # interval cells checkpointed
-    "haberman_adjusted_residuals": 0,   # 35-cell table checkpointed
-    "cronbachs_alpha_quality_rules": 1,
-    "vocab_coverage_curve": 0,          # vocab tf table checkpointed
-    "cross_source_ngram_overlap": 0,    # gram set checkpointed
-    # r11: the data-sized quantized-explode checkpoint was REMOVED
-    # (measured-loss materialization class) — qq now rides the single
-    # 64-group dim aggregate and n is a column-pruned count, so the
-    # final plan legitimately holds exactly 2 parquet scans (the one
-    # heavy explode pass + the count-only scan); 3+ would mean the
-    # explode re-executes for a second consumer again
-    "embedding_isotropy_panel": 2,
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R14))
-def test_r14_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R14[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R14[name]})")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", [
-    "cronbachs_alpha_quality_rules", "haberman_adjusted_residuals",
-    "cross_source_ngram_overlap", "embedding_isotropy_panel",
-])
-def test_r14_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------ range invariants

@@ -1,8 +1,9 @@
 """Targeted gates for the round-15 staged bank (Shapley attribution,
 isotonic fit, conformal intervals, BH step-up, Bradley-Terry,
-harmonic centrality, DTW) — plan scan budgets, range/order
-invariants, and independent pure-Python recomputations of the three
-algorithmically novel operators (PAVA isotonic, exact Shapley, DTW).
+harmonic centrality, DTW) — range/order invariants and independent
+pure-Python recomputations of the three algorithmically novel
+operators (PAVA isotonic, exact Shapley, DTW). Scan budgets live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -19,31 +20,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R15 = {
-    "shapley_channel_attribution": 0,   # mask histogram checkpointed
-    "isotonic_daily_revenue_fit": 0,    # daily prefix panel checkpointed
-    "split_conformal_value_interval": 1,  # test half reads the corpus
-    "bh_step_up_drift_panel": 0,        # 5-row panel checkpointed
-    "bradley_terry_event_strengths": 0,  # 25-cell matrix checkpointed
-    "harmonic_centrality_dup_graph": 0,  # edges + frontiers checkpointed
-    "dtw_click_purchase_daily": 0,      # 1-row array panel checkpointed
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R15))
-def test_r15_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R15[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R15[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # --------------------------------------------------- range invariants

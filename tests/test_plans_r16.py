@@ -1,7 +1,8 @@
 """Targeted gates for the round-16 staged bank (Wasserstein-1D,
 Huber IRLS, ordinal-pattern census, group-sequential readout,
-James-Stein shrinkage) — plan scan budgets, range/order invariants,
-and independent pure-Python recomputations.
+James-Stein shrinkage) — range/order invariants and independent
+pure-Python recomputations. Scan budgets live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -17,29 +18,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R16 = {
-    "wasserstein_weekend_value": 0,     # cents cells checkpointed
-    "huber_mean_event_value": 0,        # cents cells checkpointed
-    "ordinal_pattern_census_daily": 0,  # daily panel checkpointed
-    "group_sequential_ab_readout": 0,   # 5-look cells checkpointed
-    "james_stein_type_means": 0,        # 5-row moments checkpointed
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R16))
-def test_r16_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R16[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R16[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------ independent recomputations

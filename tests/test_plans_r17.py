@@ -1,8 +1,9 @@
 """Targeted gates for the round-17 staged bank (quantile
-normalization, DBSCAN grid clustering, HITS authorities) — plan scan
-budgets, invariants, and independent pure-Python recomputations
-(closed-form rank mapping vs a literal per-rank loop, union-find vs
-the alternating-star components, the HITS integer fixed point).
+normalization, DBSCAN grid clustering, HITS authorities) —
+invariants and independent pure-Python recomputations (closed-form
+rank mapping vs a literal per-rank loop, union-find vs the
+alternating-star components, the HITS integer fixed point). Scan
+budgets live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -18,27 +19,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R17 = {
-    "quantile_normalize_source_chars": 0,  # char cells checkpointed
-    "dbscan_grid_embedding_clusters": 0,   # dense cells checkpointed
-    "hits_event_type_authority": 0,        # (user, type) checkpointed
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R17))
-def test_r17_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R17[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R17[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_quantile_normalize_per_rank_loop(spark, sf_dir, duck):

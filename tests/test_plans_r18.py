@@ -1,7 +1,7 @@
 """Targeted gates for the round-18 staged bank (Good-Turing/Chao1,
-IPF raking, capture-recapture) — plan scan budgets, invariants, and
-independent pure-Python recomputations (the IPF fixed point and the
-capture estimators).
+IPF raking, capture-recapture) — invariants and independent
+pure-Python recomputations (the IPF fixed point and the capture
+estimators). Scan budgets live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -17,28 +17,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R18 = {
-    # tf aggregate feeds one panel aggregate — a single corpus scan
-    "good_turing_chao1_by_source": 1,
-    "ipf_raking_purchase_mix": 0,       # 35-cell panel checkpointed
-    "capture_recapture_user_weeks": 2,  # capture pass + min-date panel
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R18))
-def test_r18_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R18[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R18[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_good_turing_chao1_bounds(spark, sf_dir, duck):

@@ -1,6 +1,7 @@
 """Targeted gates for the round-19 staged bank (percentile_cont
 WITHIN GROUP, the JSON scalar-function family, approx_top_k in its
-exact regime) — plan scan budgets plus surface-specific invariants.
+exact regime) — surface-specific invariants. Scan budgets live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -14,27 +15,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R19 = {
-    "percentile_cont_within_group_quartiles": 1,
-    "json_function_family_events": 1,
-    "approx_top_k_event_types": 1,
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R19))
-def test_r19_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R19[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R19[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_percentile_cont_quartiles_ordered(spark, sf_dir):

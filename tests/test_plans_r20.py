@@ -1,6 +1,7 @@
 """Targeted gates for the round-20 staged bank (negative-binomial
-moments fit, Needleman-Wunsch alignment) — plan scan budgets,
-invariants, and a pure-Python NW DP recomputation.
+moments fit, Needleman-Wunsch alignment) — invariants and a
+pure-Python NW DP recomputation. Scan budgets live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -16,27 +17,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-SCAN_BUDGETS_R20 = {
-    "negative_binomial_user_counts": 1,
-    # week pass + un-checkpointed min-date panel (one-row-panel rule)
-    "nw_alignment_week_type_seqs": 2,
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R20))
-def test_r20_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R20[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R20[name]})")
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_negative_binomial_python(spark, sf_dir, duck):

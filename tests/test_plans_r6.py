@@ -1,16 +1,17 @@
 """Physical-plan gates for the round-6 promoted bank
 (queries/mining.py + queries/features.py): no cartesian products,
-nested-loop joins only with scalar (one-row) broadcast builds,
-statistics windows confined to the post-aggregate daily rollup, and
+nested-loop joins only with scalar (one-row) broadcast builds, and
 scans pruned to the columns the query consumes. Correct results with
-a wrong plan fail here."""
+a wrong plan fail here. The bank's window rules and scan budgets live
+in tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, scan_read_schema,
+    bnlj_builds_are_scalar, formatted_plan, node_names, scan_read_schema,
+    unbounded_windows, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -21,10 +22,7 @@ R6_BANK = {n: q for n, q in all_queries().items()
             "de_project_airflow_etl_spark.queries.features")}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------- blanket join gate
@@ -86,32 +84,11 @@ _DAILY_STATS = (
 
 
 @pytest.mark.parametrize("name", _DAILY_STATS)
-def test_daily_stats_window_sits_above_daily_aggregate(spark, sf_dir,
-                                                       name):
-    """The unpartitioned windows these tests use are only legal
-    because their input is the calendar-bounded daily rollup: the
-    plan must aggregate (day grouping) BEFORE the first Window, and
-    the orders scan must read only the two columns the rollup needs."""
+def test_daily_stats_scan_prunes_orders(spark, sf_dir, name):
+    """The orders scan feeding the daily rollup must read only the two
+    columns the rollup needs (the windows over that rollup are gated
+    in tests/test_plan_rules.py)."""
     df = R6_BANK[name].fn(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "Window" in plan, f"{name}: expected a window"
-    # Structural check on the physical tree: EVERY window's input
-    # subtree must contain an aggregate (the daily rollup), proving
-    # windows consume per-day rows, not per-order rows.
-    from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
-
-    def subtree_has_aggregate(node) -> bool:
-        return any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in _walk_jplan(node))
-
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
-    assert windows, f"{name}: expected a WindowExec"
-    for wnode in windows:
-        ch = wnode.children()
-        assert subtree_has_aggregate(ch.apply(0)), (
-            f"{name}: a window consumes un-aggregated input")
     schemas = scan_read_schema(df)
     assert schemas, name
     for line in schemas:
@@ -229,16 +206,6 @@ def test_gini_unpivot_scans_lineitem_once_per_feature_block(spark,
     assert "l_extendedprice" not in schemas[0], schemas
 
 
-def test_markov_iteration_inputs_are_checkpointed(spark, sf_dir):
-    """Power iteration must run over the checkpointed
-    vocabulary-sized transition relation — the events scan may appear
-    at most in the (already materialized) lineage root, not once per
-    iteration."""
-    plan = formatted_plan(
-        R6_BANK["markov_stationary_event_mix"].fn(spark, sf_dir))
-    assert plan.count("Scan parquet") <= 1, plan[:2000]
-
-
 def test_holt_is_single_projection_fold(spark, sf_dir):
     """The Holt fold must stay ONE generator projection above the
     daily rollup (the CollapseProject re-evaluation lesson): exactly
@@ -260,8 +227,6 @@ def test_survival_retention_windows_sit_above_lifetime_aggregate(
     pre-checkpoint helpers (the lof-gate precedent), and additionally
     that the final plan holds no parquet scan (every consumer reads
     the checkpointed blocks)."""
-    from de_project_airflow_etl_spark.plans.inspect import (
-        _walk_jplan, scan_read_schema)
     from de_project_airflow_etl_spark.queries.mining import (
         _survival_km_terms, _survival_user_lifetimes)
     u = _survival_user_lifetimes(spark, sf_dir)
@@ -269,38 +234,27 @@ def test_survival_retention_windows_sit_above_lifetime_aggregate(
         assert "event_type" not in line and "props" not in line, (
             f"events scan not pruned: {line}")
     terms = _survival_km_terms(u)
-    jplan = terms._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
-    assert windows, "expected the n_at_risk suffix-sum WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "window consumes un-aggregated rows"
+    assert window_nodes(terms), (
+        "expected the n_at_risk suffix-sum WindowExec")
+    offenders = unbounded_windows(terms)
+    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
     df = R6_BANK["survival_retention_curve"].fn(spark, sf_dir)
-    final_names = [n.getClass().getSimpleName()
-                   for n in _walk_jplan(df._jdf.queryExecution().sparkPlan())]
+    final_names = node_names(df)
     assert not any("FileSourceScan" in n or "BatchScan" in n
                    for n in final_names), (
         "final plan re-reads parquet despite the checkpoints: "
         + str(final_names))
 
 
-def test_lof_bucket_sizes_broadcast_not_windowed(spark, sf_dir):
-    """Bucket sizing must be an aggregate + broadcast join-back, not
-    a window partitioned by the FIXED 2^LOF_BITS bucket space (whose
-    partitions would be data-sized at scale), and the kNN relation
-    must be checkpointed so the within-bucket all-pairs join is
-    derived once. The checkpoint truncates lineage, so the final
-    plan's scans must all be ExistingRDD (checkpointed) — any parquet
-    scan or Window left in the final plan means the pre-aggregation
-    moved back inline; the pre-checkpoint shape itself is asserted by
-    rebuilding the size relation the same way the query does."""
-    from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
-    df = R6_BANK["lof_bucket_outliers"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    names = [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
-    assert not any(n.startswith("WindowExec") for n in names), names
+def test_lof_final_plan_reads_checkpoints_only(spark, sf_dir):
+    """The kNN relation must be checkpointed so the within-bucket
+    all-pairs join is derived once. The checkpoint truncates lineage,
+    so the final plan's scans must all be ExistingRDD (checkpointed) —
+    any parquet scan left in the final plan means the pre-aggregation
+    moved back inline. That bucket sizing is an aggregate + broadcast
+    join-back, not a window partitioned by the FIXED 2^LOF_BITS bucket
+    space, is the no-window rule in tests/test_plan_rules.py."""
+    names = node_names(R6_BANK["lof_bucket_outliers"].fn(spark, sf_dir))
     assert not any("FileSourceScan" in n or "BatchScan" in n
                    for n in names), (
         "post-checkpoint plan re-reads the source: " + str(names))

@@ -17,7 +17,7 @@ import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
     bnlj_builds_are_scalar, formatted_plan, has_broadcast_join,
-    scan_read_schema, _walk_jplan,
+    scan_read_schema, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -28,10 +28,7 @@ R7_BANK = {n: q for n, q in all_queries().items()
             "de_project_airflow_etl_spark.queries.evaluation")}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_bank_is_complete():
@@ -114,10 +111,8 @@ def test_cohort_triangle_broadcasts_sizes(spark, sf_dir):
 def test_session_histogram_windows_are_user_partitioned(spark, sf_dir):
     """The sessionize window must partition by user_id — never a
     global ordering of the event stream."""
-    df = R7_BANK["session_duration_log2_histogram"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(
+        R7_BANK["session_duration_log2_histogram"].fn(spark, sf_dir))
     assert windows
     for wnode in windows:
         assert "user_id" in wnode.simpleString(25), wnode.simpleString(25)

@@ -2,13 +2,14 @@
 bank (queries/evaluation.py: evaluation statistics, sketches,
 attribution) — the 100 TB shape evidence each query's docstring
 claims. Promoted from tests/test_staged_r7b.py in round 7; the
-blanket BNLJ gate for the bank lives in tests/test_plans_r7.py and
+blanket BNLJ gate for the bank lives in tests/test_plans_r7.py, its
+window rules and scan budgets in tests/test_plan_rules.py, and
 oracle equality rides the registry-wide tests/test_correctness.py.
 """
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, node_names
 from de_project_airflow_etl_spark.registry import all_queries
 
 R7B_BANK = {n: q for n, q in all_queries().items()
@@ -16,54 +17,13 @@ R7B_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.evaluation"}
 
 
-def _node_names(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-def _windows_sit_above_aggregates(df) -> None:
-    windows = _window_nodes(df)
-    assert windows, "expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "window consumes un-aggregated rows"
-
-
-def test_auc_cumulation_sits_above_score_aggregate(spark, sf_dir):
-    """roc_auc's unpartitioned cumulative-negatives window is only
-    legal because its input is the bounded integer-cents score
-    distribution: every WindowExec subtree must contain an
-    Aggregate (the global_row_number lesson applied to ranks)."""
-    _windows_sit_above_aggregates(
-        R7B_BANK["roc_auc_purchase_value"].fn(spark, sf_dir))
-
-
-def test_fold_statistics_use_no_windows(spark, sf_dir):
-    """ANOVA and Cramér's V reduce their per-group double terms with
-    the sorted-fold idiom, NOT an ordered running-sum window — the
-    plan must contain no WindowExec fed by raw rows; Cramér's V's
-    margin windows must sit above the contingency aggregate."""
-    df = R7B_BANK["anova_event_type_value"].fn(spark, sf_dir)
-    assert not _window_nodes(df), _node_names(df)
-    _windows_sit_above_aggregates(
-        R7B_BANK["cramers_v_event_dow"].fn(spark, sf_dir))
-
-
-def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
+def test_single_pass_statistics_have_no_joins(spark, sf_dir):
     """Welch t and the two-feature OLS are one map-side-combinable
-    aggregate over the scan: no joins, no windows anywhere."""
+    aggregate over the scan: no joins (their no-window rule lives in
+    tests/test_plan_rules.py)."""
     for name in ("welch_t_test_weekend_value", "ols_two_feature_price"):
-        names = _node_names(R7B_BANK[name].fn(spark, sf_dir))
+        names = node_names(R7B_BANK[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
-        assert not any(n.startswith("WindowExec") for n in names), (
-            name, names)
 
 
 def test_map_retrieval_rank_gets_partial_group_limit(spark, sf_dir):
@@ -97,7 +57,7 @@ def test_theta_sketch_heads_are_take_ordered(spark, sf_dir):
             .select(F.expr(_uh_spark()).alias("h"))
             .distinct()
             .orderBy("h").limit(THETA_K))
-    names = _node_names(head)
+    names = node_names(head)
     assert any("TakeOrderedAndProject" in n for n in names), names
     assert not any("Sort" == n for n in names), names
 
@@ -106,40 +66,14 @@ def test_attribution_join_is_equi_not_nested_loop(spark, sf_dir):
     """The purchase-touch fan-out must ride the user_id equi-join
     (sort-merge / shuffled-hash with the time range as residual),
     never a nested loop or cartesian over the fact table."""
-    names = _node_names(R7B_BANK["position_attribution_revenue"]
-                        .fn(spark, sf_dir))
+    names = node_names(R7B_BANK["position_attribution_revenue"]
+                       .fn(spark, sf_dir))
     assert not any("BroadcastNestedLoopJoin" in n
                    or "CartesianProduct" in n for n in names), names
     # hash-equi on user_id (broadcast at small SF, sort-merge once
     # the purchase side outgrows the broadcast threshold)
     assert any("SortMergeJoin" in n or "ShuffledHashJoin" in n
                or "BroadcastHashJoin" in n for n in names), names
-
-
-def test_daily_rollup_windows_sit_above_aggregates(spark, sf_dir):
-    """Bollinger's frame windows consume the calendar-bounded daily
-    aggregate, never raw events."""
-    _windows_sit_above_aggregates(
-        R7B_BANK["bollinger_daily_revenue"].fn(spark, sf_dir))
-
-
-def test_multi_consumer_intermediates_are_materialized(spark, sf_dir):
-    """Relations feeding multiple consumers (the tv-distance
-    source-word aggregate, the inverse-prob vocab, the sketch heads)
-    must be checkpointed so the token/fact stream is never re-scanned
-    per consumer — bounded parquet-scan counts in the FINAL plan
-    (the lof_bucket_outliers precedent)."""
-    budgets = {"source_unigram_tv_distance": 0,
-               "unigram_inverse_prob_by_source": 1,
-               "theta_sketch_user_overlap": 1,
-               "seasonal_naive_mase": 0}
-    for name, max_scans in budgets.items():
-        df = R7B_BANK[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n_scans = plan.count("Scan parquet")
-        assert n_scans <= max_scans, (
-            f"{name}: {n_scans} parquet scans (budget {max_scans}) — "
-            f"a multi-consumer intermediate lost its checkpoint")
 
 
 def test_param_binding_folds_into_pushed_filter(spark, sf_dir):
@@ -155,11 +89,11 @@ def test_param_binding_folds_into_pushed_filter(spark, sf_dir):
 
 def test_group_by_all_plans_as_plain_aggregate(spark, sf_dir):
     """GROUP BY ALL must bind to the same single hash aggregate as
-    the explicitly-keyed form — no windows, no joins."""
-    names = _node_names(R7B_BANK["group_by_all_weekday_mix"]
-                        .fn(spark, sf_dir))
+    the explicitly-keyed form — no joins (no windows: the rule lives
+    in tests/test_plan_rules.py)."""
+    names = node_names(R7B_BANK["group_by_all_weekday_mix"]
+                       .fn(spark, sf_dir))
     assert not any("Join" in n for n in names), names
-    assert not any(n.startswith("WindowExec") for n in names), names
     assert any("Aggregate" in n for n in names), names
 
 

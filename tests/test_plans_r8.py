@@ -1,7 +1,8 @@
 """Targeted gates for the round-8 promoted bank (time-series
 diagnostics, distribution statistics, text richness, graded
 retrieval) — the 100 TB shape evidence each docstring claims plus
-range invariants on the statistics themselves.
+range invariants on the statistics themselves. Scan budgets and
+window rules for the bank live in tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
 sweep (promoted in round 8; gates carried over from the staged era).
@@ -11,83 +12,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-# query -> max "Scan parquet" nodes allowed in the FINAL plan: the
-# multi-consumer bounded intermediates (daily tables, bin/median/
-# keep-list aggregates) are localCheckpoint-materialized, so a
-# refactor cannot silently reintroduce per-reference fact re-scans.
-SCAN_BUDGETS_R8 = {
-    "atr_daily_value_range": 1,
-    "stochastic_oscillator_daily": 1,
-    "obv_daily_value_flow": 1,
-    "mann_kendall_daily_trend": 0,       # daily table checkpointed
-    "durbin_watson_trend_residuals": 1,
-    "jarque_bera_daily_revenue": 1,
-    "kruskal_wallis_value_by_type": 0,   # (type, cents) checkpointed
-    "brown_forsythe_weekend_value": 1,   # medians checkpointed
-    "hellinger_weekend_value_drift": 0,  # bin table checkpointed
-    "brier_calibration_purchase": 1,
-    "cochrans_q_quality_rules": 1,
-    "yules_k_by_source": 1,
-    "term_burstiness_vmr": 2,            # td scan + 1-row corpus count
-    "ndcg_retrieval_eval": 3,            # corpus + panel + label counts
-    "mrr_retrieval_eval": 2,             # corpus + panel
-}
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R8))
-def test_r8_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R8[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R8[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", [
-    "atr_daily_value_range", "stochastic_oscillator_daily",
-    "obv_daily_value_flow", "kruskal_wallis_value_by_type",
-])
-def test_r8_windows_consume_aggregated_rows_only(spark, sf_dir, name):
-    """Every unpartitioned window in the bank runs over a bounded
-    AGGREGATE (daily bars / distinct-value counts), never raw rows:
-    each WindowExec subtree must contain an Aggregate or a
-    checkpointed (already-reduced) RDD scan."""
-    df = REG[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
-    assert windows, f"{name}: expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), (
-            f"{name}: window consumes un-aggregated file rows")
-
-
-@pytest.mark.parametrize("name", [
-    "mann_kendall_daily_trend", "durbin_watson_trend_residuals",
-    "jarque_bera_daily_revenue", "cochrans_q_quality_rules",
-    "brier_calibration_purchase", "hellinger_weekend_value_drift",
-    "brown_forsythe_weekend_value",
-])
-def test_r8_fold_statistics_use_no_windows(spark, sf_dir, name):
-    """The fold-based statistics reduce via array folds / plain
-    aggregates — no WindowExec anywhere in the plan."""
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 def test_r8_topk_rank_rides_window_group_limit(spark, sf_dir):

@@ -1,7 +1,8 @@
 """Targeted gates for the round-8b promoted bank (second indicator
 batch over the daily value bars + nonparametric/evaluation
-statistics) — scan budgets for the checkpointed bounded
-intermediates, window-input shape evidence, and range invariants.
+statistics) — range invariants. Scan budgets for the checkpointed
+bounded intermediates and the window-input rules live in
+tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
 sweep (promoted in round 8; gates carried over from the staged era).
@@ -9,59 +10,9 @@ sweep (promoted in round 8; gates carried over from the staged era).
 
 from __future__ import annotations
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-SCAN_BUDGETS_R8B = {
-    "williams_r_daily": 1,
-    "aroon_daily_value": 1,
-    "money_flow_index_daily": 1,
-    "donchian_channel_daily": 1,
-    "chande_momentum_daily": 1,
-    "accum_dist_daily_flow": 1,
-    "wilcoxon_signed_rank_ampm": 1,
-    "sign_test_daily_updown": 1,
-    "mood_median_test_event_type": 0,    # median + group table ckpt'd
-    "friedman_dow_value_ranks": 0,       # (week, dow) table ckpt'd
-    "jonckheere_terpstra_value_by_type": 0,  # (type, cents) ckpt'd
-    "per_class_f1_length_rules": 0,      # 3x3 cell table ckpt'd
-    "cramer_von_mises_weekend": 0,       # distinct-cents table ckpt'd
-}
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R8B))
-def test_r8b_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R8B[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R8B[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R8B))
-def test_r8b_windows_consume_aggregated_rows_only(spark, sf_dir, name):
-    """Every window in the bank runs over a bounded AGGREGATE (daily
-    bars / distinct-value counts / checkpointed reduced tables),
-    never raw file rows."""
-    df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), (
-            f"{name}: window consumes un-aggregated file rows")
 
 
 # ------------------------------------------------ range invariants

@@ -1,7 +1,8 @@
 """Targeted gates for the round-9 promoted bank (readability, link
 prediction, forecast/calibration summaries, runs test, Page's trend,
-retrieval diversity, FILTER clause) — scan budgets, window shape
-evidence, and range invariants.
+retrieval diversity, FILTER clause) — WindowGroupLimit pushdown and
+range invariants. Scan budgets and window rules live in
+tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
 sweep (promoted in round 8; gates carried over from the staged era).
@@ -9,58 +10,9 @@ sweep (promoted in round 8; gates carried over from the staged era).
 
 from __future__ import annotations
 
-import pytest
-
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-SCAN_BUDGETS_R9 = {
-    "readability_indices_by_source": 1,
-    "resource_allocation_link_pred": 0,   # verified pairs + und ckpt'd
-    "theil_u_daily_forecasts": 1,
-    "pages_trend_test_dow": 0,            # (week, dow) table ckpt'd
-    "ece_calibration_purchase": 0,        # 10-row bin table ckpt'd
-    "runs_test_daily_updown": 1,
-    "filter_clause_weekday_mix": 1,
-    "ild_retrieval_diversity": 3,         # corpus + panel + join-back
-    "rescaled_range_daily": 1,
-    "named_window_daily_stats": 1,
-}
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R9))
-def test_r9_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R9[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R9[name]}) — a bounded multi-consumer "
-        f"intermediate lost its checkpoint")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-@pytest.mark.parametrize("name", [
-    "theil_u_daily_forecasts", "runs_test_daily_updown",
-    "pages_trend_test_dow", "named_window_daily_stats",
-])
-def test_r9_windows_consume_aggregated_rows_only(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
-    assert windows, f"{name}: expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        names = [ch.getClass().getSimpleName() for ch in sub]
-        assert any("Aggregate" in n for n in names) or not any(
-            "FileSourceScan" in n for n in names), (
-            f"{name}: window consumes un-aggregated file rows")
 
 
 def test_r9_ild_topk_rides_window_group_limit(spark, sf_dir):

@@ -1,27 +1,20 @@
 """Targeted gates for the round-9b staged bank (blanket oracle/BNLJ
-gates ride tests/test_staged_pen.py)."""
+gates ride tests/test_staged_pen.py; scan budgets ride
+tests/test_plan_rules.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import node_names, window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-
-def _node_names(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
 
 
 def test_log_rank_windows_consume_lifetime_cells(spark, sf_dir):
     """The suffix-sum risk windows rank the calendar-bounded distinct-
     lifetime table: no window subtree may touch a raw parquet scan
     (the checkpoint hides the Aggregate — round-6-late rule)."""
-    df = REG["log_rank_test_ab_arms"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(REG["log_rank_test_ab_arms"].fn(spark, sf_dir))
     assert windows
     for wnode in windows:
         assert "Scan parquet" not in wnode.children().apply(0).toString()
@@ -57,15 +50,6 @@ def test_cucconi_is_symmetric_in_zu_zv_roles(spark, sf_dir):
     assert r["cucconi_c"] >= 0
 
 
-def test_seasonal_mk_pair_join_is_bounded_by_daily_rollup(spark,
-                                                          sf_dir):
-    """The per-weekday pair join must consume the checkpointed daily
-    rollup on both sides — zero parquet scans in the final plan."""
-    df = REG["seasonal_mann_kendall_dow"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 0, plan[:1500]
-
-
 def test_kendalls_w_is_in_unit_interval(spark, sf_dir):
     r = (REG["kendalls_w_dow_concordance"]
          .fn(spark, sf_dir).collect()[0])
@@ -77,7 +61,7 @@ def test_apply_in_arrow_plans_arrow_group_map(spark, sf_dir):
     """The group-map must run on the Arrow path (FlatMapGroupsInArrow
     / ...InBatch exec), never pickled row-at-a-time Python."""
     df = REG["group_apply_arrow_label_stats"].fn(spark, sf_dir)
-    names = _node_names(df)
+    names = node_names(df)
     assert any("Arrow" in n or "FlatMapGroupsInBatch" in n
                for n in names), names
     assert not any("BatchEvalPython" in n for n in names), names

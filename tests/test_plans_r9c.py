@@ -3,6 +3,7 @@ diagnostics, categorical trend/symmetry/stratified inference, ordinal
 association, forecast/quantile-loss panels, ERR, Benford, lexical
 dominance, the ordered funnel) — the 100 TB shape evidence each
 docstring claims plus range invariants on the statistics themselves.
+Scan budgets and the no-window rule live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -12,63 +13,12 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-# query -> max "Scan parquet" nodes allowed in the FINAL plan.
-SCAN_BUDGETS_R9C = {
-    "ljung_box_daily_revenue": 1,
-    "cross_correlation_revenue_count": 1,
-    "cochran_armitage_dow_trend": 1,
-    "bowker_symmetry_event_transitions": 1,
-    "ordinal_association_dow_band": 1,
-    "cmh_weekend_purchase_weeks": 1,
-    "err_retrieval_eval": 2,             # corpus + broadcast panel
-    "smape_daily_forecasts": 1,
-    "pinball_loss_quantile_forecast": 1,
-    "benford_first_digit_value": 1,
-    "lexical_dominance_panel": 1,
-    "funnel_conversion_steps": 1,
-}
-
-
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R9C))
-def test_r9c_final_plan_scan_budget(spark, sf_dir, name):
-    df = REG[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans <= SCAN_BUDGETS_R9C[name], (
-        f"{name}: {n_scans} parquet scans (budget "
-        f"{SCAN_BUDGETS_R9C[name]})")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-# Every r9c query except the three that legitimately window —
-# bowker's per-user lag (grows-with-data partition key) and ERR's
-# per-anchor top-k rank (WindowGroupLimit pushdown) — must plan with
-# ZERO window nodes: the in-array idiom replaces them.
-@pytest.mark.parametrize("name", [
-    "ljung_box_daily_revenue", "cross_correlation_revenue_count",
-    "cochran_armitage_dow_trend", "ordinal_association_dow_band",
-    "cmh_weekend_purchase_weeks", "smape_daily_forecasts",
-    "pinball_loss_quantile_forecast", "benford_first_digit_value",
-    "lexical_dominance_panel", "funnel_conversion_steps",
-])
-def test_r9c_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_err_rank_rides_window_group_limit(spark, sf_dir):
@@ -80,7 +30,7 @@ def test_err_rank_rides_window_group_limit(spark, sf_dir):
 
 
 def test_bowker_window_partitioned_by_user(spark, sf_dir):
-    wins = _window_nodes(
+    wins = window_nodes(
         REG["bowker_symmetry_event_transitions"].fn(spark, sf_dir))
     assert wins, "the transition lag must be a window"
     for w in wins:

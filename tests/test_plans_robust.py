@@ -1,17 +1,18 @@
 """Physical-plan gates for the round-7 new-surface bank
 (queries/robust.py + the streaming dedup in streaming/ingest.py):
 no cartesian products, nested-loop joins only with documented
-calendar-/vocabulary-bounded builds, statistics windows sitting above
-aggregates, sequential folds collapsed to one projection, and the
-Markov iteration's lineage truncated. Oracle equality rides the
-registry-wide tests/test_correctness.py sweep."""
+calendar-/vocabulary-bounded builds, median windows over checkpointed
+rollups, and sequential folds collapsed to one projection. The
+PR-AUC window rule and the Markov iteration's zero-scan budget ride
+tests/test_plan_rules.py; oracle equality rides the registry-wide
+tests/test_correctness.py sweep."""
 
 from __future__ import annotations
 
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, _walk_jplan,
+    bnlj_builds_are_scalar, formatted_plan, node_names, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -20,10 +21,7 @@ R7N_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.robust"}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_bank_is_complete():
@@ -65,29 +63,6 @@ def test_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
 # ----------------------------------------- window-hazard structure
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-def _windows_sit_above_aggregates(df) -> None:
-    windows = _window_nodes(df)
-    assert windows, "expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "window consumes un-aggregated rows"
-
-
-def test_pr_auc_windows_sit_above_aggregates(spark, sf_dir):
-    """The unpartitioned cumulative window is only legal because its
-    input is the bounded score-cell table: every WindowExec subtree
-    must contain an Aggregate (the global_row_number lesson)."""
-    _windows_sit_above_aggregates(
-        R7N_BANK["pr_auc_purchase_value"].fn(spark, sf_dir))
-
-
 @pytest.mark.parametrize("name", ["hodges_lehmann_weekend_shift",
                                   "siegel_repeated_medians_trend"])
 def test_median_windows_consume_checkpointed_rollup(spark, sf_dir, name):
@@ -96,24 +71,20 @@ def test_median_windows_consume_checkpointed_rollup(spark, sf_dir, name):
     hides the Aggregate root from the subtree walk (the round-6-late
     gate-visibility lesson), so the provable property is that no
     window subtree touches a raw parquet scan."""
-    df = R7N_BANK[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
+    windows = window_nodes(R7N_BANK[name].fn(spark, sf_dir))
     assert windows, "expected a WindowExec"
     for wnode in windows:
         sub = wnode.children().apply(0).toString()
         assert "Scan parquet" not in sub, (name, sub[:800])
 
 
-def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
+def test_single_pass_statistics_have_no_joins(spark, sf_dir):
     """MCC and Cohen's d are one map-side-combinable aggregate over
-    the scan: no joins, no windows anywhere."""
+    the scan: no joins anywhere (their no-window rule lives in
+    tests/test_plan_rules.py)."""
     for name in ("matthews_corr_quality_rules", "cohens_d_weekend_value"):
-        df = R7N_BANK[name].fn(spark, sf_dir)
-        jplan = df._jdf.queryExecution().sparkPlan()
-        names = [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
+        names = node_names(R7N_BANK[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
-        assert not any(n.startswith("WindowExec") for n in names), (
-            name, names)
 
 
 def test_ewma_is_single_projection_fold(spark, sf_dir):
@@ -123,15 +94,6 @@ def test_ewma_is_single_projection_fold(spark, sf_dir):
     df = R7N_BANK["ewma_control_chart_daily"].fn(spark, sf_dir)
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert executed.count("aggregate(") == 1, executed[:2000]
-
-
-def test_markov_iteration_lineage_is_truncated(spark, sf_dir):
-    """After 12 fixed-point iterations the FINAL plan must consume
-    checkpointed bounded relations only — zero parquet scans (the
-    pca_power_iter exponential-lineage lesson)."""
-    df = R7N_BANK["markov_removal_effect_attribution"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 0, plan[:2000]
 
 
 def test_markov_attribution_shares_sum_to_one(spark, sf_dir):

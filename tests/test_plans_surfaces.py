@@ -1,14 +1,15 @@
 """Physical-plan gates for the round-6 surface bank
 (queries/surfaces_r6.py): the two analytics-shaped queries must keep
 their bounded-window / pruned-scan shapes, and nothing in the bank may
-plan an unbounded nested loop."""
+plan an unbounded nested loop. The dim-variance rank window rule rides
+tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, scan_read_schema, _walk_jplan,
+    bnlj_builds_are_scalar, formatted_plan, scan_read_schema, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -17,10 +18,7 @@ SURFACE_BANK = {n: q for n, q in all_queries().items()
                 == "de_project_airflow_etl_spark.queries.surfaces_r6"}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_surface_bank_is_registered():
@@ -37,30 +35,13 @@ def test_surface_plans_have_no_unbounded_nested_loops(spark, sf_dir,
     assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"
 
 
-def test_dim_variance_window_sits_above_dim_aggregate(spark, sf_dir):
-    """The rank window is only legal unpartitioned because its input is
-    the 64-row per-dimension aggregate: every WindowExec's subtree must
-    contain an Aggregate."""
-    df = SURFACE_BANK["embedding_dim_variance_rank"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
-    assert windows, "expected a rank WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "rank window consumes raw rows"
-
-
 def test_shard_plan_windows_are_block_hierarchical(spark, sf_dir):
     """The distributed prefix sum: exactly one window may run over the
     block-level relation (which must sit above the block aggregate);
     the doc-level window must be partitioned by (source, blk) — its
     partitions are bounded by the block size, never raw-corpus-sized."""
     df = SURFACE_BANK["token_budget_shard_plan"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert len(windows) == 2, [w.nodeName() for w in windows]
     descs = [w.simpleString(30) for w in windows]
     # one window partitioned by (source, blk) — the bounded intra-block

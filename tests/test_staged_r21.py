@@ -6,7 +6,8 @@ correlation, stratified split, chi2 unigram divergence).
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries;
 these tests pin the MATH with pure-Python recomputations on planted
-inputs whose exact answers are known in advance.
+inputs whose exact answers are known in advance. Their scan budgets
+live in tests/test_plan_rules.py.
 """
 
 from __future__ import annotations
@@ -19,36 +20,6 @@ import pytest
 from de_project_airflow_etl_spark.staged import STAGED
 
 _BASE = datetime(2024, 1, 3, 12, 0, 0)  # a Wednesday (weekday)
-
-#: Final-plan parquet-scan budgets (the round-16 house pattern): a
-#: bounded intermediate feeding 2+ consumers must be checkpointed so
-#: the corpus is scanned once — the budget pins that discipline.
-SCAN_BUDGETS_R21 = {
-    "wald_wolfowitz_runs_daily": 0,      # daily checkpointed
-    "mood_scale_test_weekend": 0,        # cells checkpointed
-    "energy_distance_weekend": 1,        # single-consumer chain
-    "hoeffding_d_daily": 0,              # daily checkpointed
-    "page_l_trend_dow": 0,               # daily checkpointed
-    "sample_entropy_matches_daily": 0,   # daily + templates ckpt
-    "distance_correlation_daily": 0,     # daily/pairs/rowsums ckpt
-    "stratified_split_manifest": 1,      # one pass by construction
-    "chi2_divergence_source_unigrams": 0,  # tf checkpointed
-    "textrank_keyphrases": 0,            # iteration state ckpt
-    "lz78_event_sequence_complexity": 1,  # one pass by construction
-    "brunner_munzel_weekend": 0,         # cells checkpointed
-    "cochrans_q_weekly_purchase": 0,     # daily + user-week ckpt
-    "bartels_rank_von_neumann_daily": 1,  # single-consumer chain
-}
-
-
-def test_r21_r23_final_plan_scan_budgets(spark, sf_dir):
-    for name, budget in sorted(SCAN_BUDGETS_R21.items()):
-        df = STAGED[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n_scans = plan.count("Scan parquet")
-        assert n_scans <= budget, (
-            f"{name}: {n_scans} parquet scans (budget {budget})")
-        spark.catalog.clearCache()
 
 
 def _write_events(spark, path, rows):

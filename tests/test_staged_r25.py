@@ -79,15 +79,6 @@ def test_token_shingles_short_docs_no_abort(spark, tmp_path_factory):
     assert rows[0]["jaccard"] == 1.0
 
 
-def test_token_shingles_final_plan_scan_budget(spark, sf_dir):
-    """The pair path derives the shingle stream ONCE (in-array pair
-    emission; the per-doc counts are checkpointed): 2 parquet scans,
-    never the 8 of the self-join form."""
-    df = STAGED["dedup_token_id_shingles"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") <= 2, plan
-
-
 # --------------------------------------------- URL/domain profile
 
 
@@ -167,9 +158,9 @@ def test_rag_chunk_single_chunk_anchor_excluded(spark, tmp_path_factory):
 def test_rag_chunk_final_plan_shape(spark, sf_dir):
     """Top-k rides WindowGroupLimit pushdown and the anchor panel is
     a bounded broadcast build — the two plan facts that make the
-    20-key rank window 100 TB-safe."""
+    20-key rank window 100 TB-safe (its scan budget lives in
+    tests/test_plan_rules.py)."""
     df = STAGED["rag_chunk_retrieval_eval"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan
-    assert plan.count("Scan parquet") <= 2, plan
     assert "CartesianProduct" not in plan, plan

@@ -231,65 +231,3 @@ def test_mahalanobis_singular_guard(spark, tmp_path_factory):
     for r in STAGED["mahalanobis_outlier_days"].fn(spark,
                                                    tmp).collect():
         assert r["mahalanobis_d2"] is None
-
-
-# ---------------------------------------------------------------------
-#: Final-plan parquet-scan budgets for the round-27..33 banks (the
-#: round-16 house pattern): a bounded intermediate feeding 2+
-#: consumers must be checkpointed so the corpus is scanned once; raw
-#: SOURCE re-scans are budgeted explicitly where a small dimension
-#: table (documents labels) is read per join side.
-
-from de_project_airflow_etl_spark.operators.dedup import (  # noqa: E402
-    clear_pairs_cache,
-)
-
-SCAN_BUDGETS_R27_R33 = {
-    # round 27
-    "fligner_policello_weekend": 1,      # single-consumer chain
-    "dunn_posthoc_value_by_type": 0,     # gv cells checkpointed
-    "stuart_maxwell_event_transitions": 1,  # single pass
-    "weighted_kappa_ordinal_bands": 0,   # 16-cell panel checkpointed
-    # round 28 (daily seq panel checkpointed in all five)
-    "breusch_pagan_daily_trend": 0,
-    "chow_break_test_daily": 0,
-    "ols_influence_diagnostics_daily": 0,
-    "kpss_level_stationarity_daily": 0,
-    "variance_ratio_daily_revenue": 0,
-    # round 29 (shared pairs relation is the materialized
-    # localCheckpoint; modularity re-reads the 2-column documents
-    # label projection once per join side)
-    "dup_graph_source_modularity": 3,
-    "degree_assortativity_dup_graph": 0,
-    "label_propagation_dup_graph": 0,    # per-round state checkpointed
-    "dup_graph_transitivity": 0,
-    # round 30
-    "rbo_ranking_overlap": 0,            # scored (vec,cos,l2) ckpt
-    "rbp_retrieval_eval": 2,             # corpus scan + anchor panel
-    # round 31
-    "diebold_mariano_forecasts": 0,
-    "rmst_user_lifetimes": 0,            # user rollup checkpointed
-    "periodogram_weekly_power": 0,
-    # round 32
-    "doubly_robust_offpolicy_value": 0,  # user rollup checkpointed
-    "epsilon_greedy_replay_regret": 0,   # daily rollup checkpointed
-    # round 33
-    "gehan_wilcoxon_ab_arms": 0,         # lifetime cells checkpointed
-    "icc_quality_raters": 1,             # single-consumer chain
-    "poisson_dispersion_daily_counts": 0,
-    "mahalanobis_outlier_days": 0,
-    # round 34 (daily seq / value panel checkpointed)
-    "pacf_daily_revenue": 0,
-    "anova_effect_sizes_event_type": 0,
-}
-
-
-def test_r27_r33_final_plan_scan_budgets(spark, sf_dir):
-    clear_pairs_cache()
-    for name, budget in sorted(SCAN_BUDGETS_R27_R33.items()):
-        df = STAGED[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n_scans = plan.count("Scan parquet")
-        assert n_scans <= budget, (
-            f"{name}: {n_scans} parquet scans (budget {budget})")
-        spark.catalog.clearCache()

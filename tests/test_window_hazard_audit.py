@@ -25,7 +25,7 @@ import re
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 # Columns whose cardinality does NOT grow with data in this schema:
@@ -93,10 +93,7 @@ def _bounded_subtree(wnode, extras: tuple[str, ...] = ()) -> bool:
 @pytest.mark.parametrize("name", sorted(_AUDITED))
 def test_no_fixed_key_window_over_raw_rows(spark, sf_dir, name):
     df = _AUDITED[name].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    for n in _walk_jplan(jplan):
-        if not n.getClass().getSimpleName().startswith("WindowExec"):
-            continue
+    for n in window_nodes(df):
         pspec = n.partitionSpec()
         pcols: set[str] = set()
         for i in range(pspec.size()):

@@ -11,7 +11,7 @@ import re
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, window_nodes
 from de_project_airflow_etl_spark.staged import STAGED
 from tests.test_window_hazard_audit import (
     COLLECT_BOUNDED_EXTRAS, FIXED_CARDINALITY, GROWS_WITH_DATA,
@@ -24,19 +24,13 @@ _AUDITED_PEN = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(_AUDITED_PEN))
 def test_pen_no_fixed_key_window_over_raw_rows(spark, sf_dir, name):
     df = _AUDITED_PEN[name].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    for n in _walk_jplan(jplan):
-        if not n.getClass().getSimpleName().startswith("WindowExec"):
-            continue
+    for n in window_nodes(df):
         pspec = n.partitionSpec()
         pcols: set[str] = set()
         for i in range(pspec.size()):
