@@ -5,20 +5,19 @@ The string checks read the formatted physical plan — the same text
 properties: filters reached the parquet scan, projections pruned the
 read schema, small sides broadcast, no cartesian products sneak in.
 
-The structural checks walk the physical plan tree. They implement the
-rule vocabulary of the ``PLAN_RULES`` table in
-``tests/test_plan_rules.py``, which declares per query name:
+The structural checks walk the physical plan tree. ``scan_count``
+implements the ``scans`` rule of the ``PLAN_RULES`` table in
+``tests/test_plan_rules.py`` (at most N parquet scans in the final
+plan, declared per query name). The per-subject plan tests state
+their window rules with the same helpers:
 
-* ``scans``: at most N parquet scans in the final plan
-  (``scan_count``);
-* ``windows="aggregate"``: every ``WindowExec`` input subtree contains
-  an Aggregate (``unbounded_windows``);
-* ``windows="aggregate_or_no_scan"``: every ``WindowExec`` input
-  subtree contains an Aggregate or reads no file, i.e. consumes a
-  checkpoint (``unbounded_windows(..., scanless_ok=True)``);
-* ``max_windows``: at most N ``WindowExec`` nodes, 0 meaning none
-  (``window_nodes``);
-* ``has_window``: at least one ``WindowExec`` (``window_nodes``).
+* every ``WindowExec`` input subtree contains an Aggregate
+  (``unbounded_windows``);
+* every ``WindowExec`` input subtree contains an Aggregate or reads no
+  file, i.e. consumes a checkpoint
+  (``unbounded_windows(..., scanless_ok=True)``);
+* at most N ``WindowExec`` nodes, 0 meaning none, or at least one
+  (``window_nodes``).
 """
 
 from __future__ import annotations

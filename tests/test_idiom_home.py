@@ -8,7 +8,7 @@ copy: import the helper from ``queries.util`` instead.
 
 ``plans/inspect.py`` owns the plan checks (scan count, window and node
 walks) and ``tests/conftest.py`` the cache-release fixture; per-query
-plan rules are rows of ``PLAN_RULES`` in ``tests/test_plan_rules.py``.
+scan budgets are rows of ``PLAN_RULES`` in ``tests/test_plan_rules.py``.
 """
 
 from __future__ import annotations

@@ -13,37 +13,23 @@ The rule vocabulary:
   power iteration's lineage growing exponentially). Data-sized streams
   stay re-derived on purpose; the measured-loss notes live next to the
   code.
-* ``windows="aggregate"``: every ``WindowExec`` input subtree contains
-  an Aggregate. An unpartitioned or fixed-key window is only legal over
-  a bounded rollup (daily bars, score cells, a per-dimension
-  aggregate), never over raw rows.
-* ``windows="aggregate_or_no_scan"``: as above, or the subtree reads no
-  file. A checkpointed rollup shows as an RDD scan that hides the
-  Aggregate that built it.
-* ``max_windows``: at most N ``WindowExec`` nodes; 0 means the query
-  reduces with array folds and plain aggregates instead of windows.
-* ``has_window``: at least one ``WindowExec``, so the window rule above
-  cannot pass vacuously.
 
-Rules on plans that a checkpoint hides (interior plans) and checks
+Window rules (every ``WindowExec`` over an aggregate, window counts),
+rules on plans that a checkpoint hides (interior plans) and checks
 outside this vocabulary (window partition keys, WindowGroupLimit
-pushdown, exact counts) stay in the per-subject plan tests.
+pushdown, exact counts) stay in the per-subject plan tests, built on
+the same ``plans/inspect.py`` helpers.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import (
-    scan_count, unbounded_windows, window_nodes,
-)
+from de_project_airflow_etl_spark.plans.inspect import scan_count
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.staged import STAGED
 
 pytestmark = pytest.mark.usefixtures("release_caches")
-
-AGG = "aggregate"
-AGG_OR_NO_SCAN = "aggregate_or_no_scan"
 
 PLAN_RULES: dict[str, dict] = {
     # ------------------------------------------------ operators/dedup.py
@@ -67,11 +53,6 @@ PLAN_RULES: dict[str, dict] = {
     # ------------------------------------------------- operators/skew.py
     # one events pass: the totals side is a one-row broadcast
     "key_skew_profile": {"scans": 1},
-    # ------------------------------------------------- queries/abdesign.py
-    # DiD, MDE and Fleiss' kappa are one map-side-combinable aggregate
-    "difference_in_differences_arms": {"max_windows": 0},
-    "fleiss_kappa_quality_rules": {"max_windows": 0},
-    "power_mde_event_value": {"max_windows": 0},
     # ------------------------------------------------ queries/analytics.py
     # keeps its data-sized stream re-derived on purpose (measured loss
     # to materialize); the budget pins the CURRENT shape so it can't
@@ -79,20 +60,18 @@ PLAN_RULES: dict[str, dict] = {
     "containment_dup_pairs": {"scans": 5},
     "funnel_conversion_latency": {"scans": 0},  # was 6: c_ts carried, histogram ckpt
     # ---------------------------------------------------- queries/assoc.py
-    # the in-array idiom replaces windows; bowker's per-user lag and
-    # ERR's per-anchor top-k rank legitimately window
-    "benford_first_digit_value": {"scans": 1, "max_windows": 0},
+    "benford_first_digit_value": {"scans": 1},
     "bowker_symmetry_event_transitions": {"scans": 1},
-    "cmh_weekend_purchase_weeks": {"scans": 1, "max_windows": 0},
-    "cochran_armitage_dow_trend": {"scans": 1, "max_windows": 0},
-    "cross_correlation_revenue_count": {"scans": 1, "max_windows": 0},
+    "cmh_weekend_purchase_weeks": {"scans": 1},
+    "cochran_armitage_dow_trend": {"scans": 1},
+    "cross_correlation_revenue_count": {"scans": 1},
     "err_retrieval_eval": {"scans": 2},  # corpus + broadcast panel
-    "funnel_conversion_steps": {"scans": 1, "max_windows": 0},
-    "lexical_dominance_panel": {"scans": 1, "max_windows": 0},
-    "ljung_box_daily_revenue": {"scans": 1, "max_windows": 0},
-    "ordinal_association_dow_band": {"scans": 1, "max_windows": 0},
-    "pinball_loss_quantile_forecast": {"scans": 1, "max_windows": 0},
-    "smape_daily_forecasts": {"scans": 1, "max_windows": 0},
+    "funnel_conversion_steps": {"scans": 1},
+    "lexical_dominance_panel": {"scans": 1},
+    "ljung_box_daily_revenue": {"scans": 1},
+    "ordinal_association_dow_band": {"scans": 1},
+    "pinball_loss_quantile_forecast": {"scans": 1},
+    "smape_daily_forecasts": {"scans": 1},
     # ---------------------------------------------- queries/attribution.py
     "bh_step_up_drift_panel": {"scans": 0},  # 5-row panel checkpointed
     "bradley_terry_event_strengths": {"scans": 0},  # 25-cell matrix checkpointed
@@ -102,48 +81,32 @@ PLAN_RULES: dict[str, dict] = {
     "shapley_channel_attribution": {"scans": 0},  # mask histogram checkpointed
     "split_conformal_value_interval": {"scans": 1},  # test half reads the corpus
     # ---------------------------------------------- queries/changepoint.py
-    "cox_stuart_trend_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "dixon_q_daily_extremes": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "nelson_aalen_user_lifetimes": {  # risk table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "pettitt_changepoint_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "token_gini_by_source": {  # frequency spectrum ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "turning_points_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
+    "cox_stuart_trend_daily": {"scans": 1},
+    "dixon_q_daily_extremes": {"scans": 1},
+    "nelson_aalen_user_lifetimes": {"scans": 0},  # risk table ckpt'd
+    "pettitt_changepoint_daily": {"scans": 1},
+    "token_gini_by_source": {"scans": 0},  # frequency spectrum ckpt'd
+    "turning_points_daily": {"scans": 1},
     # ----------------------------------------------- queries/clustering.py
     "dbscan_grid_embedding_clusters": {"scans": 0},  # dense cells checkpointed
     "hits_event_type_authority": {"scans": 0},  # (user, type) checkpointed
     "quantile_normalize_source_chars": {"scans": 0},  # char cells checkpointed
     # ---------------------------------------------- queries/diagnostics.py
-    # unpartitioned windows run over daily bars / distinct-value counts;
-    # the fold-based statistics use no window at all
-    "atr_daily_value_range": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "brier_calibration_purchase": {"scans": 1, "max_windows": 0},
-    "brown_forsythe_weekend_value": {  # medians checkpointed
-        "scans": 1, "max_windows": 0},
-    "cochrans_q_quality_rules": {"scans": 1, "max_windows": 0},
-    "durbin_watson_trend_residuals": {"scans": 1, "max_windows": 0},
-    "hellinger_weekend_value_drift": {  # bin table checkpointed
-        "scans": 0, "max_windows": 0},
-    "jarque_bera_daily_revenue": {"scans": 1, "max_windows": 0},
-    "kruskal_wallis_value_by_type": {  # (type, cents) checkpointed
-        "scans": 0, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "mann_kendall_daily_trend": {  # daily table checkpointed
-        "scans": 0, "max_windows": 0},
+    "atr_daily_value_range": {"scans": 1},
+    "brier_calibration_purchase": {"scans": 1},
+    "brown_forsythe_weekend_value": {"scans": 1},  # medians checkpointed
+    "cochrans_q_quality_rules": {"scans": 1},
+    "durbin_watson_trend_residuals": {"scans": 1},
+    "hellinger_weekend_value_drift": {"scans": 0},  # bin table checkpointed
+    "jarque_bera_daily_revenue": {"scans": 1},
+    "kruskal_wallis_value_by_type": {"scans": 0},  # (type, cents) checkpointed
+    "mann_kendall_daily_trend": {"scans": 0},  # daily table checkpointed
     "mrr_retrieval_eval": {"scans": 2},  # corpus + panel
     "ndcg_retrieval_eval": {"scans": 3},  # corpus + panel + label counts
-    "obv_daily_value_flow": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "stochastic_oscillator_daily": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
+    "obv_daily_value_flow": {"scans": 1},
+    "stochastic_oscillator_daily": {"scans": 1},
     "term_burstiness_vmr": {"scans": 2},  # td scan + 1-row corpus count
     "yules_k_by_source": {"scans": 1},
-    # ----------------------------------------------- queries/dispersion.py
-    # quantile windows rank the (type, cents) cell aggregates
-    "gini_mean_difference_value": {"windows": AGG},
-    "mode_value_by_type": {"windows": AGG},
-    "trimean_midhinge_by_type": {"windows": AGG},
     # ----------------------------------------------- queries/estimators.py
     "group_sequential_ab_readout": {"scans": 0},  # 5-look cells checkpointed
     "huber_mean_event_value": {"scans": 0},  # cents cells checkpointed
@@ -151,26 +114,17 @@ PLAN_RULES: dict[str, dict] = {
     "ordinal_pattern_census_daily": {"scans": 0},  # daily panel checkpointed
     "wasserstein_weekend_value": {"scans": 0},  # cents cells checkpointed
     # ----------------------------------------------- queries/evaluation.py
-    # roc_auc / Cramér's V / Bollinger windows consume bounded score,
-    # contingency and daily aggregates; ANOVA, Welch t, OLS and GROUP BY
-    # ALL reduce with folds and plain aggregates. Relations feeding
-    # several consumers (the tv-distance source-word aggregate, the
-    # inverse-prob vocab, the sketch heads) are checkpointed.
-    "anova_event_type_value": {"max_windows": 0},
-    "bollinger_daily_revenue": {"windows": AGG, "has_window": True},
-    "cramers_v_event_dow": {"windows": AGG, "has_window": True},
-    "group_by_all_weekday_mix": {"max_windows": 0},
-    "ols_two_feature_price": {"max_windows": 0},
-    "roc_auc_purchase_value": {"windows": AGG, "has_window": True},
+    # relations feeding several consumers (the tv-distance source-word
+    # aggregate, the inverse-prob vocab, the sketch heads) are
+    # checkpointed
     "seasonal_naive_mase": {"scans": 0},
     "source_unigram_tv_distance": {"scans": 0},
     "theta_sketch_user_overlap": {"scans": 1},
     "unigram_inverse_prob_by_source": {"scans": 1},
-    "welch_t_test_weekend_value": {"max_windows": 0},
     # -------------------------------------------- queries/experimentation.py
     "burrows_delta_sources": {"scans": 0},  # (source, term) counts ckpt'd
     "crostons_intermittent_demand": {  # lineitem + broadcast part dim
-        "scans": 2, "windows": AGG_OR_NO_SCAN},
+        "scans": 2},
     "cuped_adjusted_lift": {"scans": 1},  # per-user table ckpt'd; d0 scan
     "littles_law_sessions": {"scans": 1},  # session table ckpt'd; horizon
     "sample_ratio_mismatch_check": {"scans": 1},
@@ -183,46 +137,29 @@ PLAN_RULES: dict[str, dict] = {
     "dp_sensitivity_audit": {"scans": 1},
     "sql_udf_band_rollup": {"scans": 1},
     # ----------------------------------------------- queries/indicators.py
-    # every window runs over daily bars, distinct-value counts or a
-    # checkpointed reduced table, never raw file rows
-    "accum_dist_daily_flow": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "aroon_daily_value": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "chande_momentum_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "cramer_von_mises_weekend": {  # distinct-cents table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "donchian_channel_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "friedman_dow_value_ranks": {  # (week, dow) table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "jonckheere_terpstra_value_by_type": {  # (type, cents) ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "money_flow_index_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "mood_median_test_event_type": {  # median + group table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "per_class_f1_length_rules": {  # 3x3 cell table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN},
-    "sign_test_daily_updown": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "wilcoxon_signed_rank_ampm": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "williams_r_daily": {"scans": 1, "windows": AGG_OR_NO_SCAN},
+    "accum_dist_daily_flow": {"scans": 1},
+    "aroon_daily_value": {"scans": 1},
+    "chande_momentum_daily": {"scans": 1},
+    "cramer_von_mises_weekend": {"scans": 0},  # distinct-cents table ckpt'd
+    "donchian_channel_daily": {"scans": 1},
+    "friedman_dow_value_ranks": {"scans": 0},  # (week, dow) table ckpt'd
+    "jonckheere_terpstra_value_by_type": {"scans": 0},  # (type, cents) ckpt'd
+    "money_flow_index_daily": {"scans": 1},
+    "mood_median_test_event_type": {"scans": 0},  # median + group table ckpt'd
+    "per_class_f1_length_rules": {"scans": 0},  # 3x3 cell table ckpt'd
+    "sign_test_daily_updown": {"scans": 1},
+    "wilcoxon_signed_rank_ampm": {"scans": 1},
+    "williams_r_daily": {"scans": 1},
     # --------------------------------------------------- queries/mining.py
-    # the unpartitioned daily-statistics windows are only legal because
-    # their input is the calendar-bounded daily rollup; LOF sizes its
-    # buckets with an aggregate + broadcast, not a fixed-key window
-    "autocorr_daily_revenue": {"windows": AGG, "has_window": True},
-    "ks_statistic_daily_value": {"windows": AGG, "has_window": True},
     "label_separation_scores": {"scans": 2},  # was 7: moment + centroid tables
-    "lof_bucket_outliers": {"max_windows": 0},
-    "mann_whitney_daily_value": {"windows": AGG, "has_window": True},
     "market_basket_rules": {"scans": 0},  # was 8: baskets + item supports
-    "rsi_daily_revenue": {"windows": AGG, "has_window": True},
-    "spearman_daily_price_volume": {"windows": AGG, "has_window": True},
     # -------------------------------------------------- queries/nonparam.py
     # the per-weekday pair join consumes the checkpointed daily rollup
     "seasonal_mann_kendall_dow": {"scans": 0},
     # ------------------------------------------ queries/operating_points.py
     "actuarial_life_table": {"scans": 0},  # interval cells checkpointed
-    "cronbachs_alpha_quality_rules": {"scans": 1, "max_windows": 0},
-    "cross_source_ngram_overlap": {  # gram set checkpointed
-        "scans": 0, "max_windows": 0},
+    "cronbachs_alpha_quality_rules": {"scans": 1},
+    "cross_source_ngram_overlap": {"scans": 0},  # gram set checkpointed
     "decile_lift_table": {"scans": 0},  # (cents, p) cells checkpointed
     # r11: the data-sized quantized-explode checkpoint was REMOVED
     # (measured-loss materialization class) — qq now rides the single
@@ -230,9 +167,8 @@ PLAN_RULES: dict[str, dict] = {
     # final plan legitimately holds exactly 2 parquet scans (the one
     # heavy explode pass + the count-only scan); 3+ would mean the
     # explode re-executes for a second consumer again
-    "embedding_isotropy_panel": {"scans": 2, "max_windows": 0},
-    "haberman_adjusted_residuals": {  # 35-cell table checkpointed
-        "scans": 0, "max_windows": 0},
+    "embedding_isotropy_panel": {"scans": 2},
+    "haberman_adjusted_residuals": {"scans": 0},  # 35-cell table checkpointed
     "vocab_coverage_curve": {"scans": 0},  # vocab tf table checkpointed
     "youden_j_optimal_threshold": {"scans": 0},  # cents cells checkpointed
     # ------------------------------------------------ queries/population.py
@@ -243,24 +179,15 @@ PLAN_RULES: dict[str, dict] = {
     # ------------------------------------------------- queries/reranking.py
     "mmr_rerank_retrieval": {"scans": 2},  # corpus + anchor slice
     # ---------------------------------------------------- queries/robust.py
-    # MCC and Cohen's d are one map-side-combinable aggregate; the PR-AUC
-    # cumulative window reads the bounded score-cell table; after 12
-    # fixed-point iterations the Markov plan consumes checkpoints only
-    "cohens_d_weekend_value": {"max_windows": 0},
+    # after 12 fixed-point iterations the Markov plan consumes
+    # checkpoints only
     "markov_removal_effect_attribution": {"scans": 0},
-    "matthews_corr_quality_rules": {"max_windows": 0},
-    "pr_auc_purchase_value": {"windows": AGG, "has_window": True},
     # ----------------------------------------------- queries/robuststats.py
-    # the in-array queries plan no window; the two cell-cumulation
-    # queries window only over post-aggregate cell tables
-    "edf_two_sample_panel_weekend": {  # cents cells checkpointed
-        "scans": 0, "max_windows": 1},
-    "grubbs_max_deviation_daily": {  # daily table checkpointed
-        "scans": 0, "max_windows": 0},
-    "partial_corr_revenue_count_dow": {"scans": 1, "max_windows": 0},
-    "seasonal_strength_weekly": {"scans": 1, "max_windows": 0},
-    "winsorized_mean_value": {  # cents cells checkpointed
-        "scans": 0, "max_windows": 2},
+    "edf_two_sample_panel_weekend": {"scans": 0},  # cents cells checkpointed
+    "grubbs_max_deviation_daily": {"scans": 0},  # daily table checkpointed
+    "partial_corr_revenue_count_dow": {"scans": 1},
+    "seasonal_strength_weekly": {"scans": 1},
+    "winsorized_mean_value": {"scans": 0},  # cents cells checkpointed
     # -------------------------------------------------- queries/seqalign.py
     "negative_binomial_user_counts": {"scans": 1},
     # week pass + un-checkpointed min-date panel (one-row-panel rule)
@@ -272,51 +199,28 @@ PLAN_RULES: dict[str, dict] = {
     # ---------------------------------------------- queries/surfaces_r10.py
     # jsonl_stream_sink_roundtrip deliberately has NO scan budget: its
     # plan is a read-back of the files the streaming sink just committed.
-    # The panel queries reduce via array lambdas and plain aggregates:
-    # any window sits above an Aggregate (the centroid rebuild).
-    "ansari_bradley_weekend_value": {  # distinct-cents table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "cliffs_delta_weekend": {  # distinct-cents table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN, "has_window": True},
+    "ansari_bradley_weekend_value": {"scans": 0},  # distinct-cents ckpt'd
+    "cliffs_delta_weekend": {"scans": 0},  # distinct-cents table ckpt'd
     # scatter table ckpt'd; the final pair math rebuilds the panel
-    "davies_bouldin_labels": {"scans": 1, "windows": AGG_OR_NO_SCAN},
-    "mattr_lexical_diversity_by_source": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN},
-    "quade_test_dow": {  # (week, dow) table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN, "has_window": True},
+    "davies_bouldin_labels": {"scans": 1},
+    "mattr_lexical_diversity_by_source": {"scans": 1},
+    "quade_test_dow": {"scans": 0},  # (week, dow) table ckpt'd
     # corpus pass + the panel's scalar-aggregate build (the panel is
     # deliberately NOT checkpointed so the BNLJ gate can see its
     # scalar root)
-    "simplified_silhouette_labels": {"scans": 2, "windows": AGG_OR_NO_SCAN},
-    "smog_fog_readability_by_source": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN},
-    # --------------------------------------------- queries/surfaces_r10b.py
-    # percentile_disc ranks the bounded (type, cents) cell aggregate
-    "percentile_disc_bands_by_type": {"windows": AGG, "has_window": True},
-    # ---------------------------------------------- queries/surfaces_r6.py
-    # the rank window is only legal unpartitioned over the 64-row
-    # per-dimension aggregate
-    "embedding_dim_variance_rank": {"windows": AGG, "has_window": True},
-    # ---------------------------------------------- queries/surfaces_r8.py
-    # Bowley's cumulation ranks the (type, cents) cell table; the
-    # elasticity lag window reads the brand demand aggregate
-    "arc_price_elasticity_brand": {"windows": AGG, "has_window": True},
-    "bowley_skewness_by_type": {"windows": AGG, "has_window": True},
+    "simplified_silhouette_labels": {"scans": 2},
+    "smog_fog_readability_by_source": {"scans": 1},
     # ---------------------------------------------- queries/surfaces_r9.py
     "ece_calibration_purchase": {"scans": 0},  # 10-row bin table ckpt'd
     "filter_clause_weekday_mix": {"scans": 1},
     "ild_retrieval_diversity": {"scans": 3},  # corpus + panel + join-back
-    "named_window_daily_stats": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "pages_trend_test_dow": {  # (week, dow) table ckpt'd
-        "scans": 0, "windows": AGG_OR_NO_SCAN, "has_window": True},
+    "named_window_daily_stats": {"scans": 1},
+    "pages_trend_test_dow": {"scans": 0},  # (week, dow) table ckpt'd
     "readability_indices_by_source": {"scans": 1},
     "rescaled_range_daily": {"scans": 1},
     "resource_allocation_link_pred": {"scans": 0},  # verified pairs + und ckpt'd
-    "runs_test_daily_updown": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
-    "theil_u_daily_forecasts": {
-        "scans": 1, "windows": AGG_OR_NO_SCAN, "has_window": True},
+    "runs_test_daily_updown": {"scans": 1},
+    "theil_u_daily_forecasts": {"scans": 1},
     # -------------------------------------------- staged/round21-24.py
     "wald_wolfowitz_runs_daily": {"scans": 0},  # daily checkpointed
     "mood_scale_test_weekend": {"scans": 0},  # cells checkpointed
@@ -380,47 +284,22 @@ PLAN_RULES: dict[str, dict] = {
 _QUERIES = {**all_queries(), **STAGED}
 
 
-# one item per (query, rule) pair, a query's rules next to each other
+# one item per (query, rule) pair
 _CASES = [(n, rule) for n in sorted(PLAN_RULES) for rule in PLAN_RULES[n]]
-
-
-@pytest.fixture(scope="module")
-def name(request) -> str:
-    return request.param
-
-
-@pytest.fixture(scope="module")
-def df(spark, sf_dir, name):
-    """The query's DataFrame, built once for all of its rule items
-    (they run consecutively), so one query's checkpoints are alive at
-    a time."""
-    return _QUERIES[name].fn(spark, sf_dir)
 
 
 def test_rules_use_the_vocabulary():
     """A misspelled rule or query name would silently check nothing."""
     assert set(PLAN_RULES) <= set(_QUERIES), set(PLAN_RULES) - set(_QUERIES)
     for rules in PLAN_RULES.values():
-        assert set(rules) <= {"scans", "windows", "max_windows",
-                              "has_window"}, rules
-        assert rules.get("windows", AGG) in (AGG, AGG_OR_NO_SCAN), rules
+        assert set(rules) <= {"scans"}, rules
 
 
-@pytest.mark.parametrize("name, rule", _CASES, indirect=["name"],
-                         scope="module")
-def test_plan_rule(df, name, rule):
+@pytest.mark.parametrize("name, rule", _CASES)
+def test_plan_rule(spark, sf_dir, name, rule):
     bound = PLAN_RULES[name][rule]
-    if rule == "scans":
-        n_scans = scan_count(df)
-        assert n_scans <= bound, (
-            f"{name}: {n_scans} parquet scans in the final plan (budget "
-            f"{bound}) — a bounded multi-consumer intermediate lost its "
-            f"checkpoint")
-    elif rule == "windows":
-        offenders = unbounded_windows(df, scanless_ok=bound == AGG_OR_NO_SCAN)
-        assert not offenders, f"{name}: windows over raw rows: {offenders}"
-    elif rule == "max_windows":
-        n_windows = len(window_nodes(df))
-        assert n_windows <= bound, f"{name}: {n_windows} WindowExec nodes"
-    else:
-        assert window_nodes(df), f"{name}: expected a WindowExec"
+    n_scans = scan_count(_QUERIES[name].fn(spark, sf_dir))
+    assert n_scans <= bound, (
+        f"{name}: {n_scans} parquet scans in the final plan (budget "
+        f"{bound}) — a bounded multi-consumer intermediate lost its "
+        f"checkpoint")

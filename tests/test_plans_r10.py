@@ -1,6 +1,6 @@
 """Targeted gates for the round-10 staged bank (cluster-validity
-indices, Cliff's delta, Quade test, SMOG/Fog, MATTR) — range
-invariants. Scan budgets and window rules live in
+indices, Cliff's delta, Quade test, SMOG/Fog, MATTR) — window shape
+evidence and range invariants. Scan budgets live in
 tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
@@ -9,9 +9,38 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import (
+    unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
+
+
+@pytest.mark.parametrize("name", ["cliffs_delta_weekend",
+                                  "quade_test_dow",
+                                  "ansari_bradley_weekend_value"])
+def test_r10_windows_consume_aggregated_rows_only(spark, sf_dir, name):
+    df = REG[name].fn(spark, sf_dir)
+    assert window_nodes(df), f"{name}: expected a WindowExec"
+    offenders = unbounded_windows(df, scanless_ok=True)
+    assert not offenders, (
+        f"{name}: window consumes un-aggregated file rows: {offenders}")
+
+
+@pytest.mark.parametrize("name", ["simplified_silhouette_labels",
+                                  "davies_bouldin_labels",
+                                  "smog_fog_readability_by_source",
+                                  "mattr_lexical_diversity_by_source"])
+def test_r10_panel_queries_use_no_data_windows(spark, sf_dir, name):
+    """The panel/aggregate queries reduce via array lambdas and plain
+    aggregates — any WindowExec present must sit above an Aggregate
+    (the centroid rebuild), never over raw file rows."""
+    offenders = unbounded_windows(REG[name].fn(spark, sf_dir),
+                                  scanless_ok=True)
+    assert not offenders, (name, offenders)
 
 
 # ------------------------------------------------ range invariants

@@ -1,10 +1,11 @@
 """Targeted gates for the round-10b staged bank (blanket oracle/BNLJ
-gates ride tests/test_staged_pen.py; window rules ride
-tests/test_plan_rules.py)."""
+gates ride tests/test_staged_pen.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import scan_count
+from de_project_airflow_etl_spark.plans.inspect import (
+    scan_count, unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -48,6 +49,13 @@ def test_disc_bands_are_members_and_ordered(spark, sf_dir):
     assert rows
     for r in rows:
         assert r["p25_c"] <= r["p50_c"] <= r["p75_c"]
+
+
+def test_disc_bands_windows_sit_above_cell_aggregate(spark, sf_dir):
+    df = REG["percentile_disc_bands_by_type"].fn(spark, sf_dir)
+    assert window_nodes(df)
+    offenders = unbounded_windows(df)
+    assert not offenders, offenders
 
 
 def test_page_hinkley_gap_is_nonnegative_and_anchored(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Targeted gates for the round-11 staged bank (changepoint and
-randomness diagnostics, token-frequency Gini, Nelson-Aalen) —
-range/consistency invariants. Scan budgets and window rules live in
+randomness diagnostics, token-frequency Gini, Nelson-Aalen) — window
+shape evidence and range/consistency invariants. Scan budgets live in
 tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
@@ -9,9 +9,24 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import unbounded_windows
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
+
+
+@pytest.mark.parametrize("name", sorted([
+    "pettitt_changepoint_daily", "cox_stuart_trend_daily",
+    "turning_points_daily", "dixon_q_daily_extremes",
+    "token_gini_by_source", "nelson_aalen_user_lifetimes",
+]))
+def test_r11_windows_consume_aggregated_rows_only(spark, sf_dir, name):
+    offenders = unbounded_windows(REG[name].fn(spark, sf_dir),
+                                  scanless_ok=True)
+    assert not offenders, (
+        f"{name}: window consumes un-aggregated file rows: {offenders}")
 
 
 # ------------------------------------------------ range invariants

@@ -1,7 +1,7 @@
 """Targeted gates for the round-12 staged bank (experimentation /
 operations analytics) — window partition evidence and consistency
-invariants including the Little's-law identity. Scan budgets and the
-window-input rule live in tests/test_plan_rules.py.
+invariants including the Little's-law identity. Scan budgets live in
+tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -9,7 +9,11 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import window_nodes
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import (
+    unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -30,6 +34,13 @@ def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     for wnode in window_nodes(m):
         spec = wnode.toString()
         assert "user_id" in spec.split("windowspecdefinition")[-1][:80]
+
+
+@pytest.mark.parametrize("name", ["crostons_intermittent_demand"])
+def test_r12_fold_windows_consume_aggregates(spark, sf_dir, name):
+    offenders = unbounded_windows(REG[name].fn(spark, sf_dir),
+                                  scanless_ok=True)
+    assert not offenders, (name, offenders)
 
 
 # ------------------------------------------------ invariants

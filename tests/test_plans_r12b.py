@@ -11,14 +11,15 @@ from de_project_airflow_etl_spark.registry import all_queries
 REG = all_queries()
 
 
-def test_single_pass_readouts_have_no_joins(spark, sf_dir):
+def test_single_pass_readouts_have_no_joins_or_windows(spark, sf_dir):
     """DiD, MDE and Fleiss' kappa are one map-side-combinable
-    aggregate over the scan: no joins anywhere (their no-window rule
-    lives in tests/test_plan_rules.py)."""
+    aggregate over the scan: no joins, no windows anywhere."""
     for name in ("difference_in_differences_arms",
                  "power_mde_event_value", "fleiss_kappa_quality_rules"):
         names = node_names(REG[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
+        assert not any(n.startswith("WindowExec") for n in names), (
+            name, names)
 
 
 def test_did_z_is_estimate_over_se(spark, sf_dir):

@@ -1,7 +1,7 @@
 """Targeted gates for the round-14 staged bank (operating-point /
 lift evaluation, actuarial survival, contingency residuals,
-reliability, corpus/embedding panels) — range invariants. Scan
-budgets and the no-window rule live in tests/test_plan_rules.py.
+reliability, corpus/embedding panels) — plan shapes plus range
+invariants. Scan budgets live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -11,11 +11,20 @@ from __future__ import annotations
 
 import pytest
 
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
 pytestmark = pytest.mark.usefixtures("release_caches")
+
+
+@pytest.mark.parametrize("name", [
+    "cronbachs_alpha_quality_rules", "haberman_adjusted_residuals",
+    "cross_source_ngram_overlap", "embedding_isotropy_panel",
+])
+def test_r14_no_window_nodes(spark, sf_dir, name):
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 # ------------------------------------------------ range invariants

@@ -1,9 +1,10 @@
 """Physical-plan gates for the round-6 promoted bank
 (queries/mining.py + queries/features.py): no cartesian products,
-nested-loop joins only with scalar (one-row) broadcast builds, and
+nested-loop joins only with scalar (one-row) broadcast builds,
+statistics windows confined to the post-aggregate daily rollup, and
 scans pruned to the columns the query consumes. Correct results with
-a wrong plan fail here. The bank's window rules and scan budgets live
-in tests/test_plan_rules.py."""
+a wrong plan fail here. The bank's scan budgets live in
+tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
@@ -84,11 +85,21 @@ _DAILY_STATS = (
 
 
 @pytest.mark.parametrize("name", _DAILY_STATS)
-def test_daily_stats_scan_prunes_orders(spark, sf_dir, name):
-    """The orders scan feeding the daily rollup must read only the two
-    columns the rollup needs (the windows over that rollup are gated
-    in tests/test_plan_rules.py)."""
+def test_daily_stats_window_sits_above_daily_aggregate(spark, sf_dir,
+                                                       name):
+    """The unpartitioned windows these tests use are only legal
+    because their input is the calendar-bounded daily rollup: the
+    plan must aggregate (day grouping) BEFORE the first Window, and
+    the orders scan must read only the two columns the rollup needs."""
     df = R6_BANK[name].fn(spark, sf_dir)
+    assert "Window" in formatted_plan(df), f"{name}: expected a window"
+    # Structural check on the physical tree: EVERY window's input
+    # subtree must contain an aggregate (the daily rollup), proving
+    # windows consume per-day rows, not per-order rows.
+    assert window_nodes(df), f"{name}: expected a WindowExec"
+    offenders = unbounded_windows(df)
+    assert not offenders, (
+        f"{name}: a window consumes un-aggregated input: {offenders}")
     schemas = scan_read_schema(df)
     assert schemas, name
     for line in schemas:
@@ -246,15 +257,18 @@ def test_survival_retention_windows_sit_above_lifetime_aggregate(
         + str(final_names))
 
 
-def test_lof_final_plan_reads_checkpoints_only(spark, sf_dir):
-    """The kNN relation must be checkpointed so the within-bucket
-    all-pairs join is derived once. The checkpoint truncates lineage,
-    so the final plan's scans must all be ExistingRDD (checkpointed) —
-    any parquet scan left in the final plan means the pre-aggregation
-    moved back inline. That bucket sizing is an aggregate + broadcast
-    join-back, not a window partitioned by the FIXED 2^LOF_BITS bucket
-    space, is the no-window rule in tests/test_plan_rules.py."""
+def test_lof_bucket_sizes_broadcast_not_windowed(spark, sf_dir):
+    """Bucket sizing must be an aggregate + broadcast join-back, not
+    a window partitioned by the FIXED 2^LOF_BITS bucket space (whose
+    partitions would be data-sized at scale), and the kNN relation
+    must be checkpointed so the within-bucket all-pairs join is
+    derived once. The checkpoint truncates lineage, so the final
+    plan's scans must all be ExistingRDD (checkpointed) — any parquet
+    scan or Window left in the final plan means the pre-aggregation
+    moved back inline; the pre-checkpoint shape itself is asserted by
+    rebuilding the size relation the same way the query does."""
     names = node_names(R6_BANK["lof_bucket_outliers"].fn(spark, sf_dir))
+    assert not any(n.startswith("WindowExec") for n in names), names
     assert not any("FileSourceScan" in n or "BatchScan" in n
                    for n in names), (
         "post-checkpoint plan re-reads the source: " + str(names))

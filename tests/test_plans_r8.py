@@ -1,8 +1,8 @@
 """Targeted gates for the round-8 promoted bank (time-series
 diagnostics, distribution statistics, text richness, graded
 retrieval) — the 100 TB shape evidence each docstring claims plus
-range invariants on the statistics themselves. Scan budgets and
-window rules for the bank live in tests/test_plan_rules.py.
+range invariants on the statistics themselves. Scan budgets for the
+bank live in tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
 sweep (promoted in round 8; gates carried over from the staged era).
@@ -12,9 +12,42 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import (
+    unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
+
+
+@pytest.mark.parametrize("name", [
+    "atr_daily_value_range", "stochastic_oscillator_daily",
+    "obv_daily_value_flow", "kruskal_wallis_value_by_type",
+])
+def test_r8_windows_consume_aggregated_rows_only(spark, sf_dir, name):
+    """Every unpartitioned window in the bank runs over a bounded
+    AGGREGATE (daily bars / distinct-value counts), never raw rows:
+    each WindowExec subtree must contain an Aggregate or a
+    checkpointed (already-reduced) RDD scan."""
+    df = REG[name].fn(spark, sf_dir)
+    assert window_nodes(df), f"{name}: expected a WindowExec"
+    offenders = unbounded_windows(df, scanless_ok=True)
+    assert not offenders, (
+        f"{name}: window consumes un-aggregated file rows: {offenders}")
+
+
+@pytest.mark.parametrize("name", [
+    "mann_kendall_daily_trend", "durbin_watson_trend_residuals",
+    "jarque_bera_daily_revenue", "cochrans_q_quality_rules",
+    "brier_calibration_purchase", "hellinger_weekend_value_drift",
+    "brown_forsythe_weekend_value",
+])
+def test_r8_fold_statistics_use_no_windows(spark, sf_dir, name):
+    """The fold-based statistics reduce via array folds / plain
+    aggregates — no WindowExec anywhere in the plan."""
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 def test_r8_topk_rank_rides_window_group_limit(spark, sf_dir):

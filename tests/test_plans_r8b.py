@@ -1,7 +1,7 @@
 """Targeted gates for the round-8b promoted bank (second indicator
 batch over the daily value bars + nonparametric/evaluation
-statistics) — range invariants. Scan budgets for the checkpointed
-bounded intermediates and the window-input rules live in
+statistics) — window-input shape evidence and range invariants.
+Scan budgets for the checkpointed bounded intermediates live in
 tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
@@ -10,9 +10,30 @@ sweep (promoted in round 8; gates carried over from the staged era).
 
 from __future__ import annotations
 
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import unbounded_windows
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
+
+
+@pytest.mark.parametrize("name", sorted([
+    "williams_r_daily", "aroon_daily_value", "money_flow_index_daily",
+    "donchian_channel_daily", "chande_momentum_daily",
+    "accum_dist_daily_flow", "wilcoxon_signed_rank_ampm",
+    "sign_test_daily_updown", "mood_median_test_event_type",
+    "friedman_dow_value_ranks", "jonckheere_terpstra_value_by_type",
+    "per_class_f1_length_rules", "cramer_von_mises_weekend",
+]))
+def test_r8b_windows_consume_aggregated_rows_only(spark, sf_dir, name):
+    """Every window in the bank runs over a bounded AGGREGATE (daily
+    bars / distinct-value counts / checkpointed reduced tables),
+    never raw file rows."""
+    offenders = unbounded_windows(REG[name].fn(spark, sf_dir),
+                                  scanless_ok=True)
+    assert not offenders, (
+        f"{name}: window consumes un-aggregated file rows: {offenders}")
 
 
 # ------------------------------------------------ range invariants

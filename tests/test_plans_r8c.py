@@ -1,12 +1,13 @@
 """Targeted gates for the round-8c promoted bank (the blanket
 oracle-match now rides the registry-wide tests/test_correctness.py
 sweep — promoted in round 8; this module pins the
-query-specific plan shapes and invariants, and the window rules live
-in tests/test_plan_rules.py)."""
+query-specific plan shapes and invariants)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, node_names
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, node_names, unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -18,6 +19,16 @@ def test_zipf_head_is_take_ordered(spark, sf_dir):
     names = node_names(REG["zipf_rank_frequency_table"]
                        .fn(spark, sf_dir))
     assert any("TakeOrderedAndProject" in n for n in names), names
+
+
+def test_bowley_windows_sit_above_cell_aggregate(spark, sf_dir):
+    """The cumulation windows rank the bounded (type, cents) cell
+    table, never raw rows: every WindowExec subtree must contain an
+    Aggregate."""
+    df = REG["bowley_skewness_by_type"].fn(spark, sf_dir)
+    assert window_nodes(df)
+    offenders = unbounded_windows(df)
+    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
 
 
 def test_stack_generator_runs_before_any_exchange(spark, sf_dir):
@@ -55,6 +66,14 @@ def test_bootstrap_ci_brackets_the_mean(spark, sf_dir):
     row = REG["hash_bootstrap_mean_ci"].fn(spark, sf_dir).collect()[0]
     assert row["ci_lo"] <= row["mean_value"] <= row["ci_hi"]
     assert row["n_resamples"] == 32
+
+
+def test_elasticity_lag_window_sits_above_demand_aggregate(spark,
+                                                           sf_dir):
+    df = REG["arc_price_elasticity_brand"].fn(spark, sf_dir)
+    assert window_nodes(df)
+    offenders = unbounded_windows(df)
+    assert not offenders, f"lag window consumes raw lineitem: {offenders}"
 
 
 def test_truncation_ranks_get_partial_group_limit(spark, sf_dir):

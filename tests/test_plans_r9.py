@@ -1,8 +1,7 @@
 """Targeted gates for the round-9 promoted bank (readability, link
 prediction, forecast/calibration summaries, runs test, Page's trend,
-retrieval diversity, FILTER clause) — WindowGroupLimit pushdown and
-range invariants. Scan budgets and window rules live in
-tests/test_plan_rules.py.
+retrieval diversity, FILTER clause) — window shape evidence and
+range invariants. Scan budgets live in tests/test_plan_rules.py.
 
 Oracle equality rides the registry-wide tests/test_correctness.py
 sweep (promoted in round 8; gates carried over from the staged era).
@@ -10,9 +9,26 @@ sweep (promoted in round 8; gates carried over from the staged era).
 
 from __future__ import annotations
 
+import pytest
+
+from de_project_airflow_etl_spark.plans.inspect import (
+    unbounded_windows, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
+
+
+@pytest.mark.parametrize("name", [
+    "theil_u_daily_forecasts", "runs_test_daily_updown",
+    "pages_trend_test_dow", "named_window_daily_stats",
+])
+def test_r9_windows_consume_aggregated_rows_only(spark, sf_dir, name):
+    df = REG[name].fn(spark, sf_dir)
+    assert window_nodes(df), f"{name}: expected a WindowExec"
+    offenders = unbounded_windows(df, scanless_ok=True)
+    assert not offenders, (
+        f"{name}: window consumes un-aggregated file rows: {offenders}")
 
 
 def test_r9_ild_topk_rides_window_group_limit(spark, sf_dir):
