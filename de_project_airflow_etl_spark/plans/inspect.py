@@ -5,22 +5,28 @@ The string checks read the formatted physical plan — the same text
 properties: filters reached the parquet scan, projections pruned the
 read schema, small sides broadcast, no cartesian products sneak in.
 
-The structural checks walk the physical plan tree. ``scan_count``
-implements the ``scans`` rule of the ``PLAN_RULES`` table in
-``tests/test_plan_rules.py`` (at most N parquet scans in the final
-plan, declared per query name). The per-subject plan tests state
-their window rules with the same helpers:
+The structural checks walk the physical plan tree. They implement the
+rules of the ``PLAN_RULES`` table in ``tests/test_plan_rules.py``,
+declared per query name:
 
-* every ``WindowExec`` input subtree contains an Aggregate
-  (``unbounded_windows``);
-* every ``WindowExec`` input subtree contains an Aggregate or reads no
-  file, i.e. consumes a checkpoint
+* ``scans``: at most N parquet scans in the final plan
+  (``scan_count``);
+* ``windows: "strict"``: every ``WindowExec`` input subtree contains an
+  Aggregate (``unbounded_windows``);
+* ``windows: "lenient"``: every ``WindowExec`` input subtree contains an
+  Aggregate or reads no file, i.e. consumes a checkpoint
   (``unbounded_windows(..., scanless_ok=True)``);
-* at most N ``WindowExec`` nodes, 0 meaning none, or at least one
-  (``window_nodes``).
+* ``max_windows``: at most N ``WindowExec`` nodes, 0 meaning none, and
+  ``has_window``: at least one (``window_nodes``).
+
+The window-hazard audits over the registry and the staged pen call
+``fixed_key_window_hazards`` and ``unbounded_collects``; both return
+their offenders (empty == pass).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame
 
@@ -101,6 +107,98 @@ def unbounded_windows(df: DataFrame, scanless_ok: bool = False) -> list[str]:
         if scanless_ok and not any("FileSourceScan" in n for n in names):
             continue
         offenders.append(wnode.simpleString(25))
+    return offenders
+
+
+# Columns whose cardinality does not grow with the data in this schema:
+# a partition keyed only by them is a constant fraction of the corpus.
+FIXED_CARDINALITY = frozenset({
+    "event_type", "lang", "source", "label", "wknd", "brand", "p_brand",
+    "metric", "g", "kind"})
+
+# Grouping keys whose cardinality grows linearly with the data: an
+# Aggregate keyed by one of them is itself data-sized, so it does not
+# bound a fixed-key window or collect above it (a per-user rollup under
+# a fixed-cardinality window would otherwise pass). Calendar keys (day,
+# week, dow), value-range buckets and vocabulary keys stay off this list
+# on purpose: those rollups are bounded, the shapes the re-plans produce.
+GROWS_WITH_DATA = frozenset({
+    "user_id", "event_id", "doc_id", "content_hash", "vec_id",
+    "session_id", "o_orderkey", "l_orderkey", "o_custkey", "c_custkey",
+    "l_partkey", "p_partkey", "l_suppkey", "s_suppkey"})
+
+_COLUMN = re.compile(r"([a-zA-Z_][a-zA-Z0-9_]*)#\d+")
+_KEYS = re.compile(r".*?keys=\[([^\]]*)\]")
+
+
+def partition_columns(wnode) -> set[str]:
+    """Column names in a ``WindowExec``'s PARTITION BY."""
+    spec = wnode.partitionSpec()
+    return {c for i in range(spec.size())
+            for c in _COLUMN.findall(spec.apply(i).toString())}
+
+
+def _grouping_columns(anode) -> set[str]:
+    """Column names in an Aggregate node's grouping keys."""
+    m = _KEYS.match(anode.toString().split("\n")[0])
+    return set(_COLUMN.findall(m.group(1))) if m else set()
+
+
+def _bounded_subtree(node, extras: tuple[str, ...] = ()) -> bool:
+    """True if the node's input subtree is provably bounded: an
+    Aggregate not keyed by a grows-with-data column, a checkpoint scan
+    (ExistingRDD), a WindowGroupLimit (rank <= k rides the partial
+    pushdown), or a node whose class name contains one of ``extras``."""
+    for c in _walk_jplan(node.children().apply(0)):
+        cls = c.getClass().getSimpleName()
+        if "Aggregate" in cls and not _grouping_columns(c) & GROWS_WITH_DATA:
+            return True
+        if ("ExistingRDD" in cls or "RDDScanExec" in cls
+                or cls.startswith("WindowGroupLimit")
+                or any(t in cls for t in extras)):
+            return True
+    return False
+
+
+def fixed_key_window_hazards(df: DataFrame) -> list[str]:
+    """Windows that are unpartitioned, or partitioned only by
+    ``FIXED_CARDINALITY`` columns, over an input not shown bounded by
+    ``_bounded_subtree``: each partition would be data-sized at
+    100 TB. Windows keyed by a grows-with-data column pass, since their
+    per-key groups shrink relative to the corpus.
+
+    Returns the offending window descriptions (empty == pass)."""
+    offenders = []
+    for wnode in window_nodes(df):
+        cols = partition_columns(wnode)
+        unpartitioned = wnode.partitionSpec().size() == 0
+        if ((unpartitioned or (cols and cols <= FIXED_CARDINALITY))
+                and not _bounded_subtree(wnode)):
+            offenders.append(f"partitioned by {sorted(cols) or 'NOTHING'}: "
+                             f"{wnode.simpleString(25)}")
+    return offenders
+
+
+def unbounded_collects(df: DataFrame) -> list[str]:
+    """collect_list / collect_set aggregates keyed by nothing or only by
+    ``FIXED_CARDINALITY`` columns over an input not shown bounded. One
+    aggregation state buffers a whole group, so such a group is an
+    executor OOM at scale. A TakeOrdered or Limit upstream also bounds
+    the input (the group is capped at the limit constant).
+
+    Returns the offending aggregate descriptions (empty == pass)."""
+    offenders = []
+    for node in _walk_jplan(df._jdf.queryExecution().sparkPlan()):
+        if "Aggregate" not in node.getClass().getSimpleName():
+            continue
+        head = node.toString().split("\n")[0]
+        if "collect_list" not in head and "collect_set" not in head:
+            continue
+        keys = _grouping_columns(node)
+        if keys and not keys <= FIXED_CARDINALITY:
+            continue
+        if not _bounded_subtree(node, ("TakeOrdered", "Limit")):
+            offenders.append(f"keys={sorted(keys) or 'NONE'}: {head[:300]}")
     return offenders
 
 

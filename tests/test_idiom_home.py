@@ -7,8 +7,10 @@ the package whose text IS one of those idioms is a re-grown private
 copy: import the helper from ``queries.util`` instead.
 
 ``plans/inspect.py`` owns the plan checks (scan count, window and node
-walks) and ``tests/conftest.py`` the cache-release fixture; per-query
-scan budgets are rows of ``PLAN_RULES`` in ``tests/test_plan_rules.py``.
+walks, the window-hazard and collect audits with their key sets) and
+``tests/conftest.py`` the cache-release fixture; per-query scan budgets
+and window rules are rows of ``PLAN_RULES`` in
+``tests/test_plan_rules.py``.
 """
 
 from __future__ import annotations
@@ -93,16 +95,34 @@ def test_util_defines_every_idiom():
 
 
 _PLAN_HELPERS = {"_window_nodes", "_node_names",
-                 "_windows_sit_above_aggregates", "_release_caches"}
+                 "_windows_sit_above_aggregates", "_release_caches",
+                 "_bounded_subtree", "_is_bounding_aggregate"}
+_PLAN_CONSTANTS = {"FIXED_CARDINALITY", "GROWS_WITH_DATA"}
 _SCAN_COUNT = re.compile(r'count\("Scan parquet"\)')
 
 
+def _top_level_names(tree: ast.Module) -> set[str]:
+    names = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return names
+
+
 def test_plan_checks_are_defined_only_in_inspect():
-    """A hand-counted scan budget or a private copy of a plan walk (or
-    of the cache-release fixture) outside ``plans/inspect.py`` is a
-    re-grown copy: use ``inspect.scan_count`` / ``window_nodes`` /
-    ``node_names``, a ``PLAN_RULES`` row, or the ``release_caches``
-    fixture instead."""
+    """A hand-counted scan budget, a private copy of a plan walk (or of
+    the cache-release fixture or the window-hazard key sets), or a plan
+    helper imported from another test module, outside
+    ``plans/inspect.py`` is a re-grown copy: use ``inspect.scan_count``
+    / ``window_nodes`` / ``node_names`` / ``fixed_key_window_hazards``
+    / ``unbounded_collects``, a ``PLAN_RULES`` row, or the
+    ``release_caches`` fixture instead."""
+    helpers = (_PLAN_HELPERS | _PLAN_CONSTANTS
+               | _top_level_names(ast.parse(PLAN_HOME.read_text())))
     copies = []
     for path in sorted([*PKG.rglob("*.py"), *TESTS.rglob("*.py")]):
         if path == PLAN_HOME:
@@ -112,8 +132,17 @@ def test_plan_checks_are_defined_only_in_inspect():
         for lineno, line in enumerate(text.splitlines(), 1):
             if _SCAN_COUNT.search(line):
                 copies.append(f"{where}:{lineno} counts parquet scans")
-        for node in ast.walk(ast.parse(text, filename=str(path))):
+        tree = ast.parse(text, filename=str(path))
+        for name in _top_level_names(tree) & _PLAN_CONSTANTS:
+            copies.append(f"{where} defines {name}")
+        for node in ast.walk(tree):
             if (isinstance(node, ast.FunctionDef)
                     and node.name in _PLAN_HELPERS):
                 copies.append(f"{where}:{node.lineno} defines {node.name}")
+            if (isinstance(node, ast.ImportFrom)
+                    and (node.module or "").startswith("tests.test_")):
+                shared = sorted({a.name for a in node.names} & helpers)
+                if shared:
+                    copies.append(f"{where}:{node.lineno} imports "
+                                  f"{shared} from {node.module}")
     assert not copies, "\n".join(copies)

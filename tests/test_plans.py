@@ -98,11 +98,23 @@ def test_embedding_dedup_is_equi_join(spark, sf_dir):
 def test_lsh_candidate_join_is_equi_join(spark, sf_dir):
     # Inspect the un-materialized pairs plan (the public query returns
     # an eagerly checkpointed result whose plan is an opaque RDD scan).
+    # Both plans: the hex one is the reference of
+    # test_plans_r10opt.py::test_lsh_binary_equals_hex_pairs, the binary
+    # one over unhexed digests is the plan _lsh_verified runs.
     from de_project_airflow_etl_spark.operators.dedup import (
         _lsh_pairs_plan, _shingled,
     )
+    from de_project_airflow_etl_spark.queries.util import tracked_persist
     digests = _shingled(spark, sf_dir).select("doc_id", "hs")
     plan = formatted_plan(_lsh_pairs_plan(digests))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    binary = tracked_persist(_shingled(spark, sf_dir).select(
+        "doc_id", F.expr("transform(hs, h -> unhex(h))").alias("hs")))
+    try:
+        plan = formatted_plan(_lsh_pairs_plan(binary, binary=True))
+    finally:
+        binary.unpersist()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 

@@ -1,6 +1,6 @@
 """Targeted gates for the round-10c staged bank (pooled-EDF panel,
 decomposition strength, Grubbs, winsorized mean, partial correlation)
-— window counts plus range invariants. Scan budgets live in
+— range invariants. Scan budgets and window counts live in
 tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
@@ -11,33 +11,11 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
 pytestmark = pytest.mark.usefixtures("release_caches")
-
-
-# The in-array queries must plan with zero window nodes; the two
-# cell-cumulation queries window only over post-aggregate cell tables
-# (covered by the registry-wide audit once promoted; here we pin the
-# window COUNT so a refactor can't sneak a raw-row window in).
-@pytest.mark.parametrize("name", [
-    "seasonal_strength_weekly", "grubbs_max_deviation_daily",
-    "partial_corr_revenue_count_dow",
-])
-def test_r10c_no_window_nodes(spark, sf_dir, name):
-    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
-
-
-@pytest.mark.parametrize("name, max_wins", [
-    ("edf_two_sample_panel_weekend", 1),
-    ("winsorized_mean_value", 2),
-])
-def test_r10c_cell_windows_bounded(spark, sf_dir, name, max_wins):
-    wins = window_nodes(REG[name].fn(spark, sf_dir))
-    assert len(wins) <= max_wins, name
 
 
 # ------------------------------------------------ range invariants

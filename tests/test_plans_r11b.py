@@ -3,7 +3,6 @@ gates ride tests/test_staged_pen.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import unbounded_windows
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -55,10 +54,3 @@ def test_trimean_sits_between_midhinge_and_median_hull(spark, sf_dir):
         lo = min(r["midhinge"], r["trimean"])
         hi = max(r["midhinge"], r["trimean"])
         assert lo <= r["trimean"] <= hi
-
-
-def test_quantile_windows_sit_above_cell_aggregates(spark, sf_dir):
-    for name in ("trimean_midhinge_by_type", "mode_value_by_type",
-                 "gini_mean_difference_value"):
-        offenders = unbounded_windows(REG[name].fn(spark, sf_dir))
-        assert not offenders, (name, offenders)

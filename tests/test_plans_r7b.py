@@ -3,15 +3,14 @@ bank (queries/evaluation.py: evaluation statistics, sketches,
 attribution) — the 100 TB shape evidence each query's docstring
 claims. Promoted from tests/test_staged_r7b.py in round 7; the
 blanket BNLJ gate for the bank lives in tests/test_plans_r7.py, its
-scan budgets in tests/test_plan_rules.py, and oracle equality rides
+scan budgets and window rules in tests/test_plan_rules.py, and oracle
+equality rides
 the registry-wide tests/test_correctness.py.
 """
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import (
-    _walk_jplan, node_names, unbounded_windows, window_nodes,
-)
+from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, node_names
 from de_project_airflow_etl_spark.registry import all_queries
 
 R7B_BANK = {n: q for n, q in all_queries().items()
@@ -19,38 +18,13 @@ R7B_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.evaluation"}
 
 
-def test_auc_cumulation_sits_above_score_aggregate(spark, sf_dir):
-    """roc_auc's unpartitioned cumulative-negatives window is only
-    legal because its input is the bounded integer-cents score
-    distribution: every WindowExec subtree must contain an
-    Aggregate (the global_row_number lesson applied to ranks)."""
-    df = R7B_BANK["roc_auc_purchase_value"].fn(spark, sf_dir)
-    assert window_nodes(df), "expected a WindowExec"
-    offenders = unbounded_windows(df)
-    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
-
-
-def test_fold_statistics_use_no_windows(spark, sf_dir):
-    """ANOVA and Cramér's V reduce their per-group double terms with
-    the sorted-fold idiom, NOT an ordered running-sum window — the
-    plan must contain no WindowExec fed by raw rows; Cramér's V's
-    margin windows must sit above the contingency aggregate."""
-    df = R7B_BANK["anova_event_type_value"].fn(spark, sf_dir)
-    assert not window_nodes(df), node_names(df)
-    df = R7B_BANK["cramers_v_event_dow"].fn(spark, sf_dir)
-    assert window_nodes(df), "expected a WindowExec"
-    offenders = unbounded_windows(df)
-    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
-
-
 def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
     """Welch t and the two-feature OLS are one map-side-combinable
-    aggregate over the scan: no joins, no windows anywhere."""
+    aggregate over the scan: no joins (no windows: their
+    ``max_windows: 0`` rows in ``PLAN_RULES``)."""
     for name in ("welch_t_test_weekend_value", "ols_two_feature_price"):
         names = node_names(R7B_BANK[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
-        assert not any(n.startswith("WindowExec") for n in names), (
-            name, names)
 
 
 def test_map_retrieval_rank_gets_partial_group_limit(spark, sf_dir):
@@ -103,15 +77,6 @@ def test_attribution_join_is_equi_not_nested_loop(spark, sf_dir):
                or "BroadcastHashJoin" in n for n in names), names
 
 
-def test_daily_rollup_windows_sit_above_aggregates(spark, sf_dir):
-    """Bollinger's frame windows consume the calendar-bounded daily
-    aggregate, never raw events."""
-    df = R7B_BANK["bollinger_daily_revenue"].fn(spark, sf_dir)
-    assert window_nodes(df), "expected a WindowExec"
-    offenders = unbounded_windows(df)
-    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
-
-
 def test_param_binding_folds_into_pushed_filter(spark, sf_dir):
     """The :min_total named parameter must fold to a literal that
     reaches the orders scan as a pushed filter — binding cannot cost
@@ -125,11 +90,11 @@ def test_param_binding_folds_into_pushed_filter(spark, sf_dir):
 
 def test_group_by_all_plans_as_plain_aggregate(spark, sf_dir):
     """GROUP BY ALL must bind to the same single hash aggregate as
-    the explicitly-keyed form — no windows, no joins."""
+    the explicitly-keyed form — no joins (no windows: its
+    ``max_windows: 0`` row in ``PLAN_RULES``)."""
     names = node_names(R7B_BANK["group_by_all_weekday_mix"]
                        .fn(spark, sf_dir))
     assert not any("Join" in n for n in names), names
-    assert not any(n.startswith("WindowExec") for n in names), names
     assert any("Aggregate" in n for n in names), names
 
 

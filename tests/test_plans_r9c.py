@@ -3,7 +3,7 @@ diagnostics, categorical trend/symmetry/stratified inference, ordinal
 association, forecast/quantile-loss panels, ERR, Benford, lexical
 dominance, the ordered funnel) — the 100 TB shape evidence each
 docstring claims plus range invariants on the statistics themselves.
-Scan budgets live in tests/test_plan_rules.py.
+Scan budgets and the no-window rules live in tests/test_plan_rules.py.
 
 The blanket oracle-match / non-empty / BNLJ gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
@@ -13,27 +13,14 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import window_nodes
+from de_project_airflow_etl_spark.plans.inspect import (
+    partition_columns, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
 pytestmark = pytest.mark.usefixtures("release_caches")
-
-
-# Every r9c query except the three that legitimately window —
-# bowker's per-user lag (grows-with-data partition key) and ERR's
-# per-anchor top-k rank (WindowGroupLimit pushdown) — must plan with
-# ZERO window nodes: the in-array idiom replaces them.
-@pytest.mark.parametrize("name", [
-    "ljung_box_daily_revenue", "cross_correlation_revenue_count",
-    "cochran_armitage_dow_trend", "ordinal_association_dow_band",
-    "cmh_weekend_purchase_weeks", "smape_daily_forecasts",
-    "pinball_loss_quantile_forecast", "benford_first_digit_value",
-    "lexical_dominance_panel", "funnel_conversion_steps",
-])
-def test_r9c_no_window_nodes(spark, sf_dir, name):
-    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 def test_err_rank_rides_window_group_limit(spark, sf_dir):
@@ -49,7 +36,7 @@ def test_bowker_window_partitioned_by_user(spark, sf_dir):
         REG["bowker_symmetry_event_transitions"].fn(spark, sf_dir))
     assert wins, "the transition lag must be a window"
     for w in wins:
-        assert "user_id" in w.partitionSpec().apply(0).toString()
+        assert "user_id" in partition_columns(w), w.simpleString(25)
 
 
 # ------------------------------------------------ range invariants

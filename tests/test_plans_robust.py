@@ -1,9 +1,10 @@
 """Physical-plan gates for the round-7 new-surface bank
 (queries/robust.py + the streaming dedup in streaming/ingest.py):
 no cartesian products, nested-loop joins only with documented
-calendar-/vocabulary-bounded builds, statistics windows sitting above
-aggregates, and sequential folds collapsed to one projection. The
-Markov iteration's zero-scan budget rides tests/test_plan_rules.py;
+calendar-/vocabulary-bounded builds, median windows over checkpointed
+rollups, and sequential folds collapsed to one projection. The
+Markov iteration's zero-scan budget and the window rules ride
+tests/test_plan_rules.py;
 oracle equality rides the registry-wide tests/test_correctness.py
 sweep."""
 
@@ -12,8 +13,7 @@ from __future__ import annotations
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, node_names, unbounded_windows,
-    window_nodes,
+    bnlj_builds_are_scalar, formatted_plan, node_names, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -64,16 +64,6 @@ def test_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
 # ----------------------------------------- window-hazard structure
 
 
-def test_pr_auc_windows_sit_above_aggregates(spark, sf_dir):
-    """The unpartitioned cumulative window is only legal because its
-    input is the bounded score-cell table: every WindowExec subtree
-    must contain an Aggregate (the global_row_number lesson)."""
-    df = R7N_BANK["pr_auc_purchase_value"].fn(spark, sf_dir)
-    assert window_nodes(df), "expected a WindowExec"
-    offenders = unbounded_windows(df)
-    assert not offenders, f"window consumes un-aggregated rows: {offenders}"
-
-
 @pytest.mark.parametrize("name", ["hodges_lehmann_weekend_shift",
                                   "siegel_repeated_medians_trend"])
 def test_median_windows_consume_checkpointed_rollup(spark, sf_dir, name):
@@ -91,12 +81,11 @@ def test_median_windows_consume_checkpointed_rollup(spark, sf_dir, name):
 
 def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
     """MCC and Cohen's d are one map-side-combinable aggregate over
-    the scan: no joins, no windows anywhere."""
+    the scan: no joins (no windows: their ``max_windows: 0`` rows in
+    ``PLAN_RULES``)."""
     for name in ("matthews_corr_quality_rules", "cohens_d_weekend_value"):
         names = node_names(R7N_BANK[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
-        assert not any(n.startswith("WindowExec") for n in names), (
-            name, names)
 
 
 def test_ewma_is_single_projection_fold(spark, sf_dir):

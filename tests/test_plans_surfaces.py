@@ -1,7 +1,8 @@
 """Physical-plan gates for the round-6 surface bank
-(queries/surfaces_r6.py): the two analytics-shaped queries must keep
-their bounded-window / pruned-scan shapes, and nothing in the bank may
-plan an unbounded nested loop."""
+(queries/surfaces_r6.py): the shard plan must keep its
+block-hierarchical windows and pruned scan, and nothing in the bank
+may plan an unbounded nested loop. The dimension-variance rank's
+window rules live in tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
@@ -33,16 +34,6 @@ def test_surface_plans_have_no_unbounded_nested_loops(spark, sf_dir,
     assert "CartesianProduct" not in plan, name
     offenders = bnlj_builds_are_scalar(df)
     assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"
-
-
-def test_dim_variance_window_sits_above_dim_aggregate(spark, sf_dir):
-    """The rank window is only legal unpartitioned because its input is
-    the 64-row per-dimension aggregate: every WindowExec's subtree must
-    contain an Aggregate."""
-    df = SURFACE_BANK["embedding_dim_variance_rank"].fn(spark, sf_dir)
-    assert window_nodes(df), "expected a rank WindowExec"
-    offenders = unbounded_windows(df)
-    assert not offenders, f"rank window consumes raw rows: {offenders}"
 
 
 def test_shard_plan_windows_are_block_hierarchical(spark, sf_dir):
