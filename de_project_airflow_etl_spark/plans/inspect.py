@@ -17,7 +17,12 @@ declared per query name:
   Aggregate or reads no file, i.e. consumes a checkpoint
   (``unbounded_windows(..., scanless_ok=True)``);
 * ``max_windows``: at most N ``WindowExec`` nodes, 0 meaning none, and
-  ``has_window``: at least one (``window_nodes``).
+  ``has_window``: at least one (``window_nodes``);
+* ``nested_loops``, run on every registered and staged query: no
+  ``CartesianProduct`` in ``formatted_plan`` and every
+  ``BroadcastNestedLoopJoin`` builds a one-row or limit-k side
+  (``bnlj_builds_are_scalar``); a ``"justified"`` row inverts the build
+  check, a ``"none"`` row forbids the node outright.
 
 The window-hazard audits over the registry and the staged pen call
 ``fixed_key_window_hazards`` and ``unbounded_collects``; both return

@@ -321,7 +321,7 @@ def cross_correlation_revenue_count(spark: SparkSession,
         "— past 2^63 at corpus scale), wide-cast once, one sqrt. "
         "Plan: one scan, one 7-group aggregate, a 1-row panel — "
         "zero joins, zero windows.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def cochran_armitage_dow_trend(spark: SparkSession,
                                sf_dir: str) -> DataFrame:

@@ -203,6 +203,32 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 LL_GAP_US = 30 * 60 * 1_000_000
 
 
+def _ll_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "events").selectExpr(
+        "user_id", "unix_micros(ts) AS t")
+
+
+def _ll_session_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(user, session) durations, the relation
+    ``littles_law_sessions`` checkpoints: its LAG / cumsum windows,
+    which the checkpoint hides from the final plan."""
+    w = Window.partitionBy("user_id").orderBy("t")
+    m = _ll_events(spark, sf_dir).select(
+        "user_id", "t",
+        F.expr(f"CASE WHEN t - LAG(t) OVER (PARTITION BY user_id"
+               f" ORDER BY t) > {LL_GAP_US}"
+               " OR LAG(t) OVER (PARTITION BY user_id ORDER BY t)"
+               " IS NULL THEN 1 ELSE 0 END").alias("is_start"))
+    s = m.select(
+        "user_id", "t",
+        F.sum("is_start").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)).cast("long")
+         .alias("sess"))
+    return (s.groupBy("user_id", "sess")
+             .agg((F.max("t") - F.min("t")).cast("long")
+                  .alias("dur_us")))
+
+
 @query(
     "littles_law_sessions",
     oracle=f"""
@@ -258,29 +284,12 @@ LL_GAP_US = 30 * 60 * 1_000_000
     tags=("timeseries", "operations"),
 )
 def littles_law_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events").selectExpr(
-        "user_id", "unix_micros(ts) AS t")
-    w = Window.partitionBy("user_id").orderBy("t")
-    m = e.select(
-        "user_id", "t",
-        F.expr(f"CASE WHEN t - LAG(t) OVER (PARTITION BY user_id"
-               f" ORDER BY t) > {LL_GAP_US}"
-               " OR LAG(t) OVER (PARTITION BY user_id ORDER BY t)"
-               " IS NULL THEN 1 ELSE 0 END").alias("is_start"))
-    s = m.select(
-        "user_id", "t",
-        F.sum("is_start").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)).cast("long")
-         .alias("sess"))
-    sess = (s.groupBy("user_id", "sess")
-             .agg((F.max("t") - F.min("t")).cast("long")
-                  .alias("dur_us"))
-             # session table feeds the final aggregate only, but the
-             # horizon needs the raw stream: checkpoint so the final
-             # plan carries one scan for the horizon, one ckpt read
-             .localCheckpoint())
-    horizon = e.agg((F.max("t") - F.min("t")).cast("long")
-                    .alias("h_us"))
+    # session table feeds the final aggregate only, but the horizon
+    # needs the raw stream: checkpoint so the final plan carries one
+    # scan for the horizon, one ckpt read
+    sess = _ll_session_durations(spark, sf_dir).localCheckpoint()
+    horizon = _ll_events(spark, sf_dir).agg(
+        (F.max("t") - F.min("t")).cast("long").alias("h_us"))
     return (sess.agg(F.count(F.lit(1)).cast("long").alias("n_sessions"),
                      F.sum("dur_us").cast("long").alias("total_dur_us"))
                 .crossJoin(F.broadcast(horizon))

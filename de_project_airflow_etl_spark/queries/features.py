@@ -82,7 +82,7 @@ _CMS_SQL_KEY = "CAST(r AS VARCHAR) || '|' || CAST(user_id AS VARCHAR)"
         "canonical 100 TB heavy-hitter pre-pass — and the probe side "
         "joins 80 rows against 256, all broadcast. Hashes are salted "
         "md5 prefixes, bit-identical on both engines.",
-    tags=("sketch"),
+    tags=("sketch",),
 )
 def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select("user_id")
@@ -177,7 +177,7 @@ _BLOOM_SQL_KEY = "CAST(i AS VARCHAR) || '|' || CAST(k AS VARCHAR)"
         "positions, never keys, so a 1000-executor run moves the "
         "filter, not the fact table. Salted-md5 positions are "
         "bit-identical across engines.",
-    tags=("sketch"),
+    tags=("sketch",),
 )
 def bloom_buyer_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = F.explode(F.expr(f"sequence(0, {BLOOM_K - 1})")).alias("i")
@@ -263,7 +263,7 @@ _KMV_POW52 = 1 << 52
         "TakeOrdered (per-partition top-k, no global sort) — the "
         "mergeable-sketch alternative to an exact COUNT(DISTINCT) "
         "when the key space itself is the bottleneck.",
-    tags=("sketch"),
+    tags=("sketch",),
 )
 def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select("user_id")
@@ -320,7 +320,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AND the final aggregate (day-partitioned windows, never "
         "unpartitioned), the bar-building pattern for any "
         "time-bucketed rollup at scale.",
-    tags=("timeseries"),
+    tags=("timeseries",),
 )
 def daily_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
@@ -369,7 +369,7 @@ def daily_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         "downstream shuffle-shard pass interleave). One tiny "
         "aggregate plus a one-row broadcast max; the plan is "
         "metadata-sized no matter the corpus.",
-    tags=("curation"),
+    tags=("curation",),
 )
 def balanced_resample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cls = (load(spark, sf_dir, "embeddings")
@@ -461,7 +461,7 @@ _GINI_FEATURES_SQL = """
         "engines, no floating accumulation anywhere. One unpivoted "
         "aggregate (4x the scan, map-side combinable into "
         "vocabulary-bounded cells) and a 4-row ranking window.",
-    tags=("ml"),
+    tags=("ml",),
 )
 def gini_feature_split_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
@@ -533,7 +533,7 @@ TENC_M = 100  # smoothing pseudo-count (orders)
         "STRING->DOUBLE route because the numerator passes 2^53 at "
         "sf0.1 (the twap_user_values lesson). One fact-table "
         "aggregate into 5 segment cells, one broadcast global row.",
-    tags=("ml"),
+    tags=("ml",),
 )
 def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
@@ -589,7 +589,7 @@ FH_BUCKETS = 32
         "one map-side-combinable aggregate into 32 cells; the "
         "distinct-token count is the only shuffle that carries "
         "strings, bounded by vocabulary not corpus.",
-    tags=("ml"),
+    tags=("ml",),
 )
 def feature_hashing_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (load(spark, sf_dir, "documents")
@@ -726,7 +726,7 @@ def _ranked_lists(spark: SparkSession,
         "broadcast-probe scan — no corpus shuffle, no global sort — "
         "and ranking windows only ever run over the 50-row "
         "candidate lists.",
-    tags=("similarity"),
+    tags=("similarity",),
 )
 def rrf_fusion_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ra, rb = _ranked_lists(spark, sf_dir)
@@ -802,7 +802,7 @@ def _markov_oracle() -> str:
         "iteration itself runs on the state-vocabulary-sized matrix "
         "(localCheckpointed per step to truncate lineage, like "
         "pagerank_dup_graph at dedup.py:692).",
-    tags=("timeseries"),
+    tags=("timeseries",),
 )
 def markov_stationary_event_mix(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
@@ -884,7 +884,7 @@ def _kcore_oracle() -> str:
         "O(rounds) shuffles of id-sized rows, never text, same scale "
         "shape as dedup_clusters' alternating-star loop "
         "(dedup.py::_connected_components).",
-    tags=("graph"),
+    tags=("graph",),
 )
 def kcore_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from de_project_airflow_etl_spark.operators.dedup import _lsh_verified
@@ -1000,7 +1000,7 @@ def _holt_oracle() -> str:
         "is a recursive CTE with identical arithmetic. The "
         "corpus-scale work is the one daily rollup; the fold length "
         "is the calendar, not the data.",
-    tags=("timeseries"),
+    tags=("timeseries",),
 )
 def holt_linear_daily_revenue(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
@@ -1082,7 +1082,7 @@ _TS_DAILY_SQL = """
         "integer numerator alone. Every window runs over "
         "calendar-bounded relations (days and day-pairs); the "
         "corpus-scale work is the one daily rollup.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds FOUR consumers (both pair-join sides, the day count,
@@ -1181,7 +1181,7 @@ _NEG_KEY_SQL = ("CAST(anchor_id AS VARCHAR) || '|' || "
         "standard 'broadcast the query set, never shuffle the "
         "corpus' sampling shape, and WindowGroupLimit keeps the "
         "rank from materializing full partitions.",
-    tags=("ml"),
+    tags=("ml",),
 )
 def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
@@ -1346,7 +1346,7 @@ def lsh_dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "collected <= 50-row candidate list (frequent_item_pairs' "
         "nested-lambda pattern) — no join, no "
         "BroadcastNestedLoopJoin, never the corpus.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def kendall_tau_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No pair JOIN at all (an inequality-only self-join would plan as
@@ -1416,7 +1416,7 @@ def kendall_tau_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_event_transitions. One lag window partitioned by user, "
         "one vocabulary-bounded aggregate, and rank/total windows "
         "that only ever see |vocab|^2 rows.",
-    tags=("evaluation"),
+    tags=("evaluation",),
 )
 def markov_next_event_accuracy(spark: SparkSession,
                                sf_dir: str) -> DataFrame:

@@ -71,7 +71,7 @@ RULE_MIN_SUPPORT = 5
         "item counts broadcast back, the corpus size rides a one-row "
         "broadcast. Brand vocabulary bounds every relation except the "
         "basket scan.",
-    tags=("analytics"),
+    tags=("analytics",),
 )
 def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -168,7 +168,7 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dayofweek/hour agree across engines on plain timestamps "
         "(DuckDB dayofweek is 0=Sunday; Spark dayofweek is 1=Sunday — "
         "the Spark side subtracts 1 to pin the 0-based convention).",
-    tags=("reporting"),
+    tags=("reporting",),
 )
 def weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
@@ -1433,7 +1433,7 @@ def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DAILY totals — calendar-bounded — and the corpus-scale work "
         "is the one daily rollup. dayofweek parity: DuckDB dayofweek "
         "is 0=Sunday; Spark dayofweek is 1=Sunday, shifted by -1.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def mann_whitney_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_revenue(spark, sf_dir)
@@ -1504,7 +1504,7 @@ def mann_whitney_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "common-denominator form |c1(v)*n2 - c2(v)*n1| (an integer!) "
         "divided once at the end. Same bounded-window / one-rollup "
         "scale shape as mann_whitney_daily_value.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def ks_statistic_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_revenue(spark, sf_dir)
@@ -1572,7 +1572,7 @@ def ks_statistic_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "accumulators, wide-int -> double through a string cast, one "
         "IEEE division at the end — the doubling factors cancel). "
         "Rank windows run over the calendar-bounded daily rollup.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def spearman_daily_price_volume(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:

@@ -305,7 +305,7 @@ _CUC_RHO = ("(CAST(2 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 4)"
         "(n_we, n_wd, N) evaluated in identical double expressions. "
         "Plan: one map-side-combinable cell aggregate over the scan, "
         "one bounded cumulation window, one row out.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def cucconi_location_scale_weekend(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
@@ -512,7 +512,7 @@ KW_K = 7  # treatments: the seven weekdays
         "integers, and W = 3*S4 / (m^2(k^3-k) - m*T) is one exact-"
         "operand division. Plan: one daily rollup, bounded block "
         "joins above it, one row out.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def kendalls_w_dow_concordance(spark: SparkSession,
                                sf_dir: str) -> DataFrame:

@@ -414,7 +414,7 @@ def _hw_spark_expr() -> str:
         "recursive CTE carrying s0..s6 columns with textually "
         "identical arithmetic. The corpus-scale work is the one "
         "daily rollup.",
-    tags=("timeseries"),
+    tags=("timeseries",),
 )
 def holt_winters_additive_weekly(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:

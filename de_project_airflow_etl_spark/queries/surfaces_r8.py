@@ -128,7 +128,7 @@ def zipf_rank_frequency_table(spark: SparkSession,
         "quantile_cont directly. Plan: one cell aggregate over the "
         "scan, one bounded cumulation window above it, one row per "
         "type.",
-    tags=("statistics"),
+    tags=("statistics",),
 )
 def bowley_skewness_by_type(spark: SparkSession,
                             sf_dir: str) -> DataFrame:

@@ -46,6 +46,10 @@ _REGISTRY: dict[str, Query] = {}
 def query(name: str, oracle: str | None, doc: str = "",
           tags: tuple[str, ...] = ()) -> Callable[[QueryFn], QueryFn]:
     """Decorator registering a query implementation."""
+    if isinstance(tags, str):
+        # ("statistics") is a str, not a 1-tuple: `in q.tags` would
+        # silently become a substring test
+        raise TypeError(f"{name}: tags must be a tuple, got {tags!r}")
 
     def wrap(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:

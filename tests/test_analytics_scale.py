@@ -40,7 +40,6 @@ def test_trigram_vocab_scalar_broadcasts(spark, sf_dir):
     # shuffled join against the trigram counts.
     plan = formatted_plan(trigram_lm_counts(spark, sf_dir))
     assert "BroadcastNestedLoop" in plan or "BroadcastExchange" in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_bm25_topk_is_window_group_limit(spark, sf_dir):
@@ -62,7 +61,6 @@ def test_skyline_is_broadcast_filter_not_self_join(spark, sf_dir):
     df = skyline_pareto_orders(spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
     from de_project_airflow_etl_spark.plans.inspect import has_pushed_filter
     assert has_pushed_filter(df, "o_orderdate"), plan
 
@@ -72,9 +70,6 @@ def test_winnowing_hashes_each_gram_once(spark, sf_dir):
         winnowing_fingerprints,
     )
     df = winnowing_fingerprints(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoop" not in plan, plan
     # THE gate for this query: the md5 k-gram transform must appear
     # exactly once in the executed plan. A two-step projection let
     # CollapseProject substitute it into the per-window lambda —
@@ -112,24 +107,17 @@ def test_batch3_joins_are_equi_joins(spark, sf_dir):
 
 def test_batch5_plans_are_scale_shaped(spark, sf_dir):
     from de_project_airflow_etl_spark.queries.analytics import (
-        class_distinctive_terms, grouped_discount_quantity_corr,
-        repeat_purchase_intervals, revenue_gini_by_nation,
-        word_cooccurrence_lift,
+        class_distinctive_terms, word_cooccurrence_lift,
     )
-    # one plan build per query; per-query required operator alongside
-    # the universal no-cartesian rule
+    # per-query required operator (the no-cartesian rule of the batch
+    # is each query's nested_loops item in tests/test_plan_rules.py)
     required = {
-        repeat_purchase_intervals: None,
-        grouped_discount_quantity_corr: None,
-        revenue_gini_by_nation: None,
         class_distinctive_terms: "WindowGroupLimit",   # top-k pre-filter
         word_cooccurrence_lift: "TakeOrderedAndProject",  # heap top-k
     }
     for fn, op in required.items():
         plan = formatted_plan(fn(spark, sf_dir))
-        assert "CartesianProduct" not in plan, (fn.__name__, plan)
-        if op:
-            assert op in plan, (fn.__name__, op, plan)
+        assert op in plan, (fn.__name__, op, plan)
 
 
 def test_trailing_anomaly_flags_planted_spike(spark, tmp_path):
@@ -353,19 +341,15 @@ def test_char_class_gini_agrees_batch_vs_stream(spark, sf_dir, tmp_path):
 
 
 def test_batch4_plans_are_scale_shaped(spark, sf_dir):
-    """Batch-4 gates: no cartesian anywhere; the HHI dim join and the
-    seasonality one-row totals broadcast; the LTV window runs over the
-    rollup (post-aggregate), not the raw events (structural check)."""
+    """Batch-4 gates: the HHI dim join and the seasonality one-row
+    totals broadcast; the LTV window runs over the rollup
+    (post-aggregate), not the raw events (structural check). No
+    cartesian anywhere: each query's nested_loops item in
+    tests/test_plan_rules.py."""
     from de_project_airflow_etl_spark.queries.analytics import (
         revenue_concentration_hhi, seasonal_weekday_index,
-        sessionized_bounce_rate, shipping_lag_quantiles,
-        user_ltv_cohort_curves, winsorized_value_stats,
+        user_ltv_cohort_curves,
     )
-    for fn in (user_ltv_cohort_curves, seasonal_weekday_index,
-               shipping_lag_quantiles, revenue_concentration_hhi,
-               sessionized_bounce_rate, winsorized_value_stats):
-        plan = formatted_plan(fn(spark, sf_dir))
-        assert "CartesianProduct" not in plan, (fn.__name__, plan)
     assert "BroadcastHashJoin" in formatted_plan(
         revenue_concentration_hhi(spark, sf_dir))
     assert "Broadcast" in formatted_plan(

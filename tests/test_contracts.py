@@ -44,3 +44,11 @@ def test_no_complex_typed_output_columns(spark, sf_dir, case):
         f"canonicalizer cannot hash list/dict cells — serialize them "
         f"(space-joined exact integers / md5-of-json on both engines) "
         f"and keep the array shape as an unregistered *_arrays sibling")
+
+
+def test_query_rejects_bare_string_tags():
+    """``tags=("statistics")`` is a str, so ``"io" in q.tags`` would be
+    a substring test ("curat-io-n"); registration must refuse it."""
+    from de_project_airflow_etl_spark.registry import query
+    with pytest.raises(TypeError):
+        query("bare_string_tags_probe", None, tags=("statistics"))

@@ -8,9 +8,10 @@ copy: import the helper from ``queries.util`` instead.
 
 ``plans/inspect.py`` owns the plan checks (scan count, window and node
 walks, the window-hazard and collect audits with their key sets) and
-``tests/conftest.py`` the cache-release fixture; per-query scan budgets
-and window rules are rows of ``PLAN_RULES`` in
-``tests/test_plan_rules.py``.
+``tests/conftest.py`` the cache-release fixture; per-query scan budgets,
+window rules and nested-loop exceptions are rows of ``PLAN_RULES`` in
+``tests/test_plan_rules.py``, whose nested-loop rule runs over every
+registered and staged query.
 """
 
 from __future__ import annotations
@@ -145,4 +146,40 @@ def test_plan_checks_are_defined_only_in_inspect():
                 if shared:
                     copies.append(f"{where}:{node.lineno} imports "
                                   f"{shared} from {node.module}")
+    assert not copies, "\n".join(copies)
+
+
+RULES_HOME = TESTS / "test_plan_rules.py"
+
+
+def _is_parametrized(fn: ast.FunctionDef) -> bool:
+    return any(isinstance(d, ast.Call)
+               and getattr(d.func, "attr", None) == "parametrize"
+               for d in fn.decorator_list)
+
+
+def test_nested_loop_rule_has_one_home():
+    """The nested-loop gate is the ``nested_loops`` rule of
+    ``PLAN_RULES``, applied to every query: a per-bank exceptions table
+    or a bank-parametrized test calling ``bnlj_builds_are_scalar``
+    elsewhere is a re-grown copy."""
+    copies = []
+    for path in sorted(TESTS.rglob("*.py")):
+        if path == RULES_HOME:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        where = path.relative_to(PKG.parent)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Name)
+                    and node.id == "_JUSTIFIED_BNLJ_BUILDS"
+                    and isinstance(node.ctx, ast.Store)):
+                copies.append(f"{where}:{node.lineno} defines "
+                              f"_JUSTIFIED_BNLJ_BUILDS")
+            if (isinstance(node, ast.FunctionDef) and _is_parametrized(node)
+                    and any(getattr(c.func, "id", None)
+                            == "bnlj_builds_are_scalar"
+                            for c in ast.walk(node)
+                            if isinstance(c, ast.Call))):
+                copies.append(f"{where}:{node.lineno} {node.name} runs "
+                              f"the nested-loop gate over a bank")
     assert not copies, "\n".join(copies)

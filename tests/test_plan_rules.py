@@ -3,7 +3,9 @@ final physical plan must keep at 100 TB.
 
 ``PLAN_RULES`` covers registered and staged queries. Each (query, rule)
 pair runs as its own test item; a query is built once for all its
-rules. The checks live in ``plans/inspect.py``. The rule vocabulary:
+rules. The ``nested_loops`` rule runs for every registered and staged
+query, with or without a row. The checks live in ``plans/inspect.py``.
+The rule vocabulary:
 
 * ``scans: N``: at most N ``Scan parquet`` in the final executed plan.
   A bounded intermediate that feeds two or more consumers is
@@ -23,11 +25,20 @@ rules. The checks live in ``plans/inspect.py``. The rule vocabulary:
   reduces with folds and plain aggregates only.
 * ``has_window: True``: at least one ``WindowExec``, so a window rule
   above cannot pass by the window vanishing from the plan.
+* ``nested_loops`` (every query; no row needed for the default): no
+  ``CartesianProduct``, and every ``BroadcastNestedLoopJoin`` builds a
+  one-row global aggregate or a limit-k side (``bnlj_builds_are_scalar``
+  is empty), so no join degenerates to data x data.
+  ``"justified"``: a build the check cannot size is bounded by design
+  (the row's comment says how); the ``CartesianProduct`` check stays,
+  and the item fails once the scalar check passes, so a stale
+  exception cannot outlive its reason. ``"none"``: neither a
+  ``CartesianProduct`` nor a ``BroadcastNestedLoopJoin`` at all.
 
 Rules on plans that a checkpoint hides (interior plans) and checks
 outside this vocabulary (window partition keys, WindowGroupLimit
-pushdown, exact counts, joins) stay in the per-subject plan tests,
-built on the same ``plans/inspect.py`` helpers.
+pushdown, exact counts, join strategies) stay in the per-subject plan
+tests, built on the same ``plans/inspect.py`` helpers.
 """
 
 from __future__ import annotations
@@ -37,7 +48,8 @@ import functools
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    scan_count, unbounded_windows, window_nodes,
+    bnlj_builds_are_scalar, formatted_plan, scan_count, unbounded_windows,
+    window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.staged import STAGED
@@ -45,6 +57,9 @@ from de_project_airflow_etl_spark.staged import STAGED
 pytestmark = pytest.mark.usefixtures("release_caches")
 
 PLAN_RULES: dict[str, dict] = {
+    # ----------------------------------------------- operators/corpus_stats.py
+    # gram-keyed equi-joins end to end
+    "boilerplate_ngram_stats": {"nested_loops": "none"},
     # ------------------------------------------------ operators/dedup.py
     # was 6, then 2 (cutoff + verified pairs checkpointed). The cutoff
     # is now extracted as driver-side metadata so the batch boundary
@@ -62,6 +77,34 @@ PLAN_RULES: dict[str, dict] = {
     # recompute-over-materialize choice)
     "exact_substring_dup_spans": {"scans": 2},
     # ------------------------------------------- operators/similarity.py
+    # broadcasts the one-row probe embedding (vec_id = 0 filter); the
+    # check cannot classify a filter as scalar, but the build is a
+    # single row by key uniqueness
+    "knn_brute_force": {"nested_loops": "justified"},
+    # broadcasts the one-row vec_id = 0 probe embedding, as
+    # knn_brute_force
+    "knn_per_label": {"nested_loops": "justified"},
+    # broadcasts the one-row vec_id = 0 query embedding (a key filter,
+    # one row by key uniqueness); the codebook seeds are a global
+    # aggregate the check already accepts
+    "ann_pq_adc_search": {"nested_loops": "justified"},
+    # broadcasts the checkpointed one-row centroid array (both
+    # assignment sites) and the one-row vec_id = 0 query row
+    "ann_ivf_search": {"nested_loops": "justified"},
+    # broadcasts the checkpointed one-row centroid array (assignment
+    # and probe-list sites) and the one-row vec_id = 0 query row
+    "ann_ivf_multiprobe": {"nested_loops": "justified"},
+    # each Lloyd round broadcasts the one-row centroid array, which is
+    # checkpointed, so its global-aggregate root hides behind Scan
+    # ExistingRDD
+    "ann_ivf_kmeans_fit": {"nested_loops": "justified"},
+    # broadcasts the explicit vec_id % 100 evaluation query sample onto
+    # the corpus — the knn_classifier_accuracy evaluation-sample class
+    "ann_recall_audit": {"nested_loops": "justified"},
+    # broadcasts the per-label centroid aggregate (one row per label,
+    # a fixed-cardinality key) onto the corpus; grouped, so the check
+    # does not read it as one row
+    "centroid_assignment_margin": {"nested_loops": "justified"},
     "embedding_pca_power_iter": {"scans": 2},  # was 10: exponential v lineage
     # ------------------------------------------------- operators/skew.py
     # one events pass: the totals side is a one-row broadcast
@@ -73,6 +116,8 @@ PLAN_RULES: dict[str, dict] = {
     "fleiss_kappa_quality_rules": {"max_windows": 0},
     "power_mde_event_value": {"max_windows": 0},
     # ------------------------------------------------ queries/analytics.py
+    # one md5 k-gram pass, no join-back
+    "winnowing_fingerprints": {"nested_loops": "none"},
     # keeps its data-sized stream re-derived on purpose (measured loss
     # to materialize); the budget pins the CURRENT shape so it can't
     # silently worsen
@@ -86,7 +131,10 @@ PLAN_RULES: dict[str, dict] = {
     "cmh_weekend_purchase_weeks": {"scans": 1, "max_windows": 0},
     "cochran_armitage_dow_trend": {"scans": 1, "max_windows": 0},
     "cross_correlation_revenue_count": {"scans": 1, "max_windows": 0},
-    "err_retrieval_eval": {"scans": 2},  # corpus + broadcast panel
+    # round-9c ERR reuses the identical fixed 20-vector panel
+    # broadcast (same _spark_topk_rel helper as ndcg/mrr/ild)
+    "err_retrieval_eval": {  # corpus + broadcast panel
+        "scans": 2, "nested_loops": "justified"},
     "funnel_conversion_steps": {"scans": 1, "max_windows": 0},
     "lexical_dominance_panel": {"scans": 1, "max_windows": 0},
     "ljung_box_daily_revenue": {"scans": 1, "max_windows": 0},
@@ -98,8 +146,17 @@ PLAN_RULES: dict[str, dict] = {
     "bradley_terry_event_strengths": {"scans": 0},  # 25-cell matrix checkpointed
     "dtw_click_purchase_daily": {"scans": 0},  # 1-row array panel checkpointed
     "harmonic_centrality_dup_graph": {"scans": 0},  # edges + frontiers checkpointed
-    "isotonic_daily_revenue_fit": {"scans": 0},  # daily prefix panel checkpointed
-    "shapley_channel_attribution": {"scans": 0},  # mask histogram checkpointed
+    # round-15 isotonic builds the (j,d,k) triple panel by range
+    # joins over the <=31-row checkpointed daily/prefix panel — the
+    # theil_sen day-pair machinery, calendar-bounded
+    "isotonic_daily_revenue_fit": {  # daily prefix panel checkpointed
+        "scans": 0, "nested_loops": "justified"},
+    # round-15 Shapley runs bitwise-containment joins over the
+    # CONSTANT 16-subset lattice x the <=16-row checkpointed mask
+    # histogram (and the 4-row channel panel) — every side bounded by
+    # construction, never data-sized
+    "shapley_channel_attribution": {  # mask histogram checkpointed
+        "scans": 0, "nested_loops": "justified"},
     "split_conformal_value_interval": {"scans": 1},  # test half reads the corpus
     # ---------------------------------------------- queries/changepoint.py
     # windows run over daily / spectrum tables or their checkpoints
@@ -115,7 +172,12 @@ PLAN_RULES: dict[str, dict] = {
     "dbscan_grid_embedding_clusters": {  # dense cells checkpointed
         "scans": 0, "max_windows": 0},
     "hits_event_type_authority": {"scans": 0},  # (user, type) checkpointed
-    "quantile_normalize_source_chars": {"scans": 0},  # char cells checkpointed
+    # round-17 quantile normalization crosses the 20-row source panel
+    # with the value-domain-bounded pooled-cell cumulation (~520
+    # rows) — the closed-form rank mapping's panel product, both
+    # sides checkpointed aggregates
+    "quantile_normalize_source_chars": {  # char cells checkpointed
+        "scans": 0, "nested_loops": "justified"},
     # ---------------------------------------------- queries/diagnostics.py
     # indicator windows run over the daily bars or distinct-value counts;
     # the fold statistics reduce with array folds (max_windows 0)
@@ -133,8 +195,15 @@ PLAN_RULES: dict[str, dict] = {
         "scans": 0, "windows": "lenient", "has_window": True},
     "mann_kendall_daily_trend": {  # daily table checkpointed
         "scans": 0, "max_windows": 0},
-    "mrr_retrieval_eval": {"scans": 2},  # corpus + panel
-    "ndcg_retrieval_eval": {"scans": 3},  # corpus + panel + label counts
+    # the round-8 graded-retrieval pair broadcasts the FIXED 20-vector
+    # evaluation panel onto one corpus scan with a self-exclusion
+    # inequality (offset panel, vec_id < 510) — the documented
+    # 'broadcast the query set, never shuffle the corpus' shape (same
+    # as map_retrieval_eval in the promoted round-7 bank)
+    "mrr_retrieval_eval": {  # corpus + panel
+        "scans": 2, "nested_loops": "justified"},
+    "ndcg_retrieval_eval": {  # corpus + panel + label counts
+        "scans": 3, "nested_loops": "justified"},
     "obv_daily_value_flow": {
         "scans": 1, "windows": "lenient", "has_window": True},
     "stochastic_oscillator_daily": {
@@ -153,6 +222,12 @@ PLAN_RULES: dict[str, dict] = {
     "ordinal_pattern_census_daily": {"scans": 0},  # daily panel checkpointed
     "wasserstein_weekend_value": {"scans": 0},  # cents cells checkpointed
     # ----------------------------------------------- queries/evaluation.py
+    # the purchase-touch fan-out rides the user_id equi-join
+    "position_attribution_revenue": {"nested_loops": "none"},
+    # broadcasts the FIXED 20-vector evaluation panel onto one corpus
+    # scan with a self-exclusion inequality — same shape, and the
+    # panel is constant-size by construction (vec_id < 500 gate)
+    "map_retrieval_eval": {"nested_loops": "justified"},
     # relations feeding several consumers (the tv-distance source-word
     # aggregate, the inverse-prob vocab, the sketch heads) are
     # checkpointed
@@ -181,10 +256,21 @@ PLAN_RULES: dict[str, dict] = {
     "littles_law_sessions": {"scans": 1},  # session table ckpt'd; horizon
     "sample_ratio_mismatch_check": {"scans": 1},
     # ------------------------------------------------- queries/features.py
+    # all-pairs exact-Jaccard ground truth on the deterministic audit
+    # slice — the evaluation-subset pattern; the production path in
+    # the same query stays the banded equi-join
+    "lsh_dedup_recall_audit": {"nested_loops": "justified"},
+    # broadcasts the fixed ~4% anchor id-slice onto the corpus with a
+    # label-inequality predicate — the documented 'broadcast the query
+    # set, never shuffle the corpus' sampling shape
+    "negative_sampling_pairs": {"nested_loops": "justified"},
     # power iteration runs over the checkpointed transition relation:
     # no events scan per iteration
     "markov_stationary_event_mix": {"scans": 0},
-    "theil_sen_daily_trend": {"scans": 0},  # was 10: daily + pairs both bounded
+    # day-pair self-join (b.x > a.x) over the daily rollup: both
+    # sides calendar-bounded, quadratic in days not data
+    "theil_sen_daily_trend": {  # was 10: daily + pairs both bounded
+        "scans": 0, "nested_loops": "justified"},
     # ----------------------------------------------- queries/governance.py
     "dp_sensitivity_audit": {"scans": 1},
     "sql_udf_band_rollup": {"scans": 1},
@@ -208,7 +294,22 @@ PLAN_RULES: dict[str, dict] = {
     "sign_test_daily_updown": {"scans": 1, "windows": "lenient"},
     "wilcoxon_signed_rank_ampm": {"scans": 1, "windows": "lenient"},
     "williams_r_daily": {"scans": 1, "windows": "lenient"},
+    # -------------------------------------------------------- queries/joins.py
+    # region x region cross join: the 5-row region dim on both sides
+    "join_cross_region_pairs": {"nested_loops": "justified"},
+    # range join against the 3-row literal band table
+    # (createDataFrame: an RDD scan the check cannot size)
+    "join_range_price_bands": {"nested_loops": "justified"},
     # --------------------------------------------------- queries/mining.py
+    # the keeper argmax joins back on the md5 key
+    "dup_cluster_canonical_pick": {"nested_loops": "none"},
+    # explicit vec_id % 50 evaluation sample, broadcast by design —
+    # this is the documented brute-force eval baseline; the ann_*
+    # family is the scale path (same split as knn_brute_force vs
+    # ann_ivf_search in the registry)
+    "knn_classifier_accuracy": {"nested_loops": "justified"},
+    # month-end calendar spine: GROUP BY month => calendar-bounded
+    "orders_backlog_monthend": {"nested_loops": "justified"},
     "label_separation_scores": {"scans": 2},  # was 7: moment + centroid tables
     "market_basket_rules": {"scans": 0},  # was 8: baskets + item supports
     # unpartitioned statistics windows over the calendar-bounded daily
@@ -230,7 +331,11 @@ PLAN_RULES: dict[str, dict] = {
     "cronbachs_alpha_quality_rules": {"scans": 1, "max_windows": 0},
     "cross_source_ngram_overlap": {  # gram set checkpointed
         "scans": 0, "max_windows": 0},
-    "decile_lift_table": {"scans": 0},  # (cents, p) cells checkpointed
+    # round-14 lift table broadcasts the LITERAL 10-row decile spine
+    # and a 1-row totals panel onto the value-cell spans — both builds
+    # constant-bounded by construction
+    "decile_lift_table": {  # (cents, p) cells checkpointed
+        "scans": 0, "nested_loops": "justified"},
     # r11: the data-sized quantized-explode checkpoint was REMOVED
     # (measured-loss materialization class) — qq now rides the single
     # 64-group dim aggregate and n is a column-pruned count, so the
@@ -248,11 +353,27 @@ PLAN_RULES: dict[str, dict] = {
     "good_turing_chao1_by_source": {"scans": 1},
     "ipf_raking_purchase_mix": {"scans": 0},  # 35-cell panel checkpointed
     # ------------------------------------------------- queries/reranking.py
-    "mmr_rerank_retrieval": {"scans": 2},  # corpus + anchor slice
+    # round-12c MMR broadcasts the same fixed 20-anchor panel onto
+    # one corpus scan (self-exclusion inequality)
+    "mmr_rerank_retrieval": {  # corpus + anchor slice
+        "scans": 2, "nested_loops": "justified"},
     # ---------------------------------------------------- queries/robust.py
+    # weekend x weekday day-pair join over the calendar-bounded daily
+    # rollup (<= 366^2/4 pairs at any corpus size) plus the
+    # median-row broadcast — the theil_sen day-pair precedent
+    "hodges_lehmann_weekend_shift": {"nested_loops": "justified"},
+    # day-pair self-join (b.x <> a.x) over the daily rollup, plus the
+    # one-row median filters broadcast back over calendar-bounded
+    # relations — same precedent
+    "siegel_repeated_medians_trend": {"nested_loops": "justified"},
     # after 12 fixed-point iterations the Markov plan consumes
-    # checkpoints only
-    "markov_removal_effect_attribution": {"scans": 0},
+    # checkpoints only (scans 0). Nested loops: scenario panel x
+    # transition matrix: both vocabulary-bounded
+    # ((|types|+1) x (|types|+2)^2 rows) by construction, and the
+    # one-row full-chain probability broadcast is a filter the
+    # detector cannot classify as scalar
+    "markov_removal_effect_attribution": {
+        "scans": 0, "nested_loops": "justified"},
     # one map-side-combinable aggregate each (no joins: test_plans_robust)
     "cohens_d_weekend_value": {"max_windows": 0},
     "matthews_corr_quality_rules": {"max_windows": 0},
@@ -304,10 +425,18 @@ PLAN_RULES: dict[str, dict] = {
     "embedding_dim_variance_rank": {"windows": "strict", "has_window": True},
     # ----------------------------------------------- queries/surfaces_r7.py
     # hardest-pos/neg picks are max_by/min_by aggregates, not a rank
-    "contrastive_triplet_mining": {"max_windows": 0},
+    # broadcasts the fixed ~4% anchor id-slice onto the corpus with an
+    # id-inequality predicate — the documented 'broadcast the query
+    # set, never shuffle the corpus' shape (same as
+    # negative_sampling_pairs in the round-6 bank)
+    "contrastive_triplet_mining": {
+        "max_windows": 0, "nested_loops": "justified"},
     # the recursive CTE folds into one aggregate
     "recursive_dup_reachability": {"max_windows": 0},
     # ----------------------------------------------- queries/surfaces_r8.py
+    # round-8c truncation audit broadcasts the same fixed 20-vector
+    # panel onto two corpus scans (full-dim and prefix-dim cosines)
+    "dim_truncation_recall_audit": {"nested_loops": "justified"},
     # cumulation and lag windows over the (type, cents) cell table and
     # the (brand, band) demand aggregate
     "arc_price_elasticity_brand": {"windows": "strict", "has_window": True},
@@ -316,7 +445,10 @@ PLAN_RULES: dict[str, dict] = {
     # windows run over the daily / (week, dow) aggregates or checkpoints
     "ece_calibration_purchase": {"scans": 0},  # 10-row bin table ckpt'd
     "filter_clause_weekday_mix": {"scans": 1},
-    "ild_retrieval_diversity": {"scans": 3},  # corpus + panel + join-back
+    # round-9 intra-list diversity reuses the identical fixed
+    # 20-vector panel broadcast (same _spark_topk_rel helper)
+    "ild_retrieval_diversity": {  # corpus + panel + join-back
+        "scans": 3, "nested_loops": "justified"},
     "named_window_daily_stats": {
         "scans": 1, "windows": "lenient", "has_window": True},
     "pages_trend_test_dow": {  # (week, dow) table ckpt'd
@@ -328,13 +460,45 @@ PLAN_RULES: dict[str, dict] = {
         "scans": 1, "windows": "lenient", "has_window": True},
     "theil_u_daily_forecasts": {
         "scans": 1, "windows": "lenient", "has_window": True},
+    # --------------------------------------------------- queries/timeseries.py
+    # union + one hash exchange + window, never a range/theta join
+    "asof_join_click_purchase": {"nested_loops": "none"},
+    # --------------------------------------------------------- queries/tpch.py
+    # every join hash-based on an extracted equi-condition: a
+    # CartesianProduct or BroadcastNestedLoopJoin is the quadratic
+    # fallback that kills these shapes at scale (Q19/Q22 keep
+    # their own shape tests in tests/test_plans.py)
+    "tpch_q4_order_priority": {"nested_loops": "none"},
+    "tpch_q5_local_supplier_volume": {"nested_loops": "none"},
+    "tpch_q7_volume_shipping": {"nested_loops": "none"},
+    "tpch_q8_market_share": {"nested_loops": "none"},
+    "tpch_q10_returned_items": {"nested_loops": "none"},
+    "tpch_q12_late_lines_by_status": {"nested_loops": "none"},
+    "tpch_q13_customer_distribution": {"nested_loops": "none"},
+    "tpch_q14_promo_effect": {"nested_loops": "none"},
+    "tpch_q15_top_supplier": {"nested_loops": "none"},
+    "tpch_q16_part_supplier_counts": {"nested_loops": "none"},
+    "tpch_q17_small_quantity_revenue": {"nested_loops": "none"},
+    "tpch_q18_large_volume_customers": {"nested_loops": "none"},
+    "tpch_q20_promo_part_suppliers": {"nested_loops": "none"},
     # -------------------------------------------- staged/round21-24.py
     "wald_wolfowitz_runs_daily": {"scans": 0},  # daily checkpointed
     "mood_scale_test_weekend": {"scans": 0},  # cells checkpointed
     "energy_distance_weekend": {"scans": 1},  # single-consumer chain
-    "hoeffding_d_daily": {"scans": 0},  # daily checkpointed
+    # round-21 Hoeffding D computes the bivariate rank Q_i by an
+    # x_j < x_i inequality join of the CALENDAR-bounded daily rollup
+    # with itself (<= days^2 pairs — the theil_sen day-pair
+    # machinery); the build is the checkpointed daily aggregate,
+    # hidden behind Scan ExistingRDD
+    "hoeffding_d_daily": {  # daily checkpointed
+        "scans": 0, "nested_loops": "justified"},
     "page_l_trend_dow": {"scans": 0},  # daily checkpointed
-    "sample_entropy_matches_daily": {"scans": 0},  # daily + templates ckpt
+    # round-22 sample entropy compares 2/3-day templates pairwise
+    # over the same CALENDAR-bounded daily rollup (x < xi
+    # inequality, <= days^2/2 pairs), build = the checkpointed
+    # 3-column template panel
+    "sample_entropy_matches_daily": {  # daily + templates ckpt
+        "scans": 0, "nested_loops": "justified"},
     "distance_correlation_daily": {"scans": 0},  # daily/pairs/rowsums ckpt
     "stratified_split_manifest": {"scans": 1},  # one pass by construction
     "chi2_divergence_source_unigrams": {"scans": 0},  # tf checkpointed
@@ -348,13 +512,26 @@ PLAN_RULES: dict[str, dict] = {
     # emission; the per-doc counts are checkpointed): 2 parquet scans,
     # never the 8 of the self-join form
     "dedup_token_id_shingles": {"scans": 2},
-    "rag_chunk_retrieval_eval": {"scans": 2},
+    # round-25 RAG-chunk eval broadcasts the <=20-row anchor-chunk
+    # panel (doc_id % 25 = 0 AND doc_id < 500 AND chunk_idx = 0) onto
+    # one chunk-expanded corpus scan with a self-exclusion inequality
+    # — the same map_retrieval_eval panel shape; the targeted gate in
+    # tests/test_staged_r25.py pins scans <= 2 + WindowGroupLimit
+    "rag_chunk_retrieval_eval": {"scans": 2, "nested_loops": "justified"},
     # -------------------------------------------- staged/round27-34.py
     # round 27
     "fligner_policello_weekend": {"scans": 1},  # single-consumer chain
-    "dunn_posthoc_value_by_type": {"scans": 0},  # gv cells checkpointed
+    # round-27 Dunn post-hoc self-joins the VOCABULARY-bounded 5-row
+    # per-type rank-sum panel on a type_a < type_b inequality — the
+    # C(5,2) pair grid, both sides aggregates over checkpointed cells
+    "dunn_posthoc_value_by_type": {  # gv cells checkpointed
+        "scans": 0, "nested_loops": "justified"},
     "stuart_maxwell_event_transitions": {"scans": 1},  # single pass
-    "weighted_kappa_ordinal_bands": {"scans": 0},  # 16-cell panel checkpointed
+    # round-27 weighted kappa crosses the two 4-row band-marginal
+    # aggregates (the FIXED 4x4 expected-disagreement grid) — both
+    # sides bounded by the band construction
+    "weighted_kappa_ordinal_bands": {  # 16-cell panel checkpointed
+        "scans": 0, "nested_loops": "justified"},
     # round 28 (daily seq panel checkpointed in all five)
     "breusch_pagan_daily_trend": {"scans": 0},
     "chow_break_test_daily": {"scans": 0},
@@ -370,7 +547,11 @@ PLAN_RULES: dict[str, dict] = {
     "dup_graph_transitivity": {"scans": 0},
     # round 30
     "rbo_ranking_overlap": {"scans": 0},  # scored (vec,cos,l2) ckpt
-    "rbp_retrieval_eval": {"scans": 2},  # corpus scan + anchor panel
+    # round-30 RBP broadcasts the same FIXED 20-anchor panel as
+    # map_retrieval_eval / ndcg / mrr onto one corpus scan with the
+    # self-exclusion inequality (vec_id % 25 = 0 AND vec_id < 500)
+    "rbp_retrieval_eval": {  # corpus scan + anchor panel
+        "scans": 2, "nested_loops": "justified"},
     # round 31
     "diebold_mariano_forecasts": {"scans": 0},
     "rmst_user_lifetimes": {"scans": 0},  # user rollup checkpointed
@@ -395,10 +576,12 @@ _VOCABULARY = {
     "windows": lambda v: v in ("strict", "lenient"),
     "max_windows": lambda v: type(v) is int and v >= 0,
     "has_window": lambda v: v is True,
+    "nested_loops": lambda v: v in ("justified", "none"),
 }
 
-# one item per (query, rule) pair
-_CASES = [(n, rule) for n in sorted(PLAN_RULES) for rule in PLAN_RULES[n]]
+# one item per (query, rule) pair; every query gets a nested_loops item
+_CASES = [(n, rule) for n in sorted(_QUERIES)
+          for rule in {**PLAN_RULES.get(n, {}), "nested_loops": None}]
 
 
 def test_rules_use_the_vocabulary():
@@ -420,7 +603,7 @@ def _built(spark, sf_dir, name):
 
 @pytest.mark.parametrize("name, rule", _CASES)
 def test_plan_rule(spark, sf_dir, name, rule):
-    bound = PLAN_RULES[name][rule]
+    bound = PLAN_RULES.get(name, {}).get(rule)
     df = _built(spark, sf_dir, name)
     if rule == "scans":
         n_scans = scan_count(df)
@@ -436,5 +619,19 @@ def test_plan_rule(spark, sf_dir, name, rule):
         n_windows = len(window_nodes(df))
         assert n_windows <= bound, (
             f"{name}: {n_windows} WindowExec nodes (at most {bound})")
-    else:
+    elif rule == "has_window":
         assert window_nodes(df), f"{name}: expected a WindowExec"
+    else:  # nested_loops
+        plan = formatted_plan(df)
+        assert "CartesianProduct" not in plan, f"{name}: a CartesianProduct"
+        if bound == "none":
+            assert "BroadcastNestedLoopJoin" not in plan, (
+                f"{name}: a BroadcastNestedLoopJoin")
+        elif bound == "justified":
+            assert bnlj_builds_are_scalar(df), (
+                f"{name}: stale exception: every nested-loop build passes "
+                f"the scalar check, so drop the row's nested_loops")
+        else:
+            offenders = bnlj_builds_are_scalar(df)
+            assert not offenders, (
+                f"{name}: non-scalar BNLJ builds: {offenders}")

@@ -3,7 +3,7 @@ decomposition strength, Grubbs, winsorized mean, partial correlation)
 — range invariants. Scan budgets and window counts live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

@@ -3,7 +3,7 @@ randomness diagnostics, token-frequency Gini, Nelson-Aalen) —
 range/consistency invariants. Scan budgets and window rules live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

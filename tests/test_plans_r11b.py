@@ -1,4 +1,4 @@
-"""Targeted gates for the round-11b staged bank (blanket oracle/BNLJ
+"""Targeted gates for the round-11b staged bank (blanket oracle
 gates ride tests/test_staged_pen.py)."""
 
 from __future__ import annotations

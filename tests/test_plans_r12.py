@@ -3,7 +3,7 @@ operations analytics) — window partition evidence and consistency
 invariants including the Little's-law identity. Scan budgets live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 
@@ -22,14 +22,11 @@ def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     grows-with-data key, never an unpartitioned sweep over raw
     rows (windows live inside the checkpointed session build, so
     assert on that subplan, not the final plan)."""
-    from de_project_airflow_etl_spark.tables import load
-    from pyspark.sql import functions as F
-    e = load(spark, sf_dir, "events").selectExpr(
-        "user_id", "unix_micros(ts) AS t")
-    m = e.select("user_id", F.expr(
-        "CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t)"
-        " IS NULL THEN 1 ELSE 0 END").alias("x"))
-    for wnode in window_nodes(m):
+    from de_project_airflow_etl_spark.queries.experimentation import (
+        _ll_session_durations)
+    windows = window_nodes(_ll_session_durations(spark, sf_dir))
+    assert len(windows) >= 2, [w.simpleString(25) for w in windows]
+    for wnode in windows:
         assert "user_id" in partition_columns(wnode), wnode.simpleString(25)
 
 

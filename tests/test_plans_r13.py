@@ -1,5 +1,5 @@
 """Targeted gate for the round-13 staged bank (DP sensitivity
-audit). The blanket oracle-match / non-empty / BNLJ gates in
+audit). The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries;
 the scan budgets ride tests/test_plan_rules.py.
 """

@@ -5,7 +5,7 @@ pure-Python recomputations of the three algorithmically novel
 operators (PAVA isotonic, exact Shapley, DTW). Scan budgets live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

@@ -4,7 +4,7 @@ James-Stein shrinkage) — range/order invariants and independent
 pure-Python recomputations. Scan budgets live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

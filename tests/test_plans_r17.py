@@ -5,7 +5,7 @@ rank mapping vs a literal per-rank loop, union-find vs the
 alternating-star components, the HITS integer fixed point). Scan
 budgets live in tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

@@ -3,7 +3,7 @@ IPF raking, capture-recapture) — invariants and independent
 pure-Python recomputations (the IPF fixed point and the capture
 estimators). Scan budgets live in tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

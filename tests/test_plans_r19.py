@@ -3,7 +3,7 @@ WITHIN GROUP, the JSON scalar-function family, approx_top_k in its
 exact regime) — surface-specific invariants. Scan budgets live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

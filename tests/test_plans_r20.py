@@ -3,7 +3,7 @@ moments fit, Needleman-Wunsch alignment) — invariants and a
 pure-Python NW DP recomputation. Scan budgets live in
 tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

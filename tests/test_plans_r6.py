@@ -1,18 +1,17 @@
 """Physical-plan gates for the round-6 promoted bank
-(queries/mining.py + queries/features.py): no cartesian products,
-nested-loop joins only with scalar (one-row) broadcast builds,
-statistics windows confined to the post-aggregate daily rollup, and
-scans pruned to the columns the query consumes. Correct results with
-a wrong plan fail here. The bank's scan budgets live in
-tests/test_plan_rules.py."""
+(queries/mining.py + queries/features.py): statistics windows confined
+to the post-aggregate daily rollup, scans pruned to the columns the
+query consumes, and the bank's targeted shapes. Correct results with
+a wrong plan fail here. The bank's scan budgets, window rules and
+nested-loop exceptions live in tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, node_names, scan_read_schema,
-    unbounded_windows, window_nodes,
+    formatted_plan, node_names, scan_read_schema, unbounded_windows,
+    window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -24,55 +23,6 @@ R6_BANK = {n: q for n, q in all_queries().items()
 
 
 pytestmark = pytest.mark.usefixtures("release_caches")
-
-
-# ------------------------------------------------- blanket join gate
-
-# BNLJ builds the scalar/limit detector cannot classify but whose
-# boundedness is a documented design property, not an accident:
-_JUSTIFIED_BNLJ_BUILDS = {
-    # month-end calendar spine: GROUP BY month => calendar-bounded
-    "orders_backlog_monthend",
-    # explicit vec_id % 50 evaluation sample, broadcast by design —
-    # this is the documented brute-force eval baseline; the ann_*
-    # family is the scale path (same split as knn_brute_force vs
-    # ann_ivf_search in the registry)
-    "knn_classifier_accuracy",
-    # day-pair self-join (b.x > a.x) over the daily rollup: both
-    # sides calendar-bounded, quadratic in days not data
-    "theil_sen_daily_trend",
-    # broadcasts the fixed ~4% anchor id-slice onto the corpus with a
-    # label-inequality predicate — the documented 'broadcast the query
-    # set, never shuffle the corpus' sampling shape
-    "negative_sampling_pairs",
-    # broadcasts the one-row probe embedding (vec_id = 1 filter); the
-    # detector cannot classify a filter as scalar, but the build is a
-    # single row by key-uniqueness (same shape as knn_brute_force).
-    # kendall_tau_rankings consumes the SAME _ranked_lists helper, so
-    # it inherits exactly this probe broadcast (its pair generation
-    # itself is join-free, in-array).
-    "rrf_fusion_search",
-    "kendall_tau_rankings",
-    # all-pairs exact-Jaccard ground truth on the deterministic audit
-    # slice — the evaluation-subset pattern; the production path in
-    # the same query stays the banded equi-join
-    "lsh_dedup_recall_audit",
-}
-
-
-@pytest.mark.parametrize("name", sorted(R6_BANK))
-def test_staged_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
-    """No staged query may plan a CartesianProduct, and any
-    BroadcastNestedLoopJoin must broadcast a bounded subtree (a
-    one-row global aggregate or a limit-k region), never an unbounded
-    data relation — except the two documented cases above."""
-    df = R6_BANK[name].fn(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, name
-    if name in _JUSTIFIED_BNLJ_BUILDS:
-        return
-    offenders = bnlj_builds_are_scalar(df)
-    assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"
 
 
 # ------------------------------- daily-rollup statistics family
@@ -135,22 +85,20 @@ def test_vocab_growth_explodes_corpus_once(spark, sf_dir):
 # ---------------------------------------- dedup keeper / overlap
 
 def test_canonical_pick_joins_on_key_without_window(spark, sf_dir):
-    """Keeper selection is the join-back argmax: no Window operator,
-    and the only joins are hash equi-joins on the md5 key."""
+    """Keeper selection is the join-back argmax: no Window operator
+    (and no nested loop: its ``nested_loops: "none"`` row in
+    ``PLAN_RULES``)."""
     plan = formatted_plan(
         R6_BANK["dup_cluster_canonical_pick"].fn(spark, sf_dir))
     assert "Window" not in plan, "argmax degenerated to a window"
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_event_type_jaccard_broadcasts_sizes(spark, sf_dir):
     """Per-type sizes (bounded vocabulary) must broadcast onto the
-    pair relation; the user self-join is a hash equi-join."""
+    pair relation."""
     plan = formatted_plan(
         R6_BANK["event_type_user_jaccard"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 # ----------------------------- round6b bank: targeted plan shapes

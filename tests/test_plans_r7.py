@@ -1,10 +1,11 @@
 """Physical-plan gates for the round-7 promoted bank
-(queries/surfaces_r7.py + queries/evaluation.py): no cartesian
-products, nested-loop joins only with documented-bounded broadcast
-builds, statistics windows confined to post-aggregate inputs, and
-scans pruned to the columns the query consumes. Correct results with
-a wrong plan fail here. Oracle equality rides the registry-wide
-tests/test_correctness.py sweep.
+(queries/surfaces_r7.py + queries/evaluation.py): statistics windows
+confined to post-aggregate inputs, scans pruned to the columns the
+query consumes, and the bank's targeted shapes. Correct results with
+a wrong plan fail here. The nested-loop rule and its two
+documented-bounded exceptions live in tests/test_plan_rules.py.
+Oracle equality rides the registry-wide tests/test_correctness.py
+sweep.
 
 The query-specific gates carried over verbatim from the staged-era
 tests (tests/test_staged_r7.py, promoted in round 7)."""
@@ -16,8 +17,8 @@ import re
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, has_broadcast_join,
-    partition_columns, scan_read_schema, window_nodes,
+    formatted_plan, has_broadcast_join, partition_columns,
+    scan_read_schema, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -33,34 +34,6 @@ pytestmark = pytest.mark.usefixtures("release_caches")
 
 def test_bank_is_complete():
     assert len(R7_BANK) == 36, sorted(R7_BANK)
-
-
-# ------------------------------------------------- blanket join gate
-
-# BNLJ builds the scalar/limit detector cannot classify but whose
-# boundedness is a documented design property, not an accident:
-_JUSTIFIED_BNLJ_BUILDS = {
-    # broadcasts the fixed ~4% anchor id-slice onto the corpus with an
-    # id-inequality predicate — the documented 'broadcast the query
-    # set, never shuffle the corpus' shape (same as
-    # negative_sampling_pairs in the round-6 bank)
-    "contrastive_triplet_mining",
-    # broadcasts the FIXED 20-vector evaluation panel onto one corpus
-    # scan with a self-exclusion inequality — same shape, and the
-    # panel is constant-size by construction (vec_id < 500 gate)
-    "map_retrieval_eval",
-}
-
-
-@pytest.mark.parametrize("name", sorted(R7_BANK))
-def test_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
-    df = R7_BANK[name].fn(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, name
-    if name in _JUSTIFIED_BNLJ_BUILDS:
-        return
-    offenders = bnlj_builds_are_scalar(df)
-    assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"
 
 
 # ------------------------------- targeted plan shapes (first half)
@@ -95,7 +68,6 @@ def test_method_agreement_shuffles_hashes_not_text(spark, sf_dir):
     exactly ONE documents scan (the old shape re-parsed text 4x)."""
     df = R7_BANK["dedup_method_agreement"].fn(spark, sf_dir)
     plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "text" not in m.group(1), m.group(0)
     n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))

@@ -2,10 +2,9 @@
 bank (queries/evaluation.py: evaluation statistics, sketches,
 attribution) — the 100 TB shape evidence each query's docstring
 claims. Promoted from tests/test_staged_r7b.py in round 7; the
-blanket BNLJ gate for the bank lives in tests/test_plans_r7.py, its
-scan budgets and window rules in tests/test_plan_rules.py, and oracle
-equality rides
-the registry-wide tests/test_correctness.py.
+bank's nested-loop rule, scan budgets and window rules live in
+tests/test_plan_rules.py, and oracle equality rides the
+registry-wide tests/test_correctness.py.
 """
 
 from __future__ import annotations
@@ -66,11 +65,10 @@ def test_theta_sketch_heads_are_take_ordered(spark, sf_dir):
 def test_attribution_join_is_equi_not_nested_loop(spark, sf_dir):
     """The purchase-touch fan-out must ride the user_id equi-join
     (sort-merge / shuffled-hash with the time range as residual),
-    never a nested loop or cartesian over the fact table."""
+    never a nested loop or cartesian over the fact table (its
+    ``nested_loops: "none"`` row in ``PLAN_RULES``)."""
     names = node_names(R7B_BANK["position_attribution_revenue"]
                        .fn(spark, sf_dir))
-    assert not any("BroadcastNestedLoopJoin" in n
-                   or "CartesianProduct" in n for n in names), names
     # hash-equi on user_id (broadcast at small SF, sort-merge once
     # the purchase side outgrows the broadcast threshold)
     assert any("SortMergeJoin" in n or "ShuffledHashJoin" in n

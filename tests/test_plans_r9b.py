@@ -1,4 +1,4 @@
-"""Targeted gates for the round-9b staged bank (blanket oracle/BNLJ
+"""Targeted gates for the round-9b staged bank (blanket oracle
 gates ride tests/test_staged_pen.py; scan budgets ride
 tests/test_plan_rules.py)."""
 

@@ -5,7 +5,7 @@ dominance, the ordered funnel) — the 100 TB shape evidence each
 docstring claims plus range invariants on the statistics themselves.
 Scan budgets and the no-window rules live in tests/test_plan_rules.py.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

@@ -1,10 +1,9 @@
 """Physical-plan gates for the round-7 new-surface bank
 (queries/robust.py + the streaming dedup in streaming/ingest.py):
-no cartesian products, nested-loop joins only with documented
-calendar-/vocabulary-bounded builds, median windows over checkpointed
-rollups, and sequential folds collapsed to one projection. The
-Markov iteration's zero-scan budget and the window rules ride
-tests/test_plan_rules.py;
+median windows over checkpointed rollups, and sequential folds
+collapsed to one projection. The Markov iteration's zero-scan budget,
+the window rules and the nested-loop rule with its three documented
+calendar-/vocabulary-bounded exceptions ride tests/test_plan_rules.py;
 oracle equality rides the registry-wide tests/test_correctness.py
 sweep."""
 
@@ -13,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, node_names, window_nodes,
+    node_names, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -27,38 +26,6 @@ pytestmark = pytest.mark.usefixtures("release_caches")
 
 def test_bank_is_complete():
     assert len(R7N_BANK) == 7, sorted(R7N_BANK)
-
-
-# ------------------------------------------------- blanket join gate
-
-# BNLJ builds the scalar/limit detector cannot classify but whose
-# boundedness is a documented design property, not an accident:
-_JUSTIFIED_BNLJ_BUILDS = {
-    # weekend x weekday day-pair join over the calendar-bounded daily
-    # rollup (<= 366^2/4 pairs at any corpus size) plus the
-    # median-row broadcast — the theil_sen day-pair precedent
-    "hodges_lehmann_weekend_shift",
-    # day-pair self-join (b.x <> a.x) over the daily rollup, plus the
-    # one-row median filters broadcast back over calendar-bounded
-    # relations — same precedent
-    "siegel_repeated_medians_trend",
-    # scenario panel x transition matrix: both vocabulary-bounded
-    # ((|types|+1) x (|types|+2)^2 rows) by construction, and the
-    # one-row full-chain probability broadcast is a filter the
-    # detector cannot classify as scalar
-    "markov_removal_effect_attribution",
-}
-
-
-@pytest.mark.parametrize("name", sorted(R7N_BANK))
-def test_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
-    df = R7N_BANK[name].fn(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, name
-    if name in _JUSTIFIED_BNLJ_BUILDS:
-        return
-    offenders = bnlj_builds_are_scalar(df)
-    assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"
 
 
 # ----------------------------------------- window-hazard structure

@@ -1,7 +1,8 @@
 """Blanket gates for the ENTIRE staged pen (rounds 8-13 banks):
 exact-value verification vs DuckDB through the same harness the
-registry uses, plus the no-unbounded-nested-loop plan gate — every
-staged query must already carry its 100 TB plan shape BEFORE
+registry uses. The plan rules, the nested-loop rule among them, run
+over staged and registered queries alike in tests/test_plan_rules.py
+— every staged query must already carry its 100 TB plan shape BEFORE
 promotion (see de_project_airflow_etl_spark/staged/__init__.py for
 the window-arithmetic rationale).
 
@@ -14,9 +15,6 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan,
-)
 from de_project_airflow_etl_spark.staged import STAGED
 from tests.harness import compare
 
@@ -42,87 +40,3 @@ def test_staged_results_nonempty(spark, sf_dir):
         assert df.columns, f"{name}: empty schema"
         assert df.limit(1).count() == 1, f"{name}: empty result at {sf_dir}"
 
-
-# ------------------------------------------------- blanket join gate
-
-# BNLJ builds the scalar/limit detector cannot classify but whose
-# boundedness is a documented design property:
-_JUSTIFIED_BNLJ_BUILDS = {
-    # the round-8 graded-retrieval pair broadcasts the FIXED 20-vector
-    # evaluation panel onto one corpus scan with a self-exclusion
-    # inequality (offset panel, vec_id < 510) — the documented
-    # 'broadcast the query set, never shuffle the corpus' shape (same
-    # as map_retrieval_eval in the promoted round-7 bank)
-    "ndcg_retrieval_eval",
-    "mrr_retrieval_eval",
-    # round-9 intra-list diversity reuses the identical fixed
-    # 20-vector panel broadcast (same _spark_topk_rel helper)
-    "ild_retrieval_diversity",
-    # round-25 RAG-chunk eval broadcasts the <=20-row anchor-chunk
-    # panel (doc_id % 25 = 0 AND doc_id < 500 AND chunk_idx = 0) onto
-    # one chunk-expanded corpus scan with a self-exclusion inequality
-    # — the same map_retrieval_eval panel shape; the targeted gate in
-    # tests/test_staged_r25.py pins scans <= 2 + WindowGroupLimit
-    "rag_chunk_retrieval_eval",
-    # round-9c ERR reuses the identical fixed 20-vector panel
-    # broadcast (same _spark_topk_rel helper as ndcg/mrr/ild)
-    "err_retrieval_eval",
-    # round-12c MMR broadcasts the same fixed 20-anchor panel onto
-    # one corpus scan (self-exclusion inequality)
-    "mmr_rerank_retrieval",
-    # round-14 lift table broadcasts the LITERAL 10-row decile spine
-    # and a 1-row totals panel onto the value-cell spans — both builds
-    # constant-bounded by construction
-    "decile_lift_table",
-    # round-8c truncation audit broadcasts the same fixed 20-vector
-    # panel onto two corpus scans (full-dim and prefix-dim cosines)
-    "dim_truncation_recall_audit",
-    # round-15 Shapley runs bitwise-containment joins over the
-    # CONSTANT 16-subset lattice x the <=16-row checkpointed mask
-    # histogram (and the 4-row channel panel) — every side bounded by
-    # construction, never data-sized
-    "shapley_channel_attribution",
-    # round-15 isotonic builds the (j,d,k) triple panel by range
-    # joins over the <=31-row checkpointed daily/prefix panel — the
-    # theil_sen day-pair machinery, calendar-bounded
-    "isotonic_daily_revenue_fit",
-    # round-17 quantile normalization crosses the 20-row source panel
-    # with the value-domain-bounded pooled-cell cumulation (~520
-    # rows) — the closed-form rank mapping's panel product, both
-    # sides checkpointed aggregates
-    "quantile_normalize_source_chars",
-    # round-21 Hoeffding D computes the bivariate rank Q_i by an
-    # x_j < x_i inequality join of the CALENDAR-bounded daily rollup
-    # with itself (<= days^2 pairs — the theil_sen day-pair
-    # machinery); the build is the checkpointed daily aggregate,
-    # hidden behind Scan ExistingRDD
-    "hoeffding_d_daily",
-    # round-22 sample entropy compares 2/3-day templates pairwise
-    # over the same CALENDAR-bounded daily rollup (x < xi
-    # inequality, <= days^2/2 pairs), build = the checkpointed
-    # 3-column template panel
-    "sample_entropy_matches_daily",
-    # round-27 Dunn post-hoc self-joins the VOCABULARY-bounded 5-row
-    # per-type rank-sum panel on a type_a < type_b inequality — the
-    # C(5,2) pair grid, both sides aggregates over checkpointed cells
-    "dunn_posthoc_value_by_type",
-    # round-27 weighted kappa crosses the two 4-row band-marginal
-    # aggregates (the FIXED 4x4 expected-disagreement grid) — both
-    # sides bounded by the band construction
-    "weighted_kappa_ordinal_bands",
-    # round-30 RBP broadcasts the same FIXED 20-anchor panel as
-    # map_retrieval_eval / ndcg / mrr onto one corpus scan with the
-    # self-exclusion inequality (vec_id % 25 = 0 AND vec_id < 500)
-    "rbp_retrieval_eval",
-}
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, name
-    if name in _JUSTIFIED_BNLJ_BUILDS:
-        return
-    offenders = bnlj_builds_are_scalar(df)
-    assert not offenders, f"{name}: non-scalar BNLJ builds: {offenders}"

@@ -3,7 +3,7 @@ round-21/22 staged banks (runs test, Mood scale, energy distance,
 Hoeffding's D, Page's L, sample-entropy matches, distance
 correlation, stratified split, chi2 unigram divergence).
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries;
 these tests pin the MATH with pure-Python recomputations on planted
 inputs whose exact answers are known in advance. Their scan budgets

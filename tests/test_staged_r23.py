@@ -3,7 +3,7 @@ keyphrases, LZ78 event-sequence complexity): known-graph rank
 ordering with a pure-Python replay of the exact integer iteration,
 and hand-parsed LZ78 phrase counts.
 
-The blanket oracle-match / non-empty / BNLJ gates in
+The blanket oracle-match / non-empty gates in
 tests/test_staged_pen.py already parametrize over ALL staged queries.
 """
 

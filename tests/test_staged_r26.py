@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-26 staged bank (IPS/SNIPS
-off-policy value, Krippendorff's alpha). Blanket oracle / non-empty /
-BNLJ gates ride tests/test_staged_pen.py.
+off-policy value, Krippendorff's alpha). Blanket oracle / non-empty
+gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-27 staged bank
 (Fligner-Policello, Dunn post-hoc, Stuart-Maxwell, weighted kappa).
-Blanket oracle / non-empty / BNLJ gates ride tests/test_staged_pen.py.
+Blanket oracle / non-empty gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

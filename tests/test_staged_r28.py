@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-28 staged bank
 (Breusch-Pagan, Chow break, OLS influence, KPSS, variance ratio).
-Blanket oracle / non-empty / BNLJ gates ride tests/test_staged_pen.py.
+Blanket oracle / non-empty gates ride tests/test_staged_pen.py.
 
 References are pure-Python re-computations of the classical formulas
 over the planted daily cents series (one event per day, so the daily

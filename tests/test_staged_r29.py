@@ -2,7 +2,7 @@
 modularity, degree assortativity, label propagation, transitivity)
 via the exposed pair-level helpers — closed-form expectations on
 graphs whose structure is known analytically. Blanket oracle /
-non-empty / BNLJ gates ride tests/test_staged_pen.py.
+non-empty gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

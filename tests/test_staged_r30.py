@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-30 staged bank (RBO
 ranking overlap, RBP retrieval eval) on synthetic embeddings whose
-rankings are known analytically. Blanket oracle / non-empty / BNLJ
+rankings are known analytically. Blanket oracle / non-empty
 gates ride tests/test_staged_pen.py.
 """
 

@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-31 staged bank
 (Diebold-Mariano, RMST at 30 days, weekly periodogram). Blanket
-oracle / non-empty / BNLJ gates ride tests/test_staged_pen.py.
+oracle / non-empty gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-32 staged bank
 (cross-fitted doubly-robust value, epsilon-greedy replay). Blanket
-oracle / non-empty / BNLJ gates ride tests/test_staged_pen.py.
+oracle / non-empty gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-33 staged bank (Gehan-
 Wilcoxon, ICC(1,1), Poisson dispersion, Mahalanobis outlier days).
-Blanket oracle / non-empty / BNLJ gates ride tests/test_staged_pen.py.
+Blanket oracle / non-empty gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Planted-ground-truth tests for the round-34 staged bank (PACF via
-Durbin-Levinson, ANOVA effect sizes). Blanket oracle / non-empty /
-BNLJ gates ride tests/test_staged_pen.py.
+Durbin-Levinson, ANOVA effect sizes). Blanket oracle / non-empty
+gates ride tests/test_staged_pen.py.
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ keys over raw rows are a 100 TB hazard — the partition is data-sized
 ``plans/inspect.py::fixed_key_window_hazards`` (unpartitioned or
 fixed-key windows must consume an Aggregate, a checkpoint scan or a
 WindowGroupLimit) and ``unbounded_collects`` (collect_list/set over
-empty or fixed keys must consume a bounded input). Streaming/io
-queries are excluded: building their DataFrame executes the stream,
+empty or fixed keys must consume a bounded input). Streaming queries
+are excluded: building their DataFrame executes the stream,
 and their state sizing is covered by the streaming test files.
 """
 
@@ -22,7 +22,6 @@ from de_project_airflow_etl_spark.registry import all_queries
 _AUDITED = {
     n: q for n, q in all_queries().items()
     if "streaming" not in q.tags and not n.startswith("streaming_")
-    and "io" not in q.tags
 }
 
 

@@ -17,7 +17,6 @@ from de_project_airflow_etl_spark.staged import STAGED
 _AUDITED_PEN = {
     n: q for n, q in STAGED.items()
     if "streaming" not in q.tags and not n.startswith("streaming_")
-    and "io" not in q.tags and n != "jsonl_stream_sink_roundtrip"
 }
 
 
