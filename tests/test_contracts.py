@@ -48,7 +48,8 @@ def test_no_complex_typed_output_columns(spark, sf_dir, case):
 
 def test_query_rejects_bare_string_tags():
     """``tags=("statistics")`` is a str, so ``"io" in q.tags`` would be
-    a substring test ("curat-io-n"); registration must refuse it."""
+    a substring test (true for "curation"); registration must refuse
+    it."""
     from de_project_airflow_etl_spark.registry import query
     with pytest.raises(TypeError):
         query("bare_string_tags_probe", None, tags=("statistics"))
