@@ -249,7 +249,7 @@ def _lsh_pairs_plan(digests: DataFrame, binary: bool = False) -> DataFrame:
     inspect the real join structure.
 
     ``binary=True`` expects ``hs`` as array<binary> (unhex-ed digests;
-    r10 optimization): halves the digest bytes through the persist and
+    r10 optimization): halves the digest bytes through the checkpoint and
     BOTH verify-join shuffles, and band keys become 4-byte binaries
     instead of 8-char strings. Exact — the hex<->binary bijection
     preserves every equality and ordering the plan relies on, so the
@@ -270,44 +270,57 @@ def _lsh_pairs_plan(digests: DataFrame, binary: bool = False) -> DataFrame:
                  F.col("y.doc_id").alias("doc_b"))
          .distinct()
     )
-    sa = digests.select(F.col("doc_id").alias("doc_a"),
-                        F.col("hs").alias("hs_a"))
-    sb = digests.select(F.col("doc_id").alias("doc_b"),
-                        F.col("hs").alias("hs_b"))
-    n_inter = F.size(F.array_intersect("hs_a", "hs_b"))
+    # Both verification sides join the same digest relation, read
+    # through its aliases: their exchanges canonicalize equal and plan
+    # as one exchange plus a ReusedExchange.
+    sa, sb = digests.alias("sa"), digests.alias("sb")
+    n_inter = F.size(F.array_intersect("sa.hs", "sb.hs"))
     jaccard = (n_inter.cast("double")
-               / (F.size("hs_a") + F.size("hs_b") - n_inter))
+               / (F.size("sa.hs") + F.size("sb.hs") - n_inter))
     return (
-        cands.join(sa, "doc_a").join(sb, "doc_b")
+        cands.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+             .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
              .select("doc_a", "doc_b", jaccard.alias("jaccard"))
              .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
+def _lsh_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, hs: array<binary>): each document's shingle digests as
+    16-byte binaries (half the bytes of 32-hex strings through both
+    verify-join shuffles; see _lsh_pairs_plan(binary=True) for the
+    exactness argument), materialized once by an eager localCheckpoint.
+
+    A checkpoint, not a persist: under Spark 4 AQE each of the four
+    references to a persisted relation in the verified-pairs plan
+    becomes its own TableCacheQueryStage job, and an exchange above one
+    cache stage never reuses an exchange above another. Four scans of
+    one checkpoint RDD are plain scans, so the band self-join and the
+    two verification sides each plan one exchange plus a
+    ReusedExchange. The checkpoint blocks are released by the
+    ContextCleaner once the DataFrame is dropped, as the pairs-cache
+    evictions are; nothing stays in the CacheManager."""
+    return (_shingled(spark, sf_dir)
+            .select("doc_id",
+                    F.expr("transform(hs, h -> unhex(h))").alias("hs"))
+            .localCheckpoint(eager=True))
+
+
 def _lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs (doc_a, doc_b, jaccard), eagerly
-    materialized via localCheckpoint. Only (doc_id, hs) is persisted —
-    signatures, band hashes, AND the Jaccard verification all derive
-    from the digest arrays (digest equality == shingle equality modulo
-    md5 collisions) — and the persist is released before returning, so
-    no cached relation outlives the call (round-1 leak: digests/bands
-    stayed pinned after the query returned; VERDICT r1 #3)."""
+    materialized via localCheckpoint over ``_lsh_digests``. Only
+    (doc_id, hs) is materialized: signatures, band hashes, AND the
+    Jaccard verification all derive from the digest arrays (digest
+    equality == shingle equality modulo md5 collisions). Neither
+    checkpoint registers in the CacheManager, so no cached relation
+    outlives the call (round-1 leak: digests/bands stayed pinned after
+    the query returned; VERDICT r1 #3)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _PAIRS_CACHE:
         _PAIRS_CACHE[key] = _PAIRS_CACHE.pop(key)  # LRU touch
         return _PAIRS_CACHE[key]
-    # digests persist as 16-byte binaries, not 32-hex strings (r10):
-    # the persist and both verify-join shuffles move half the bytes;
-    # see _lsh_pairs_plan(binary=True) for the exactness argument.
-    digests = tracked_persist(
-        _shingled(spark, sf_dir).select(
-            "doc_id",
-            F.expr("transform(hs, h -> unhex(h))").alias("hs")))
-    try:
-        verified = (_lsh_pairs_plan(digests, binary=True)
-                    .localCheckpoint(eager=True))  # materialize, THEN unpersist
-    finally:
-        digests.unpersist()
+    verified = (_lsh_pairs_plan(_lsh_digests(spark, sf_dir), binary=True)
+                .localCheckpoint(eager=True))
     _pairs_cache_put(key, verified)
     return verified
 

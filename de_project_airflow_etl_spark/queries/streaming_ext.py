@@ -82,7 +82,7 @@ def streaming_chained_window_rollup(spark: SparkSession,
     out = daily.select(
         F.col("d.start").cast("date").cast("string").alias("day"),
         "event_type", "n_events", "cents")
-    return _drain(out, spark, output_mode="append")
+    return _drain(out, spark, sf_dir, output_mode="append")
 
 
 @query(
@@ -136,4 +136,4 @@ def streaming_stream_stream_semi_join(spark: SparkSession,
         "left_semi")
     out = joined.select("event_id",
                         F.col("p_user_id").alias("user_id"))
-    return _drain(out, spark, output_mode="append")
+    return _drain(out, spark, sf_dir, output_mode="append")

@@ -988,4 +988,4 @@ def streaming_stream_stream_full_join(spark: SparkSession,
         "event_id", "click_event_id",
         (F.unix_micros("purchase_ts")
          - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, output_mode="append")
+    return _drain(out, spark, sf_dir, output_mode="append")

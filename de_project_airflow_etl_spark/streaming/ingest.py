@@ -14,7 +14,6 @@ engine on the same input.
 
 from __future__ import annotations
 
-import os
 import uuid
 from contextlib import contextmanager
 
@@ -22,30 +21,57 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.tables import NANOS_AS_LONG, read_parquet
 
 # Stateful streaming queries carry one state-store instance per shuffle
 # partition per stateful operator (a stream-stream join carries four).
 # Unlike batch shuffles, these are NOT free to over-provision: every
-# store pays open/snapshot/commit per micro-batch. So streaming sizes
-# shuffle partitions to expected STATE VOLUME, not core count — small
-# local fixtures run 8; a 100 TB stream raises this (it is baked into
-# the checkpoint at first start, so production picks it deliberately).
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+# store pays open/snapshot/commit per micro-batch (8 stores over the
+# 600-row windowed state once summed ~1 s of commit time per drain).
+# So a stream sizes its shuffle partitions to its SOURCE BYTES, the
+# way AQE coalesces a batch shuffle: one partition per advisory
+# partition size, at least 1 and at most the batch setting. The count
+# is baked into the checkpoint at first start, so each new checkpoint
+# picks it once; the testdata streams (27 KB - 2 MB) all get 1, a
+# 100 TB stream gets the batch width.
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+ADVISORY_PARTITION_BYTES = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def events_path(sf_dir: str) -> str:
+    return f"{sf_dir}/events.parquet"
+
+
+def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
+    """ceil(source_bytes / advisory partition size), in
+    [1, spark.sql.shuffle.partitions]."""
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(spark.conf.get(ADVISORY_PARTITION_BYTES))
+    cap = int(spark.conf.get(SHUFFLE_PARTITIONS))
+    return max(1, min(cap, -(-source_bytes // advisory)))
+
+
+def _source_bytes(spark: SparkSession, path: str) -> int:
+    """Bytes under ``path`` through the Hadoop filesystem, so an
+    object-store URI is sized the same way as a local file."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getContentSummary(p).getLength()
 
 
 @contextmanager
-def stream_shuffle_sizing(spark: SparkSession):
-    """Temporarily size shuffle partitions for stateful streaming;
-    restores the batch setting afterwards."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(STREAM_SHUFFLE_PARTITIONS))
+def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
+    """Size shuffle partitions for a stateful stream over ``sf_dir``'s
+    events (``stream_state_partitions``); restores the batch setting
+    afterwards."""
+    prev = spark.conf.get(SHUFFLE_PARTITIONS)
+    n = stream_state_partitions(spark, _source_bytes(spark, events_path(sf_dir)))
+    spark.conf.set(SHUFFLE_PARTITIONS, str(n))
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        spark.conf.set(SHUFFLE_PARTITIONS, prev)
 
 
 def windowed_counts(events: DataFrame) -> DataFrame:
@@ -62,11 +88,11 @@ def read_event_stream(spark: SparkSession, sf_dir: str,
                       with_watermark: str | None = "1 day") -> DataFrame:
     """File-source stream over the events parquet. Schema must be
     explicit for streaming reads (no inference at run time)."""
-    path = f"{sf_dir}/events.parquet"
     # defensive for driver-supplied sessions (see tables.load): the
     # NANOS timestamp is unreadable without this runtime-settable conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema  # file schema
+    spark.conf.set(NANOS_AS_LONG, "true")
+    # file schema, its footer read once per file version
+    schema = read_parquet(spark, events_path(sf_dir)).schema
     # File-source streams take a directory; pathGlobFilter narrows it to
     # the events table only.
     stream = (spark.readStream.schema(schema)
@@ -89,7 +115,7 @@ def run_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the materialized aggregate."""
     sink = f"stream_windowed_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, sf_dir, with_watermark=None)
-    with stream_shuffle_sizing(spark):
+    with stream_shuffle_sizing(spark, sf_dir):
         q = (
             windowed_counts(stream)
             .writeStream
@@ -213,7 +239,7 @@ def streaming_observed_ingest_metrics(spark: SparkSession,
     prev_progress = spark.conf.get(progress_key, None)
     spark.conf.set(progress_key, "100000")
     try:
-        with stream_shuffle_sizing(spark):
+        with stream_shuffle_sizing(spark, sf_dir):
             q = (observed.groupBy("event_type")
                          .agg(F.count(F.lit(1)).alias("n"))
                          .writeStream.format("memory").queryName(sink)
@@ -283,7 +309,7 @@ def streaming_dedup_within_watermark(spark: SparkSession,
                .withColumn("day", F.to_date("ts").cast("string"))
                .dropDuplicatesWithinWatermark(["event_type", "day"])
                .select("event_type", "day"))
-    with stream_shuffle_sizing(spark):
+    with stream_shuffle_sizing(spark, sf_dir):
         q = (deduped.writeStream
              .format("memory")
              .queryName(sink)

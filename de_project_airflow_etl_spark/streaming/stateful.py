@@ -77,10 +77,10 @@ _SESSION_ORACLE = f"""
 """
 
 
-def _drain(stream_df: DataFrame, spark: SparkSession,
+def _drain(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
            output_mode: str = "update") -> DataFrame:
     sink = f"stream_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_sizing(spark):
+    with stream_shuffle_sizing(spark, sf_dir):
         q = (stream_df.writeStream
                       .format("memory")
                       .queryName(sink)
@@ -109,7 +109,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (stream.dropDuplicates(["event_id"])
                  .groupBy("event_type")
                  .agg(F.count(F.lit(1)).alias("n_unique")))
-    return _drain(agg, spark, output_mode="complete")
+    return _drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -135,7 +135,7 @@ def streaming_dedup_bounded_state(spark: SparkSession,
     agg = (stream.dropDuplicatesWithinWatermark(["event_id"])
                  .groupBy("event_type")
                  .agg(F.count(F.lit(1)).alias("n_unique")))
-    return _drain(agg, spark, output_mode="complete")
+    return _drain(agg, spark, sf_dir, output_mode="complete")
 
 
 def _sessionize_group(
@@ -196,7 +196,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                   timeoutConf=GroupStateTimeout.NoTimeout,
               )
     )
-    return _drain(sessions, spark, output_mode="update")
+    return _drain(sessions, spark, sf_dir, output_mode="update")
 
 
 @query(
@@ -226,7 +226,7 @@ def streaming_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFram
     # running event count per segment is the enrichment payload here.
     agg = (joined.groupBy(F.col("c_mktsegment").alias("segment"))
                  .agg(F.count(F.lit(1)).alias("event_count")))
-    return _drain(agg, spark, output_mode="complete")
+    return _drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -273,7 +273,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = joined.select(
         "event_id", F.col("p_user_id").alias("user_id"),
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, output_mode="append")
+    return _drain(out, spark, sf_dir, output_mode="append")
 
 
 @query(
@@ -300,7 +300,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.count(F.lit(1)).alias("n_events"))
                  .select("user_id", "session_start", "session_end",
                          "n_events"))
-    return _drain(agg, spark, output_mode="complete")
+    return _drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -391,4 +391,4 @@ def stream_stream_left_join_plan(spark: SparkSession, sf_dir: str,
         "event_id", F.col("p_user_id").alias("user_id"),
         (F.unix_micros("purchase_ts")
          - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, output_mode="append")
+    return _drain(out, spark, sf_dir, output_mode="append")

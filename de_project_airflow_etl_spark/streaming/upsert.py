@@ -131,7 +131,7 @@ def run_streaming_upsert(spark: SparkSession, sf_dir: str,
         stream_shuffle_sizing,
     )
     stream = read_event_stream(spark, sf_dir, with_watermark=None)
-    with stream_shuffle_sizing(spark):
+    with stream_shuffle_sizing(spark, sf_dir):
         q = (stream.writeStream
                    .foreachBatch(apply_batch)
                    .option("checkpointLocation",

@@ -9,6 +9,13 @@ At 100 TB scale these reads are exactly the same code path — a
 ``spark.read.parquet`` over a partitioned lake directory; Catalyst
 handles partition pruning / predicate pushdown / column pruning from
 the declarative plan.
+
+``read_parquet`` reads each file's footer once: without a schema,
+every ``spark.read.parquet`` runs a one-task schema-inference job
+(~100 ms even in a warm JVM), a fixed cost paid per load whatever the
+data size. The inferred schema is cached per path and reused while
+every file under the path keeps its size and mtime; object-store URIs
+skip the cache (no cheap stat).
 """
 
 from __future__ import annotations
@@ -16,11 +23,51 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# path -> (file stamp, schema): one entry per path, replaced when a file
+# under it changes or the nanosAsLong conf (which changes the inferred
+# type of a TIMESTAMP(NANOS) column) flips.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(relative path, size, mtime) of every file under ``path``, or
+    None if nothing is there."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size,
+                          st.st_mtime_ns))
+    return tuple(sorted(files)) or None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark
+    job reading a footer) only the first time a file version is read."""
+    stamp = None if "://" in path else _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    stamp = (spark.conf.get(NANOS_AS_LONG, "false"), stamp)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -33,8 +80,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # it, but the driver may hand us a plain session — set it
         # defensively (runtime-settable, idempotent) so every query
         # works on any SparkSession.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = _normalize_event_ts(spark, df)
     return df

@@ -13,7 +13,7 @@ import pytest
 from de_project_airflow_etl_spark.plans.inspect import formatted_plan
 from de_project_airflow_etl_spark.queries.analytics import (
     WS_K, containment_dup_pairs, corr_matrix_lineitem,
-    doc_length_iqr_flags, frequent_item_pairs, trigram_lm_counts,
+    doc_length_iqr_flags, trigram_lm_counts,
     weighted_sample_wor,
 )
 from tests.harness import compare
@@ -26,13 +26,6 @@ def test_weighted_sample_plans_top_k(spark, sf_dir):
     # never a global sort of the corpus.
     plan = formatted_plan(weighted_sample_wor(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_pair_joins_are_equi_joins(spark, sf_dir):
-    for fn in (frequent_item_pairs, containment_dup_pairs):
-        plan = formatted_plan(fn(spark, sf_dir))
-        assert "CartesianProduct" not in plan, (fn.__name__, plan)
-        assert "BroadcastNestedLoop" not in plan, (fn.__name__, plan)
 
 
 def test_trigram_vocab_scalar_broadcasts(spark, sf_dir):
@@ -92,17 +85,6 @@ def test_char_class_gini_is_shuffle_free(spark, sf_dir):
     from de_project_airflow_etl_spark.queries.analytics import char_class_gini
     plan = formatted_plan(char_class_gini(spark, sf_dir))
     assert "Exchange" not in plan, plan
-
-
-def test_batch3_joins_are_equi_joins(spark, sf_dir):
-    from de_project_airflow_etl_spark.queries.analytics import (
-        funnel_conversion_latency, ngram_novelty_score,
-        source_overlap_matrix, trailing_anomaly_events,
-    )
-    for fn in (ngram_novelty_score, source_overlap_matrix,
-               funnel_conversion_latency, trailing_anomaly_events):
-        plan = formatted_plan(fn(spark, sf_dir))
-        assert "CartesianProduct" not in plan, (fn.__name__, plan)
 
 
 def test_batch5_plans_are_scale_shaped(spark, sf_dir):

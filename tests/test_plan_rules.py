@@ -74,8 +74,15 @@ PLAN_RULES: dict[str, dict] = {
     # silently worsen
     "dedup_ngram_jaccard": {"scans": 4},  # was 8: per-doc counts checkpointed
     # documents read at most twice (index side + probe side, the
-    # recompute-over-materialize choice)
+    # recompute-over-materialize choice); the join-back is an
+    # equi-join on the window hash (the default nested_loops rule)
     "exact_substring_dup_spans": {"scans": 2},
+    # LSH blocking makes the pair search an equi-join on the bucket
+    # key; a cross join over the corpus would be O(n^2)
+    "dedup_embedding_cosine": {"nested_loops": "none"},
+    # blocking makes pair generation an equi-join on the block key; a
+    # nested loop over names is the quadratic record-linkage pattern
+    "fuzzy_name_match_pairs": {"nested_loops": "none"},
     # ------------------------------------------- operators/similarity.py
     # broadcasts the one-row probe embedding (vec_id = 0 filter); the
     # check cannot classify a filter as scalar, but the build is a
@@ -118,10 +125,14 @@ PLAN_RULES: dict[str, dict] = {
     # ------------------------------------------------ queries/analytics.py
     # one md5 k-gram pass, no join-back
     "winnowing_fingerprints": {"nested_loops": "none"},
+    # pairs are emitted in-array per order basket, and the brand
+    # join-backs are equi-joins on the brand code
+    "frequent_item_pairs": {"nested_loops": "none"},
     # keeps its data-sized stream re-derived on purpose (measured loss
     # to materialize); the budget pins the CURRENT shape so it can't
-    # silently worsen
-    "containment_dup_pairs": {"scans": 5},
+    # silently worsen. Pairs come from the gram -> doc index
+    # equi-join.
+    "containment_dup_pairs": {"scans": 5, "nested_loops": "none"},
     "funnel_conversion_latency": {"scans": 0},  # was 6: c_ts carried, histogram ckpt
     # ---------------------------------------------------- queries/assoc.py
     # the in-array idiom replaces windows (max_windows 0); bowker's
@@ -463,11 +474,16 @@ PLAN_RULES: dict[str, dict] = {
     # --------------------------------------------------- queries/timeseries.py
     # union + one hash exchange + window, never a range/theta join
     "asof_join_click_purchase": {"nested_loops": "none"},
+    # equi-join on o_custkey with the date overlap as a post-join
+    # residual; a range-only join would be quadratic in table size
+    "interval_overlap_orders": {"nested_loops": "none"},
     # --------------------------------------------------------- queries/tpch.py
     # every join hash-based on an extracted equi-condition: a
     # CartesianProduct or BroadcastNestedLoopJoin is the quadratic
-    # fallback that kills these shapes at scale (Q19/Q22 keep
-    # their own shape tests in tests/test_plans.py)
+    # fallback that kills these shapes at scale (Q22 keeps its own
+    # shape test in tests/test_plans.py). Q19's disjunctive predicate
+    # spans both sides, and the p_partkey equi-join must still be
+    # extracted from it.
     "tpch_q4_order_priority": {"nested_loops": "none"},
     "tpch_q5_local_supplier_volume": {"nested_loops": "none"},
     "tpch_q7_volume_shipping": {"nested_loops": "none"},
@@ -480,6 +496,7 @@ PLAN_RULES: dict[str, dict] = {
     "tpch_q16_part_supplier_counts": {"nested_loops": "none"},
     "tpch_q17_small_quantity_revenue": {"nested_loops": "none"},
     "tpch_q18_large_volume_customers": {"nested_loops": "none"},
+    "tpch_q19_disjunctive_revenue": {"nested_loops": "none"},
     "tpch_q20_promo_part_suppliers": {"nested_loops": "none"},
     # -------------------------------------------- staged/round21-24.py
     "wald_wolfowitz_runs_daily": {"scans": 0},  # daily checkpointed

@@ -82,37 +82,21 @@ def test_ivf_assignment_broadcasts_centroids(spark, sf_dir):
     assert has_broadcast_join(ann_ivf_search(spark, sf_dir))
 
 
-def test_embedding_dedup_is_equi_join(spark, sf_dir):
-    """LSH blocking must make the pair search an equi-join on the
-    bucket key — a cross join over the corpus would be O(n^2)."""
-    from de_project_airflow_etl_spark.operators.dedup import (
-        dedup_embedding_cosine,
-    )
-    plan = formatted_plan(dedup_embedding_cosine(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_lsh_candidate_join_is_equi_join(spark, sf_dir):
     # Inspect the un-materialized pairs plan (the public query returns
     # an eagerly checkpointed result whose plan is an opaque RDD scan).
     # Both plans: the hex one is the reference of
     # test_plans_r10opt.py::test_lsh_binary_equals_hex_pairs, the binary
-    # one over unhexed digests is the plan _lsh_verified runs.
+    # one over _lsh_digests is the plan _lsh_verified runs.
     from de_project_airflow_etl_spark.operators.dedup import (
-        _lsh_pairs_plan, _shingled,
+        _lsh_digests, _lsh_pairs_plan, _shingled,
     )
-    from de_project_airflow_etl_spark.queries.util import tracked_persist
     digests = _shingled(spark, sf_dir).select("doc_id", "hs")
     plan = formatted_plan(_lsh_pairs_plan(digests))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    binary = tracked_persist(_shingled(spark, sf_dir).select(
-        "doc_id", F.expr("transform(hs, h -> unhex(h))").alias("hs")))
-    try:
-        plan = formatted_plan(_lsh_pairs_plan(binary, binary=True))
-    finally:
-        binary.unpersist()
+    plan = formatted_plan(_lsh_pairs_plan(_lsh_digests(spark, sf_dir),
+                                          binary=True))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -126,6 +110,69 @@ def test_lsh_query_leaves_no_cached_relations(spark, sf_dir):
     spark.catalog.clearCache()
     dedup.dedup_minhash_lsh(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_lsh_verified_pairs_reuse_exchanges(spark, sf_dir):
+    """The verified-pairs build in its 100 TB shape (no broadcast
+    joins): the band self-join's two sides and the two verification
+    sides each read one exchange, so the final plan holds at least two
+    ReusedExchange, and no InMemoryTableScan (an AQE cache stage per
+    digest reference blocks every reuse above it)."""
+    from de_project_airflow_etl_spark.operators.dedup import (
+        _lsh_digests, _lsh_pairs_plan,
+    )
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        df = _lsh_pairs_plan(_lsh_digests(spark, sf_dir), binary=True)
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "isFinalPlan=true" in plan, plan
+    assert plan.count("ReusedExchange") >= 2, plan
+    assert "InMemoryTableScan" not in plan, plan
+
+
+def test_lsh_digest_checkpoints_are_released(spark, sf_dir):
+    """The digest checkpoint of each verified-pairs build is freed by
+    the ContextCleaner once its DataFrame is dropped: after five builds
+    and a GC, of the RDDs the builds stored, the block manager keeps no
+    more than the pairs checkpoints the cache still references."""
+    import gc
+    import time
+
+    from de_project_airflow_etl_spark.operators import dedup
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    built: set[int] = set()
+    for _ in range(5):
+        dedup.clear_pairs_cache()
+        before = stored()
+        dedup._lsh_verified(spark, sf_dir)
+        built |= stored() - before
+    assert built
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        held = built & stored()
+        if len(held) <= len(dedup._PAIRS_CACHE):
+            break
+        assert time.monotonic() < deadline, (
+            f"RDDs {sorted(held)} still stored "
+            f"({len(dedup._PAIRS_CACHE)} pairs checkpoints cached)")
+        time.sleep(0.5)
 
 
 def test_dedup_clusters_labels_without_a_join(spark, sf_dir):
@@ -211,19 +258,6 @@ def test_ivf_assignment_no_corpus_shuffle(spark, sf_dir):
     )
     plan = formatted_plan(ann_ivf_search(spark, sf_dir))
     assert "hashpartitioning(vec_id" not in plan, plan
-
-
-def test_interval_overlap_join_rides_equi_key(spark, sf_dir):
-    """The interval-overlap self-join must plan as an equi-join on
-    o_custkey (the date inequality as a post-join residual) — a
-    range-only formulation would degenerate to a cartesian/BNL plan
-    that is quadratic in table size."""
-    from de_project_airflow_etl_spark.queries.timeseries import (
-        interval_overlap_orders,
-    )
-    plan = formatted_plan(interval_overlap_orders(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_gap_fill_spine_is_distributed(spark, sf_dir):
@@ -480,18 +514,6 @@ def test_tpch_q3_plans_take_ordered_with_broadcast_dim(spark, sf_dir):
     assert has_broadcast_join(df), plan
 
 
-def test_tpch_q19_extracts_equi_join_no_cartesian(spark, sf_dir):
-    """The disjunctive predicate spans both sides; the optimizer must
-    still use the p_partkey equi-join — a cartesian/BNLJ fallback here
-    is the classic Q19 planner failure."""
-    from de_project_airflow_etl_spark.queries.tpch import (
-        tpch_q19_disjunctive_revenue,
-    )
-    plan = formatted_plan(tpch_q19_disjunctive_revenue(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_tpch_q5_broadcasts_all_dims(spark, sf_dir):
     """Q5's five joins: every dimension side broadcasts; the only
     exchange-feeding join is orders-lineitem."""
@@ -619,17 +641,6 @@ def test_temperature_mix_bounds_rank_and_broadcasts_targets(spark,
     plan = formatted_plan(df)
     assert "WindowGroupLimit" in plan, plan
     assert has_broadcast_join(df), plan
-
-
-def test_substring_spans_is_inverted_index_shaped(spark, sf_dir):
-    """The span-dedup join-back must be an equi-join on the window
-    hash (no cartesian); its two-scan budget lives in
-    tests/test_plan_rules.py."""
-    from de_project_airflow_etl_spark.operators.dedup import (
-        exact_substring_dup_spans,
-    )
-    plan = formatted_plan(exact_substring_dup_spans(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_pq_adc_search_has_zero_corpus_shuffle(spark, sf_dir):

@@ -16,8 +16,6 @@ the shapes the optimization claims so they cannot silently regress:
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -129,21 +127,18 @@ def test_lof_salted_equals_unsalted(spark, sf_dir):
 def test_lsh_binary_equals_hex_pairs(spark, sf_dir):
     """The binary-digest pipeline must emit the identical verified
     pair set (and jaccards) as the hex pipeline — the hex<->binary
-    bijection argument, machine-checked."""
+    bijection argument, machine-checked. The binary side is the
+    checkpointed digest relation _lsh_verified builds."""
     from de_project_airflow_etl_spark.operators import dedup as D
     from de_project_airflow_etl_spark.queries.util import tracked_persist
     hex_dg = tracked_persist(
         D._shingled(spark, sf_dir).select("doc_id", "hs"))
-    bin_dg = tracked_persist(
-        D._shingled(spark, sf_dir).select(
-            "doc_id", F.expr("transform(hs, h -> unhex(h))").alias("hs")))
     try:
         hex_rows = sorted(map(tuple, D._lsh_pairs_plan(hex_dg)
                               .collect()))
-        bin_rows = sorted(map(tuple, D._lsh_pairs_plan(bin_dg, binary=True)
-                              .collect()))
     finally:
         hex_dg.unpersist()
-        bin_dg.unpersist()
+    bin_rows = sorted(map(tuple, D._lsh_pairs_plan(
+        D._lsh_digests(spark, sf_dir), binary=True).collect()))
     assert hex_rows == bin_rows
     assert hex_rows  # non-empty at every test sf
