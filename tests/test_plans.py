@@ -82,6 +82,17 @@ def test_ivf_assignment_broadcasts_centroids(spark, sf_dir):
     assert has_broadcast_join(ann_ivf_search(spark, sf_dir))
 
 
+def test_embedding_dedup_is_equi_join(spark, sf_dir):
+    """LSH blocking must make the pair search an equi-join on the
+    bucket key — a cross join over the corpus would be O(n^2)."""
+    from de_project_airflow_etl_spark.operators.dedup import (
+        dedup_embedding_cosine,
+    )
+    plan = formatted_plan(dedup_embedding_cosine(spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
 def test_lsh_candidate_join_is_equi_join(spark, sf_dir):
     # Inspect the un-materialized pairs plan (the public query returns
     # an eagerly checkpointed result whose plan is an opaque RDD scan).
@@ -258,6 +269,19 @@ def test_ivf_assignment_no_corpus_shuffle(spark, sf_dir):
     )
     plan = formatted_plan(ann_ivf_search(spark, sf_dir))
     assert "hashpartitioning(vec_id" not in plan, plan
+
+
+def test_interval_overlap_join_rides_equi_key(spark, sf_dir):
+    """The interval-overlap self-join must plan as an equi-join on
+    o_custkey (the date inequality as a post-join residual) — a
+    range-only formulation would degenerate to a cartesian/BNL plan
+    that is quadratic in table size."""
+    from de_project_airflow_etl_spark.queries.timeseries import (
+        interval_overlap_orders,
+    )
+    plan = formatted_plan(interval_overlap_orders(spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_gap_fill_spine_is_distributed(spark, sf_dir):
@@ -514,6 +538,18 @@ def test_tpch_q3_plans_take_ordered_with_broadcast_dim(spark, sf_dir):
     assert has_broadcast_join(df), plan
 
 
+def test_tpch_q19_extracts_equi_join_no_cartesian(spark, sf_dir):
+    """The disjunctive predicate spans both sides; the optimizer must
+    still use the p_partkey equi-join — a cartesian/BNLJ fallback here
+    is the classic Q19 planner failure."""
+    from de_project_airflow_etl_spark.queries.tpch import (
+        tpch_q19_disjunctive_revenue,
+    )
+    plan = formatted_plan(tpch_q19_disjunctive_revenue(spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
 def test_tpch_q5_broadcasts_all_dims(spark, sf_dir):
     """Q5's five joins: every dimension side broadcasts; the only
     exchange-feeding join is orders-lineitem."""
@@ -641,6 +677,17 @@ def test_temperature_mix_bounds_rank_and_broadcasts_targets(spark,
     plan = formatted_plan(df)
     assert "WindowGroupLimit" in plan, plan
     assert has_broadcast_join(df), plan
+
+
+def test_substring_spans_is_inverted_index_shaped(spark, sf_dir):
+    """The span-dedup join-back must be an equi-join on the window
+    hash (no cartesian); its two-scan budget lives in
+    tests/test_plan_rules.py."""
+    from de_project_airflow_etl_spark.operators.dedup import (
+        exact_substring_dup_spans,
+    )
+    plan = formatted_plan(exact_substring_dup_spans(spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_pq_adc_search_has_zero_corpus_shuffle(spark, sf_dir):

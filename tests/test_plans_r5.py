@@ -9,7 +9,7 @@ from __future__ import annotations
 import re
 
 from de_project_airflow_etl_spark.operators.dedup import (
-    dedup_normalized_text,
+    dedup_normalized_text, fuzzy_name_match_pairs,
 )
 from de_project_airflow_etl_spark.operators.similarity import (
     ann_recall_audit, centroid_assignment_margin,
@@ -67,6 +67,15 @@ def test_udaf_windowed_variant_runs_in_arrow_window(spark, sf_dir):
 
 
 # ------------------------------------------------- matching / dedup
+
+def test_fuzzy_match_is_blocked_equi_join(spark, sf_dir):
+    """Blocking must make the pair generation an equi-join on the
+    block key — a nested-loop over names would be the quadratic
+    record-linkage anti-pattern."""
+    plan = formatted_plan(fuzzy_name_match_pairs(spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
 
 def test_normalized_dedup_is_single_aggregate(spark, sf_dir):
     """Canonical-key dedup is ONE hash aggregate on md5 keys: no join
