@@ -7,13 +7,18 @@ Reference parity map (SURVEY.md §2, file:line cites into
   (dags/rocket_launch_etl.py:24-63). Fetch is pluggable: a callable
   returning the API payload (tests inject fixtures; production wires a
   requests-based fetcher — driver-side, exactly like the reference).
+* ``validate_raw`` = a data-quality gate between landing and transform:
+  the count of corrupt raw documents is an observed metric
+  (``pyspark.sql.Observation``) of one pass over the parsed day.
 * ``transform``  = S2+T1-T4+K2: raw JSON -> explode results ->
   nested-path projection/rename -> to_date(net) -> silver parquet
   partitioned by net (dags/rocket_launch_etl.py:65-111). Where the
   reference needs ``pd.json_normalize``, Spark reads nested structs
   natively; the whole normalize step disappears into ``select``.
-* ``publish``    = S3+T5+K3: partition-pruned read of one day ->
-  gold parquet (dags/rocket_launch_etl.py:113-140).
+* ``publish``    = S3+T5+K3: copy one ``net`` partition from processed
+  -> reports (dags/rocket_launch_etl.py:113-140). The reference reads
+  the day back and rewrites it; here the silver partition's files are
+  copied as they are, and no Spark job runs.
 * ``register_table`` = D1-D3: external partitioned table over gold +
   partition-metadata sync (src/sql/ddl/launch_events.sql:1-14,
   src/sql/sync/launch_events.sql:1-2). ``MSCK REPAIR`` replaces
@@ -21,22 +26,26 @@ Reference parity map (SURVEY.md §2, file:line cites into
 * ``daily_launch_events`` = A1-A3: the flagship COUNT(DISTINCT) query
   (src/sql/query/daily_launch_events.sql:1-5).
 
-Re-run semantics: silver/gold writes use dynamic partition overwrite,
-so re-running an interval replaces exactly that partition (upgrade over
-the reference's append-on-rerun, SURVEY.md §7.4 — deliberate
-divergence, documented).
+Re-run semantics: the silver write uses dynamic partition overwrite and
+publish swaps in a staged copy of the gold partition the same way
+(delete, then rename), so re-running an interval replaces exactly that
+partition (upgrade over the reference's append-on-rerun, SURVEY.md
+§7.4 — deliberate divergence, documented).
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs, replace_with_copy
 
 log = logging.getLogger(__name__)
 
@@ -88,7 +97,7 @@ def _ensure_dynamic_overwrite(spark: SparkSession) -> None:
     Every partitioned ``mode("overwrite")`` write below relies on it; the
     session factory sets it, but these methods also accept an externally
     built session (the driver hands us one), where Spark's default
-    STATIC mode would wipe the whole silver/gold directory instead of
+    STATIC mode would wipe the whole silver directory instead of
     one partition. Runtime-settable, so set it at each write site —
     same defensive pattern as nanosAsLong in ``tables.load``.
     """
@@ -111,17 +120,6 @@ class LaunchPipeline:
         self.table_name = table_name
 
     # -- stage 1: ingest (S1 + K1) ------------------------------------
-    def _hadoop_path(self, path_str: str):
-        """(FileSystem, Path) for a URI through Spark's Hadoop conf —
-        how the raw put reaches s3a://, hdfs://, or file:// zones (the
-        reference puts raw JSON to MinIO via s3fs,
-        dags/rocket_launch_etl.py:72-76; fs.s3a.* session confs apply
-        here automatically)."""
-        jvm = self.spark.sparkContext._jvm
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-        return jpath.getFileSystem(hconf), jpath
-
     def ingest(self, run_date: str, fetch: PayloadFetcher) -> str:
         """Fetch the day's payload and put it in the raw zone,
         idempotently (skip if the key exists — reference behavior,
@@ -131,7 +129,7 @@ class LaunchPipeline:
         store unchanged."""
         path = os.path.join(self.raw_dir, f"{run_date}.json")
         if "://" in self.base:
-            fs, jpath = self._hadoop_path(path)
+            fs, (jpath,) = hadoop_fs(self.spark, path)
             if fs.exists(jpath):
                 log.info("raw key exists, skipping upload: %s", path)
                 return path
@@ -176,7 +174,12 @@ class LaunchPipeline:
         read with a corrupt-record column). The reference fails only on
         HTTP errors (`raise_for_status`); a lakehouse also needs a gate
         between landing and transform — callers treat a non-zero count
-        as a quality failure for the interval."""
+        as a quality failure for the interval.
+
+        The count is an Observation-API data-quality metric over one
+        ``noop`` write of the parsed day: one Spark job, nothing cached.
+        (Spark rejects a query of ONLY the corrupt-record column from a
+        raw scan; the write consumes every column, so it is allowed.)"""
         raw_path = os.path.join(self.raw_dir, f"{run_date}.json")
         schema = T.StructType(RAW_LAUNCH_SCHEMA.fields
                               + [T.StructField("_corrupt_record", T.StringType())])
@@ -186,13 +189,11 @@ class LaunchPipeline:
                .option("mode", "PERMISSIVE")
                .option("columnNameOfCorruptRecord", "_corrupt_record")
                .json(raw_path))
-        # Spark disallows querying ONLY the corrupt-record column from a
-        # raw scan; the documented workaround is to materialize first.
-        raw = raw.cache()
-        try:
-            n_bad = raw.filter(F.col("_corrupt_record").isNotNull()).count()
-        finally:
-            raw.unpersist()
+        quality = Observation()
+        (raw.observe(quality, F.count_if(F.col("_corrupt_record").isNotNull())
+                               .alias("corrupt"))
+            .write.format("noop").mode("overwrite").save())
+        n_bad = quality.get["corrupt"]
         if n_bad:
             log.warning("%d corrupt raw document(s) for %s", n_bad, run_date)
         return n_bad
@@ -248,15 +249,21 @@ class LaunchPipeline:
         return self.spark.read.schema(SILVER_SCHEMA).parquet(self.gold_dir)
 
     def publish(self, run_date: str) -> None:
-        silver = self.read_silver()
-        day = silver.filter(F.col("net") == F.lit(run_date).cast("date"))  # T5 -> partition pruning
-        _ensure_dynamic_overwrite(self.spark)
-        (day.write
-            .partitionBy("net")
-            .mode("overwrite")
-            .parquet(self.gold_dir))
-        # Dynamic overwrite replaced the partition's files on disk; both
-        # path readers and the registered table cache file listings —
+        """K3: copy the day's silver partition to gold. The gold
+        partition of a day is its silver partition, so its part files
+        are copied byte for byte into a hidden staging dir under gold
+        and swapped into place (``hadoop_fs.replace_with_copy``): no
+        Spark job decodes and re-encodes them. A day with no silver
+        partition leaves gold as it is, as the zero-row dynamic
+        overwrite did."""
+        day = datetime.date.fromisoformat(run_date).isoformat()
+        replace_with_copy(self.spark,
+                          f"{self.silver_dir}/net={day}",
+                          f"{self.gold_dir}/net={day}",
+                          # "_" and no "=": hidden from partition discovery
+                          f"{self.gold_dir}/_publishing_{day}")
+        # The swap replaced the partition's files on disk; both path
+        # readers and the registered table cache file listings —
         # invalidate them (the re-run analog of the reference's
         # partition sync, src/sql/sync/launch_events.sql:2). The table
         # relation cache is keyed by name, so refreshByPath alone is

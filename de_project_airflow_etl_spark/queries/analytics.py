@@ -89,8 +89,13 @@ def frequent_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.row_number().over(Window.orderBy("p_brand"))
                       .cast("int").alias("bc"))
              .localCheckpoint(eager=False))  # bounded dim, 3 consumers
-    coded = pt.join(F.broadcast(dim), "p_brand").select("p_partkey", "bc")
-    baskets = (li.join(F.broadcast(coded), li.l_partkey == coded.p_partkey)
+    # Only the bounded dim is force-broadcast: part grows with the data,
+    # so lineitem meets it by size (a broadcast at small scale, a
+    # shuffle join at 100 TB). Joined on part first, a code relation
+    # would carry the product estimate of a join and leave lineitem as
+    # the "smaller" side to broadcast.
+    baskets = (li.join(pt, li.l_partkey == pt.p_partkey)
+                 .join(F.broadcast(dim), "p_brand")
                  .groupBy("l_orderkey")
                  .agg(F.expr("sort_array(collect_set(bc))").alias("bs")))
     pairs = baskets.select(F.explode(F.expr(

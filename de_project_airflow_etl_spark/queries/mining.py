@@ -90,14 +90,16 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.row_number().over(Window.orderBy("p_brand"))
                         .cast("int").alias("bc"))
                .localCheckpoint(eager=False))  # bounded dim, 3 consumers
-    coded = part.join(F.broadcast(dim), "p_brand").select("p_partkey", "bc")
     # ONE orderkey exchange builds the per-order brand-code sets
     # directly (collect_set dedups in-group with map-side partials —
     # no standalone distinct exchange), and every other relation
     # (order count, item supports, the pair stream) derives from the
     # checkpointed sets, so the fact table is scanned once (was 4
     # lineitem + 4 part scans, one per un-materialized reference).
-    sets = (li.join(F.broadcast(coded), li.l_partkey == coded.p_partkey)
+    # Only the bounded dim is force-broadcast: part grows with the
+    # data, so lineitem meets it by size (see frequent_item_pairs).
+    sets = (li.join(part, li.l_partkey == part.p_partkey)
+              .join(F.broadcast(dim), "p_brand")
               .groupBy("l_orderkey")
               .agg(F.sort_array(F.collect_set("bc")).alias("bs"))
               .localCheckpoint())

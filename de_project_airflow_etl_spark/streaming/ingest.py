@@ -20,6 +20,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import NANOS_AS_LONG, read_parquet
 
@@ -54,9 +55,7 @@ def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
 def _source_bytes(spark: SparkSession, path: str) -> int:
     """Bytes under ``path`` through the Hadoop filesystem, so an
     object-store URI is sized the same way as a local file."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, (p,) = hadoop_fs(spark, path)
     return fs.getContentSummary(p).getLength()
 
 

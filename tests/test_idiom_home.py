@@ -12,6 +12,8 @@ walks, the window-hazard and collect audits with their key sets) and
 window rules and nested-loop exceptions are rows of ``PLAN_RULES`` in
 ``tests/test_plan_rules.py``, whose nested-loop rule runs over every
 registered and staged query.
+
+``hadoop_fs.py`` owns py4j access to the Hadoop FileSystem classes.
 """
 
 from __future__ import annotations
@@ -182,4 +184,18 @@ def test_nested_loop_rule_has_one_home():
                             if isinstance(c, ast.Call))):
                 copies.append(f"{where}:{node.lineno} {node.name} runs "
                               f"the nested-loop gate over a bank")
+    assert not copies, "\n".join(copies)
+
+
+FS_HOME = PKG / "hadoop_fs.py"
+
+
+def test_hadoop_fs_access_has_one_home():
+    """py4j access to ``org.apache.hadoop.fs`` (Path, FileSystem,
+    FileUtil) lives in ``hadoop_fs.py``, which resolves the package
+    once per call: a dotted lookup elsewhere is a re-grown copy."""
+    copies = [f"{path.relative_to(PKG.parent)}:{lineno}"
+              for path in sorted(PKG.rglob("*.py")) if path != FS_HOME
+              for lineno, line in enumerate(path.read_text().splitlines(), 1)
+              if "apache.hadoop.fs" in line]
     assert not copies, "\n".join(copies)

@@ -1,7 +1,10 @@
 """End-to-end launch pipeline tests (SURVEY.md §5 'our engine's test
 strategy'): fixture JSON -> silver -> gold -> table -> flagship query,
 plus the reference's correctness properties — idempotent raw put,
-re-run safety, nested-null tolerance, partition pruning on publish."""
+re-run safety, nested-null tolerance — and the per-day Spark work:
+publish is a file copy (no job), validation one observed pass.
+Partition pruning on a partitioned lake is covered by
+``test_plans.py::test_partition_pruning_on_partitioned_lake``."""
 
 from __future__ import annotations
 
@@ -10,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from de_project_airflow_etl_spark import catalog
 from de_project_airflow_etl_spark.pipeline.fixtures import (
     DEFAULT_DAYS, launch_day_payload, write_raw_fixture,
 )
@@ -25,6 +29,29 @@ def pipeline(spark, tmp_path):
 
 def fetch(day: str) -> dict:
     return launch_day_payload(day, DEFAULT_DAYS.get(day, 2))
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _part_files(part_dir: str) -> dict[str, bytes]:
+    """Name -> bytes of the data files of a partition dir (checksum
+    side files are hidden: ``.<name>.crc``)."""
+    out = {}
+    for name in sorted(os.listdir(part_dir)):
+        if not name.startswith((".", "_")):
+            with open(os.path.join(part_dir, name), "rb") as f:
+                out[name] = f.read()
+    return out
+
+
+def _assert_gold_is_silver_copy(pipeline, day: str) -> None:
+    silver = _part_files(os.path.join(pipeline.silver_dir, f"net={day}"))
+    gold = _part_files(os.path.join(pipeline.gold_dir, f"net={day}"))
+    assert silver and gold == silver
+    assert sorted(os.listdir(pipeline.gold_dir)) == sorted(
+        n for n in os.listdir(pipeline.silver_dir) if n.startswith("net="))
 
 
 def test_end_to_end_over_filesystem_uri(spark, tmp_path):
@@ -194,3 +221,69 @@ def test_validate_raw_flags_corrupt_documents(spark, tmp_path):
 
     assert p.validate_raw("2024-12-01") == 0
     assert p.validate_raw("2024-12-02") > 0
+
+
+def test_publish_copies_silver_partition_without_a_spark_job(pipeline, spark):
+    """Publish is a file-level copy of the day's silver partition: no
+    Spark job, byte-identical part files in gold, no staging dir left."""
+    day = "2024-12-01"
+    pipeline.ingest(day, fetch)
+    pipeline.transform(day)
+    j0 = _jobs(spark)
+    pipeline.publish(day)
+    assert _jobs(spark) == j0
+    _assert_gold_is_silver_copy(pipeline, day)
+    assert pipeline.read_gold().count() == 6
+
+
+def test_publish_without_silver_partition_keeps_gold(pipeline):
+    """No silver partition for the day (as after a zero-row transform):
+    publish leaves the gold partition as it is, as a zero-row dynamic
+    overwrite would."""
+    import shutil
+
+    day = "2024-12-01"
+    pipeline.run(day, fetch)
+    shutil.rmtree(os.path.join(pipeline.silver_dir, f"net={day}"))
+    pipeline.publish(day)
+    assert pipeline.read_gold().count() == 6
+
+
+def test_validate_raw_is_one_job_and_caches_nothing(spark, tmp_path):
+    """One observed pass per day, on a clean and on a corrupt landing:
+    exactly one Spark job, and no RDD left persisted."""
+    import json
+
+    p = LaunchPipeline(spark, str(tmp_path / "lake"), table_name="validate_jobs_t1")
+    os.makedirs(p.raw_dir)
+    with open(os.path.join(p.raw_dir, "2024-12-01.json"), "w") as f:
+        json.dump(launch_day_payload("2024-12-01", 3), f)
+    with open(os.path.join(p.raw_dir, "2024-12-02.json"), "w") as f:
+        f.write('{"count": 1, "results": [ TRUNCATED')
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for day, corrupt in (("2024-12-01", False), ("2024-12-02", True)):
+        j0 = _jobs(spark)
+        assert (p.validate_raw(day) > 0) == corrupt
+        assert _jobs(spark) - j0 == 1, day
+        assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted
+
+
+def test_republish_after_silver_compaction_keeps_only_silver_files(pipeline, spark):
+    """A partition re-published after its silver files change (here:
+    split into three, then compacted back to one) holds exactly
+    silver's files — the staged copy replaces the partition, it does
+    not merge into it."""
+    day = "2024-12-01"
+    pipeline.run(day, fetch)
+    pipeline.register_table()
+    (pipeline.read_silver().localCheckpoint().repartition(3)
+             .write.partitionBy("net").mode("overwrite")
+             .parquet(pipeline.silver_dir))
+    pipeline.publish(day)
+    assert len(_part_files(os.path.join(pipeline.gold_dir, f"net={day}"))) == 3
+    catalog.compact_partition(spark, pipeline.silver_dir, "net", day)
+    pipeline.publish(day)
+    _assert_gold_is_silver_copy(pipeline, day)
+    assert len(_part_files(os.path.join(pipeline.gold_dir, f"net={day}"))) == 1
+    assert {str(r["net"]): r["event_count"]
+            for r in pipeline.daily_launch_events().collect()} == {day: 5}

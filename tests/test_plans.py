@@ -701,3 +701,48 @@ def test_pq_adc_search_has_zero_corpus_shuffle(spark, sf_dir):
     plan = formatted_plan(ann_pq_adc_search(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
     assert "hashpartitioning" not in plan, plan
+
+
+def test_part_sized_join_is_not_force_broadcast(spark, sf_dir, monkeypatch):
+    """``frequent_item_pairs`` and ``market_basket_rules`` join lineitem
+    to part, which grows with the data, by size: with both broadcast
+    thresholds off, the ``l_partkey`` join is not a BroadcastHashJoin,
+    while the ~25-row brand dim stays broadcast by hint. The market
+    basket join runs inside an eager checkpoint, so the plans each
+    ``localCheckpoint`` executes are read as well as the final ones."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from de_project_airflow_etl_spark.queries.analytics import frequent_item_pairs
+    from de_project_airflow_etl_spark.queries.mining import market_basket_rules
+
+    plans = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        for fn in (frequent_item_pairs, market_basket_rules):
+            df = fn(spark, sf_dir)
+            assert df.collect()
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    joins = [line.strip() for plan in plans for line in plan.splitlines()
+             if "Join" in line]
+    part_joins = [j for j in joins if "l_partkey" in j]
+    assert part_joins, plans
+    assert not [j for j in part_joins if "BroadcastHashJoin" in j], part_joins
+    assert [j for j in joins if "BroadcastHashJoin" in j and "p_brand" in j], joins
