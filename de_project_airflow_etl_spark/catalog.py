@@ -28,6 +28,18 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 
+def ensure_dynamic_overwrite(spark: SparkSession) -> None:
+    """Defensively force dynamic partition-overwrite semantics.
+
+    Every partitioned ``mode("overwrite")`` write of the lake relies on
+    it; the session factory sets it, but the lake code also accepts a
+    session built elsewhere, where Spark's default STATIC mode would
+    wipe every partition under the path instead of the one being
+    written. Runtime-settable, so set it at each write site — same
+    defensive pattern as nanosAsLong in ``tables.load``."""
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+
 def create_external_table(spark: SparkSession, name: str, location: str,
                           columns_ddl: str, partition_ddl: str) -> None:
     """External partitioned parquet table over an existing lake path
@@ -117,10 +129,7 @@ def compact_partition(spark: SparkSession, path: str, column: str,
     # lineage to the source files — required to overwrite the same
     # location being read, and it pins the data before the swap.
     compacted = df.localCheckpoint(eager=True)
-    # Defensive: on an externally built session the default STATIC
-    # overwrite mode would wipe every partition under `path`, not just
-    # the one being compacted (runtime-settable, mirrors launch_etl).
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    ensure_dynamic_overwrite(spark)
     (compacted.coalesce(target_files)
        .write
        .partitionBy(column)

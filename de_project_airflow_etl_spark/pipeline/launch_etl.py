@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from de_project_airflow_etl_spark import catalog
 from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs, replace_with_copy
 
 log = logging.getLogger(__name__)
@@ -89,19 +90,6 @@ SILVER_SCHEMA = T.StructType([
 ])
 
 PayloadFetcher = Callable[[str], dict]
-
-
-def _ensure_dynamic_overwrite(spark: SparkSession) -> None:
-    """Defensively force dynamic partition-overwrite semantics.
-
-    Every partitioned ``mode("overwrite")`` write below relies on it; the
-    session factory sets it, but these methods also accept an externally
-    built session (the driver hands us one), where Spark's default
-    STATIC mode would wipe the whole silver directory instead of
-    one partition. Runtime-settable, so set it at each write site —
-    same defensive pattern as nanosAsLong in ``tables.load``.
-    """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
 class LaunchPipeline:
@@ -204,7 +192,7 @@ class LaunchPipeline:
                .schema(RAW_LAUNCH_SCHEMA)
                .option("multiLine", True)   # one document per file
                .json(raw_path))
-        _ensure_dynamic_overwrite(self.spark)
+        catalog.ensure_dynamic_overwrite(self.spark)
         (self._flatten(raw).write
              .partitionBy("net")          # K2: hive-layout net=YYYY-MM-DD/
              .mode("overwrite")           # dynamic -> replaces only touched partitions
@@ -226,7 +214,7 @@ class LaunchPipeline:
                .json(self.raw_dir))
 
         def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            _ensure_dynamic_overwrite(batch_df.sparkSession)
+            catalog.ensure_dynamic_overwrite(batch_df.sparkSession)
             (batch_df.write
                      .partitionBy("net")
                      .mode("overwrite")
@@ -279,27 +267,22 @@ class LaunchPipeline:
         (Trino `sync_partition_metadata` -> Spark `MSCK REPAIR`)."""
         # Column comments mirror the reference DDL one-for-one
         # (src/sql/ddl/launch_events.sql:2-8).
-        self.spark.sql(f"""
-            CREATE TABLE IF NOT EXISTS {self.table_name} (
+        catalog.create_external_table(
+            self.spark, self.table_name, self.gold_dir,
+            columns_ddl="""
               id STRING COMMENT 'Unique identifier for the event',
               url STRING COMMENT 'URL associated with the event',
               name STRING COMMENT 'Name of the event',
               status STRING COMMENT 'Current status of the event',
               image_url STRING COMMENT 'URL of the event image',
               license STRING COMMENT 'License information'
-            )
-            USING PARQUET
-            PARTITIONED BY (net DATE COMMENT 'Net date for the event')
-            LOCATION '{self.gold_dir}'
-        """)
-        self.sync_partitions()
+            """,
+            partition_ddl="net DATE COMMENT 'Net date for the event'")
 
     def sync_partitions(self) -> None:
         """Register newly-written partition dirs and drop stale file
-        listings — Trino's ``sync_partition_metadata('ADD')`` becomes
-        ``MSCK REPAIR`` + a metadata cache refresh."""
-        self.spark.sql(f"MSCK REPAIR TABLE {self.table_name}")
-        self.spark.catalog.refreshTable(self.table_name)
+        listings (``catalog.sync_partitions``)."""
+        catalog.sync_partitions(self.spark, self.table_name)
 
     # -- flagship query (A1-A3) ---------------------------------------
     def daily_launch_events(self) -> DataFrame:

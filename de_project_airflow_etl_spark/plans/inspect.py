@@ -22,11 +22,17 @@ declared per query name:
   ``CartesianProduct`` in ``formatted_plan`` and every
   ``BroadcastNestedLoopJoin`` builds a one-row or limit-k side
   (``bnlj_builds_are_scalar``); a ``"justified"`` row inverts the build
-  check, a ``"none"`` row forbids the node outright.
+  check, a ``"none"`` row forbids the node outright;
+* ``window_keys``, run on every registered and staged query: no window
+  keyed by nothing or only by fixed-cardinality columns over raw rows
+  (``fixed_key_window_hazards``);
+* ``collects``, run on every registered and staged query: no
+  collect_list / collect_set keyed the same way over an unbounded input
+  (``unbounded_collects``); a ``"justified"`` row inverts the check.
 
-The window-hazard audits over the registry and the staged pen call
-``fixed_key_window_hazards`` and ``unbounded_collects``; both return
-their offenders (empty == pass).
+The four hazard walks (``unbounded_windows``,
+``fixed_key_window_hazards``, ``unbounded_collects``,
+``bnlj_builds_are_scalar``) return their offenders (empty == pass).
 """
 
 from __future__ import annotations

@@ -65,9 +65,8 @@ from de_project_airflow_etl_spark.registry import query
 def streaming_chained_window_rollup(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     from de_project_airflow_etl_spark.streaming.ingest import (
-        read_event_stream,
+        drain, read_event_stream,
     )
-    from de_project_airflow_etl_spark.streaming.stateful import _drain
     ev = read_event_stream(spark, sf_dir, with_watermark="1 day")
     hourly = (ev.selectExpr("ts", "event_type", f"{sql_cents('value')} AS c")
                 .groupBy(F.window("ts", "1 hour").alias("w"),
@@ -82,7 +81,7 @@ def streaming_chained_window_rollup(spark: SparkSession,
     out = daily.select(
         F.col("d.start").cast("date").cast("string").alias("day"),
         "event_type", "n_events", "cents")
-    return _drain(out, spark, sf_dir, output_mode="append")
+    return drain(out, spark, sf_dir, output_mode="append")
 
 
 @query(
@@ -114,9 +113,8 @@ def streaming_chained_window_rollup(spark: SparkSession,
 def streaming_stream_stream_semi_join(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     from de_project_airflow_etl_spark.streaming.ingest import (
-        read_event_stream,
+        drain, read_event_stream,
     )
-    from de_project_airflow_etl_spark.streaming.stateful import _drain
     ev = read_event_stream(spark, sf_dir, with_watermark=None)
     clicks = (ev.filter(F.col("event_type") == "click")
                 .select("user_id", F.col("ts").alias("click_ts"))
@@ -136,4 +134,4 @@ def streaming_stream_stream_semi_join(spark: SparkSession,
         "left_semi")
     out = joined.select("event_id",
                         F.col("p_user_id").alias("user_id"))
-    return _drain(out, spark, sf_dir, output_mode="append")
+    return drain(out, spark, sf_dir, output_mode="append")

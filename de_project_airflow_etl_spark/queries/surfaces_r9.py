@@ -959,8 +959,8 @@ def named_window_daily_stats(spark: SparkSession,
 )
 def streaming_stream_stream_full_join(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    from de_project_airflow_etl_spark.streaming.stateful import (
-        _drain, read_event_stream,
+    from de_project_airflow_etl_spark.streaming.ingest import (
+        drain, read_event_stream,
     )
     ev = read_event_stream(spark, sf_dir, with_watermark=None)
     clicks = (ev.filter(F.col("event_type") == "click")
@@ -988,4 +988,4 @@ def streaming_stream_stream_full_join(spark: SparkSession,
         "event_id", "click_event_id",
         (F.unix_micros("purchase_ts")
          - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, sf_dir, output_mode="append")
+    return drain(out, spark, sf_dir, output_mode="append")

@@ -19,6 +19,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs
 from de_project_airflow_etl_spark.registry import query
@@ -60,17 +61,49 @@ def _source_bytes(spark: SparkSession, path: str) -> int:
 
 
 @contextmanager
-def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
-    """Size shuffle partitions for a stateful stream over ``sf_dir``'s
-    events (``stream_state_partitions``); restores the batch setting
-    afterwards."""
-    prev = spark.conf.get(SHUFFLE_PARTITIONS)
-    n = stream_state_partitions(spark, _source_bytes(spark, events_path(sf_dir)))
-    spark.conf.set(SHUFFLE_PARTITIONS, str(n))
+def _conf(spark: SparkSession, key: str, value: str):
+    """Set ``key`` for the block, then restore its previous value, or
+    unset it if it was unset before."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(SHUFFLE_PARTITIONS, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
+    """Size shuffle partitions for a stateful stream over ``sf_dir``'s
+    events (``stream_state_partitions``) for a ``with`` block; restores
+    the batch setting afterwards."""
+    n = stream_state_partitions(spark, _source_bytes(spark, events_path(sf_dir)))
+    return _conf(spark, SHUFFLE_PARTITIONS, str(n))
+
+
+def _drained(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
+             output_mode: str) -> StreamingQuery:
+    """Run ``stream_df`` to completion with ``Trigger.AvailableNow``
+    into a memory sink, its state sized by ``stream_shuffle_sizing``;
+    returns the finished query (its ``name`` is the sink's table)."""
+    with stream_shuffle_sizing(spark, sf_dir):
+        q = (stream_df.writeStream
+                      .format("memory")
+                      .queryName(f"stream_{uuid.uuid4().hex[:8]}")
+                      .outputMode(output_mode)
+                      .trigger(availableNow=True)
+                      .start())
+        q.awaitTermination()
+    return q
+
+
+def drain(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
+          output_mode: str) -> DataFrame:
+    """The memory-sink ``availableNow`` drain of a stream over
+    ``sf_dir``'s events: the materialized result as a table."""
+    return spark.table(_drained(stream_df, spark, sf_dir, output_mode).name)
 
 
 def windowed_counts(events: DataFrame) -> DataFrame:
@@ -110,22 +143,9 @@ def read_event_stream(spark: SparkSession, sf_dir: str,
 
 
 def run_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the stream with Trigger.AvailableNow into a memory sink and
-    return the materialized aggregate."""
-    sink = f"stream_windowed_{uuid.uuid4().hex[:8]}"
+    """Drain the windowed aggregate of the event stream and return it."""
     stream = read_event_stream(spark, sf_dir, with_watermark=None)
-    with stream_shuffle_sizing(spark, sf_dir):
-        q = (
-            windowed_counts(stream)
-            .writeStream
-            .format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(windowed_counts(stream), spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -171,22 +191,11 @@ ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
 )
 def streaming_windowed_counts_rocksdb(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = None
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        pass
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        # run_available_now fully drains the stream before returning, so
-        # the provider conf is live for the whole query lifetime.
+    # run_available_now fully drains the stream before returning, so
+    # the provider conf is live for the whole query lifetime.
+    with _conf(spark, "spark.sql.streaming.stateStore.providerClass",
+               ROCKSDB_PROVIDER):
         return run_available_now(spark, sf_dir)
-    finally:
-        if prev:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
 
 
 @query(
@@ -213,8 +222,6 @@ def streaming_windowed_counts_rocksdb(spark: SparkSession,
 )
 def streaming_observed_ingest_metrics(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import types as T
 
     from de_project_airflow_etl_spark.operators.quality import (
@@ -223,10 +230,9 @@ def streaming_observed_ingest_metrics(spark: SparkSession,
 
     stream = read_event_stream(spark, sf_dir, with_watermark=None)
     observed = stream.observe(
-        f"ingest_dq_{_uuid.uuid4().hex[:8]}",
+        f"ingest_dq_{uuid.uuid4().hex[:8]}",
         *dq_observation_metrics(),
         F.unix_micros(F.max("ts")).alias("max_ts_us"))
-    sink = f"stream_obs_{_uuid.uuid4().hex[:8]}"
     # recentProgress is a ring buffer (spark.sql.streaming.
     # numRecentProgressUpdates, default 100): if availableNow ever
     # splits the source into more micro-batches than that (more files,
@@ -234,22 +240,11 @@ def streaming_observed_ingest_metrics(spark: SparkSession,
     # metrics would silently drop and the sums undercount. Raise it
     # for this run — deterministic, unlike a StreamingQueryListener
     # whose events are delivered async and may lag awaitTermination.
-    progress_key = "spark.sql.streaming.numRecentProgressUpdates"
-    prev_progress = spark.conf.get(progress_key, None)
-    spark.conf.set(progress_key, "100000")
-    try:
-        with stream_shuffle_sizing(spark, sf_dir):
-            q = (observed.groupBy("event_type")
-                         .agg(F.count(F.lit(1)).alias("n"))
-                         .writeStream.format("memory").queryName(sink)
-                         .outputMode("complete")
-                         .trigger(availableNow=True).start())
-            q.awaitTermination()
-    finally:
-        if prev_progress is None:
-            spark.conf.unset(progress_key)
-        else:
-            spark.conf.set(progress_key, prev_progress)
+    with _conf(spark, "spark.sql.streaming.numRecentProgressUpdates",
+               "100000"):
+        q = _drained(observed.groupBy("event_type")
+                             .agg(F.count(F.lit(1)).alias("n")),
+                     spark, sf_dir, "complete")
     # cross-batch accumulation in exact integer cents — dividing once
     # at the end instead of summing per-batch doubles keeps the result
     # bit-equal to the oracle's SUM(cents)/100 under ANY batching
@@ -302,18 +297,9 @@ def streaming_observed_ingest_metrics(spark: SparkSession,
 )
 def streaming_dedup_within_watermark(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, sf_dir, with_watermark="1 day")
     deduped = (stream
                .withColumn("day", F.to_date("ts").cast("string"))
                .dropDuplicatesWithinWatermark(["event_type", "day"])
                .select("event_type", "day"))
-    with stream_shuffle_sizing(spark, sf_dir):
-        q = (deduped.writeStream
-             .format("memory")
-             .queryName(sink)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain(deduped, spark, sf_dir, output_mode="append")

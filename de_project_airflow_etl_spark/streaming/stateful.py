@@ -35,7 +35,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -47,7 +46,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.streaming.ingest import (
-    read_event_stream, stream_shuffle_sizing,
+    drain, read_event_stream,
 )
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -77,20 +76,6 @@ _SESSION_ORACLE = f"""
 """
 
 
-def _drain(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
-           output_mode: str = "update") -> DataFrame:
-    sink = f"stream_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_sizing(spark, sf_dir):
-        q = (stream_df.writeStream
-                      .format("memory")
-                      .queryName(sink)
-                      .outputMode(output_mode)
-                      .trigger(availableNow=True)
-                      .start())
-        q.awaitTermination()
-    return spark.table(sink)
-
-
 @query(
     "streaming_dedup_events",
     oracle="""
@@ -109,7 +94,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (stream.dropDuplicates(["event_id"])
                  .groupBy("event_type")
                  .agg(F.count(F.lit(1)).alias("n_unique")))
-    return _drain(agg, spark, sf_dir, output_mode="complete")
+    return drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -135,7 +120,7 @@ def streaming_dedup_bounded_state(spark: SparkSession,
     agg = (stream.dropDuplicatesWithinWatermark(["event_id"])
                  .groupBy("event_type")
                  .agg(F.count(F.lit(1)).alias("n_unique")))
-    return _drain(agg, spark, sf_dir, output_mode="complete")
+    return drain(agg, spark, sf_dir, output_mode="complete")
 
 
 def _sessionize_group(
@@ -196,7 +181,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                   timeoutConf=GroupStateTimeout.NoTimeout,
               )
     )
-    return _drain(sessions, spark, sf_dir, output_mode="update")
+    return drain(sessions, spark, sf_dir, output_mode="update")
 
 
 @query(
@@ -226,7 +211,7 @@ def streaming_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFram
     # running event count per segment is the enrichment payload here.
     agg = (joined.groupBy(F.col("c_mktsegment").alias("segment"))
                  .agg(F.count(F.lit(1)).alias("event_count")))
-    return _drain(agg, spark, sf_dir, output_mode="complete")
+    return drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -273,7 +258,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = joined.select(
         "event_id", F.col("p_user_id").alias("user_id"),
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, sf_dir, output_mode="append")
+    return drain(out, spark, sf_dir, output_mode="append")
 
 
 @query(
@@ -300,7 +285,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.count(F.lit(1)).alias("n_events"))
                  .select("user_id", "session_start", "session_end",
                          "n_events"))
-    return _drain(agg, spark, sf_dir, output_mode="complete")
+    return drain(agg, spark, sf_dir, output_mode="complete")
 
 
 @query(
@@ -391,4 +376,4 @@ def stream_stream_left_join_plan(spark: SparkSession, sf_dir: str,
         "event_id", F.col("p_user_id").alias("user_id"),
         (F.unix_micros("purchase_ts")
          - F.unix_micros("click_ts")).alias("gap_us"))
-    return _drain(out, spark, sf_dir, output_mode="append")
+    return drain(out, spark, sf_dir, output_mode="append")

@@ -1,11 +1,16 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: the formatted physical plan of every bench
 headline query at sf0.01, with the scale-critical properties called
-out. Run from the repo root: python scripts/gen_plans.py"""
+out. Run from the repo root: python scripts/gen_plans.py
+
+Expression ids, plan ids and RDD ids are renumbered per plan in order of
+first appearance, so a plan's text does not depend on what the session
+built before it and two runs write the same file."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -118,22 +123,37 @@ the deliberate quadratic-within-bucket density pass, 1.5 MB shuffle,
 gate-capped bucket width — scale story documented in its docstring).
 """
 
+_IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+
+
+def _renumber(plan: str) -> str:
+    """Each kind of id (``#``, ``plan_id=``, ``RDD[``) numbered from 0
+    in order of first appearance within ``plan``."""
+    ids: dict[str, dict[str, int]] = {}
+
+    def number(m: re.Match) -> str:
+        kind = ids.setdefault(m.group(1), {})
+        return f"{m.group(1)}{kind.setdefault(m.group(2), len(kind))}"
+
+    return _IDS.sub(number, plan)
+
+
+def _section(spark, mode, name: str, q) -> str:
+    plan = _renumber(q.fn(spark, SF_DIR)._jdf.queryExecution().explainString(mode))
+    spark.catalog.clearCache()
+    return f"\n## {name}\n\n{q.doc.strip()}\n\n```\n{plan}\n```\n"
+
 
 def main() -> None:
     spark = get_spark("plans")
     registry = all_queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
+    # Streaming queries are skipped: fn() drains the stream, and the
+    # returned relation is just the memory sink, not the interesting plan.
     out = [HEADER]
-    for name in HEADLINE:
-        q = registry[name]
-        if "streaming" in q.tags:
-            continue  # fn() drains the stream; the returned relation is
-            # just the memory sink, not the interesting plan
-        df = q.fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(mode)
-        out.append(f"\n## {name}\n\n{q.doc.strip()}\n\n```\n{plan}\n```\n")
-        spark.catalog.clearCache()
+    out += [_section(spark, mode, name, registry[name]) for name in HEADLINE
+            if "streaming" not in registry[name].tags]
     from de_project_airflow_etl_spark.staged import STAGED
     if STAGED:
         out.append(
@@ -142,14 +162,8 @@ def main() -> None:
             "implemented and oracle-verified, promoted to the registry "
             "once the current driver window is adjudicated (shuffle "
             "volumes for these are in docs/SCALING.md).\n")
-    for name in sorted(STAGED):
-        q = STAGED[name]
-        if "streaming" in q.tags:
-            continue  # same guard as the registry loop above
-        df = q.fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(mode)
-        out.append(f"\n## {name}\n\n{q.doc.strip()}\n\n```\n{plan}\n```\n")
-        spark.catalog.clearCache()
+    out += [_section(spark, mode, name, STAGED[name]) for name in sorted(STAGED)
+            if "streaming" not in STAGED[name].tags]
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("".join(out))

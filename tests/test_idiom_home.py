@@ -7,11 +7,12 @@ the package whose text IS one of those idioms is a re-grown private
 copy: import the helper from ``queries.util`` instead.
 
 ``plans/inspect.py`` owns the plan checks (scan count, window and node
-walks, the window-hazard and collect audits with their key sets) and
-``tests/conftest.py`` the cache-release fixture; per-query scan budgets,
-window rules and nested-loop exceptions are rows of ``PLAN_RULES`` in
-``tests/test_plan_rules.py``, whose nested-loop rule runs over every
-registered and staged query.
+walks, the window-key and collect hazard checks with their key sets)
+and ``tests/conftest.py`` the cache-release fixture; per-query scan
+budgets, window rules and nested-loop and collect exceptions are rows
+of ``PLAN_RULES`` in ``tests/test_plan_rules.py``, whose nested-loop,
+window-key and collect rules run over every registered and staged
+query. No other test module runs those three checks.
 
 ``hadoop_fs.py`` owns py4j access to the Hadoop FileSystem classes.
 """
@@ -121,9 +122,9 @@ def test_plan_checks_are_defined_only_in_inspect():
     the cache-release fixture or the window-hazard key sets), or a plan
     helper imported from another test module, outside
     ``plans/inspect.py`` is a re-grown copy: use ``inspect.scan_count``
-    / ``window_nodes`` / ``node_names`` / ``fixed_key_window_hazards``
-    / ``unbounded_collects``, a ``PLAN_RULES`` row, or the
-    ``release_caches`` fixture instead."""
+    / ``window_nodes`` / ``node_names``, a ``PLAN_RULES`` row (the
+    window-key and collect hazards are its ``window_keys`` and
+    ``collects`` rules), or the ``release_caches`` fixture instead."""
     helpers = (_PLAN_HELPERS | _PLAN_CONSTANTS
                | _top_level_names(ast.parse(PLAN_HOME.read_text())))
     copies = []
@@ -184,6 +185,26 @@ def test_nested_loop_rule_has_one_home():
                             if isinstance(c, ast.Call))):
                 copies.append(f"{where}:{node.lineno} {node.name} runs "
                               f"the nested-loop gate over a bank")
+    assert not copies, "\n".join(copies)
+
+
+def test_hazard_rules_have_one_home():
+    """The window-key and collect hazard checks are the ``window_keys``
+    and ``collects`` rules of ``PLAN_RULES``, applied to every query: a
+    test module calling ``fixed_key_window_hazards`` or
+    ``unbounded_collects`` elsewhere is a re-grown per-file audit."""
+    checks = {"fixed_key_window_hazards", "unbounded_collects"}
+    copies = []
+    for path in sorted(TESTS.rglob("*.py")):
+        if path == RULES_HOME:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                called = (getattr(node.func, "id", None)
+                          or getattr(node.func, "attr", None))
+                if called in checks:
+                    copies.append(f"{path.relative_to(PKG.parent)}:"
+                                  f"{node.lineno} calls {called}")
     assert not copies, "\n".join(copies)
 
 

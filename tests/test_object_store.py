@@ -35,6 +35,7 @@ pytestmark = pytest.mark.skipif(
 def test_s3a_pipeline_round_trip():
     """ingest -> transform -> publish entirely on s3a://, then read the
     flagship aggregate back through the catalog."""
+    from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs
     from de_project_airflow_etl_spark.pipeline.fixtures import (
         launch_day_payload,
     )
@@ -55,11 +56,18 @@ def test_s3a_pipeline_round_trip():
 
     # dynamic partition overwrite on the object store: re-running one
     # interval must replace exactly that partition (the committer
-    # behavior that cannot be proven on file://)
+    # behavior that cannot be proven on file://). ingest keeps an
+    # existing raw key (the idempotent put), so the day's new payload
+    # lands only once its old raw key is deleted.
+    fs, (raw_key,) = hadoop_fs(spark, f"{p.raw_dir}/2024-12-01.json")
+    assert fs.delete(raw_key, False)
     p.run("2024-12-01", lambda d: launch_day_payload(d, 7))
     counts = {r["net"].isoformat(): r["event_count"]
               for r in p.daily_launch_events().collect()}
     assert counts == {"2024-12-01": 7, "2024-12-02": 4}
+    # 7 launches + the payload's in-day duplicate record; an append
+    # would leave 6 + 8 = 14 rows with the same 7 distinct ids
+    assert p.read_gold().filter("net = '2024-12-01'").count() == 8
 
 
 def test_s3a_confs_reach_hadoop_connector():

@@ -3,9 +3,10 @@ final physical plan must keep at 100 TB.
 
 ``PLAN_RULES`` covers registered and staged queries. Each (query, rule)
 pair runs as its own test item; a query is built once for all its
-rules. The ``nested_loops`` rule runs for every registered and staged
-query, with or without a row. The checks live in ``plans/inspect.py``.
-The rule vocabulary:
+rules. The ``nested_loops``, ``window_keys`` and ``collects`` rules run
+for every registered and staged query, streaming drains included, with
+or without a row. The checks live in ``plans/inspect.py``. The rule
+vocabulary:
 
 * ``scans: N``: at most N ``Scan parquet`` in the final executed plan.
   A bounded intermediate that feeds two or more consumers is
@@ -34,6 +35,16 @@ The rule vocabulary:
   and the item fails once the scalar check passes, so a stale
   exception cannot outlive its reason. ``"none"``: neither a
   ``CartesianProduct`` nor a ``BroadcastNestedLoopJoin`` at all.
+* ``window_keys`` (every query; takes no value): no window keyed by
+  nothing or only by fixed-cardinality columns over raw rows
+  (``fixed_key_window_hazards`` is empty), since each such partition
+  is data-sized at 100 TB.
+* ``collects`` (every query): no collect_list / collect_set keyed by
+  nothing or only by fixed-cardinality columns over an unbounded input
+  (``unbounded_collects`` is empty), since one aggregation state would
+  buffer a data-sized group. ``"justified"``: the collect is bounded by
+  a constant the walk cannot see (the row's comment says which); the
+  item fails once the check passes.
 
 Rules on plans that a checkpoint hides (interior plans) and checks
 outside this vocabulary (window partition keys, WindowGroupLimit
@@ -48,8 +59,8 @@ import functools
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, scan_count, unbounded_windows,
-    window_nodes,
+    bnlj_builds_are_scalar, fixed_key_window_hazards, formatted_plan,
+    scan_count, unbounded_collects, unbounded_windows, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.staged import STAGED
@@ -93,8 +104,11 @@ PLAN_RULES: dict[str, dict] = {
     "knn_per_label": {"nested_loops": "justified"},
     # broadcasts the one-row vec_id = 0 query embedding (a key filter,
     # one row by key uniqueness); the codebook seeds are a global
-    # aggregate the check already accepts
-    "ann_pq_adc_search": {"nested_loops": "justified"},
+    # aggregate the check already accepts. It collects the
+    # vec_id < PQ_K codebook-seed slice, bounded by the PQ_K constant
+    # in the filter, which the subtree walk cannot see.
+    "ann_pq_adc_search": {"nested_loops": "justified",
+                          "collects": "justified"},
     # broadcasts the checkpointed one-row centroid array (both
     # assignment sites) and the one-row vec_id = 0 query row
     "ann_ivf_search": {"nested_loops": "justified"},
@@ -594,11 +608,14 @@ _VOCABULARY = {
     "max_windows": lambda v: type(v) is int and v >= 0,
     "has_window": lambda v: v is True,
     "nested_loops": lambda v: v in ("justified", "none"),
+    "window_keys": lambda v: False,
+    "collects": lambda v: v == "justified",
 }
 
-# one item per (query, rule) pair; every query gets a nested_loops item
+# one item per (query, rule) pair; every query gets these three items
+_EVERY_QUERY = dict.fromkeys(("nested_loops", "window_keys", "collects"))
 _CASES = [(n, rule) for n in sorted(_QUERIES)
-          for rule in {**PLAN_RULES.get(n, {}), "nested_loops": None}]
+          for rule in {**PLAN_RULES.get(n, {}), **_EVERY_QUERY}]
 
 
 def test_rules_use_the_vocabulary():
@@ -638,6 +655,23 @@ def test_plan_rule(spark, sf_dir, name, rule):
             f"{name}: {n_windows} WindowExec nodes (at most {bound})")
     elif rule == "has_window":
         assert window_nodes(df), f"{name}: expected a WindowExec"
+    elif rule == "window_keys":
+        offenders = fixed_key_window_hazards(df)
+        assert not offenders, (
+            f"{name}: window over a subtree with no Aggregate/checkpoint/"
+            f"WindowGroupLimit, a data-sized partition at 100 TB: "
+            f"{offenders}")
+    elif rule == "collects":
+        offenders = unbounded_collects(df)
+        if bound == "justified":
+            assert offenders, (
+                f"{name}: stale exception: no unbounded collect left, so "
+                f"drop the row's collects")
+        else:
+            assert not offenders, (
+                f"{name}: collect over a subtree with no Aggregate/"
+                f"checkpoint/limit, one aggregation state buffers a "
+                f"data-sized group: {offenders}")
     else:  # nested_loops
         plan = formatted_plan(df)
         assert "CartesianProduct" not in plan, f"{name}: a CartesianProduct"
