@@ -223,10 +223,6 @@ HEADLINE = (
 
 
 def main() -> None:
-    # Pin the LOF salt (as perfbench/run.py does): unpinned it follows
-    # the host's defaultParallelism, so the lof_bucket_outliers plan
-    # shape timed here would differ from host to host.
-    os.environ["SPARK_GRAFT_LOF_SALT"] = "1"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
     registry = all_queries()

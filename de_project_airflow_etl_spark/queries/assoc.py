@@ -31,26 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.queries.util import (
-    dlit, fold_sorted_spark, fold_sorted_sql, sql_cents, wide,
+    SQL_DAILY_CENTS, daily_cents, dlit, fold_sorted_spark, fold_sorted_sql,
+    sql_cents, wide,
 )
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-
-def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The calendar-bounded daily revenue table (day, cents)."""
-    return (load(spark, sf_dir, "events")
-            .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{sql_cents('value')} AS c")
-            .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
-
-
-_SQL_DAILY = f"""
-        d AS (
-          SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
-          FROM events GROUP BY 1
-        )"""
 
 
 # ---------------------------------------------------------------------
@@ -99,7 +84,7 @@ _LB_Q = (" + ".join(
 @query(
     "ljung_box_daily_revenue",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n,
@@ -136,7 +121,7 @@ _LB_Q = (" + ".join(
     tags=("timeseries", "statistics"),
 )
 def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arr = _daily_cents(spark, sf_dir).agg(
+    arr = daily_cents(spark, sf_dir).agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -741,7 +726,7 @@ def err_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "smape_daily_forecasts",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -784,7 +769,7 @@ def err_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "evaluation"),
 )
 def smape_daily_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arr = _daily_cents(spark, sf_dir).agg(
+    arr = daily_cents(spark, sf_dir).agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
         F.count(F.lit(1)).cast("long").alias("n"))
@@ -822,7 +807,7 @@ def smape_daily_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pinball_loss_quantile_forecast",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -867,7 +852,7 @@ def smape_daily_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pinball_loss_quantile_forecast(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    arr = _daily_cents(spark, sf_dir).agg(
+    arr = daily_cents(spark, sf_dir).agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
         F.count(F.lit(1)).cast("long").alias("n"))

@@ -16,25 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from de_project_airflow_etl_spark.queries.util import sql_cents, wide
+from de_project_airflow_etl_spark.queries.util import (
+    SQL_DAILY_CENTS, daily_cents, wide,
+)
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.queries.mining import KM_CENSOR_DAYS
 from de_project_airflow_etl_spark.tables import load
-
-_SQL_DAILY = f"""
-        d AS (
-          SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
-          FROM events GROUP BY 1
-        )"""
-
-
-def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (load(spark, sf_dir, "events")
-            .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{sql_cents('value')} AS c")
-            .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
-
 
 # --------------------------- Pettitt changepoint test on daily revenue
 
@@ -42,7 +29,7 @@ def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pettitt_changepoint_daily",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  list(day ORDER BY day) AS days,
@@ -113,7 +100,7 @@ def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pettitt_changepoint_daily(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    dd = _spark_daily(spark, sf_dir)
+    dd = daily_cents(spark, sf_dir)
     arr = dd.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
@@ -156,7 +143,7 @@ def pettitt_changepoint_daily(spark: SparkSession,
 @query(
     "cox_stuart_trend_daily",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -201,7 +188,7 @@ def pettitt_changepoint_daily(spark: SparkSession,
 )
 def cox_stuart_trend_daily(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    dd = _spark_daily(spark, sf_dir)
+    dd = daily_cents(spark, sf_dir)
     arr = dd.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
@@ -232,7 +219,7 @@ def cox_stuart_trend_daily(spark: SparkSession,
 @query(
     "dixon_q_daily_extremes",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list_sort(list(cents)) AS s,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -265,7 +252,7 @@ def cox_stuart_trend_daily(spark: SparkSession,
 )
 def dixon_q_daily_extremes(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    dd = _spark_daily(spark, sf_dir)
+    dd = daily_cents(spark, sf_dir)
     arr = dd.agg(F.expr("array_sort(collect_list(cents))").alias("s"),
                  F.count(F.lit(1)).cast("long").alias("n"))
     return arr.selectExpr(
@@ -292,7 +279,7 @@ def dixon_q_daily_extremes(spark: SparkSession,
 @query(
     "turning_points_daily",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -330,7 +317,7 @@ def dixon_q_daily_extremes(spark: SparkSession,
 )
 def turning_points_daily(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
-    dd = _spark_daily(spark, sf_dir)
+    dd = daily_cents(spark, sf_dir)
     arr = dd.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),

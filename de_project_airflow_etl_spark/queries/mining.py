@@ -10,6 +10,8 @@ accumulated, a 100 TB plan story per doc string, no ``rand()``, no
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1154,25 +1156,25 @@ LOF_BITS = 4   # coarser sign-LSH than the ANN family's 8 bits: the
 # at cluster scale <=16 tasks carry the quadratic stage and inherit
 # the buckets' size skew; salting multiplies the key space by
 # the salt factor at the cost of replicating the o side that many
-# times. The factor is SCALE-ADAPTIVE (guide §2, r11 fix of the r10
-# env-only knob): derived from the session's defaultParallelism so a
-# real cluster engages the salted join automatically while local[32]
-# stays unsalted (32 // 16 // 2 = 1) — the measured-faster local
-# shape (interleaved warm A/B at sf0.1: unsalted 3.33s vs salt=8
-# 3.85s vs salt=4 3.70s; replication costs more than the extra
-# parallelism buys while the qual relation fits one task's memory).
-# SPARK_GRAFT_LOF_SALT overrides both directions; both branches are
-# oracle-exact (tests/test_mining_properties.py pins salted==unsalted
-# row-for-row).
-import os as _os
+# times. The factor follows the embeddings' bytes, one salt per
+# advisory partition size (the rule stream state partitions follow),
+# capped at defaultParallelism // 2^LOF_BITS so the salted key space
+# never exceeds the cluster's task slots. Every test scale factor fits
+# one advisory partition, so the salt is 1 on any host: the
+# measured-faster local shape (interleaved warm A/B at sf0.1:
+# unsalted 3.33s vs salt=8 3.85s vs salt=4 3.70s; replication costs
+# more than the extra parallelism buys while the qual relation fits
+# one task's memory). Both branches are oracle-exact
+# (tests/test_plans_r10opt.py pins salted == unsalted row-for-row).
 
 
-def _lof_salt(spark: SparkSession) -> int:
-    env = _os.environ.get("SPARK_GRAFT_LOF_SALT")
-    if env is not None:
-        return max(1, int(env))
-    return max(1, spark.sparkContext.defaultParallelism
-               // (1 << LOF_BITS) // 2)
+def _lof_salt(spark: SparkSession, embedding_bytes: int) -> int:
+    from de_project_airflow_etl_spark.streaming.ingest import (
+        byte_sized_partitions,
+    )
+    return byte_sized_partitions(
+        spark, embedding_bytes,
+        spark.sparkContext.defaultParallelism // (1 << LOF_BITS))
 
 
 def _lof_bucket_sql(col: str) -> str:
@@ -1263,14 +1265,16 @@ _LOF_D2 = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
     tags=("similarity", "anomaly"),
 )
 def lof_bucket_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _lof_pairs(spark, sf_dir)
-    return _lof_scores(pairs)
+    from de_project_airflow_etl_spark.streaming.ingest import source_bytes
+    salt = _lof_salt(spark, source_bytes(
+        spark, os.path.join(sf_dir, "embeddings.parquet")))
+    return _lof_scores(_lof_pairs(spark, sf_dir, salt))
 
 
-def _lof_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lof_pairs(spark: SparkSession, sf_dir: str, lof_salt: int) -> DataFrame:
     """The blocked all-pairs distance relation (p_vec, o_vec, bucket,
-    bsize, d2) — factored out of the query so the plan gate can prove
-    the salted join engages without the knn checkpoint hiding it."""
+    bsize, d2), its join salted ``lof_salt`` ways — factored out of the
+    query so a test can prove the salted join engages."""
     e = load(spark, sf_dir, "embeddings")
     bucket = F.expr(
         f"aggregate(sequence(1, {LOF_BITS}), 0,"
@@ -1299,7 +1303,6 @@ def _lof_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # salt is >1 (identical pair set: each p row meets each bucket-mate
     # exactly once, on its own salt) — see the _lof_salt note for the
     # measured local default and the scale-adaptive derivation.
-    lof_salt = _lof_salt(spark)
     if lof_salt > 1:
         p_s = p.withColumn(
             "psalt",

@@ -21,28 +21,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.queries.util import (
-    fold_sorted_spark, fold_sorted_sql, sql_cents, wide,
+    SQL_DAILY_CENTS, daily_cents, fold_sorted_spark, fold_sorted_sql,
+    sql_cents, wide,
 )
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
 
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (load(spark, sf_dir, "events")
-            .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{sql_cents('value')} AS c")
-            .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
-
-
-_SQL_DAILY = f"""
-        d AS (
-          SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
-          FROM events GROUP BY 1
-        )"""
 
 
 # ---------------------------------------------------------------------
@@ -189,7 +175,7 @@ def edf_two_sample_panel_weekend(spark: SparkSession,
 @query(
     "seasonal_strength_weekly",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         arr AS (
           SELECT list(cents ORDER BY day) AS a,
                  CAST(COUNT(*) AS BIGINT) AS n
@@ -254,7 +240,7 @@ def edf_two_sample_panel_weekend(spark: SparkSession,
 )
 def seasonal_strength_weekly(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    arr = _daily_cents(spark, sf_dir).agg(
+    arr = daily_cents(spark, sf_dir).agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
         F.count(F.lit(1)).cast("long").alias("n"))
@@ -300,7 +286,7 @@ def seasonal_strength_weekly(spark: SparkSession,
 @query(
     "grubbs_max_deviation_daily",
     oracle=f"""
-        WITH {_SQL_DAILY},
+        WITH {SQL_DAILY_CENTS},
         m AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
                  CAST(SUM(cents) AS BIGINT) AS s,
@@ -339,7 +325,7 @@ def seasonal_strength_weekly(spark: SparkSession,
 )
 def grubbs_max_deviation_daily(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    d = _daily_cents(spark, sf_dir).localCheckpoint()
+    d = daily_cents(spark, sf_dir).localCheckpoint()
     m = d.agg(F.count(F.lit(1)).cast("long").alias("n"),
               F.sum("cents").cast("long").alias("s"),
               F.expr("SUM(CAST(cents AS DECIMAL(38,0)) * cents)")

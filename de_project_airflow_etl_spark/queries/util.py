@@ -14,8 +14,10 @@ Oracles use the same construction.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from de_project_airflow_etl_spark.tables import load
 
 
 def dsum(col: Column | str, alias: str) -> Column:
@@ -52,6 +54,23 @@ def cents(col: Column | str) -> Column:
 
 def sql_cents(expr: str) -> str:
     return f"CAST(ROUND({expr} * 100) AS BIGINT)"
+
+
+def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The calendar-bounded daily revenue table (day, cents)."""
+    return (load(spark, sf_dir, "events")
+            .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
+                        f"{sql_cents('value')} AS c")
+            .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
+
+
+# ``daily_cents`` as the oracles' ``d`` CTE
+SQL_DAILY_CENTS = f"""
+        d AS (
+          SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
+                 CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
+          FROM events GROUP BY 1
+        )"""
 
 
 # Exact integers that can pass 2^53 (DECIMAL(38,0) sums of products,

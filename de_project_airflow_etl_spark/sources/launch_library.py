@@ -29,6 +29,9 @@ T1-T4 — the source replaces only the download step.
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
 from datetime import date, timedelta
 
 from pyspark.sql.datasource import (
@@ -203,6 +206,21 @@ class JsonlCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
+def _stage_rows(path: str, iterator) -> JsonlCommit:
+    """One task's write for both JSONL sinks: its rows as JSON lines in
+    a fresh staging file under ``path``, which only the driver commit
+    renames into place."""
+    stage = os.path.join(path, "_staging")
+    os.makedirs(stage, exist_ok=True)
+    tmp = os.path.join(stage, f"task-{uuid.uuid4().hex}.jsonl")
+    n = 0
+    with open(tmp, "w") as f:
+        for row in iterator:
+            f.write(json.dumps(row.asDict(recursive=True), default=str) + "\n")
+            n += 1
+    return JsonlCommit(tmp, n)
+
+
 class JsonlSinkWriter(DataSourceWriter):
     """JSONL sink with a two-phase commit: every task writes to a
     staging file and reports it in its commit message; only the driver
@@ -221,24 +239,9 @@ class JsonlSinkWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     def write(self, iterator) -> JsonlCommit:
-        import json
-        import os
-        import uuid
-
-        stage = os.path.join(self.path, "_staging")
-        os.makedirs(stage, exist_ok=True)
-        tmp = os.path.join(stage, f"task-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(recursive=True),
-                                   default=str) + "\n")
-                n += 1
-        return JsonlCommit(tmp, n)
+        return _stage_rows(self.path, iterator)
 
     def commit(self, messages) -> None:
-        import json
-        import os
         import shutil
 
         import re
@@ -309,29 +312,12 @@ class JsonlStreamSinkWriter(DataSourceStreamWriter):
         self.path = options["path"]
 
     def write(self, iterator) -> JsonlCommit:
-        import json
-        import os
-        import uuid
-
-        stage = os.path.join(self.path, "_staging")
-        os.makedirs(stage, exist_ok=True)
-        tmp = os.path.join(stage, f"task-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(recursive=True),
-                                   default=str) + "\n")
-                n += 1
-        return JsonlCommit(tmp, n)
+        return _stage_rows(self.path, iterator)
 
     def _manifest_path(self) -> str:
-        import os
         return os.path.join(self.path, "_STREAM_MANIFEST.json")
 
     def commit(self, messages, batchId: int) -> None:
-        import json
-        import os
-
         manifest = {"batches": {}}
         if os.path.exists(self._manifest_path()):
             with open(self._manifest_path()) as f:
@@ -371,7 +357,6 @@ class JsonlStreamSinkWriter(DataSourceStreamWriter):
         os.replace(tmp_manifest, self._manifest_path())
 
     def abort(self, messages, batchId: int) -> None:
-        import os
         for m in messages:
             if m is not None and os.path.exists(m.tmp_path):
                 os.remove(m.tmp_path)

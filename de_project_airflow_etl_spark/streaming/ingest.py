@@ -44,16 +44,21 @@ def events_path(sf_dir: str) -> str:
     return f"{sf_dir}/events.parquet"
 
 
-def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
-    """ceil(source_bytes / advisory partition size), in
-    [1, spark.sql.shuffle.partitions]."""
+def byte_sized_partitions(spark: SparkSession, source_bytes: int,
+                          cap: int) -> int:
+    """ceil(source_bytes / advisory partition size), in [1, cap]."""
     advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
         .JavaUtils.byteStringAsBytes(spark.conf.get(ADVISORY_PARTITION_BYTES))
-    cap = int(spark.conf.get(SHUFFLE_PARTITIONS))
     return max(1, min(cap, -(-source_bytes // advisory)))
 
 
-def _source_bytes(spark: SparkSession, path: str) -> int:
+def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
+    """``byte_sized_partitions`` capped at spark.sql.shuffle.partitions."""
+    return byte_sized_partitions(spark, source_bytes,
+                                 int(spark.conf.get(SHUFFLE_PARTITIONS)))
+
+
+def source_bytes(spark: SparkSession, path: str) -> int:
     """Bytes under ``path`` through the Hadoop filesystem, so an
     object-store URI is sized the same way as a local file."""
     fs, (p,) = hadoop_fs(spark, path)
@@ -79,7 +84,7 @@ def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
     """Size shuffle partitions for a stateful stream over ``sf_dir``'s
     events (``stream_state_partitions``) for a ``with`` block; restores
     the batch setting afterwards."""
-    n = stream_state_partitions(spark, _source_bytes(spark, events_path(sf_dir)))
+    n = stream_state_partitions(spark, source_bytes(spark, events_path(sf_dir)))
     return _conf(spark, SHUFFLE_PARTITIONS, str(n))
 
 

@@ -5,7 +5,10 @@ out. Run from the repo root: python scripts/gen_plans.py
 
 Expression ids, plan ids and RDD ids are renumbered per plan in order of
 first appearance, so a plan's text does not depend on what the session
-built before it and two runs write the same file."""
+built before it and two runs write the same file. The session runs on
+``CORES`` local cores whatever the host has, so shuffle and round-robin
+partition counts, which follow the core count, are the same on every
+host."""
 
 from __future__ import annotations
 
@@ -20,6 +23,7 @@ from de_project_airflow_etl_spark.registry import all_queries  # noqa: E402
 from de_project_airflow_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+CORES = 4
 
 HEADER = """# Physical plans — bench headline queries
 
@@ -145,6 +149,7 @@ def _section(spark, mode, name: str, q) -> str:
 
 
 def main() -> None:
+    os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
     spark = get_spark("plans")
     registry = all_queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

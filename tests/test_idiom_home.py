@@ -14,7 +14,9 @@ of ``PLAN_RULES`` in ``tests/test_plan_rules.py``, whose nested-loop,
 window-key and collect rules run over every registered and staged
 query. No other test module runs those three checks.
 
-``hadoop_fs.py`` owns py4j access to the Hadoop FileSystem classes.
+``hadoop_fs.py`` owns py4j access to the Hadoop FileSystem classes,
+and ``queries/util.py`` the daily revenue panel (``daily_cents`` and
+its oracle CTE ``SQL_DAILY_CENTS``).
 """
 
 from __future__ import annotations
@@ -219,4 +221,35 @@ def test_hadoop_fs_access_has_one_home():
               for path in sorted(PKG.rglob("*.py")) if path != FS_HOME
               for lineno, line in enumerate(path.read_text().splitlines(), 1)
               if "apache.hadoop.fs" in line]
+    assert not copies, "\n".join(copies)
+
+
+def _body(fn: ast.FunctionDef) -> str:
+    """The function's statements without its docstring, as an AST dump."""
+    body = fn.body
+    if (body and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)):
+        body = body[1:]
+    return ast.dump(ast.Module(body=body, type_ignores=[]))
+
+
+def test_daily_revenue_panel_has_one_home():
+    """A module-level function with ``util.daily_cents``'s body, or a
+    constant with ``util.SQL_DAILY_CENTS``'s text, elsewhere in the
+    package is a re-grown copy of the daily revenue panel. The frozen
+    staged banks keep their own copies."""
+    home = ast.parse(HOME.read_text())
+    panel = next(_body(n) for n in home.body
+                 if isinstance(n, ast.FunctionDef) and n.name == "daily_cents")
+    cte = dict(_definitions(home))["SQL_DAILY_CENTS"]
+    copies = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == HOME or "staged" in path.parts:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and _body(node) == panel:
+                copies.append(f"{path.relative_to(PKG)}::{node.name}")
+        copies += [f"{path.relative_to(PKG)}::{name}"
+                   for name, text in _definitions(tree) if text == cte]
     assert not copies, "\n".join(copies)

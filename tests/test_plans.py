@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    formatted_plan, has_broadcast_join, has_partition_filter,
-    has_pushed_filter, scan_read_schema,
+    PlanWalk, formatted_plan, has_broadcast_join, has_partition_filter,
+    has_pushed_filter, recorded_checkpoints, scan_read_schema,
 )
 from de_project_airflow_etl_spark.queries.relational import (
     filter_project, topk_orders,
@@ -746,3 +746,28 @@ def test_part_sized_join_is_not_force_broadcast(spark, sf_dir, monkeypatch):
     assert part_joins, plans
     assert not [j for j in part_joins if "BroadcastHashJoin" in j], part_joins
     assert [j for j in joins if "BroadcastHashJoin" in j and "p_brand" in j], joins
+
+
+def test_manifest_base_pass_reads_documents_once_pruned(spark, sf_dir):
+    """corpus_release_manifest's fused base pass (its per-doc gate
+    inputs, checkpointed) reads ``documents`` once, pruned to the three
+    columns it derives everything from."""
+    from de_project_airflow_etl_spark.operators.corpus import (
+        corpus_release_manifest,
+    )
+    with recorded_checkpoints() as plans:
+        corpus_release_manifest(spark, sf_dir)
+    def columns(plan):
+        out = plan.output()
+        return {out.apply(i).name() for i in range(out.size())}
+
+    base = [p for p in plans.values()
+            if columns(p) == {"doc_id", "lang", "h", "n_tokens", "f_rep"}]
+    assert len(base) == 1, len(base)
+    walk = PlanWalk(base[0], plans)
+    scans = [walk.jnodes[i] for i, n in enumerate(walk.names)
+             if n == "FileSourceScanExec"]
+    assert len(scans) == 1, [s.simpleString(25) for s in scans]
+    assert "documents.parquet" in scans[0].relation().location().toString()
+    assert (scans[0].requiredSchema().simpleString()
+            == "struct<doc_id:bigint,text:string,lang:string>")

@@ -9,7 +9,7 @@ the shapes the optimization claims so they cannot silently regress:
 * dbscan's components run as the bounded in-row fold (no join rounds
   after the dense-cell build beyond the label join-back);
 * lof's all-pairs join is salted (join keys include the salt, so the
-  key space is 16 * LOF_SALT, not 16);
+  key space is 16 * the salt, not 16);
 * the binary-digest LSH pipeline produces the identical verified
   pairs as the hex form (exact set equality at the test sf).
 """
@@ -66,38 +66,39 @@ def test_dbscan_fold_replaces_star_rounds(spark, sf_dir):
     # no window: the query's max_windows: 0 row in PLAN_RULES
 
 
-def test_lof_salt_derivation_is_scale_adaptive():
-    # r11: the salt derives from the session's defaultParallelism
-    # (guide §2 scale-adaptive partitioning) — unsalted on local[32]
-    # (32 // 16 // 2 = 1, the measured-faster local shape), engaged
-    # automatically at cluster parallelism, env override respected.
+def test_lof_salt_derivation_is_scale_adaptive(spark, sf_dir):
+    # The salt follows the embeddings' bytes (one per advisory
+    # partition, the stream state-partition rule), at least 1 and at
+    # most defaultParallelism // 16: unsalted for every test scale
+    # factor on any host, engaged at cluster parallelism on a corpus of
+    # many partitions.
     from types import SimpleNamespace
 
     from de_project_airflow_etl_spark.queries import mining
+    from de_project_airflow_etl_spark.streaming.ingest import source_bytes
 
     def fake(parallelism):
-        return SimpleNamespace(sparkContext=SimpleNamespace(
-            defaultParallelism=parallelism))
+        return SimpleNamespace(conf=spark.conf, sparkContext=SimpleNamespace(
+            defaultParallelism=parallelism, _jvm=spark.sparkContext._jvm))
 
-    assert mining._lof_salt(fake(32)) == 1      # local[32]
-    assert mining._lof_salt(fake(8)) == 1       # driver's low-core run
-    assert mining._lof_salt(fake(1024)) == 32   # real cluster engages
-    import os
-    os.environ["SPARK_GRAFT_LOF_SALT"] = "4"
-    try:
-        assert mining._lof_salt(fake(32)) == 4  # override both ways
-        assert mining._lof_salt(fake(1024)) == 4
-    finally:
-        del os.environ["SPARK_GRAFT_LOF_SALT"]
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    test_bytes = source_bytes(spark, f"{sf_dir}/embeddings.parquet")
+    for cores in (4, 8, 32, 1024):
+        assert mining._lof_salt(fake(cores), test_bytes) == 1
+    assert mining._lof_salt(fake(1024), 10 * advisory) == 10
+    assert mining._lof_salt(fake(1024), 10**6 * advisory) == 64
+    assert mining._lof_salt(fake(32), 10**6 * advisory) == 2
+    assert mining._lof_salt(fake(8), 10**6 * advisory) == 1
 
 
 def test_lof_salted_equals_unsalted(spark, sf_dir):
     # ADVICE r10 (medium): the salted-join branch must be machine-
     # checked equal to the unsalted default, not argued in a comment —
     # a bug there would change LOF results only at cluster scale.
-    # Force salt=4 via the env override, compare row-for-row.
+    # Salt 4 against salt 1, row-for-row.
     import inspect
-    import os
 
     from de_project_airflow_etl_spark.queries import mining
     src = inspect.getsource(mining._lof_pairs)
@@ -107,20 +108,13 @@ def test_lof_salted_equals_unsalted(spark, sf_dir):
     base = sorted(map(tuple,
                       mining.lof_bucket_outliers(spark, sf_dir).collect()))
     assert base
-    os.environ["SPARK_GRAFT_LOF_SALT"] = "4"
-    try:
-        # the knn eager checkpoint hides the join from the query's
-        # FINAL plan (round-6-late gate-visibility rule), so gate the
-        # factored pairs relation: the salted plan must actually join
-        # on the salt keys
-        plan = (mining._lof_pairs(spark, sf_dir)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "psalt" in plan and "osalt" in plan, plan[:2000]
-        salted = sorted(map(tuple,
-                            mining.lof_bucket_outliers(spark, sf_dir)
-                                  .collect()))
-    finally:
-        del os.environ["SPARK_GRAFT_LOF_SALT"]
+    assert base == sorted(map(tuple, mining._lof_scores(
+        mining._lof_pairs(spark, sf_dir, 1)).collect()))
+    salted_pairs = mining._lof_pairs(spark, sf_dir, 4)
+    # the salted plan must actually join on the salt keys
+    plan = salted_pairs._jdf.queryExecution().executedPlan().toString()
+    assert "psalt" in plan and "osalt" in plan, plan[:2000]
+    salted = sorted(map(tuple, mining._lof_scores(salted_pairs).collect()))
     assert salted == base
 
 

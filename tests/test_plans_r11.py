@@ -71,9 +71,9 @@ def test_r11_nelson_aalen_monotone(spark, sf_dir):
 def test_r11_pettitt_matches_brute_force(spark, sf_dir):
     """The O(n^2) recurrence must equal the textbook triple-loop
     definition, recomputed driver-side from the daily series."""
-    from de_project_airflow_etl_spark.queries.changepoint import _spark_daily
+    from de_project_airflow_etl_spark.queries.util import daily_cents
     daily = sorted((r.day, r.cents) for r in
-                   _spark_daily(spark, sf_dir).collect())
+                   daily_cents(spark, sf_dir).collect())
     a = [c for _, c in daily]
     n = len(a)
 

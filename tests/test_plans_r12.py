@@ -10,7 +10,7 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 from __future__ import annotations
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    partition_columns, window_nodes,
+    PlanWalk, partition_columns, recorded_checkpoints, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -20,11 +20,12 @@ REG = all_queries()
 def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     """The sessionization windows must partition by user_id — a
     grows-with-data key, never an unpartitioned sweep over raw
-    rows (windows live inside the checkpointed session build, so
-    assert on that subplan, not the final plan)."""
-    from de_project_airflow_etl_spark.queries.experimentation import (
-        _ll_session_durations)
-    windows = window_nodes(_ll_session_durations(spark, sf_dir))
+    rows. They run inside the session checkpoint, which the walk
+    enters when the query builds with its checkpoints recorded."""
+    with recorded_checkpoints() as plans:
+        df = REG["littles_law_sessions"].fn(spark, sf_dir)
+    windows = window_nodes(PlanWalk(df._jdf.queryExecution().sparkPlan(),
+                                    plans))
     assert len(windows) >= 2, [w.simpleString(25) for w in windows]
     for wnode in windows:
         assert "user_id" in partition_columns(wnode), wnode.simpleString(25)

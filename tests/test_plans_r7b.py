@@ -9,7 +9,7 @@ registry-wide tests/test_correctness.py.
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, node_names
+from de_project_airflow_etl_spark.plans.inspect import PlanWalk, node_names
 from de_project_airflow_etl_spark.registry import all_queries
 
 R7B_BANK = {n: q for n, q in all_queries().items()
@@ -33,10 +33,10 @@ def test_map_retrieval_rank_gets_partial_group_limit(spark, sf_dir):
     receives a corpus-sized partition — the engine-native two-phase
     top-k."""
     df = R7B_BANK["map_retrieval_eval"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    limits = [n.toString().split("\n")[0] for n in _walk_jplan(jplan)
-              if n.getClass().getSimpleName()
-                  .startswith("WindowGroupLimit")]
+    walk = PlanWalk(df._jdf.queryExecution().sparkPlan())
+    limits = [walk.jnodes[i].toString().split("\n")[0]
+              for i, n in enumerate(walk.names)
+              if n.startswith("WindowGroupLimit")]
     assert any("Partial" in s for s in limits), (
         "no partial rank-limit pushdown: " + str(limits))
 

@@ -5,7 +5,7 @@ query-specific plan shapes and invariants)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan, node_names
+from de_project_airflow_etl_spark.plans.inspect import PlanWalk, node_names
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -61,10 +61,10 @@ def test_truncation_ranks_get_partial_group_limit(spark, sf_dir):
     (WindowGroupLimit Partial before the exchange) so no window
     partition holds a corpus-sized slice."""
     df = REG["dim_truncation_recall_audit"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    limits = [n.toString().split("\n")[0] for n in _walk_jplan(jplan)
-              if n.getClass().getSimpleName()
-                  .startswith("WindowGroupLimit")]
+    walk = PlanWalk(df._jdf.queryExecution().sparkPlan())
+    limits = [walk.jnodes[i].toString().split("\n")[0]
+              for i, n in enumerate(walk.names)
+              if n.startswith("WindowGroupLimit")]
     assert sum("Partial" in s for s in limits) >= 2, limits
 
 
