@@ -38,7 +38,8 @@ query name:
 The four hazard checks (``unbounded_windows``,
 ``fixed_key_window_hazards``, ``unbounded_collects``,
 ``bnlj_builds_are_scalar``) take a DataFrame or a ``PlanWalk`` and
-return their offenders (empty == pass).
+return their offenders (empty == pass). A DataFrame is walked with no
+recorded checkpoints: its checkpoint scans are leaves.
 """
 
 from __future__ import annotations
