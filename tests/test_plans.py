@@ -757,6 +757,7 @@ def test_manifest_base_pass_reads_documents_once_pruned(spark, sf_dir):
     )
     with recorded_checkpoints() as plans:
         corpus_release_manifest(spark, sf_dir)
+
     def columns(plan):
         out = plan.output()
         return {out.apply(i).name() for i in range(out.size())}
