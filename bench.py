@@ -31,7 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from de_project_airflow_etl_spark.operators.dedup import clear_pairs_cache
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.session import get_spark
 
@@ -246,13 +245,14 @@ def main() -> None:
     # whole-stage-codegen compilation, which at test scale can exceed
     # the actual data cost several-fold and varies with ambient load.
     # The min is the steady-state engine cost — the quantity that
-    # extrapolates to a long-running cluster. Caches (including the
-    # module-level verified-pairs cache) are cleared around EVERY run,
-    # so repetition never feeds a query its own materialized state:
-    # each run is cold data-wise, warm JIT-wise. Three runs (not two)
-    # because the hash-heavy codegen queries (minhash md5 chains) only
-    # reach C2-compiled steady state on the third execution — measured
-    # best-of-2 overstates them ~1.8x on a loaded box.
+    # extrapolates to a long-running cluster. The Spark cache is
+    # cleared around EVERY run and no query keeps a relation past its
+    # own build, so repetition never feeds a query its own
+    # materialized state: each run is cold data-wise, warm JIT-wise.
+    # Three runs (not two) because the hash-heavy codegen queries
+    # (minhash md5 chains) only reach C2-compiled steady state on the
+    # third execution — measured best-of-2 overstates them ~1.8x on a
+    # loaded box.
     runs = int(os.environ.get("BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -260,14 +260,12 @@ def main() -> None:
         best = float("inf")
         for _ in range(runs):
             spark.catalog.clearCache()
-            clear_pairs_cache()
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
             df.count()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
         spark.catalog.clearCache()
-        clear_pairs_cache()
 
     total = round(sum(timings.values()), 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -208,7 +208,8 @@ def _release_oracle() -> str:
         "the COMPOSITION under one optimizer pass. Scale shape: "
         "gates are scans + one inverted-index join each; dedup is "
         "one hash shuffle; the near-dup screen is an anti-join "
-        "against the shared materialized pairs relation.",
+        "against the verified-pairs relation, checkpointed inside "
+        "this query's own build.",
     tags=("corpus", "composite", "curation", "dedup"),
 )
 def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

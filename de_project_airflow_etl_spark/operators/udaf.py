@@ -45,10 +45,6 @@ from de_project_airflow_etl_spark.tables import load
 # days). Python-int arithmetic keeps every intermediate exact.
 
 
-def _expand_index(w: pd.Series) -> int:
-    return int(w.astype("int64").sum())
-
-
 @F.pandas_udf(LongType())
 def _weighted_lower_median(v: pd.Series, w: pd.Series) -> int:
     """Smallest value whose cumulative weight reaches half the total:

@@ -2262,8 +2262,8 @@ def word_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =====================================================================
 # Round-5 additions: reporting / sequence-mining / concentration
-# analytics registered directly (the round-5 driver window has room;
-# see registry._DRIVER_PRIORITY).
+# analytics registered directly (unverified queries lead the driver
+# window; see registry.all_queries).
 # =====================================================================
 
 _O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"

@@ -62,90 +62,22 @@ def query(name: str, oracle: str | None, doc: str = "",
 
 
 # The driver's per-round correctness run truncates (~50 rows/round,
-# walking ``queries()`` order), so each round hand-plans which 50
-# unverified queries fill the window; verified names in this tuple are
-# filtered out automatically, so it records the CURRENT round's plan
-# (historical rounds' plans live in git history + CORRECTNESS_r*.json).
-#
-# Round-10 window (47 promoted, <= ~50): all 431 round-9 registry
-# entries are driver-verified (CORRECTNESS_r09 landed 50/50 green,
-# cumulative 431/431), so the whole window is free for the 47
-# promoted staged queries (VERDICT r9 #1: round11c ->
-# queries/streaming_ext.py, round12 -> queries/experimentation.py,
-# round12b -> queries/abdesign.py, round12c -> queries/reranking.py,
-# round13 -> queries/governance.py, round13b ->
-# queries/schema_ops.py, round14 -> queries/operating_points.py,
-# round15 -> queries/attribution.py, round16 ->
-# queries/estimators.py, round17 -> queries/clustering.py, round18
-# -> queries/population.py, round19 -> queries/sql_surfaces.py,
-# round20 -> queries/seqalign.py; recorded promotion precondition:
-# the full 61-query staged pen swept green at sf0.01 (61/61) AND
-# sf0.1 (61/61), 2026-08-16), leaving ~3 slots for rotation
-# re-verifies.
+# walking ``queries()`` order), so ``all_queries`` floats every query
+# without a satisfied driver row (``_driver_verified``) to the front.
 #
 # Truncation is never the only correctness signal: the full registry is
 # exercised locally by ``tests/test_correctness.py`` (exact values, all
 # queries) and ``scripts/profile_correctness.py`` (hash replica of the
 # driver's check) — see those for the complete picture.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # six of the seven r11 rewrites (the seventh,
-    # embedding_isotropy_panel, is pinned below): their rows predate
-    # the rewrite (``_REWRITTEN_SINCE``), so the driver re-stamps them
-    "corpus_release_manifest", "survival_retention_curve",
-    "dedup_method_agreement", "market_basket_rules",
-    "word_cooccurrence_lift", "llm_corpus_prep",
-    # the 2 promoted queries from queries/streaming_ext.py, in their
-    # staged registration order
-    "streaming_chained_window_rollup", "streaming_stream_stream_semi_join",
-    # the 5 promoted queries from queries/experimentation.py
-    "sample_ratio_mismatch_check", "cuped_adjusted_lift",
-    "littles_law_sessions", "crostons_intermittent_demand",
-    "burrows_delta_sources",
-    # the 1 promoted query from queries/reranking.py
-    "mmr_rerank_retrieval",
-    # the 4 promoted queries from queries/abdesign.py
-    "difference_in_differences_arms", "power_mde_event_value",
-    "fleiss_kappa_quality_rules", "jackknife_ratio_variance_daily",
-    # the 2 promoted queries from queries/governance.py
-    "dp_sensitivity_audit", "sql_udf_band_rollup",
-    # the 2 promoted queries from queries/schema_ops.py
-    "union_by_name_daily_mix", "calendar_spine_gap_fill",
-    # the 8 promoted queries from queries/operating_points.py
-    "youden_j_optimal_threshold", "decile_lift_table",
-    "actuarial_life_table", "haberman_adjusted_residuals",
-    "cronbachs_alpha_quality_rules", "vocab_coverage_curve",
-    "cross_source_ngram_overlap", "embedding_isotropy_panel",
-    # the 7 promoted queries from queries/attribution.py
-    "shapley_channel_attribution", "isotonic_daily_revenue_fit",
-    "split_conformal_value_interval", "bh_step_up_drift_panel",
-    "bradley_terry_event_strengths", "harmonic_centrality_dup_graph",
-    "dtw_click_purchase_daily",
-    # the 5 promoted queries from queries/estimators.py
-    "wasserstein_weekend_value", "huber_mean_event_value",
-    "ordinal_pattern_census_daily", "group_sequential_ab_readout",
-    "james_stein_type_means",
-    # the 3 promoted queries from queries/clustering.py
-    "quantile_normalize_source_chars", "dbscan_grid_embedding_clusters",
-    "hits_event_type_authority",
-    # the 3 promoted queries from queries/population.py
-    "good_turing_chao1_by_source", "ipf_raking_purchase_mix",
-    "capture_recapture_user_weeks",
-    # the 3 promoted queries from queries/sql_surfaces.py
-    "percentile_cont_within_group_quartiles", "json_function_family_events",
-    "approx_top_k_event_types",
-    # the 2 promoted queries from queries/seqalign.py
-    "negative_binomial_user_counts", "nw_alignment_week_type_seqs",
-)
 
 
 def all_queries() -> dict[str, Query]:
     """Import every query module and return the registry.
 
     Returned order == the order the driver walks ``queries()``.  The
-    driver truncates at ~50 rows/round, so ``_DRIVER_PRIORITY`` (the
-    queries still missing a driver CORRECTNESS row) comes first; the
-    remainder follows in registration order as re-confirmation of
-    already-green queries.
+    driver truncates at ~50 rows/round, so the queries still missing a
+    driver CORRECTNESS row come first; the remainder follows in
+    registration order as re-confirmation of already-green queries.
     """
     # Imports deferred so `import registry` never costs a Spark session.
     from de_project_airflow_etl_spark.operators import (  # noqa: F401
@@ -169,17 +101,13 @@ def all_queries() -> dict[str, Query]:
     )
     ordered: dict[str, Query] = {}
     verified = _driver_verified()
-    # 1. Statically-pinned priority entries that still lack a verified
-    #    driver row (the hand-curated plan for the current round).
-    for name in _DRIVER_PRIORITY:
-        if name in _REGISTRY and name not in verified:
-            ordered[name] = _REGISTRY[name]
-    # 2. Every other query without a verified row, in registration
-    #    order — freshly-added operators self-promote into the window.
+    # 1. Every query without a verified row, in registration order —
+    #    freshly-added or rewritten operators self-promote into the
+    #    window.
     for name, q in _REGISTRY.items():
-        if name not in ordered and name not in verified:
+        if name not in verified:
             ordered[name] = q
-    # 3. Already-verified queries as re-confirmation, registration
+    # 2. Already-verified queries as re-confirmation, registration
     #    order.
     for name, q in _REGISTRY.items():
         if name not in ordered:
@@ -236,8 +164,8 @@ def _driver_verified() -> set[str]:
     to the front. Reading the recorded rounds makes that rotation
     self-maintaining: a query whose verification bar rose (e.g. it
     gained an oracle after a rows-only round) automatically counts as
-    unverified again. Missing/corrupt files degrade to the static
-    ordering. Cached per process — registry contents and the pinned
+    unverified again. Missing/corrupt files degrade to registration
+    order. Cached per process — registry contents and the pinned
     round files are fixed for a process lifetime."""
     global _DRIVER_VERIFIED_CACHE
     if _DRIVER_VERIFIED_CACHE is not None:

@@ -14,23 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "de_project_airflow_etl_spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "de_project_airflow_etl_spark") -> SparkSession:
     """Build (or fetch) the session.
 
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster you would size this to ~2-3x total executor cores or simply
-    let AQE coalesce from a higher initial number; locally a value that
-    matches cores avoids tiny-partition overhead at test scale.
+    Shuffle partitions equal the local core count — on a real cluster
+    you would size this to ~2-3x total executor cores or simply let AQE
+    coalesce from a higher initial number; locally a value that matches
+    cores avoids tiny-partition overhead at test scale.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -87,9 +84,7 @@ def _apply_object_store_profile(builder):
     )
 
 
-def get_hive_spark(warehouse_dir: str,
-                   app_name: str = "de_project_airflow_etl_spark_hive",
-                   cpus: int = 4) -> SparkSession:
+def get_hive_spark(warehouse_dir: str) -> SparkSession:
     """Hive-metastore-backed session (embedded derby) — the catalog
     topology the reference runs: every query resolves tables through a
     Hive metastore service (metastore-site.xml;
@@ -106,15 +101,15 @@ def get_hive_spark(warehouse_dir: str,
     os.makedirs(warehouse_dir, exist_ok=True)
     builder = (
         SparkSession.builder
-        .master(f"local[{cpus}]")
-        .appName(app_name)
+        .master("local[4]")
+        .appName("de_project_airflow_etl_spark_hive")
         .config("spark.sql.catalogImplementation", "hive")
         .config("spark.sql.warehouse.dir",
                 os.path.join(warehouse_dir, "warehouse"))
         .config("spark.hadoop.javax.jdo.option.ConnectionURL",
                 f"jdbc:derby:;databaseName={warehouse_dir}/metastore_db;"
                 "create=true")
-        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -23,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from bench import HEADLINE
-from de_project_airflow_etl_spark.operators.dedup import clear_pairs_cache
 from de_project_airflow_etl_spark.registry import all_queries
 
 
@@ -56,7 +55,6 @@ def main() -> None:
     prev = _stage_totals(base, app)
     for name in HEADLINE:
         spark.catalog.clearCache()
-        clear_pairs_cache()
         registry[name].fn(spark, sf_dir).count()
         cur = _stage_totals(base, app)
         rows.append((name, cur["input"] - prev["input"],
@@ -64,18 +62,18 @@ def main() -> None:
                      cur["spill"] - prev["spill"]))
         prev = cur
 
-    # Non-headline coverage: the current driver-priority window (the
-    # round's promoted/new queries) plus anything still staged — so
-    # every query the driver will verify this round has a measured
-    # shuffle row, not just the bench headliners.
-    from de_project_airflow_etl_spark.registry import _DRIVER_PRIORITY
+    # Non-headline coverage: the queries still missing a driver row
+    # (the ones the driver's window verifies next) plus anything still
+    # staged — so every query the driver will verify this round has a
+    # measured shuffle row, not just the bench headliners.
+    from de_project_airflow_etl_spark.registry import _driver_verified
     from de_project_airflow_etl_spark.staged import STAGED
-    extra = [n for n in _DRIVER_PRIORITY
-             if n not in HEADLINE and n in registry] + sorted(STAGED)
+    verified = _driver_verified()
+    extra = [n for n in registry
+             if n not in HEADLINE and n not in verified] + sorted(STAGED)
     staged_rows = []
     for name in extra:
         spark.catalog.clearCache()
-        clear_pairs_cache()
         fn = registry[name].fn if name in registry else STAGED[name].fn
         fn(spark, sf_dir).count()
         cur = _stage_totals(base, app)

@@ -35,8 +35,7 @@ def planted_corpus(spark, tmp_path):
                  "length(text) AS n_chars")
     out = str(tmp_path / "documents.parquet")
     docs.write.mode("overwrite").parquet(out)
-    yield str(tmp_path)
-    dedup.clear_pairs_cache()
+    return str(tmp_path)
 
 
 def test_lsh_recovers_exactly_the_planted_pairs(spark, planted_corpus):
@@ -87,7 +86,6 @@ def test_incremental_dedup_classifies_planted_copies(spark, tmp_path):
     assert counts.get("admitted", 0) == n_new - n_copies
     assert counts.get("dup_near_corpus", 0) == 0
     assert counts.get("dup_near_batch", 0) == 0
-    dedup.clear_pairs_cache()
 
 
 N_BOILER = 20_000
@@ -136,7 +134,6 @@ def test_jaccard_df_cap_keeps_candidates_linear(spark, tmp_path):
                .agg(F.sum(F.expr("df * (df - 1) / 2")).alias("c"))
                .collect()[0]["c"])
     assert cands < 10 * N_BOILER, cands
-    dedup.clear_pairs_cache()
 
 
 # r11 test tiering: multi-minute sweep/scale/property module —

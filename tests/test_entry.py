@@ -35,10 +35,9 @@ def test_all_queries_run_at_smoke_sf(spark):
 def test_driver_order_floats_unverified_first():
     """The driver truncates at ~50 rows walking queries() order; every
     query without a satisfied CORRECTNESS row from a past round must
-    sort before every already-verified one, with the hand-pinned
-    priority block (this round's plan) leading."""
+    sort before every already-verified one."""
     from de_project_airflow_etl_spark.registry import (
-        _DRIVER_PRIORITY, _driver_verified, all_queries,
+        _driver_verified, all_queries,
     )
     names = list(all_queries())
     verified = _driver_verified()
@@ -48,5 +47,3 @@ def test_driver_order_floats_unverified_first():
                        if n not in verified]
     assert not late_unverified, (
         f"unverified queries sorted after verified ones: {late_unverified}")
-    pinned_unverified = [n for n in _DRIVER_PRIORITY if n not in verified]
-    assert names[:len(pinned_unverified)] == pinned_unverified

@@ -17,6 +17,10 @@ query. No other test module runs those three checks.
 ``hadoop_fs.py`` owns py4j access to the Hadoop FileSystem classes,
 and ``queries/util.py`` the daily revenue panel (``daily_cents`` and
 its oracle CTE ``SQL_DAILY_CENTS``).
+
+No package module holds a query's result past the query: a
+module-level binding annotated with ``DataFrame`` is a cross-query
+cache, which answers a rewritten input with a stale relation.
 """
 
 from __future__ import annotations
@@ -253,3 +257,21 @@ def test_daily_revenue_panel_has_one_home():
         copies += [f"{path.relative_to(PKG)}::{name}"
                    for name, text in _definitions(tree) if text == cte]
     assert not copies, "\n".join(copies)
+
+
+def test_no_module_level_dataframe_holders():
+    """A query derives what it reads inside its own build: a
+    module-level name annotated with ``DataFrame`` (a cache dict, a
+    list, an optional slot) outlives the query and serves the next one
+    a relation built from inputs that may since have been rewritten.
+    The frozen staged banks are not scanned."""
+    holders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if "staged" in path.parts:
+            continue
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            if (isinstance(node, ast.AnnAssign) and re.search(
+                    r"\bDataFrame\b", ast.unparse(node.annotation))):
+                holders.append(f"{path.relative_to(PKG)}:{node.lineno} "
+                               f"{getattr(node.target, 'id', '?')}")
+    assert not holders, "\n".join(holders)

@@ -686,6 +686,20 @@ def test_walk_passes_checkpointed_one_row_broadcast(spark):
     assert not bnlj_builds_are_scalar(walk)
 
 
+def test_walk_enters_pairs_build_of_every_reader(spark, sf_dir):
+    """Each reader of the verified near-dup pairs derives them in its
+    own build, so the walk of a second reader in one session still
+    enters the band self-join (its posexplode ``Generate``) rather
+    than stopping at an earlier query's checkpoint."""
+    from de_project_airflow_etl_spark.operators.dedup import (
+        dedup_clusters, dedup_minhash_lsh,
+    )
+    dedup_minhash_lsh(spark, sf_dir)
+    walk = _checkpointed_walk(lambda: dedup_clusters(spark, sf_dir))
+    assert any(n == "GenerateExec" and "posexplode" in j.toString()
+               for n, j in zip(walk.names, walk.jnodes)), walk.names
+
+
 @functools.lru_cache(maxsize=1)
 def _built(spark, sf_dir, name):
     """The query's DataFrame and its one walk, built with its

@@ -117,7 +117,6 @@ def test_lsh_query_leaves_no_cached_relations(spark, sf_dir):
     is built, no persisted DataFrame may remain registered in the
     CacheManager (pinned executor memory at 100 TB)."""
     from de_project_airflow_etl_spark.operators import dedup
-    dedup.clear_pairs_cache()
     spark.catalog.clearCache()
     dedup.dedup_minhash_lsh(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -153,10 +152,10 @@ def test_lsh_verified_pairs_reuse_exchanges(spark, sf_dir):
 
 
 def test_lsh_digest_checkpoints_are_released(spark, sf_dir):
-    """The digest checkpoint of each verified-pairs build is freed by
-    the ContextCleaner once its DataFrame is dropped: after five builds
-    and a GC, of the RDDs the builds stored, the block manager keeps no
-    more than the pairs checkpoints the cache still references."""
+    """The digest and pairs checkpoints of each verified-pairs build
+    are freed by the ContextCleaner once its DataFrame is dropped:
+    after five builds and a GC, the block manager keeps none of the
+    RDDs the builds stored."""
     import gc
     import time
 
@@ -168,7 +167,6 @@ def test_lsh_digest_checkpoints_are_released(spark, sf_dir):
 
     built: set[int] = set()
     for _ in range(5):
-        dedup.clear_pairs_cache()
         before = stored()
         dedup._lsh_verified(spark, sf_dir)
         built |= stored() - before
@@ -178,11 +176,10 @@ def test_lsh_digest_checkpoints_are_released(spark, sf_dir):
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         held = built & stored()
-        if len(held) <= len(dedup._PAIRS_CACHE):
+        if not held:
             break
         assert time.monotonic() < deadline, (
-            f"RDDs {sorted(held)} still stored "
-            f"({len(dedup._PAIRS_CACHE)} pairs checkpoints cached)")
+            f"RDDs {sorted(held)} still stored")
         time.sleep(0.5)
 
 

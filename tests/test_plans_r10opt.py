@@ -5,7 +5,8 @@ the shapes the optimization claims so they cannot silently regress:
   machinery, no window, no join, one exchange);
 * markov's 12 iterations live in ONE fold (final plan scan-free is
   already gated in test_plan_rules.py; here: no per-iteration join
-  chain — the bounded fold appears exactly once);
+  chain — the bounded fold is one node of the walk through the
+  recorded checkpoints);
 * dbscan's components run as the bounded in-row fold (no join rounds
   after the dense-cell build beyond the label join-back);
 * lof's all-pairs join is salted (join keys include the salt, so the
@@ -16,6 +17,9 @@ the shapes the optimization claims so they cannot silently regress:
 
 from __future__ import annotations
 
+from de_project_airflow_etl_spark.plans.inspect import (
+    PlanWalk, recorded_checkpoints,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -36,25 +40,24 @@ def test_reachability_is_one_aggregate(spark, sf_dir):
 
 def test_markov_single_fold(spark, sf_dir):
     # The per-scenario fold is materialized behind the result
-    # checkpoint (the final plan shows only the fin/eff/te joins —
-    # the round-6-late gate-visibility rule), so assert two things:
-    # the FINAL plan carries no 12-iteration join chain (its zero-scan
-    # budget lives in tests/test_plan_rules.py), and the PRE-checkpoint
-    # shape (rebuilt from the module pieces the way the query builds
-    # it) contains exactly ONE sequence(1, 12) runtime fold.
-    df = REG["markov_removal_effect_attribution"].fn(spark, sf_dir)
+    # checkpoint, so the query is built under the checkpoint recorder
+    # and its walk (which enters every recorded checkpoint) must carry
+    # exactly ONE node with the bounded aggregate() fold; the FINAL
+    # plan carries no 12-iteration join chain (its zero-scan budget
+    # lives in tests/test_plan_rules.py).
+    with recorded_checkpoints() as plans:
+        df = REG["markov_removal_effect_attribution"].fn(spark, sf_dir)
     plan = _final_plan(df)
     # the duplicated fin/eff branches plan a handful of bounded joins;
     # a regression back to per-iteration joins would add 12+ more
     assert plan.count("Join") <= 8, plan[:2000]
-    import inspect
-
-    from de_project_airflow_etl_spark.queries import robust
-    src = inspect.getsource(robust.markov_removal_effect_attribution)
+    walk = PlanWalk(df._jdf.queryExecution().sparkPlan(), plans)
     # exactly ONE bounded fold (ADVICE r10: strict count, no vacuous
     # or-fallback — a reintroduced per-iteration join chain alongside
     # the fold must fail here)
-    assert src.count("aggregate(sequence(1, {MRA_ITERS})") == 1, src
+    folds = [n for n, j in zip(walk.names, walk.jnodes)
+             if "aggregate(" in j.toString().split("\n")[0]]
+    assert len(folds) == 1, (folds, walk.names)
 
 
 def test_dbscan_fold_replaces_star_rounds(spark, sf_dir):

@@ -115,12 +115,8 @@ def test_release_funnel_matches_python_reference_at_50k(spark, tmp_path):
     from de_project_airflow_etl_spark.operators.corpus import (
         corpus_release_manifest,
     )
-    from de_project_airflow_etl_spark.operators.dedup import (
-        clear_pairs_cache,
-    )
     got = {r["stage"]: (r["n_docs"], r["total_tokens"])
            for r in corpus_release_manifest(spark, str(tmp_path)).collect()}
-    clear_pairs_cache()
     expected = _python_funnel(texts)
     assert got == expected
     # the planted classes actually exercised their stages
@@ -150,9 +146,7 @@ def test_near_dup_with_gated_canonical_keeps_survivor(spark, tmp_path,
     from de_project_airflow_etl_spark.operators.corpus import (
         corpus_release_manifest,
     )
-    from de_project_airflow_etl_spark.operators.dedup import (
-        _lsh_verified, clear_pairs_cache,
-    )
+    from de_project_airflow_etl_spark.operators.dedup import _lsh_verified
 
     # disable the boilerplate gate: keep-condition n_boiler * DEN <
     # n_grams * NUM holds for every doc with DEN=0, NUM=1
@@ -171,17 +165,13 @@ def test_near_dup_with_gated_canonical_keeps_survivor(spark, tmp_path,
         " n_chars long"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
 
-    try:
-        # guard: the pair must actually be LSH-verified, or the
-        # survivor assertion below would pass vacuously
-        pairs = {(r["doc_a"], r["doc_b"])
-                 for r in _lsh_verified(spark, str(tmp_path)).collect()}
-        assert (1, 2) in pairs, pairs
-        got = {(r["stage"], r["lang"]): r["n_docs"]
-               for r in corpus_release_manifest(spark,
-                                                str(tmp_path)).collect()}
-    finally:
-        clear_pairs_cache()
+    # guard: the pair must actually be LSH-verified, or the survivor
+    # assertion below would pass vacuously
+    pairs = {(r["doc_a"], r["doc_b"])
+             for r in _lsh_verified(spark, str(tmp_path)).collect()}
+    assert (1, 2) in pairs, pairs
+    got = {(r["stage"], r["lang"]): r["n_docs"]
+           for r in corpus_release_manifest(spark, str(tmp_path)).collect()}
     # doc 1 (canonical, lang en) is gated at decontamination; doc 2
     # must survive the near-dup stage because its canonical did not
     # reach stage 4 (the old rule dropped BOTH copies)

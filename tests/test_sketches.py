@@ -48,29 +48,6 @@ def test_approx_quantiles_within_tolerance_of_exact(spark, sf_dir):
                 t, p, a[p], exact[t][p])
 
 
-def test_pairs_cache_is_bounded_lru():
-    """_PAIRS_CACHE must not grow without bound across sf_dirs, and a
-    hit must refresh recency (true LRU, not FIFO)."""
-    from de_project_airflow_etl_spark.operators import dedup
-
-    saved = dict(dedup._PAIRS_CACHE)
-    dedup.clear_pairs_cache()
-    try:
-        cap = dedup._PAIRS_CACHE_MAX
-        for i in range(cap + 3):
-            dedup._pairs_cache_put(("app", f"sf{i}"), object())
-        assert len(dedup._PAIRS_CACHE) == cap
-        assert ("app", "sf0") not in dedup._PAIRS_CACHE  # oldest evicted
-        # touch the current oldest, then insert: the touched key survives
-        oldest = next(iter(dedup._PAIRS_CACHE))
-        dedup._PAIRS_CACHE[oldest] = dedup._PAIRS_CACHE.pop(oldest)
-        dedup._pairs_cache_put(("app", "new"), object())
-        assert oldest in dedup._PAIRS_CACHE
-    finally:
-        dedup.clear_pairs_cache()
-        dedup._PAIRS_CACHE.update(saved)
-
-
 import os
 
 import pytest
