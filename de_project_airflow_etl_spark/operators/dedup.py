@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from de_project_airflow_etl_spark.operators import similarity as _similarity
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import fan_out, load
-from de_project_airflow_etl_spark.queries.util import tracked_persist
 
 N_HASHES = 8          # minhash signature length
 N_BANDS = 4           # LSH bands (2 rows per band)
@@ -745,8 +744,8 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (pairs.select(F.col("doc_a").alias("src"),
                           F.col("doc_b").alias("dst"))
                   .union(pairs.select(F.col("doc_b").alias("src"),
-                                      F.col("doc_a").alias("dst"))))
-    edges = tracked_persist(edges)
+                                      F.col("doc_a").alias("dst")))
+                  .localCheckpoint(eager=True))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = edges.select(F.col("src").alias("doc_id")).distinct()
     n = nodes.count()  # one driver scalar, mirrored by the oracle's n_cnt
@@ -764,7 +763,6 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                            + F.expr("(85 * coalesce(s, 0)) div 100"))
                            .alias("r"))
                   .localCheckpoint())
-    edges.unpersist()
     return r.select("doc_id", F.col("r").cast("long").alias("rank_e12"))
 
 
@@ -875,10 +873,9 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .select(F.md5("text").alias("h")).distinct())
     new_docs = (docs.filter(F.col("doc_id") >= c)
                     .select("doc_id", "source", F.md5("text").alias("h")))
-    # the verified near-dup pairs feed two consumers; checkpoint so
-    # neither branch re-runs the full LSH pass that derives them.
-    pairs = (_lsh_verified(spark, sf_dir)
-             .select("doc_a", "doc_b").localCheckpoint())
+    # the verified near-dup pairs feed two consumers; both read the
+    # checkpoint _lsh_verified returns, so the LSH pass runs once.
+    pairs = _lsh_verified(spark, sf_dir).select("doc_a", "doc_b")
     near_corpus = (pairs.filter((F.col("doc_a") < c)
                                 & (F.col("doc_b") >= c))
                         .select(F.col("doc_b").alias("doc_id")).distinct()

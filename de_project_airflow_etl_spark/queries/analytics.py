@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-from de_project_airflow_etl_spark.queries.util import tracked_persist
 from de_project_airflow_etl_spark.operators.curation import (
     NGRAM_N, _ngram_hashes, _SQL_NGRAMS,
 )
@@ -970,18 +969,11 @@ def bm25_term_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.expr("20 * t * tf + 6 * t + 18 * dl * n")
                          .alias("score_den"))
                 # consumed twice (df aggregate + ranking join) with no
-                # exchange in its subtree for reuse — persist() rather
-                # than localCheckpoint: caching keeps the child plan
-                # inspectable (InMemoryRelation prints it, so pushdown/
-                # broadcast gates still see the scan) and the blocks
-                # are released by spark.catalog.clearCache(), which
-                # checkpoint blocks are not (long-lived sessions
-                # release via util.release_tracked_caches). df CANNOT
-                # fold into the ranking window: count-per-term must see
-                # every row, which would defeat the WindowGroupLimit
-                # pre-filter.
-                )
-    scored = tracked_persist(scored)
+                # exchange in its subtree for reuse, so checkpointed.
+                # df CANNOT fold into the ranking window: count-per-term
+                # must see every row, which would defeat the
+                # WindowGroupLimit pre-filter.
+                .localCheckpoint(eager=True))
     dfc = scored.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     ranked = (scored.join(F.broadcast(dfc), "term")
               .withColumn("score",
@@ -2069,13 +2061,13 @@ CTFIDF_TOP_K = 10
 )
 def class_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    # tf feeds dfs, tot, and the scored join — persist() so the
+    # tf feeds dfs, tot, and the scored join — checkpointed so the
     # tokenize + aggregate subtree runs once, and derive the class
     # count from tf instead of a third documents scan.
     tf = (docs.select("source", F.explode(F.split("text", " ")).alias("word"))
               .groupBy("source", "word")
-              .agg(F.count("*").cast("long").alias("tf")))
-    tf = tracked_persist(tf)
+              .agg(F.count("*").cast("long").alias("tf"))
+              .localCheckpoint(eager=True))
     dfs = tf.groupBy("word").agg(
         F.count("*").cast("long").alias("df_sources"))
     tot = tf.agg(F.countDistinct("source").cast("long").alias("n_sources"))
@@ -2237,14 +2229,14 @@ def word_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                struct(y AS w1, element_at(t, i) AS w2)))))
         """)).alias("p")).select("p.w1", "p.w2")
     # pc feeds both the total and the final join, uc both join sides —
-    # persist() so the explode-heavy subtrees run once (bm25 precedent;
-    # released by spark.catalog.clearCache()).
-    pc = tracked_persist(pairs.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("pair_count")))
+    # checkpointed so the explode-heavy subtrees run once.
+    pc = (pairs.groupBy("w1", "w2")
+               .agg(F.count("*").cast("long").alias("pair_count"))
+               .localCheckpoint(eager=True))
     uc = (load(spark, sf_dir, "documents")
           .select(F.explode(F.split("text", " ")).alias("w"))
-          .groupBy("w").agg(F.count("*").cast("long").alias("c")))
-    uc = tracked_persist(uc)
+          .groupBy("w").agg(F.count("*").cast("long").alias("c"))
+          .localCheckpoint(eager=True))
     tot = pc.agg(F.sum("pair_count").cast("long").alias("n_pairs"))
     u1 = uc.selectExpr("w AS w1", "c AS c1")
     u2 = uc.selectExpr("w AS w2", "c AS c2")

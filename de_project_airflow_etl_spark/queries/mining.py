@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-from de_project_airflow_etl_spark.queries.util import tracked_persist
 
 _O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
 
@@ -1868,12 +1867,12 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = bucketed.select(
         "bucket", F.explode(F.split("text", " ")).alias("tok"))
     # ONE corpus pass: the (bucket, token) rollup is vocab-sized and
-    # feeds BOTH downstream aggregates, so it is persisted (the
-    # bm25_term_scores single-computation precedent; every harness
-    # clears the cache per query) — document text is scanned and
-    # exploded exactly once, which tests/test_plans_r6.py gates.
-    base = tracked_persist(toks.groupBy("bucket", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("n_occ")))
+    # feeds BOTH downstream aggregates, so it is checkpointed —
+    # document text is scanned and exploded exactly once, which
+    # tests/test_plans_r6.py gates.
+    base = (toks.groupBy("bucket", "tok")
+                .agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
+                .localCheckpoint(eager=True))
     per_bucket = base.groupBy("bucket").agg(
         F.sum("n_occ").cast("long").alias("n_tokens"))
     first_seen = base.groupBy("tok").agg(F.min("bucket").alias("bucket"))

@@ -259,53 +259,3 @@ def _rank_over_buckets(keyed, value_col: str, tiebreak: str, out: str,
                                F.row_number().over(local) + F.col("__off"))
                    .drop("__off"))
     return ranked if _keep_key else ranked.drop("__bk")
-
-
-# ----------------------------------------------- tracked persist()
-
-# Multi-consumer bounded intermediates are persist()ed (not
-# localCheckpoint()ed) when the plan must stay inspectable — the
-# InMemoryRelation prints its child, so pushdown/broadcast plan gates
-# still see the scan. The cost is lifecycle: cached blocks outlive the
-# query's materialization. Harness runs (bench.py, the test fixtures,
-# profile_correctness) release them via spark.catalog.clearCache();
-# a long-lived session composing many queries should call
-# release_tracked_caches() instead, which releases EXACTLY the blocks
-# query implementations pinned without nuking caches the application
-# itself manages.
-_TRACKED_CACHES: list = []
-
-
-def tracked_persist(df):
-    """``df.persist()`` with an explicit release path (see above).
-
-    Entries callers already unpersisted themselves (e.g. dedup's
-    ``finally`` blocks) are pruned here, so the list — and the py4j
-    handles it retains — cannot grow without bound in a long-lived
-    session (ADVICE r7)."""
-    _TRACKED_CACHES[:] = [d for d in _TRACKED_CACHES if _still_cached(d)]
-    _TRACKED_CACHES.append(df.persist())
-    return df
-
-
-def _still_cached(df) -> bool:
-    try:
-        return df.is_cached
-    except Exception:  # session already stopped — nothing retained
-        return False
-
-
-def release_tracked_caches() -> int:
-    """Unpersist every query-pinned cache; returns how many blocks
-    were actually freed (entries already released by their caller —
-    or listed twice — don't inflate the count)."""
-    n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            if df.is_cached:
-                df.unpersist()
-                n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n

@@ -10,6 +10,8 @@ re-runs, SURVEY.md §2.6 O3/O4), Arrow for any pandas exchange.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -54,6 +56,23 @@ def get_spark(app_name: str = "de_project_airflow_etl_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]):
+    """Set each of ``confs`` for the block, then restore its previous
+    value, or unset it if it was unset before."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _apply_object_store_profile(builder):

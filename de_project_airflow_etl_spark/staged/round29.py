@@ -33,7 +33,7 @@ from de_project_airflow_etl_spark.operators.dedup import (
     _lsh_verified,
     _sql_lsh_pairs,
 )
-from de_project_airflow_etl_spark.queries.util import tracked_persist, wide
+from de_project_airflow_etl_spark.queries.util import wide
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
 
@@ -298,7 +298,7 @@ def _label_prop(pairs: DataFrame, docs: DataFrame) -> DataFrame:
                           F.col("doc_b").alias("d"))
              .union(pairs.select(F.col("doc_b").alias("s"),
                                  F.col("doc_a").alias("d"))))
-    edges = tracked_persist(edges)
+    edges = edges.persist()
     try:
         lp0 = (edges.select(F.col("s").alias("doc_id")).distinct()
                .join(docs, "doc_id")

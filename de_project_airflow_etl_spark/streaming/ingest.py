@@ -15,7 +15,6 @@ engine on the same input.
 from __future__ import annotations
 
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +22,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs
 from de_project_airflow_etl_spark.registry import query
+from de_project_airflow_etl_spark.session import scoped_conf
 from de_project_airflow_etl_spark.tables import NANOS_AS_LONG, read_parquet
 
 # Stateful streaming queries carry one state-store instance per shuffle
@@ -65,27 +65,12 @@ def source_bytes(spark: SparkSession, path: str) -> int:
     return fs.getContentSummary(p).getLength()
 
 
-@contextmanager
-def _conf(spark: SparkSession, key: str, value: str):
-    """Set ``key`` for the block, then restore its previous value, or
-    unset it if it was unset before."""
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
     """Size shuffle partitions for a stateful stream over ``sf_dir``'s
     events (``stream_state_partitions``) for a ``with`` block; restores
     the batch setting afterwards."""
     n = stream_state_partitions(spark, source_bytes(spark, events_path(sf_dir)))
-    return _conf(spark, SHUFFLE_PARTITIONS, str(n))
+    return scoped_conf(spark, {SHUFFLE_PARTITIONS: str(n)})
 
 
 def _drained(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
@@ -198,8 +183,8 @@ def streaming_windowed_counts_rocksdb(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     # run_available_now fully drains the stream before returning, so
     # the provider conf is live for the whole query lifetime.
-    with _conf(spark, "spark.sql.streaming.stateStore.providerClass",
-               ROCKSDB_PROVIDER):
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass":
+                             ROCKSDB_PROVIDER}):
         return run_available_now(spark, sf_dir)
 
 
@@ -245,8 +230,8 @@ def streaming_observed_ingest_metrics(spark: SparkSession,
     # metrics would silently drop and the sums undercount. Raise it
     # for this run — deterministic, unlike a StreamingQueryListener
     # whose events are delivered async and may lag awaitTermination.
-    with _conf(spark, "spark.sql.streaming.numRecentProgressUpdates",
-               "100000"):
+    with scoped_conf(spark, {"spark.sql.streaming.numRecentProgressUpdates":
+                             "100000"}):
         q = _drained(observed.groupBy("event_type")
                              .agg(F.count(F.lit(1)).alias("n")),
                      spark, sf_dir, "complete")

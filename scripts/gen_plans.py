@@ -4,8 +4,9 @@ headline query at sf0.01, with the scale-critical properties called
 out. Run from the repo root: python scripts/gen_plans.py
 
 Expression ids, plan ids and RDD ids are renumbered per plan in order of
-first appearance, so a plan's text does not depend on what the session
-built before it and two runs write the same file. The session runs on
+first appearance and RDD call sites are dropped, so a plan's text does
+not depend on what the session built before it and two runs write the
+same file. The session runs on
 ``CORES`` local cores whatever the host has, so shuffle and round-robin
 partition counts, which follow the core count, are the same on every
 host."""
@@ -128,23 +129,26 @@ gate-capped bucket width — scale story documented in its docstring).
 """
 
 _IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+# an RDD's call site ("at NativeMethodAccessorImpl.java:0" or
+# "at <unknown>:0") follows how the JVM happens to dispatch the py4j call
+_CALL_SITE = re.compile(r"(RDD\[\d+\] at \w+) at [^,\s]+:\d+")
 
 
 def _renumber(plan: str) -> str:
     """Each kind of id (``#``, ``plan_id=``, ``RDD[``) numbered from 0
-    in order of first appearance within ``plan``."""
+    in order of first appearance within ``plan``, and RDD call sites
+    dropped."""
     ids: dict[str, dict[str, int]] = {}
 
     def number(m: re.Match) -> str:
         kind = ids.setdefault(m.group(1), {})
         return f"{m.group(1)}{kind.setdefault(m.group(2), len(kind))}"
 
-    return _IDS.sub(number, plan)
+    return _IDS.sub(number, _CALL_SITE.sub(r"\1", plan))
 
 
 def _section(spark, mode, name: str, q) -> str:
     plan = _renumber(q.fn(spark, SF_DIR)._jdf.queryExecution().explainString(mode))
-    spark.catalog.clearCache()
     return f"\n## {name}\n\n{q.doc.strip()}\n\n```\n{plan}\n```\n"
 
 

@@ -54,7 +54,6 @@ def main() -> None:
     rows = []
     prev = _stage_totals(base, app)
     for name in HEADLINE:
-        spark.catalog.clearCache()
         registry[name].fn(spark, sf_dir).count()
         cur = _stage_totals(base, app)
         rows.append((name, cur["input"] - prev["input"],
@@ -73,7 +72,6 @@ def main() -> None:
              if n not in HEADLINE and n not in verified] + sorted(STAGED)
     staged_rows = []
     for name in extra:
-        spark.catalog.clearCache()
         fn = registry[name].fn if name in registry else STAGED[name].fn
         fn(spark, sf_dir).count()
         cur = _stage_totals(base, app)

@@ -59,13 +59,6 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             n_fail += 1
             print(f"ERROR {name}: {type(exc).__name__}: {exc}", flush=True)
-        finally:
-            # A few queries persist() an intermediate as single-
-            # computation materialization (bm25_term_scores et al.);
-            # release per query so cached relations cannot accumulate
-            # across the ~200-query sweep (ADVICE r4) and each query's
-            # wall time stays cold-cache comparable.
-            spark.catalog.clearCache()
         times[name] = time.perf_counter() - t0
     total = time.perf_counter() - t_all
     ranked = sorted(times.items(), key=lambda kv: -kv[1])

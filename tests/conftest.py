@@ -23,15 +23,6 @@ def spark():
     yield s
 
 
-@pytest.fixture
-def release_caches(spark):
-    """Uncache every cached relation after the test, so query-pinned
-    caches do not accumulate across a module's queries. Modules opt in
-    with ``pytestmark = pytest.mark.usefixtures("release_caches")``."""
-    yield
-    spark.catalog.clearCache()
-
-
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_CORRECTNESS

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.plans.inspect import formatted_plan
+from de_project_airflow_etl_spark.session import scoped_conf
 from de_project_airflow_etl_spark.tables import load
 
 
@@ -39,9 +40,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed):
     # disable auto-broadcast: at test scale the small side would be
     # broadcast and hide the property under test (the 100 TB case is
     # two fact tables, neither broadcastable)
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = (
             spark.table("b_orders")
                  .join(spark.table("b_lineitem"),
@@ -50,13 +49,11 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed):
                  .agg(F.count(F.lit(1)).alias("n"))
         )
         plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "SelectedBucketsCount" in plan, plan
-        # the join consumes bucket layout directly: exactly one exchange
-        # in the whole plan (the final aggregation), none under the join
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "SortMergeJoin" in plan, plan
+    assert "SelectedBucketsCount" in plan, plan
+    # the join consumes bucket layout directly: exactly one exchange
+    # in the whole plan (the final aggregation), none under the join
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
 
 
 def test_bucketed_join_matches_unbucketed_result(spark, sf_dir, bucketed):

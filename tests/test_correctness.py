@@ -14,16 +14,6 @@ from tests.harness import compare
 QUERIES = all_queries()
 
 
-@pytest.fixture(autouse=True)
-def _release_query_caches(spark):
-    # A few analytics queries persist() an intermediate (bm25_term_scores,
-    # class_distinctive_terms, word_cooccurrence_lift: single-computation
-    # materialization); release per test so cached relations never
-    # accumulate across the ~230-query sweep (ADVICE r4).
-    yield
-    spark.catalog.clearCache()
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     q = QUERIES[name]

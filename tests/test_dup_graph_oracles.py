@@ -25,11 +25,8 @@ DUP_GRAPH_QUERIES = (
 @pytest.mark.parametrize("name", DUP_GRAPH_QUERIES)
 def test_dup_graph_query_matches_oracle(name, spark, sf_dir, duck):
     q = all_queries()[name]
-    try:
-        problems = compare(q.fn(spark, sf_dir),
-                           duck.execute(q.oracle).fetchdf(), name)
-    finally:
-        spark.catalog.clearCache()
+    problems = compare(q.fn(spark, sf_dir),
+                       duck.execute(q.oracle).fetchdf(), name)
     assert not problems, "\n".join(problems)
 
 

@@ -7,9 +7,8 @@ the package whose text IS one of those idioms is a re-grown private
 copy: import the helper from ``queries.util`` instead.
 
 ``plans/inspect.py`` owns the plan checks (scan count, window and node
-walks, the window-key and collect hazard checks with their key sets)
-and ``tests/conftest.py`` the cache-release fixture; per-query scan
-budgets, window rules and nested-loop and collect exceptions are rows
+walks, the window-key and collect hazard checks with their key sets);
+per-query scan budgets, window rules and nested-loop and collect exceptions are rows
 of ``PLAN_RULES`` in ``tests/test_plan_rules.py``, whose nested-loop,
 window-key and collect rules run over every registered and staged
 query. No other test module runs those three checks.
@@ -20,7 +19,10 @@ its oracle CTE ``SQL_DAILY_CENTS``).
 
 No package module holds a query's result past the query: a
 module-level binding annotated with ``DataFrame`` is a cross-query
-cache, which answers a rewritten input with a stale relation.
+cache, which answers a rewritten input with a stale relation. A shared
+intermediate is materialized with ``localCheckpoint``, never with
+``persist()`` / ``cache()``, whose plan-keyed cache entry outlives the
+build and serves a later build of the same plan.
 """
 
 from __future__ import annotations
@@ -105,7 +107,7 @@ def test_util_defines_every_idiom():
 
 
 _PLAN_HELPERS = {"_window_nodes", "_node_names",
-                 "_windows_sit_above_aggregates", "_release_caches",
+                 "_windows_sit_above_aggregates",
                  "_bounded_subtree", "_is_bounding_aggregate"}
 _PLAN_CONSTANTS = {"FIXED_CARDINALITY", "GROWS_WITH_DATA"}
 _SCAN_COUNT = re.compile(r'count\("Scan parquet"\)')
@@ -125,12 +127,11 @@ def _top_level_names(tree: ast.Module) -> set[str]:
 
 def test_plan_checks_are_defined_only_in_inspect():
     """A hand-counted scan budget, a private copy of a plan walk (or of
-    the cache-release fixture or the window-hazard key sets), or a plan
-    helper imported from another test module, outside
-    ``plans/inspect.py`` is a re-grown copy: use ``inspect.scan_count``
-    / ``window_nodes`` / ``node_names``, a ``PLAN_RULES`` row (the
-    window-key and collect hazards are its ``window_keys`` and
-    ``collects`` rules), or the ``release_caches`` fixture instead."""
+    the window-hazard key sets), or a plan helper imported from another
+    test module, outside ``plans/inspect.py`` is a re-grown copy: use
+    ``inspect.scan_count`` / ``window_nodes`` / ``node_names`` or a
+    ``PLAN_RULES`` row (the window-key and collect hazards are its
+    ``window_keys`` and ``collects`` rules) instead."""
     helpers = (_PLAN_HELPERS | _PLAN_CONSTANTS
                | _top_level_names(ast.parse(PLAN_HOME.read_text())))
     copies = []
@@ -275,3 +276,23 @@ def test_no_module_level_dataframe_holders():
                 holders.append(f"{path.relative_to(PKG)}:{node.lineno} "
                                f"{getattr(node.target, 'id', '?')}")
     assert not holders, "\n".join(holders)
+
+
+def test_queries_do_not_persist():
+    """A shared intermediate is an eager ``localCheckpoint`` of the
+    build that reads it. ``persist()`` and ``cache()`` register the
+    plan in Spark's CacheManager, which keeps it after the query
+    returns: a later build of the same plan reads the old blocks, even
+    after its input files were rewritten. The frozen staged banks are
+    not scanned."""
+    calls = []
+    for path in sorted(PKG.rglob("*.py")):
+        if "staged" in path.parts:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "cache")):
+                calls.append(f"{path.relative_to(PKG)}:{node.lineno} "
+                             f".{node.func.attr}()")
+    assert not calls, "\n".join(calls)

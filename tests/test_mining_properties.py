@@ -126,5 +126,4 @@ def test_kmv_estimate_is_close_at_small_cardinality(spark, sf_dir):
 # r11 test tiering: multi-minute sweep/scale/property module —
 # excluded from the default (driver-budget) run; run with
 # -m "slow or not slow" for the full signal (see pytest.ini).
-pytestmark = [pytest.mark.slow,
-              pytest.mark.usefixtures("release_caches")]
+pytestmark = pytest.mark.slow

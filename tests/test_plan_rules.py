@@ -68,8 +68,6 @@ from de_project_airflow_etl_spark.plans.inspect import (
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.staged import STAGED
 
-pytestmark = pytest.mark.usefixtures("release_caches")
-
 PLAN_RULES: dict[str, dict] = {
     # ----------------------------------------------- operators/corpus_stats.py
     # gram-keyed equi-joins end to end
@@ -146,7 +144,7 @@ PLAN_RULES: dict[str, dict] = {
     # equi-join.
     "containment_dup_pairs": {"scans": 5, "nested_loops": "none"},
     "funnel_conversion_latency": {"scans": 0},  # was 6: c_ts carried, histogram ckpt
-    # the persisted tf relation crosses the corpus with the literal
+    # inside the scored checkpoint the corpus crosses the literal
     # BM25_TERMS list (createDataFrame: an RDD scan the check cannot
     # size), a constant-size build
     "bm25_term_scores": {"nested_loops": "justified"},

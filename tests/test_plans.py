@@ -18,6 +18,11 @@ from de_project_airflow_etl_spark.queries.joins import (
     join_multiway_region_revenue, join_segment_revenue,
 )
 from de_project_airflow_etl_spark.queries.flagship import daily_events
+from de_project_airflow_etl_spark.session import scoped_conf
+
+# both broadcast thresholds off: the plan's 100 TB shape at test scale
+NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1"}
 
 
 def test_filter_pushdown(spark, sf_dir):
@@ -131,21 +136,10 @@ def test_lsh_verified_pairs_reuse_exchanges(spark, sf_dir):
     from de_project_airflow_etl_spark.operators.dedup import (
         _lsh_digests, _lsh_pairs_plan,
     )
-    keys = ("spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "-1")
-    try:
+    with scoped_conf(spark, NO_BROADCAST):
         df = _lsh_pairs_plan(_lsh_digests(spark, sf_dir), binary=True)
         assert df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "isFinalPlan=true" in plan, plan
     assert plan.count("ReusedExchange") >= 2, plan
     assert "InMemoryTableScan" not in plan, plan
@@ -461,24 +455,15 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
         lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         sel = orders.filter(F.col("o_totalprice") > 400000) \
                     .select("o_orderkey")
         j = lineitem.join(sel, lineitem.l_orderkey == sel.o_orderkey)
         plan = formatted_plan(j)
-        assert "bloom_filter_agg" in plan, plan
-        assert "might_contain" in plan, plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    assert "bloom_filter_agg" in plan, plan
+    assert "might_contain" in plan, plan
 
 
 def test_vocab_oov_broadcasts_vocabulary(spark, sf_dir):
@@ -721,22 +706,11 @@ def test_part_sized_join_is_not_force_broadcast(spark, sf_dir, monkeypatch):
         return out
 
     monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
-    keys = ("spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "-1")
-    try:
+    with scoped_conf(spark, NO_BROADCAST):
         for fn in (frequent_item_pairs, market_basket_rules):
             df = fn(spark, sf_dir)
             assert df.collect()
             plans.append(df._jdf.queryExecution().executedPlan().toString())
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     joins = [line.strip() for plan in plans for line in plan.splitlines()
              if "Join" in line]
     part_joins = [j for j in joins if "l_partkey" in j]

@@ -127,14 +127,9 @@ def test_lsh_binary_equals_hex_pairs(spark, sf_dir):
     bijection argument, machine-checked. The binary side is the
     checkpointed digest relation _lsh_verified builds."""
     from de_project_airflow_etl_spark.operators import dedup as D
-    from de_project_airflow_etl_spark.queries.util import tracked_persist
-    hex_dg = tracked_persist(
-        D._shingled(spark, sf_dir).select("doc_id", "hs"))
-    try:
-        hex_rows = sorted(map(tuple, D._lsh_pairs_plan(hex_dg)
-                              .collect()))
-    finally:
-        hex_dg.unpersist()
+    hex_dg = (D._shingled(spark, sf_dir).select("doc_id", "hs")
+              .localCheckpoint(eager=True))
+    hex_rows = sorted(map(tuple, D._lsh_pairs_plan(hex_dg).collect()))
     bin_rows = sorted(map(tuple, D._lsh_pairs_plan(
         D._lsh_digests(spark, sf_dir), binary=True).collect()))
     assert hex_rows == bin_rows

@@ -8,14 +8,9 @@ runs over every query in tests/test_plan_rules.py.
 
 from __future__ import annotations
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_mmr_plan_shape(spark, sf_dir):

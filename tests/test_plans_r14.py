@@ -15,8 +15,6 @@ from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
-pytestmark = pytest.mark.usefixtures("release_caches")
-
 
 # ------------------------------------------------ range invariants
 

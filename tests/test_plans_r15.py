@@ -14,13 +14,9 @@ from __future__ import annotations
 import itertools
 import math
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # --------------------------------------------------- range invariants

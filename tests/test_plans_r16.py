@@ -12,13 +12,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------ independent recomputations

@@ -13,13 +13,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_quantile_normalize_per_rank_loop(spark, sf_dir, duck):

@@ -9,13 +9,9 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_percentile_cont_quartiles_ordered(spark, sf_dir):

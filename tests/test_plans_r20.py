@@ -11,13 +11,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_negative_binomial_python(spark, sf_dir, duck):

@@ -10,8 +10,8 @@ from __future__ import annotations
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    formatted_plan, node_names, scan_read_schema, unbounded_windows,
-    window_nodes,
+    PlanWalk, formatted_plan, node_names, recorded_checkpoints,
+    scan_read_schema, unbounded_windows, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -20,9 +20,6 @@ R6_BANK = {n: q for n, q in all_queries().items()
            if q.fn.__module__ in
            ("de_project_airflow_etl_spark.queries.mining",
             "de_project_airflow_etl_spark.queries.features")}
-
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------- daily-rollup statistics family
@@ -66,20 +63,19 @@ def test_vocab_coverage_topk_is_take_ordered(spark, sf_dir):
 
 
 def test_vocab_growth_explodes_corpus_once(spark, sf_dir):
-    """Document text is scanned and exploded exactly ONCE at runtime:
-    both downstream rollups (tokens-per-bucket, first-seen-bucket)
-    consume the (bucket, token) base aggregate's shuffle, so the
-    executed plan must reuse that exchange rather than re-run the
-    corpus explode."""
-    df = R6_BANK["vocab_growth_curve"].fn(spark, sf_dir)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    # Both rollups must read the persisted (bucket, token) base —
-    # every "Generate explode" string left in the executed plan is
-    # inside an InMemoryRelation's stored-lineage printout, and the
-    # live consumers are InMemoryTableScans (>= 2: tokens-per-bucket
-    # and first-seen-bucket).
-    assert executed.count("InMemoryTableScan") >= 2, executed[:3000]
+    """Document text is scanned and exploded exactly ONCE: both
+    downstream rollups (tokens-per-bucket, first-seen-bucket) read the
+    checkpointed (bucket, token) base aggregate, so the walk, which
+    enters that checkpoint once however many scans read it, holds one
+    explode ``Generate``."""
+    with recorded_checkpoints() as plans:
+        df = R6_BANK["vocab_growth_curve"].fn(spark, sf_dir)
+    walk = PlanWalk(df._jdf.queryExecution().sparkPlan(), plans)
+    explodes = [j.toString().split("\n")[0]
+                for n, j in zip(walk.names, walk.jnodes)
+                if n == "GenerateExec"
+                and "explode(" in j.toString().split("\n")[0]]
+    assert len(explodes) == 1, (explodes, walk.names)
 
 
 # ---------------------------------------- dedup keeper / overlap

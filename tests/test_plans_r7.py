@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from de_project_airflow_etl_spark.plans.inspect import (
     formatted_plan, has_broadcast_join, partition_columns,
     scan_read_schema, window_nodes,
@@ -27,9 +25,6 @@ R7_BANK = {n: q for n, q in all_queries().items()
            if q.fn.__module__ in
            ("de_project_airflow_etl_spark.queries.surfaces_r7",
             "de_project_airflow_etl_spark.queries.evaluation")}
-
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_bank_is_complete():

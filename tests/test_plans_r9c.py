@@ -11,16 +11,12 @@ tests/test_staged_pen.py already parametrize over ALL staged queries.
 
 from __future__ import annotations
 
-import pytest
-
 from de_project_airflow_etl_spark.plans.inspect import (
     partition_columns, window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_err_rank_rides_window_group_limit(spark, sf_dir):

@@ -21,9 +21,6 @@ R7N_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.robust"}
 
 
-pytestmark = pytest.mark.usefixtures("release_caches")
-
-
 def test_bank_is_complete():
     assert len(R7N_BANK) == 7, sorted(R7N_BANK)
 

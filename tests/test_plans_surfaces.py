@@ -6,8 +6,6 @@ tests/test_plan_rules.py."""
 
 from __future__ import annotations
 
-import pytest
-
 from de_project_airflow_etl_spark.plans.inspect import (
     partition_columns, scan_read_schema, window_nodes,
 )
@@ -16,9 +14,6 @@ from de_project_airflow_etl_spark.registry import all_queries
 SURFACE_BANK = {n: q for n, q in all_queries().items()
                 if q.fn.__module__
                 == "de_project_airflow_etl_spark.queries.surfaces_r6"}
-
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_surface_bank_is_registered():

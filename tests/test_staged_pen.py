@@ -19,12 +19,6 @@ from de_project_airflow_etl_spark.staged import STAGED
 from tests.harness import compare
 
 
-@pytest.fixture(autouse=True)
-def _release_staged_caches(spark):
-    yield
-    spark.catalog.clearCache()
-
-
 @pytest.mark.parametrize("name", sorted(STAGED))
 def test_staged_query_matches_oracle(name, spark, sf_dir, duck):
     q = STAGED[name]

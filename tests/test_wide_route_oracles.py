@@ -29,9 +29,6 @@ WIDE_ROUTE_QUERIES = (
 def test_wide_route_query_matches_oracle(name, spark, sf_dir, duck):
     q = all_queries()[name]
     assert "AS STRING) AS DOUBLE)" in q.oracle
-    try:
-        problems = compare(q.fn(spark, sf_dir),
-                           duck.execute(q.oracle).fetchdf(), name)
-    finally:
-        spark.catalog.clearCache()
+    problems = compare(q.fn(spark, sf_dir),
+                       duck.execute(q.oracle).fetchdf(), name)
     assert not problems, "\n".join(problems)
