@@ -21,8 +21,8 @@ from tests.harness import _canon, compare, duck_connection
 
 SOURCE_SF = "/root/testdata/sf0.001"
 
-# every registered query that materializes a shared intermediate of
-# its documents read
+# queries whose documents-derived intermediate feeds several consumers
+# of one build
 REWRITE_READERS = (
     "bm25_term_scores",
     "class_distinctive_terms",
