@@ -220,12 +220,11 @@ class LaunchPipeline:
                      .mode("overwrite")
                      .parquet(self.silver_dir))
 
-        q = (self._flatten(raw).writeStream
-                 .foreachBatch(write_batch)
-                 .option("checkpointLocation", checkpoint_dir)
-                 .trigger(availableNow=True)
-                 .start())
-        q.awaitTermination()
+        # imported here: the batch path (``run``) starts no stream
+        from de_project_airflow_etl_spark.streaming.ingest import run_stream
+        run_stream(self.spark,
+                   self._flatten(raw).writeStream.foreachBatch(write_batch),
+                   checkpoint=checkpoint_dir)
         self.spark.catalog.refreshByPath(self.silver_dir)
         log.info("streaming transform drained into %s", self.silver_dir)
 

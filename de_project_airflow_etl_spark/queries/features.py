@@ -1202,19 +1202,21 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------- LSH dedup recall/precision audit
 
-LSH_AUDIT_MOD = 2   # audit subset: every even doc_id
+# audit slice: doc_id < LSH_AUDIT_DOCS, a fixed number of documents at
+# any scale, so the all-pairs truth join is bounded by a constant
+LSH_AUDIT_DOCS = 1000
 
 
 def _lsh_audit_oracle() -> str:
     from de_project_airflow_etl_spark.operators.dedup import (
         JACCARD_THRESHOLD, _sql_lsh_pairs)
-    m = LSH_AUDIT_MOD
+    n = LSH_AUDIT_DOCS
     return f"""
         WITH {_sql_lsh_pairs()},
         truth AS MATERIALIZED (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
-          WHERE a.doc_id % {m} = 0 AND b.doc_id % {m} = 0
+          WHERE a.doc_id < {n} AND b.doc_id < {n}
             AND CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
                 / (len(a.hs) + len(b.hs)
                    - len(list_intersect(a.hs, b.hs)))
@@ -1222,7 +1224,7 @@ def _lsh_audit_oracle() -> str:
         ),
         found AS MATERIALIZED (
           SELECT doc_a, doc_b FROM pairs
-          WHERE doc_a % {m} = 0 AND doc_b % {m} = 0
+          WHERE doc_a < {n} AND doc_b < {n}
         ),
         hit AS (
           SELECT t.doc_a FROM truth t
@@ -1245,24 +1247,25 @@ def _lsh_audit_oracle() -> str:
         "against exact ground truth on a bounded doc-id slice: "
         "all-pairs exact Jaccard (shingle-digest intersection over "
         "union, the dedup_minhash_lsh verification arithmetic) on "
-        "the even-doc_id half is the truth set; the production LSH pairs "
-        "restricted to the same slice are the candidates. Precision "
+        "the first LSH_AUDIT_DOCS = 1000 doc_ids is the truth set; the "
+        "production LSH pairs restricted to the same slice are the "
+        "candidates. Precision "
         "is 1.0 by construction (every LSH candidate is "
         "Jaccard-verified before emission) — the audit's real signal "
         "is recall: how many true pairs the 4x2 banding misses. "
         "This mirrors ann_recall_audit for the dedup family. The "
-        "quadratic truth join is confined to the deterministic "
-        "half-corpus audit slice (the evaluation-subset pattern — "
-        "at 100 TB the modulus widens so the slice stays fixed-size); the production side "
+        "quadratic truth join is confined to that fixed-size slice "
+        "(at most 499,500 pairs at any scale, as the retrieval "
+        "panels cap theirs with vec_id < 500); the production side "
         "stays the banded equi-join, never all-pairs.",
     tags=("dedup", "evaluation"),
 )
 def lsh_dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from de_project_airflow_etl_spark.operators.dedup import (
         JACCARD_THRESHOLD, _lsh_verified, _shingled)
-    m = LSH_AUDIT_MOD
+    n = LSH_AUDIT_DOCS
     sub = (_shingled(spark, sf_dir).select("doc_id", "hs")
-           .filter(F.col("doc_id") % m == 0))
+           .filter(F.col("doc_id") < n))
     a = sub.select(F.col("doc_id").alias("doc_a"),
                    F.col("hs").alias("hs_a"))
     b = sub.select(F.col("doc_id").alias("doc_b"),
@@ -1276,7 +1279,7 @@ def lsh_dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                   f" >= {JACCARD_THRESHOLD}"))
               .select("doc_a", "doc_b"))
     found = (_lsh_verified(spark, sf_dir)
-             .filter((F.col("doc_a") % m == 0) & (F.col("doc_b") % m == 0))
+             .filter((F.col("doc_a") < n) & (F.col("doc_b") < n))
              .select("doc_a", "doc_b"))
     hit = truth.join(found, ["doc_a", "doc_b"])
     nt = truth.agg(F.count(F.lit(1)).alias("n_true"))

@@ -834,7 +834,7 @@ def jsonl_stream_sink_roundtrip(spark: SparkSession,
         register_launch_source,
     )
     from de_project_airflow_etl_spark.streaming.ingest import (
-        read_event_stream,
+        read_event_stream, run_stream,
     )
     register_launch_source(spark)
     out = _tmp_dir("jsonl_stream", sf_dir)
@@ -845,13 +845,9 @@ def jsonl_stream_sink_roundtrip(spark: SparkSession,
            .filter(F.col("event_id") % 19 == 0)
            .selectExpr("event_id", "event_type",
                        f"{sql_cents('value')} AS cents"))
-    q = (src.writeStream.format("launch_library")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("jsonl_stream_sink_roundtrip: timed out")
+    run_stream(spark, src.writeStream.format("launch_library")
+                         .option("path", out),
+               checkpoint=cp, timeout_s=300)
     back = spark.read.schema(
         "event_id long, event_type string, cents long"
     ).json(os.path.join(out, "batch-*.jsonl"))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
+from de_project_airflow_etl_spark.streaming.ingest import run_stream
 from de_project_airflow_etl_spark.tables import load
 
 
@@ -117,18 +118,13 @@ def jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def statestore_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp = _tmp_dir("sscp", sf_dir)
     shutil.rmtree(cp, ignore_errors=True)
-    q = (spark.readStream.schema("event_type string")
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir)
-              .groupBy("event_type")
-              .agg(F.count(F.lit(1)).alias("n"))
-              .writeStream.outputMode("complete").format("noop")
-              .option("checkpointLocation", cp)
-              .trigger(availableNow=True).start())
-    done = q.awaitTermination(300)
-    if not done:  # never leak a live stream into the shared session
-        q.stop()
-        raise RuntimeError("statestore_counts_events: stream timed out")
+    counts = (spark.readStream.schema("event_type string")
+                   .option("pathGlobFilter", "events.parquet")
+                   .parquet(sf_dir)
+                   .groupBy("event_type")
+                   .agg(F.count(F.lit(1)).alias("n")))
+    run_stream(spark, counts.writeStream.outputMode("complete").format("noop"),
+               checkpoint=cp, timeout_s=300)
     state = spark.read.format("statestore").load(cp)
     return state.select(
         F.col("key.event_type").alias("event_type"),

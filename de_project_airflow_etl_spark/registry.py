@@ -130,24 +130,28 @@ _CORRECTNESS_ROUNDS: tuple[str, ...] = (
     "CORRECTNESS_r07.json",
     "CORRECTNESS_r08.json",
     "CORRECTNESS_r09.json",
-    # r10/r11 are listed ahead of adjudication: the files do not exist
+    # r12 is listed ahead of adjudication: the file does not exist
     # yet (missing files degrade gracefully), but the moment the driver
     # writes one the rotation self-maintains — latest-round rows win,
     # so any recorded failure demotes its query back into the priority
     # window even if the next session forgets to touch this list.
     "CORRECTNESS_r10.json",
     "CORRECTNESS_r11.json",
+    "CORRECTNESS_r12.json",
 )
 
 # Queries rewritten after their last driver row, mapped to the first
 # round whose row checks the rewritten code: an older row does not
 # count as verified, so the query floats back into the window.
-_REWRITTEN_SINCE: dict[str, str] = dict.fromkeys((
-    "corpus_release_manifest", "survival_retention_curve",
-    "dedup_method_agreement", "market_basket_rules",
-    "word_cooccurrence_lift", "llm_corpus_prep",
-    "embedding_isotropy_panel",
-), "CORRECTNESS_r11.json")
+_REWRITTEN_SINCE: dict[str, str] = {
+    **dict.fromkeys((
+        "corpus_release_manifest", "survival_retention_curve",
+        "dedup_method_agreement", "market_basket_rules",
+        "word_cooccurrence_lift", "llm_corpus_prep",
+        "embedding_isotropy_panel",
+    ), "CORRECTNESS_r11.json"),
+    "lsh_dedup_recall_audit": "CORRECTNESS_r12.json",
+}
 
 _DRIVER_VERIFIED_CACHE: set[str] | None = None
 

@@ -15,10 +15,11 @@ engine on the same input.
 from __future__ import annotations
 
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from de_project_airflow_etl_spark.hadoop_fs import hadoop_fs
 from de_project_airflow_etl_spark.registry import query
@@ -73,20 +74,77 @@ def stream_shuffle_sizing(spark: SparkSession, sf_dir: str):
     return scoped_conf(spark, {SHUFFLE_PARTITIONS: str(n)})
 
 
+# Which CheckpointFileManager a stream's offset log, commit log and
+# state store rename through. Spark's default on every scheme is the
+# FileContext manager, whose rename on ``file:`` is Hadoop
+# AbstractFileSystem's check-then-rename: getFileLinkStatus on source
+# and destination, and without native libhadoop each of those forks a
+# ``readlink`` process, for every file and again for its ``.crc`` (64
+# of the 91 processes one windowed-counts drain forked). The
+# FileSystem manager's rename is exists(dst) then rename: the same
+# protocol without the forks, writing and verifying the same ``.crc``
+# files. On any other scheme the FileContext manager stays, because
+# its rename is the atomic one there (HDFS).
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
+CHECKPOINT_LOCATION = "spark.sql.streaming.checkpointLocation"
+
+
+def checkpoint_manager_confs(spark: SparkSession,
+                             root: str) -> dict[str, str]:
+    """The confs a stream checkpointed under ``root`` starts with: the
+    FileSystem manager when ``root``'s URI scheme is ``file``, else
+    none. A scheme-less root resolves through ``fs.defaultFS``. Decided
+    from the URIs alone: no FileSystem is built."""
+    scheme = urlsplit(root).scheme or urlsplit(
+        spark.sparkContext._jsc.hadoopConfiguration()
+             .get("fs.defaultFS", "file:///")).scheme
+    if scheme != "file":
+        return {}
+    return {CHECKPOINT_MANAGER: FS_CHECKPOINT_MANAGER}
+
+
+def run_stream(spark: SparkSession, writer: DataStreamWriter,
+               checkpoint: str | None = None,
+               timeout_s: float | None = None) -> StreamingQuery:
+    """Start ``writer`` with ``Trigger.AvailableNow`` and wait until it
+    has drained; returns the finished query. This is the one place a
+    package stream starts.
+
+    ``checkpoint`` is the query's checkpoint location; without one the
+    query checkpoints under the session's
+    ``spark.sql.streaming.checkpointLocation``, or in a local temp dir
+    when that is unset. The manager ``checkpoint_manager_confs`` picks
+    for that root is set from ``start()``, which clones the session
+    with it, until the query has terminated. With ``timeout_s`` a query
+    still running after that many seconds is stopped and the call
+    raises, so no live stream outlives it in the shared session."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    root = (checkpoint or spark.conf.get(CHECKPOINT_LOCATION, None)
+            or spark.sparkContext._jvm.java.lang.System.getProperty(
+                "java.io.tmpdir"))
+    with scoped_conf(spark, checkpoint_manager_confs(spark, root)):
+        q = writer.trigger(availableNow=True).start()
+        done = q.awaitTermination(timeout_s)
+        if timeout_s is not None and not done:
+            q.stop()
+            raise RuntimeError(
+                f"stream {q.name or q.id} still running after {timeout_s} s")
+    return q
+
+
 def _drained(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
              output_mode: str) -> StreamingQuery:
-    """Run ``stream_df`` to completion with ``Trigger.AvailableNow``
-    into a memory sink, its state sized by ``stream_shuffle_sizing``;
-    returns the finished query (its ``name`` is the sink's table)."""
+    """Run ``stream_df`` to completion with ``run_stream`` into a
+    memory sink, its state sized by ``stream_shuffle_sizing``; returns
+    the finished query (its ``name`` is the sink's table)."""
     with stream_shuffle_sizing(spark, sf_dir):
-        q = (stream_df.writeStream
-                      .format("memory")
-                      .queryName(f"stream_{uuid.uuid4().hex[:8]}")
-                      .outputMode(output_mode)
-                      .trigger(availableNow=True)
-                      .start())
-        q.awaitTermination()
-    return q
+        writer = (stream_df.writeStream.format("memory")
+                           .queryName(f"stream_{uuid.uuid4().hex[:8]}")
+                           .outputMode(output_mode))
+        return run_stream(spark, writer)
 
 
 def drain(stream_df: DataFrame, spark: SparkSession, sf_dir: str,

@@ -38,6 +38,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -129,32 +130,24 @@ def _sessionize_group(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Gap-sessionize one user's events (see module doc for the
-    single-batch emission contract)."""
-    ts_us: list[int] = []
-    for pdf in pdfs:
-        col = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        ts_us.extend(int(v) for v in col.astype("int64"))
+    single-batch emission contract): one int64 microsecond array per
+    Arrow batch, sorted once; a session starts where the gap to the
+    previous event is strictly greater than ``SESSION_GAP_US``."""
+    parts = [pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
+             for pdf in pdfs]
     if state.exists:
-        ts_us.extend(state.get[0])
+        parts.append(np.asarray(state.get[0], dtype=np.int64))
         state.remove()
-    ts_us.sort()
-
-    sessions: list[tuple[int, int, int]] = []  # (start_us, end_us, n)
-    start = prev = ts_us[0]
-    n = 1
-    for t in ts_us[1:]:
-        if t - prev > SESSION_GAP_US:
-            sessions.append((start, prev, n))
-            start, n = t, 0
-        prev = t
-        n += 1
-    sessions.append((start, prev, n))
+    ts_us = np.sort(np.concatenate(parts))
+    starts = np.flatnonzero(
+        np.concatenate(([True], np.diff(ts_us) > SESSION_GAP_US)))
+    ends = np.append(starts[1:], len(ts_us)) - 1
 
     yield pd.DataFrame({
-        "user_id": [key[0]] * len(sessions),
-        "session_start": pd.to_datetime([s[0] for s in sessions], unit="us"),
-        "session_end": pd.to_datetime([s[1] for s in sessions], unit="us"),
-        "n_events": [s[2] for s in sessions],
+        "user_id": np.full(len(starts), key[0], dtype=np.int64),
+        "session_start": ts_us[starts].astype("datetime64[us]"),
+        "session_end": ts_us[ends].astype("datetime64[us]"),
+        "n_events": ends - starts + 1,
     })
 
 

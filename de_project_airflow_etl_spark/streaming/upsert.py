@@ -128,17 +128,12 @@ def run_streaming_upsert(spark: SparkSession, sf_dir: str,
         _merge_batch(state_dir, agg, batch_id)
 
     from de_project_airflow_etl_spark.streaming.ingest import (
-        stream_shuffle_sizing,
+        run_stream, stream_shuffle_sizing,
     )
     stream = read_event_stream(spark, sf_dir, with_watermark=None)
     with stream_shuffle_sizing(spark, sf_dir):
-        q = (stream.writeStream
-                   .foreachBatch(apply_batch)
-                   .option("checkpointLocation",
-                           os.path.join(state_dir, "checkpoint"))
-                   .trigger(availableNow=True)
-                   .start())
-        q.awaitTermination()
+        run_stream(spark, stream.writeStream.foreachBatch(apply_batch),
+                   checkpoint=os.path.join(state_dir, "checkpoint"))
     return spark.read.parquet(os.path.join(state_dir, "current"))
 
 

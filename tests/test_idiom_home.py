@@ -17,6 +17,9 @@ query. No other test module runs those three checks.
 and ``queries/util.py`` the daily revenue panel (``daily_cents`` and
 its oracle CTE ``SQL_DAILY_CENTS``).
 
+``streaming/ingest.py::run_stream`` starts every package stream, so
+each one gets the checkpoint manager its checkpoint's scheme needs.
+
 No package module holds a query's result past the query: a
 module-level binding annotated with ``DataFrame`` is a cross-query
 cache, which answers a rewritten input with a stale relation. A shared
@@ -296,3 +299,31 @@ def test_queries_do_not_persist():
                 calls.append(f"{path.relative_to(PKG)}:{node.lineno} "
                              f".{node.func.attr}()")
     assert not calls, "\n".join(calls)
+
+
+def _receiver_attrs(node: ast.AST):
+    """Attribute names along a call chain, outermost first."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            yield node.attr
+            node = node.value
+        else:
+            node = node.func
+
+
+def test_streams_start_only_through_the_runner():
+    """A ``writeStream`` chain ending in ``.start()`` starts a stream
+    without ``ingest.run_stream``, so a ``file:`` checkpoint would keep
+    Spark's FileContext manager and fork ``readlink`` processes on
+    every log rename. The frozen staged banks are not scanned."""
+    starts = []
+    for path in sorted(PKG.rglob("*.py")):
+        if "staged" in path.parts:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "start"
+                    and "writeStream" in _receiver_attrs(node.func.value)):
+                starts.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert not starts, "\n".join(starts)

@@ -290,9 +290,10 @@ PLAN_RULES: dict[str, dict] = {
     "littles_law_sessions": {"scans": 1},  # session table ckpt'd; horizon
     "sample_ratio_mismatch_check": {"scans": 1},
     # ------------------------------------------------- queries/features.py
-    # all-pairs exact-Jaccard ground truth on the deterministic audit
-    # slice — the evaluation-subset pattern; the production path in
-    # the same query stays the banded equi-join
+    # all-pairs exact-Jaccard ground truth on the audit slice
+    # doc_id < LSH_AUDIT_DOCS (1000): at most 499,500 pairs at any
+    # scale; the production path in the same query stays the banded
+    # equi-join
     "lsh_dedup_recall_audit": {"nested_loops": "justified"},
     # broadcasts the fixed ~4% anchor id-slice onto the corpus with a
     # label-inequality predicate — the documented 'broadcast the query

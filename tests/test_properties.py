@@ -58,6 +58,60 @@ def test_session_window_partitions_events_by_gap(spark, offsets):
         assert nxt["start"] - prev["end"] > timedelta(minutes=30)
 
 
+class _GroupState:
+    """The slice of ``GroupState`` the sessionizer reads."""
+
+    def __init__(self, ts_us):
+        self.exists, self.get, self.removed = bool(ts_us), (ts_us,), False
+
+    def remove(self):
+        self.removed = True
+
+
+@given(offsets=st.lists(
+    st.integers(min_value=0, max_value=6 * 3600 * 1_000_000),
+    min_size=1, max_size=40), cut=st.integers(min_value=0, max_value=40),
+    in_state=st.integers(min_value=0, max_value=5))
+@example(offsets=[0, GAP_US], cut=1, in_state=0)
+@example(offsets=[0, GAP_US, 2 * GAP_US + 1], cut=2, in_state=0)
+@example(offsets=[2 * GAP_US + 1, 0, GAP_US], cut=1, in_state=1)
+@prop
+def test_stateful_sessionizer_splits_strictly_above_gap(offsets, cut,
+                                                        in_state):
+    """``_sessionize_group`` over any split of a user's events into
+    Arrow batches and prior state equals the sequential reference
+    split: a new session only where the gap is STRICTLY greater than
+    30 minutes, as ``session_window`` and the oracle split."""
+    import pandas as pd
+
+    from de_project_airflow_etl_spark.streaming.stateful import (
+        _sessionize_group,
+    )
+    base_us = 1_704_067_200_000_000
+    ts = [base_us + o for o in offsets]
+    state = _GroupState(ts[:in_state])
+    rows = ts[in_state:]
+    batches = [pd.DataFrame({"ts": pd.to_datetime(b, unit="us")})
+               for b in (rows[:cut], rows[cut:]) if b]
+    (got,) = _sessionize_group((7,), iter(batches), state)
+    assert state.removed == bool(in_state)
+
+    want, ordered = [], sorted(ts)
+    start = prev = ordered[0]
+    for t in ordered[1:]:
+        if t - prev > GAP_US:
+            want.append((start, prev))
+            start = t
+        prev = t
+    want.append((start, prev))
+    assert list(got["user_id"]) == [7] * len(want)
+    assert [(s.value // 1000, e.value // 1000) for s, e in
+            zip(got["session_start"], got["session_end"])] == want
+    assert int(got["n_events"].sum()) == len(ts)
+    assert [int(n) for n in got["n_events"]] == [
+        sum(s <= t <= e for t in ts) for s, e in want]
+
+
 @given(vals=st.lists(
     st.integers(min_value=-10_000_00, max_value=10_000_00),  # cents
     min_size=1, max_size=50))
